@@ -29,6 +29,10 @@ import org.apache.spark.sql.SparkSession
   * Interleaved passes are minutes apart per query, so a pressure window
   * can contaminate at most one sample. The JSON carries
   * `"timing":"min_of_N_interleaved"` so readers know the methodology.
+  *
+  * A query that throws in any pass is listed under `"failed"` in both
+  * JSON lines, left out of `queries`, `total` and the anchor check, and
+  * the bench exits 1 after the compact line prints.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -103,20 +107,12 @@ object Bench {
     }
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => subset.forall(_.contains(n)) }
-    val times = scala.collection.mutable.LinkedHashMap
-      .empty[String, List[Double]]
-    for (pass <- 1 to reps; (name, fn) <- named) {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name (pass $pass): $e") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      cleanup()
-      times(name) = times.getOrElse(name, Nil) :+ dt
-    }
-    val results = named.map { case (name, _) => name -> times(name).min }
+      .map { case (n, fn) =>
+        n -> (() => { fn(spark, sfDir).queryExecution.toRdd.count(); () }) }
+    val (results, failed) = timePasses(named, reps, () => cleanup())
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     // STRUCTURAL drift triage: every bench artifact carries its own
     // breach list against the committed per-query anchors
@@ -140,7 +136,7 @@ object Bench {
       .mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""timing":"min_of_${reps}_interleaved","queries":$qs,""" +
-      s""""anchor_breaches":$breachJson,""" +
+      s""""failed":$failedJson,"anchor_breaches":$breachJson,""" +
       s""""anchors_checked":${anchors.size},"sf":"$sfDir"}"""
     println(full)
     // The full line above runs ~8 KB at 244 queries, but the driver keeps
@@ -172,8 +168,36 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""timing":"min_of_${reps}_interleaved","n_queries":${results.size},""" +
       s""""queries":$top,"queries_truncated_to_top":12,""" +
-      s""""anchor_breaches":$breachJson,""" +
+      s""""failed":$failedJson,"anchor_breaches":$breachJson,""" +
       s""""full_json":"$fullPath","sf":"$sfDir"}""")
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Runs `reps` full interleaved passes over `queries` (pass 1 of every
+    * query, then pass 2, ...), calling `cleanup` after each run. Returns
+    * the per-query minimum seconds of the queries that never threw, and
+    * the names of those that threw in any pass: a crash ends a query's
+    * run early, so its elapsed time is not a timing and must not enter
+    * the total or the anchor check as a fast query. */
+  private[graft] def timePasses(queries: Seq[(String, () => Unit)],
+                                reps: Int, cleanup: () => Unit)
+      : (Seq[(String, Double)], Seq[String]) = {
+    val times = scala.collection.mutable.Map.empty[String, List[Double]]
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    for (pass <- 1 to reps; (name, run) <- queries) {
+      val t0 = System.nanoTime()
+      try {
+        run()
+        val dt = (System.nanoTime() - t0) / 1e9
+        times(name) = times.getOrElse(name, Nil) :+ dt
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name (pass $pass): $e")
+        failed += name
+      }
+      cleanup()
+    }
+    val ok = queries.collect { case (n, _) if !failed(n) => n -> times(n).min }
+    (ok, queries.map(_._1).filter(failed))
   }
 
   /** Per-query anchor seconds from BENCH_ANCHORS.md's `| query | anchor |`

@@ -12,11 +12,14 @@ import org.apache.spark.sql.SparkSessionExtensions
   *    split (see its scaladoc for why this cannot be a logical rule);
   *  - [[graft.plans.JaroWinklerLengthPrune]]: optimizer rule conjoining the
   *    implied length-ratio prefilter ahead of Jaro-Winkler threshold gates;
-  *  - the custom SQL function surface ([[functions.Registry]] names:
-  *    `minhash_sig`, `simhash64`, `kgram_jaccard`, `fvec_dot`) so a session
-  *    configured with the extension alone — no Scala call — can use them in
-  *    SQL transformations. Session-level `Registry.registerAll` remains for
-  *    sessions built without the extension.
+  *  - every custom SQL function in [[functions.Registry.builders]] — the
+  *    one function table `Registry.registerAll` also installs — so a
+  *    session configured with the extension alone, no Scala call, can use
+  *    them in SQL transformations.
+  *
+  * The as-of merge strategy is not injected here: its one install path is
+  * [[graft.plans.AsOfMergeStrategy.setup]], called by the only code that
+  * builds an [[graft.plans.AsOfMerge]] node.
   *
   * Everything here is optional: results are bit-identical with or without
   * the extension (the driver's plain-session smoke test runs unextended).
@@ -25,81 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.TextStatsOncePerRow)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfMergeStrategy)
     ext.injectOptimizerRule(_ => graft.plans.JaroWinklerLengthPrune)
-    GraftExtensions.functionBuilders.foreach { case (name, info, builder) =>
-      ext.injectFunction((name, info, builder))
-    }
+    functions.Registry.builders.foreach(ext.injectFunction)
   }
-}
-
-object GraftExtensions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-  import graft.functions.expressions.{FloatVectorDot, HllUnionEst, JaroWinkler, KgramContainment, KgramJaccard, Md5Hll, MinHashSig, SimHash64, WordNgrams}
-
-  private def intLit(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other =>
-      throw new IllegalArgumentException(s"expected integer literal, got $other")
-  }
-
-  /** Same builders as [[functions.Registry]], in the injectFunction shape. */
-  private[graft] val functionBuilders: Seq[
-      (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "minhash_sig(text, shingleK, numHashes)")
-        MinHashSig(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-      }),
-    (FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "simhash64(array<string>)")
-        SimHash64(exprs.head)
-      }),
-    (FunctionIdentifier("kgram_jaccard"),
-      new ExpressionInfo(classOf[KgramJaccard].getName, "kgram_jaccard"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "kgram_jaccard(a, b, shingleK)")
-        KgramJaccard(exprs.head, exprs(1), intLit(exprs(2)))
-      }),
-    (FunctionIdentifier("fvec_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "fvec_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "fvec_dot(a, b)")
-        FloatVectorDot(exprs.head, exprs(1))
-      }),
-    (FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "jaro_winkler(a, b)")
-        JaroWinkler(exprs.head, exprs(1))
-      }),
-    (FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "word_ngrams(text, n)")
-        WordNgrams(exprs.head, intLit(exprs(1)))
-      }),
-    (FunctionIdentifier("md5_hll"),
-      new ExpressionInfo(classOf[Md5Hll].getName, "md5_hll"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "md5_hll(string_col)")
-        Md5Hll(exprs.head).toAggregateExpression()
-      }),
-    (FunctionIdentifier("kgram_containment"),
-      new ExpressionInfo(classOf[KgramContainment].getName,
-        "kgram_containment"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "kgram_containment(a, b, shingleK)")
-        KgramContainment(exprs.head, exprs(1), intLit(exprs(2)))
-      }),
-    (FunctionIdentifier("hll_union_est"),
-      new ExpressionInfo(classOf[HllUnionEst].getName, "hll_union_est"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "hll_union_est(sketch_a, sketch_b)")
-        HllUnionEst(exprs.head, exprs(1), 10)
-      }))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for a list of queries into
   * `<outDir>/<query>_<suffix>.txt` — the round's before/after plan
-  * evidence (plans/rNN/). Bench-session config (local[cpus], 32 shuffle
+  * evidence (plans/rNN/). Bench-session config (local[cpus], cpus shuffle
   * partitions, extension installed) so the plans match what the bench
   * actually runs.
   *

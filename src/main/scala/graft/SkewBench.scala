@@ -339,10 +339,10 @@ object SkewBench {
           f"(exact/pq write ratio ${exW.toDouble / math.max(pqW, 1L)}%.2f)")
         // the payload claim is DIM-dependent: at dim 64 a candidate vector
         // is 256 B and PQ's extra stages (codebooks, SDC tables, shortlist
-        // rerank) dominate total bytes — tile to dim 512 (KnnProbe's
-        // position-scaled tiling; production-embedding regime) and measure
-        // the same pair, so the artifact carries the crossover, not a
-        // single-point reading
+        // rerank) dominate total bytes — tile to dim 512 (position-scaled
+        // tiling, the kNN stage split in SURVEY.md; production-embedding
+        // regime) and measure the same pair, so the artifact carries the
+        // crossover, not a single-point reading
         val emb512 = emb.withColumn("embedding", expr(
           "flatten(transform(sequence(1, 8), t -> " +
             "transform(embedding, x -> cast(x * t / 8 as float))))"))

@@ -364,6 +364,9 @@ object Dedup {
             lit(0), (acc, x) => acc + x))
         .where(col("__agree") >= minAgree)
         .select("idA", "idB")
+        // an id with several signature rows re-attaches once per row:
+        // dedup again so each pair leaves once, as in the inline shape
+        .dropDuplicates("idA", "idB")
     } else {
       val banded = capHotKeys(
         sigs.withColumn("__band",
@@ -516,6 +519,8 @@ object Dedup {
           Seq("idB"))
         .where(agree(col("__sa"), col("__sb")) >= minAgree)
         .select("idA", "idB")
+        // an id in both corpusSigs and the batch re-attaches twice
+        .dropDuplicates("idA", "idB")
     } else {
       def banded(sigs: DataFrame) = sigs.withColumn("__band",
         explode(lshBandKeys(col("sig"), bands, rowsPerBand)))

@@ -209,7 +209,7 @@ object Graph {
         // .maxNumBits (64 Mbit default) — measured at the 10× SF: a 12 M-
         // key filter came back 8 MB regardless of fpp, an ACTUAL fp rate
         // of ~22% (105.9 M of 410.9 M wedges passed vs the ~22.7 M a real
-        // 1% filter admits — TriProbe r15). treeAggregate sizes the
+        // 1% filter admits — OPTIMIZATION_r15.md). treeAggregate sizes the
         // filter honestly and never routes the bits through the driver
         // more than the final merge already must.
         val fpp = if (expectedEdges <= 100000000L) 0.01 else 0.03

@@ -1,12 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import graft.functions.expressions.{FloatVectorDot, HllUnionEst, JaroWinkler, KgramContainment, KgramJaccard, MinHashSig, SimHash64, WordNgrams}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import graft.functions.expressions.{FloatVectorDot, HllUnionEst, JaroWinkler, KgramContainment, KgramJaccard, Md5Hll, MinHashSig, SimHash64, WordNgrams}
 
 /** SQL registration of the engine's custom expressions, so SQL
   * transformations (T1) can call them alongside the built-in library —
   * the reference's "full engine SQL surface" contract extended with our
   * additions (SURVEY.md §2.10).
+  *
+  * [[builders]] is the ONE function table: [[registerAll]] installs it on
+  * a live session, and [[graft.GraftExtensions]] injects the same entries
+  * into sessions configured with the extension.
   *
   * Usage in SQL after `Registry.registerAll(spark)`:
   * {{{
@@ -16,46 +22,50 @@ import graft.functions.expressions.{FloatVectorDot, HllUnionEst, JaroWinkler, Kg
   */
 object Registry {
 
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig", exprs => {
-      require(exprs.length == 3, "minhash_sig(text, shingleK, numHashes)")
-      MinHashSig(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", exprs => {
-      require(exprs.length == 1, "simhash64(array<string>)")
-      SimHash64(exprs.head)
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("kgram_jaccard", exprs => {
-      require(exprs.length == 3, "kgram_jaccard(a, b, shingleK)")
-      KgramJaccard(exprs.head, exprs(1), intLit(exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("fvec_dot", exprs => {
-      require(exprs.length == 2, "fvec_dot(a, b)")
-      FloatVectorDot(exprs.head, exprs(1))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler", exprs => {
-      require(exprs.length == 2, "jaro_winkler(a, b)")
-      JaroWinkler(exprs.head, exprs(1))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("word_ngrams", exprs => {
-      require(exprs.length == 2, "word_ngrams(text, n)")
-      WordNgrams(exprs.head, intLit(exprs(1)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("kgram_containment", exprs => {
-      require(exprs.length == 3, "kgram_containment(a, b, shingleK)")
-      KgramContainment(exprs.head, exprs(1), intLit(exprs(2)))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("hll_union_est", exprs => {
-      require(exprs.length == 2, "hll_union_est(sketch_a, sketch_b)")
-      HllUnionEst(exprs.head, exprs(1), 10)
-    }, "scala_udf")
+  type Builder = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def intLit(e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case other =>
+      throw new IllegalArgumentException(s"expected integer literal, got $other")
   }
 
-  private def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"expected integer literal, got $other")
+  private def fn(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Seq[Expression] => Expression): Builder =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (exprs: Seq[Expression]) => {
+        require(exprs.length == arity, usage)
+        build(exprs)
+      })
+
+  val builders: Seq[Builder] = Seq(
+    fn("minhash_sig", classOf[MinHashSig], 3,
+      "minhash_sig(text, shingleK, numHashes)") { e =>
+      MinHashSig(e.head, intLit(e(1)), intLit(e(2))) },
+    fn("simhash64", classOf[SimHash64], 1, "simhash64(array<string>)") { e =>
+      SimHash64(e.head) },
+    fn("kgram_jaccard", classOf[KgramJaccard], 3,
+      "kgram_jaccard(a, b, shingleK)") { e =>
+      KgramJaccard(e.head, e(1), intLit(e(2))) },
+    fn("fvec_dot", classOf[FloatVectorDot], 2, "fvec_dot(a, b)") { e =>
+      FloatVectorDot(e.head, e(1)) },
+    fn("jaro_winkler", classOf[JaroWinkler], 2, "jaro_winkler(a, b)") { e =>
+      JaroWinkler(e.head, e(1)) },
+    fn("word_ngrams", classOf[WordNgrams], 2, "word_ngrams(text, n)") { e =>
+      WordNgrams(e.head, intLit(e(1))) },
+    fn("md5_hll", classOf[Md5Hll], 1, "md5_hll(string_col)") { e =>
+      Md5Hll(e.head).toAggregateExpression() },
+    fn("kgram_containment", classOf[KgramContainment], 3,
+      "kgram_containment(a, b, shingleK)") { e =>
+      KgramContainment(e.head, e(1), intLit(e(2))) },
+    fn("hll_union_est", classOf[HllUnionEst], 2,
+      "hll_union_est(sketch_a, sketch_b)") { e =>
+      HllUnionEst(e.head, e(1), 10) })
+
+  def registerAll(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    builders.foreach { case (id, _, build) =>
+      reg.createOrReplaceTempFunction(id.funcName, build, "scala_udf")
     }
+  }
 }

@@ -220,7 +220,7 @@ object AsOfJoin {
   private def sortMergeGroup(base: DataFrame, labelEntity: String,
                              fs: Seq[FeatureSide]): DataFrame = {
     val spark = base.sparkSession
-    ensureStrategy(spark)
+    graft.plans.AsOfMergeStrategy.setup(spark)
     val fev = featureEvents(fs)
     val lPlan = base.queryExecution.analyzed
     val rPlan = fev.queryExecution.analyzed
@@ -262,15 +262,6 @@ object AsOfJoin {
         when(pickable && freshEnough(f, col("__v.__gt")),
           col(s"__v.${f.outputName}")))
     }.drop("__v")
-  }
-
-  /** Idempotently registers [[graft.plans.AsOfMergeStrategy]] on the
-    * session so the operator plans in sessions built WITHOUT
-    * `spark.sql.extensions=graft.GraftExtensions` (which also injects it). */
-  private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(graft.plans.AsOfMergeStrategy))
-      spark.experimental.extraStrategies = cur :+ graft.plans.AsOfMergeStrategy
   }
 
   /** JoinWindow (reference P2 shape): join + ROW_NUMBER()=1. */

@@ -59,15 +59,25 @@ final case class AsOfMerge(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfMerge]] into [[AsOfMergeExec]]. Registered by
-  * [[graft.GraftExtensions]] and (idempotently) by
-  * [[graft.ops.AsOfJoin]] via `spark.experimental.extraStrategies`, so the
-  * operator works in sessions built without the extension. */
+/** Plans [[AsOfMerge]] into [[AsOfMergeExec]]. Its one install path is
+  * [[setup]], which the builder of every [[AsOfMerge]] node
+  * ([[graft.ops.AsOfJoin]]'s sort-merge group) calls first, so the
+  * operator plans in any session, with or without [[graft.GraftExtensions]]. */
 object AsOfMergeStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfMerge(l, r, le, lt, re, rt, rv) =>
       AsOfMergeExec(le, lt, re, rt, rv, planLater(l), planLater(r)) :: Nil
     case _ => Nil
+  }
+
+  /** Idempotently adds this strategy to the session's
+    * `experimental.extraStrategies`; repeated calls leave one entry. */
+  def setup(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val ex = spark.experimental
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(this))
+        ex.extraStrategies = ex.extraStrategies :+ this
+    }
   }
 }
 

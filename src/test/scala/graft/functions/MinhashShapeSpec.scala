@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The two LSH candidate shapes — inline signatures on the band-join legs
@@ -8,37 +9,63 @@ import org.apache.spark.sql.functions._
   * to the deduped pair set (wide corpora) — must return IDENTICAL pairs:
   * the gate is a performance branch, never a semantic one. Runs on the
   * real sf0.001 documents corpus so band collisions, the hot-band cap and
-  * the estimate filter are all exercised. */
+  * the estimate filter are all exercised.
+  *
+  * Results compare as sorted sequences, not sets: a set hides duplicate
+  * output rows, which is exactly how the shapes can diverge when an id
+  * appears more than once on the signature side. */
 class MinhashShapeSpec extends SparkSpec {
   import spark.implicits._
 
   private def docs = spark.read.parquet(s"$sf001/documents.parquet")
     .select(col("doc_id"), col("text"))
 
+  private def rows(df: DataFrame): Seq[(Long, Long, Double)] =
+    df.as[(Long, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
+
+  private def full(in: DataFrame, wide: Boolean) =
+    rows(Dedup.minhashNearDupsImpl(in, "text", "doc_id",
+      5, 64, 16, 0.8, false, 2000, wideShape = Some(wide)))
+
+  private def incremental(corpusSigs: DataFrame, newDocs: DataFrame,
+                          wide: Boolean) =
+    rows(Dedup.minhashNearDupsIncrementalImpl(corpusSigs, docs, newDocs,
+      "text", "doc_id", 5, 64, 16, 0.5, 2000, wideShape = Some(wide)))
+
+  private val isNew = col("doc_id") % 5 === 4
+
   test("minhashNearDups: wide and inline shapes agree (threshold 0.8)") {
-    val inline = Dedup.minhashNearDupsImpl(docs, "text", "doc_id",
-        5, 64, 16, 0.8, false, 2000, wideShape = Some(false))
-      .as[(Long, Long, Double)].collect().toSet
-    val wide = Dedup.minhashNearDupsImpl(docs, "text", "doc_id",
-        5, 64, 16, 0.8, false, 2000, wideShape = Some(true))
-      .as[(Long, Long, Double)].collect().toSet
+    val inline = full(docs, wide = false)
     assert(inline.nonEmpty, "fixture must produce pairs")
-    assert(wide == inline)
+    assert(full(docs, wide = true) == inline)
+  }
+
+  test("minhashNearDups: shapes agree when doc ids repeat") {
+    // every id of the new slice appears twice in the input (and so twice
+    // on the text side of the verify join, in both shapes alike)
+    val repeated = docs.unionByName(docs.filter(isNew))
+    val inline = full(repeated, wide = false)
+    assert(inline.nonEmpty, "fixture must produce pairs")
+    assert(full(repeated, wide = true) == inline)
   }
 
   test("minhashNearDupsIncremental: wide and inline shapes agree " +
       "(threshold 0.5, dense candidates)") {
-    val isNew = col("doc_id") % 5 === 4
     val corpusSigs = Dedup.minhashSignatureTable(
       docs.filter(!isNew), "text", "doc_id")
-    def run(shape: Boolean) =
-      Dedup.minhashNearDupsIncrementalImpl(corpusSigs, docs,
-          docs.filter(isNew), "text", "doc_id", 5, 64, 16, 0.5, 2000,
-          wideShape = Some(shape))
-        .as[(Long, Long, Double)].collect().toSet
-    val inline = run(false)
-    val wide = run(true)
+    val inline = incremental(corpusSigs, docs.filter(isNew), wide = false)
     assert(inline.nonEmpty, "fixture must produce pairs")
-    assert(wide == inline)
+    assert(incremental(corpusSigs, docs.filter(isNew), wide = true) == inline)
+  }
+
+  test("minhashNearDupsIncremental: shapes agree when new ids are also " +
+      "in the corpus signatures") {
+    // the corpus table already holds the batch's ids: each new id is in
+    // both corpusSigs and the batch's own signatures
+    val corpusSigs = Dedup.minhashSignatureTable(docs, "text", "doc_id")
+    val inline = incremental(corpusSigs, docs.filter(isNew), wide = false)
+    assert(inline.nonEmpty, "fixture must produce pairs")
+    assert(inline.distinct == inline, "inline shape emits each pair once")
+    assert(incremental(corpusSigs, docs.filter(isNew), wide = true) == inline)
   }
 }

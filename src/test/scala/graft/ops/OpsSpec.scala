@@ -355,6 +355,20 @@ class RegistrySpec extends graft.SparkSpec {
       .collect().head.getLong(0)
     assert(u === direct)
   }
+
+  test("registerAll installs the whole function table (md5_hll included)") {
+    graft.functions.Registry.registerAll(spark)
+    import graft.functions.expressions.Sketches
+    val vals = (1 to 700).map(i => s"v${i % 450}").toDF("s")
+    vals.createOrReplaceTempView("hll_vals")
+    val viaSql = spark.sql("SELECT md5_hll(s) AS n FROM hll_vals")
+      .collect().head.getLong(0)
+    val direct = vals.agg(Sketches.hllNdv(col("s"))).collect().head.getLong(0)
+    assert(viaSql === direct)
+    graft.functions.Registry.builders.foreach { case (id, _, _) =>
+      assert(spark.catalog.functionExists(id.funcName), id.funcName)
+    }
+  }
 }
 
 class DistributedRowNumberSpec extends graft.SparkSpec {

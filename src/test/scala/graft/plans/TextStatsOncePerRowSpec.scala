@@ -66,9 +66,20 @@ class TextStatsOncePerRowSpec extends SparkSpec {
     // applies cleanly (the config path is exercised by Verify/Bench JVMs)
     new graft.GraftExtensions().apply(
       new org.apache.spark.sql.SparkSessionExtensions)
-    assert(graft.GraftExtensions.functionBuilders.map(_._1.funcName) ==
+    assert(graft.functions.Registry.builders.map(_._1.funcName) ==
       Seq("minhash_sig", "simhash64", "kgram_jaccard", "fvec_dot",
         "jaro_winkler", "word_ngrams", "md5_hll", "kgram_containment",
         "hll_union_est"))
+  }
+
+  test("AsOfMergeStrategy.setup is idempotent: one entry after two calls") {
+    val ex = spark.experimental
+    val before = ex.extraStrategies
+    ex.extraStrategies = before.filterNot(_ == AsOfMergeStrategy)
+    try {
+      AsOfMergeStrategy.setup(spark)
+      AsOfMergeStrategy.setup(spark)
+      assert(ex.extraStrategies.count(_ == AsOfMergeStrategy) == 1)
+    } finally ex.extraStrategies = before
   }
 }

@@ -9,6 +9,9 @@ import org.apache.spark.sql.SparkSession
   * actually runs.
   *
   * Usage: runMain graft.PlanDump <sfDir> <q1,q2,...> <outDir> <suffix>
+  *
+  * A query that throws is reported on stderr and the dump goes on with the
+  * rest; the exit status is then 1.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -27,6 +30,7 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     for (name <- names) {
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -36,10 +40,16 @@ object PlanDump {
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
         println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
       } catch {
-        case e: Throwable => System.err.println(s"[plandump] $name: $e")
+        case e: Throwable =>
+          System.err.println(s"[plandump] $name: $e")
+          failed += name
       }
       spark.catalog.clearCache()
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -45,21 +45,28 @@ object Dedup {
     * Results are unaffected: every consumer downstream of the fan-out
     * sites is hash/key-based and order-independent (the determinism
     * contract all queries already pin). */
-  private[graft] def fanOut(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df // partition probe needs a batch plan
-    val target = df.sparkSession.sparkContext.defaultParallelism
+  private[graft] def fanOut(df: DataFrame): DataFrame =
+    spread(df, smallScan(df))
+
+  /** The small-scan gate behind [[fanOut]] — one partition probe. Two
+    * gates: relative (the scan fills under half the cores) AND absolute
+    * (the input is genuinely small-file-shaped). Without the absolute
+    * bound, a mid-size corpus (a few thousand splits) on a very large
+    * cluster (defaultParallelism ≫ splits) would round-robin its raw
+    * payload just to fill cores — a full shuffle that costs more than the
+    * idle cores save. 64 splits ≈ 8 GB at the default 128 MB split size;
+    * past that, natural splits carry the parallelism. A streaming frame
+    * is never small (the probe needs a batch plan). */
+  private def smallScan(df: DataFrame): Boolean = !df.isStreaming && {
     val parts = df.queryExecution.toRdd.getNumPartitions
-    // Two gates: relative (the scan fills under half the cores) AND
-    // absolute (the input is genuinely small-file-shaped). Without the
-    // absolute bound, a mid-size corpus (a few thousand splits) on a
-    // very large cluster (defaultParallelism ≫ splits) would round-robin
-    // its raw payload just to fill cores — a full shuffle that costs
-    // more than the idle cores save. 64 splits ≈ 8 GB at the default
-    // 128 MB split size; past that, natural splits carry the
-    // parallelism and this stays a no-op.
-    if (parts * 2 < target && parts <= 64) df.repartition(target)
-    else df
+    parts * 2 < df.sparkSession.sparkContext.defaultParallelism && parts <= 64
   }
+
+  /** Round-robin `df` to the session's parallelism when the gate said
+    * `small`; callers that act on one probe twice pass its answer here. */
+  private def spread(df: DataFrame, small: Boolean): DataFrame =
+    if (small) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Dedup")
 
@@ -114,6 +121,54 @@ object Dedup {
       capStats.put(what, (stats.getLong(0), stats.getLong(1)))
       df.join(broadcast(hotDf.select(col(keyCol))), Seq(keyCol), "left_anti")
     }
+  }
+
+  /** The LSH candidate join every near-dup family runs (filter-then-verify):
+    * the caller bands its rows into `(__key, __id[, __p])` sides — keys,
+    * hot-key cap and barriers are the family's own — and this joins them on
+    * `__key`, keeps one orientation per id pair, verifies, and emits each
+    * `(idA, idB)` once with its `__score`.
+    *
+    *  - `batch = None` (the corpus against itself, full run): `idA < idB`;
+    *    `Some(b)` (a new batch banded against the corpus, which holds the
+    *    batch too — incremental run): `idA ≠ idB`, then the canonical
+    *    `(least, greatest)` — old–old pairs cannot occur, new–new ones
+    *    come out once.
+    *  - `payload = None`: both sides carry the payload `__p` inline, and
+    *    `score` runs inside the join stage. `Some(t)`: the sides are
+    *    keys-only, the `(idA, idB)` set is deduped first, and `t`'s
+    *    `(__id, __p)` rows re-attach by id — the shuffle moves metadata
+    *    only and `score` runs once per distinct pair.
+    *  - `score` must be symmetric (it sees either orientation); `keep` is
+    *    the verify predicate on it. Pairs dedup after the verify, so an id
+    *    with several payload rows still emits its pairs once. */
+  private[functions] def lshCandidateJoin(
+      corpus: DataFrame, batch: Option[DataFrame],
+      payload: Option[DataFrame], score: (Column, Column) => Column,
+      keep: Column => Column): DataFrame = {
+    val selfJoin = batch.isEmpty
+    def leg(side: DataFrame, s: String) = side.select(
+      Seq(col("__key"), col("__id").as(s"__id$s")) ++
+        (if (payload.isEmpty) Seq(col("__p").as(s"__p$s")) else Nil): _*)
+    val (l, r) = (col("__idL"), col("__idR"))
+    val joined = leg(batch.getOrElse(corpus), "L")
+      .join(leg(corpus, "R"), Seq("__key"))
+      .where(if (selfJoin) l < r else l =!= r)
+    val ids = Seq((if (selfJoin) l else least(l, r)).as("idA"),
+      (if (selfJoin) r else greatest(l, r)).as("idB"))
+    val scored = payload match {
+      case None =>
+        joined.select(ids :+ score(col("__pL"), col("__pR")).as("__score"): _*)
+      case Some(t) =>
+        joined.select(ids: _*).dropDuplicates("idA", "idB")
+          .join(t.select(col("__id").as("idA"), col("__p").as("__pa")),
+            Seq("idA"))
+          .join(t.select(col("__id").as("idB"), col("__p").as("__pb")),
+            Seq("idB"))
+          .select(col("idA"), col("idB"),
+            score(col("__pa"), col("__pb")).as("__score"))
+    }
+    scored.where(keep(col("__score"))).dropDuplicates("idA", "idB")
   }
 
   // ---------------------------------------------------------------- exact
@@ -281,153 +336,22 @@ object Dedup {
       shingleK: Int, numHashes: Int, bands: Int,
       threshold: Double, checkpointSignatures: Boolean,
       maxBandFreq: Int, wideShape: Option[Boolean]): DataFrame = {
-    val rowsPerBand = numHashes / bands
+    val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
+    // One probe decides the signature fan-out, the verify fan-out and the
+    // candidate shape: a corpus with ≥ 64 natural splits (≈ 8 GB at the
+    // default split size) or filling half the cores is "wide".
+    val small = smallScan(docs)
     // barrier: CollapseProject would otherwise inline the signature
     // expression once per band key per join leg (~17 evals/row — measured
     // 35 s vs 2 s for the signatures themselves at 5k docs before this
     // barrier), and the table feeds BOTH self-join legs. id + 64 longs —
     // ~600 B/row, negligible at any doc count that fits a cluster's
     // aggregate memory; spills to disk otherwise.
-    //
-    // Docs shorter than shingleK chars have NO k-grams: their signature
-    // would be the all-MaxValue sentinel, band-colliding every tiny doc
-    // with every other one (and KgramJaccard calls two empty sets 1.0).
-    // They cannot be near-duplicates under a k-gram measure, so they are
-    // filtered out of the signature table — matching the DuckDB oracle,
-    // which never emits them.
-    val raw = df.select(col(idCol).as("__id"), col(textCol).as("__t"))
-    // One probe decides BOTH the scan fan-out and the candidate shape
-    // below (same two gates as [[fanOut]]): a corpus with ≥ 64 natural
-    // splits (≈ 8 GB at the default split size) or filling half the
-    // cores is "wide".
-    val target = raw.sparkSession.sparkContext.defaultParallelism
-    val scanPartsN =
-      if (raw.isStreaming) Int.MaxValue
-      else raw.queryExecution.toRdd.getNumPartitions
-    val small = scanPartsN * 2 < target && scanPartsN <= 64
-    val wide = wideShape.getOrElse(!small)
-    val sigs = barrier(
-      (if (small) raw.repartition(target) else raw)
-        .select(col("__id"),
-          TextFunctions.normalizedText(col("__t")).as("__norm"))
-        .where(char_length(col("__norm")) >= shingleK)
-        .select(col("__id"),
-          graft.functions.expressions.HashExprs
-            .minhashSig(col("__norm"), shingleK, numHashes).as("__sig")),
+    val sigs = barrier(signatureRows(spread(docs, small), shingleK, numHashes),
       checkpointSignatures)
-    // Integer compare (# agreeing components >= minAgree) — no float
-    // boundary, bit-identical in the DuckDB oracle.
-    val minAgree = math.ceil((threshold - 0.15) * numHashes).toInt
-    // Candidate generation: TWO measured shapes, gated on corpus scale,
-    // identical output (spec-pinned by MinhashShapeSpec):
-    //
-    //  - INLINE (small corpora): both band-join legs carry the 512 B
-    //    signature and the agree-estimate runs streaming inside the join
-    //    stage, so the dedup exchange sees only survivors. Fewest
-    //    stages — r15 A/B: 1.5 s vs 2.3-2.8 s per consumer at sf0.1,
-    //    where stage latency, not bytes, binds.
-    //
-    //  - WIDE (≥ 64-split corpora, guide §2.3/§8): the band self-join
-    //    shuffles (band, id) METADATA ONLY — the r14 shape moved the full
-    //    signatures through the exchange, ~40× the bytes the join needs
-    //    (297 MB per leg at a 50 k-doc corpus, JobProf r15 at the
-    //    synthesized 10× SF; 594 MB → 26 MB after). Signatures re-attach
-    //    to the DEDUPED pair set by id — AQE broadcasts the pair side in
-    //    the common O(dups) case — and the estimate runs once per
-    //    distinct pair instead of once per band collision. r15 A/B at the
-    //    10× SF: family −5..−14%; at a real cluster the exchange bytes
-    //    are network, not page cache, and dominate.
-    //
-    // hot-band guard either way: a degenerate band key shared by n docs
-    // yields n² candidates — cap its document frequency before the
-    // self-join.
-    val estimated0 = if (wide) {
-      val banded = capHotKeys(
-        barrier(sigs.select(col("__id"),
-            explode(lshBandKeys(col("__sig"), bands, rowsPerBand))
-              .as("__band")),
-          checkpoint = false),
-        "__band", maxBandFreq, "minhashNearDups")
-      val a = banded.select(col("__band"), col("__id").as("idA"))
-      val b = banded.select(col("__band"), col("__id").as("idB"))
-      val rawPairs = a.join(b, Seq("__band")).where(col("idA") < col("idB"))
-        .select("idA", "idB")
-        .dropDuplicates("idA", "idB")
-      rawPairs
-        .join(sigs.select(col("__id").as("idA"), col("__sig").as("__sa")),
-          Seq("idA"))
-        .join(sigs.select(col("__id").as("idB"), col("__sig").as("__sb")),
-          Seq("idB"))
-        .withColumn("__agree",
-          aggregate(zip_with(col("__sa"), col("__sb"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x))
-        .where(col("__agree") >= minAgree)
-        .select("idA", "idB")
-        // an id with several signature rows re-attaches once per row:
-        // dedup again so each pair leaves once, as in the inline shape
-        .dropDuplicates("idA", "idB")
-    } else {
-      val banded = capHotKeys(
-        sigs.withColumn("__band",
-          explode(lshBandKeys(col("__sig"), bands, rowsPerBand))),
-        "__band", maxBandFreq, "minhashNearDups")
-      val a = banded.select(col("__band"), col("__id").as("idA"),
-        col("__sig").as("__sa"))
-      val b = banded.select(col("__band"), col("__id").as("idB"),
-        col("__sig").as("__sb"))
-      a.join(b, Seq("__band")).where(col("idA") < col("idB"))
-        .withColumn("__agree",
-          aggregate(zip_with(col("__sa"), col("__sb"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, x) => acc + x))
-        .where(col("__agree") >= minAgree)
-        .select("idA", "idB")
-        .dropDuplicates("idA", "idB")
-    }
-    // checkpoint: the candidate pairs feed THREE consumers below (the
-    // id semi-filter via explode and both verify joins) — materialize the
-    // LSH join once instead of trusting exchange reuse across the legs.
-    // Candidate pairs are O(dups), small by the pipeline's own premise.
-    // honor the caller's reliability flag (same contract as the signature
-    // barrier): local checkpoints pin blocks to executors and die with
-    // them — on a cluster pass checkpointSignatures = true so a lost
-    // executor re-reads the pair set instead of failing the query
-    val estimated =
-      if (checkpointSignatures) estimated0.checkpoint()
-      else estimated0.localCheckpoint()
-
-    // Guide §3.2/§8: verify only candidate-involved docs. The previous
-    // shape normalized EVERY doc's text in both join legs (measured: the
-    // two broadcast-leg builds were the two slowest single-task stages of
-    // the whole query, ~0.9 s + 0.3 s at sf0.1 — full-corpus
-    // normalizedText twice); the semi-join prunes the text scan to the
-    // pair-involved ids before any per-char work. Unhinted joins: AQE
-    // broadcasts the candidate-id side when it is small and falls back to
-    // a single shuffle of the doc table otherwise (the old shape's
-    // at-scale fallback shuffled the full text table twice).
-    val candIds = estimated
-      .select(explode(array(col("idA"), col("idB"))).as("__jid")).distinct()
-    // fan the verify scan out on small corpora (reuses the probe above):
-    // a small-file corpus packs into ONE scan split (openCost packing),
-    // so the semi-join + normalize + kgram verify all ran as a single
-    // task (JobProf r15: a 4.5 s 1-task stage at the synthesized 10× SF
-    // inside every closure consumer). A no-op once the corpus has
-    // natural splits.
-    val txtScan = df.select(col(idCol).as("__jid"), col(textCol).as("__rawt"))
-    val txt = (if (small) txtScan.repartition(target) else txtScan)
-      .join(candIds, Seq("__jid"), "left_semi")
-      .select(col("__jid"),
-        TextFunctions.normalizedText(col("__rawt")).as("__jtxt"))
-    estimated
-      .join(txt.withColumnRenamed("__jid", "idA").withColumnRenamed("__jtxt", "__ta"),
-        Seq("idA"))
-      .join(txt.withColumnRenamed("__jid", "idB").withColumnRenamed("__jtxt", "__tb"),
-        Seq("idB"))
-      .withColumn("jaccard", graft.functions.expressions.HashExprs
-        .kgramJaccard(col("__ta"), col("__tb"), shingleK))
-      .where(col("jaccard") >= threshold)
-      .select(col("idA"), col("idB"), round(col("jaccard"), 6).as("jaccard"))
+    minhashPairs(sigs, batchSigs = None, docs, small,
+      wideShape.getOrElse(!small), shingleK, numHashes, bands, threshold,
+      maxBandFreq, "minhashNearDups", checkpointSignatures)
   }
 
   /** Reusable signature table (doc_id, sig) — the artifact an incremental
@@ -435,8 +359,18 @@ object Dedup {
     * so corpus signatures are computed once, not per arriving batch. */
   def minhashSignatureTable(df: DataFrame, textCol: String, idCol: String,
                             shingleK: Int = 5, numHashes: Int = 64): DataFrame =
-    fanOut(df.select(col(idCol).as("doc_id"), col(textCol).as("__t")))
-      .select(col("doc_id"),
+    signatureRows(fanOut(df.select(col(idCol).as("doc_id"), col(textCol).as("__t"))),
+      shingleK, numHashes)
+
+  /** `(doc_id, sig)` over a `(doc_id, __t)` scan. Docs shorter than
+    * shingleK chars have NO k-grams: their signature would be the
+    * all-MaxValue sentinel, band-colliding every tiny doc with every other
+    * one (and KgramJaccard calls two empty sets 1.0). They cannot be
+    * near-duplicates under a k-gram measure, so they are filtered out —
+    * matching the DuckDB oracle, which never emits them. */
+  private def signatureRows(docs: DataFrame, shingleK: Int,
+                            numHashes: Int): DataFrame =
+    docs.select(col("doc_id"),
         TextFunctions.normalizedText(col("__t")).as("__norm"))
       .where(char_length(col("__norm")) >= shingleK)
       .select(col("doc_id"), graft.functions.expressions.HashExprs
@@ -470,94 +404,113 @@ object Dedup {
       textCol: String, idCol: String, shingleK: Int, numHashes: Int,
       bands: Int, threshold: Double, maxBandFreq: Int,
       wideShape: Option[Boolean]): DataFrame = {
-    val rowsPerBand = numHashes / bands
     val newSigs = barrier(
       minhashSignatureTable(newDocs, textCol, idCol, shingleK, numHashes),
       checkpoint = false)
     // barriered: the union feeds the banding pass AND both signature
-    // re-attach legs below — without it each consumer re-reads the
+    // re-attach legs — without it each consumer re-reads the
     // corpus-signature source (JobProf r15: five near-identical source
     // passes per run at the 10× SF)
     val allSigs = barrier(corpusSigs.unionByName(newSigs),
       checkpoint = false)
-    // same two candidate shapes as [[minhashNearDups]], gated on the
-    // corpus scan (inline signatures when small — fewest stages; metadata
-    // band legs + re-attach when wide — §2.3/§8 bytes), identical output
-    // (MinhashShapeSpec)
-    val docsScan =
-      allDocs.select(col(idCol).as("__jid"), col(textCol).as("__rawt"))
-    val target = allDocs.sparkSession.sparkContext.defaultParallelism
-    val scanPartsN =
-      if (docsScan.isStreaming) Int.MaxValue
-      else docsScan.queryExecution.toRdd.getNumPartitions
-    val small = scanPartsN * 2 < target && scanPartsN <= 64
-    val wide = wideShape.getOrElse(!small)
+    // the shape and the verify fan-out gate on the corpus text scan
+    val docs = allDocs.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
+    val small = smallScan(docs)
+    minhashPairs(allSigs, Some(newSigs), docs, small,
+      wideShape.getOrElse(!small), shingleK, numHashes, bands, threshold,
+      maxBandFreq, "minhashNearDupsIncremental", checkpoint = false)
+  }
+
+  /** Candidates, estimate and exact verify shared by [[minhashNearDups]]
+    * (`batchSigs = None`) and [[minhashNearDupsIncremental]] over
+    * `(doc_id, sig)` tables; `docs` is the `(doc_id, __t)` text scan and
+    * `small` its gate answer.
+    *
+    * Candidate generation: TWO measured shapes, gated on corpus scale,
+    * identical output (spec-pinned by MinhashShapeSpec):
+    *
+    *  - INLINE (small corpora): both band-join legs carry the 512 B
+    *    signature and the agree-estimate runs streaming inside the join
+    *    stage, so the dedup exchange sees only survivors. Fewest
+    *    stages — r15 A/B: 1.5 s vs 2.3-2.8 s per consumer at sf0.1,
+    *    where stage latency, not bytes, binds.
+    *
+    *  - WIDE (≥ 64-split corpora): the band join shuffles
+    *    (band, id) METADATA ONLY — the r14 shape moved the full signatures
+    *    through the exchange, ~40× the bytes the join needs (297 MB per
+    *    leg at a 50 k-doc corpus, JobProf r15 at the synthesized 10× SF;
+    *    594 MB → 26 MB after). Signatures re-attach to the DEDUPED pair
+    *    set by id — AQE broadcasts the pair side in the common O(dups)
+    *    case — and the estimate runs once per distinct pair instead of
+    *    once per band collision. r15 A/B at the 10× SF: family −5..−14%;
+    *    at a real cluster the exchange bytes are network, not page cache,
+    *    and dominate.
+    *
+    * Hot-band guard either way: a degenerate band key shared by n docs
+    * yields n² candidates — its document frequency is capped on the
+    * corpus side (which holds the batch too) before the join. */
+  private def minhashPairs(
+      sigs: DataFrame, batchSigs: Option[DataFrame], docs: DataFrame,
+      small: Boolean, wide: Boolean, shingleK: Int, numHashes: Int,
+      bands: Int, threshold: Double, maxBandFreq: Int, what: String,
+      checkpoint: Boolean): DataFrame = {
+    val rowsPerBand = numHashes / bands
+    def banded(s: DataFrame) = s.select(
+      Seq(col("doc_id").as("__id")) ++ (if (wide) Nil else Seq(col("sig").as("__p"))) :+
+        explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("__key"): _*)
+    val corpus = capHotKeys(
+      if (wide) barrier(banded(sigs), checkpoint = false) else banded(sigs),
+      "__key", maxBandFreq, what)
+    // Integer compare (# agreeing components >= minAgree) — no float
+    // boundary, bit-identical in the DuckDB oracle.
     val minAgree = math.ceil((threshold - 0.15) * numHashes).toInt
-    def agree(x: Column, y: Column): Column =
+    val agree = (x: Column, y: Column) =>
       aggregate(zip_with(x, y, (a, b) => when(a === b, 1).otherwise(0)),
         lit(0), (acc, v) => acc + v)
-    val estimated0 = if (wide) {
-      def bandedKeys(sigs: DataFrame) = sigs.select(col("doc_id"),
-        explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("__band"))
-      val bandedAll = capHotKeys(
-        barrier(bandedKeys(allSigs), checkpoint = false),
-        "__band", maxBandFreq, "minhashNearDupsIncremental")
-      val n = bandedKeys(newSigs)
-        .select(col("__band"), col("doc_id").as("__idN"))
-      val o = bandedAll.select(col("__band"), col("doc_id").as("__idO"))
-      val rawPairs = n.join(o, Seq("__band"))
-        .where(col("__idN") =!= col("__idO"))
-        .select(least(col("__idN"), col("__idO")).as("idA"),
-          greatest(col("__idN"), col("__idO")).as("idB"))
-        .dropDuplicates("idA", "idB")
-      // agreement is symmetric, so attaching by canonical (idA, idB) id
-      // computes the same count the (__idN, __idO) rows did
-      rawPairs
-        .join(allSigs.select(col("doc_id").as("idA"), col("sig").as("__sa")),
-          Seq("idA"))
-        .join(allSigs.select(col("doc_id").as("idB"), col("sig").as("__sb")),
-          Seq("idB"))
-        .where(agree(col("__sa"), col("__sb")) >= minAgree)
-        .select("idA", "idB")
-        // an id in both corpusSigs and the batch re-attaches twice
-        .dropDuplicates("idA", "idB")
-    } else {
-      def banded(sigs: DataFrame) = sigs.withColumn("__band",
-        explode(lshBandKeys(col("sig"), bands, rowsPerBand)))
-      val bandedAll = capHotKeys(banded(allSigs), "__band", maxBandFreq,
-        "minhashNearDupsIncremental")
-      val n = banded(newSigs)
-        .select(col("__band"), col("doc_id").as("__idN"),
-          col("sig").as("__sn"))
-      val o = bandedAll
-        .select(col("__band"), col("doc_id").as("__idO"),
-          col("sig").as("__so"))
-      n.join(o, Seq("__band")).where(col("__idN") =!= col("__idO"))
-        .where(agree(col("__sn"), col("__so")) >= minAgree)
-        .select(least(col("__idN"), col("__idO")).as("idA"),
-          greatest(col("__idN"), col("__idO")).as("idB"))
-        .dropDuplicates("idA", "idB")
-    }
-    val estimated = estimated0.localCheckpoint()
-    // same semi-filtered verify as [[minhashNearDups]]: only
-    // candidate-involved docs are re-read and normalized; the small-
-    // corpus fan-out spreads the single-split scan before the per-char
-    // verify work
+    val pairs = lshCandidateJoin(corpus, batchSigs.map(banded),
+      if (wide) Some(sigs.select(col("doc_id").as("__id"), col("sig").as("__p")))
+      else None,
+      agree, _ >= minAgree).select("idA", "idB")
+    // checkpoint: the candidate pairs feed THREE consumers below (the
+    // id semi-filter via explode and both verify joins) — materialize the
+    // LSH join once instead of trusting exchange reuse across the legs.
+    // Candidate pairs are O(dups), small by the pipeline's own premise.
+    // honor the caller's reliability flag (same contract as the signature
+    // barrier): local checkpoints pin blocks to executors and die with
+    // them — on a cluster pass checkpointSignatures = true so a lost
+    // executor re-reads the pair set instead of failing the query
+    val estimated =
+      if (checkpoint) pairs.checkpoint() else pairs.localCheckpoint()
+
+    // Verify only candidate-involved docs. The previous
+    // shape normalized EVERY doc's text in both join legs (measured: the
+    // two broadcast-leg builds were the two slowest single-task stages of
+    // the whole query, ~0.9 s + 0.3 s at sf0.1 — full-corpus
+    // normalizedText twice); the semi-join prunes the text scan to the
+    // pair-involved ids before any per-char work. Unhinted joins: AQE
+    // broadcasts the candidate-id side when it is small and falls back to
+    // a single shuffle of the doc table otherwise (the old shape's
+    // at-scale fallback shuffled the full text table twice).
     val candIds = estimated
-      .select(explode(array(col("idA"), col("idB"))).as("__jid")).distinct()
-    val txt = (if (small) docsScan.repartition(target) else docsScan)
-      .join(candIds, Seq("__jid"), "left_semi")
-      .select(col("__jid"),
-        TextFunctions.normalizedText(col("__rawt")).as("__jtxt"))
+      .select(explode(array(col("idA"), col("idB"))).as("doc_id")).distinct()
+    // fan the verify scan out on small corpora: a small-file corpus packs
+    // into ONE scan split (openCost packing), so the semi-join + normalize
+    // + kgram verify all ran as a single task (JobProf r15: a 4.5 s 1-task
+    // stage at the synthesized 10× SF inside every closure consumer). A
+    // no-op once the corpus has natural splits.
+    val txt = spread(docs, small)
+      .join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), TextFunctions.normalizedText(col("__t")).as("__n"))
     estimated
-      .join(txt.withColumnRenamed("__jid", "idA").withColumnRenamed("__jtxt", "__ta"),
-        Seq("idA"))
-      .join(txt.withColumnRenamed("__jid", "idB").withColumnRenamed("__jtxt", "__tb"),
-        Seq("idB"))
+      .join(txt.select(col("doc_id").as("idA"), col("__n").as("__ta")), Seq("idA"))
+      .join(txt.select(col("doc_id").as("idB"), col("__n").as("__tb")), Seq("idB"))
       .withColumn("jaccard", graft.functions.expressions.HashExprs
         .kgramJaccard(col("__ta"), col("__tb"), shingleK))
       .where(col("jaccard") >= threshold)
       .select(col("idA"), col("idB"), round(col("jaccard"), 6).as("jaccard"))
+      // an id repeated in the text input joins once per copy: each
+      // verified pair leaves once
+      .dropDuplicates("idA", "idB")
   }
 
   // ---------------------------------------------------------------- n-gram jaccard
@@ -714,17 +667,6 @@ object Dedup {
       "__id", "__h", maxHamming, numBlocks, comboSize, maxBandFreq,
       "simhashNearDupsBounded")
 
-  /** Bounded Hamming near-dups over 64-bit fingerprints — the
-    * block-combination core behind [[simhashNearDupsBounded]], usable for
-    * perceptual image hashes too. Guarantee: `numBlocks − comboSize ≥
-    * maxHamming` ⇒ every qualifying pair shares ≥ 1 combo key (pigeonhole
-    * over blocks), so output = ALL pairs with Hamming ≤ maxHamming among
-    * uncapped keys, identical to [[hammingNearDups]]'s recall at that
-    * threshold. Cost shape: C(numBlocks, comboSize) rows/doc through one
-    * shuffle (20 at the 6-choose-3 default vs the quarter bands' 4) buys
-    * ~32-bit keys whose random-collision mass is corpus-scale-bounded —
-    * the trade Manku et al. run in production. Output (idA < idB,
-    * hamming ≤ maxHamming). */
   /** The exploded combo-key array for [[hammingNearDupsBounded]]'s block
     * construction over a 64-bit hash column: one struct per
     * `comboSize`-subset of the `numBlocks` blocks. */
@@ -754,37 +696,69 @@ object Dedup {
     }: _*)
   }
 
-  /** The distinct candidate pairs (idA < idB with hashes) the bounded
-    * block-combination scheme generates BEFORE the exact Hamming verify —
-    * the measurable quantity behind the 20·n²/2³² random-collision model. */
+  /** The four 16-bit quarter bands of a 64-bit hash as `(band, key)`
+    * structs — by pigeonhole, two hashes within Hamming ≤ 3 agree on at
+    * least one. The batch quarter-band families and the streaming matcher
+    * ([[graft.streaming.StreamingDedup]]) key on this one expression. */
+  private[graft] def quarterBands(h: Column): Column =
+    array((0 until 4).map { b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(h, b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))
+    }: _*)
+
+  /** `(__id, __p)` hash rows of a Hamming-family input. */
+  private def hashRows(hashed: DataFrame, idCol: String,
+                       hashCol: String): DataFrame =
+    hashed.select(col(idCol).as("__id"), col(hashCol).as("__p"))
+
+  /** Band `(__id, __p)` hash rows on `keys` of the hash. */
+  private def hashKeyed(h: DataFrame, keys: Column => Column): DataFrame =
+    h.withColumn("__key", explode(keys(col("__p"))))
+
+  /** The candidate join over keyed hash sides with the hash inline on both
+    * legs and the exact Hamming distance as score; `keep` is the verify. */
+  private def hammingJoin(corpus: DataFrame, batch: Option[DataFrame],
+                          keep: Column => Column): DataFrame =
+    lshCandidateJoin(corpus, batch, payload = None,
+      (a, b) => hamming64(a, b).cast("long"), keep)
+      .select(col("idA"), col("idB"), col("__score").as("hamming"))
+
+  /** The distinct candidate pairs (idA < idB, hamming) the bounded
+    * block-combination scheme generates, with `keep` as the verify —
+    * `_ => lit(true)` gives the pairs BEFORE the exact Hamming verify,
+    * the measurable quantity behind the 20·n²/2³² random-collision
+    * model. */
   private def hammingBoundedCandidates(hashed: DataFrame, idCol: String,
                                        hashCol: String, maxHamming: Int,
                                        numBlocks: Int, comboSize: Int,
-                                       maxBandFreq: Int,
-                                       what: String): DataFrame = {
-    val withK = capHotKeys(
-      barrier(
-        fanOut(hashed.select(col(idCol).as("__id"), col(hashCol).as("__h"))),
-        checkpoint = false)
-        .withColumn("__k", explode(comboKeyArray(col("__h"), numBlocks,
-          comboSize, maxHamming, what))),
-      "__k", maxBandFreq, what)
-    val a = withK.select(col("__k"), col("__id").as("idA"), col("__h").as("__ha"))
-    val b = withK.select(col("__k"), col("__id").as("idB"), col("__h").as("__hb"))
-    a.join(b, Seq("__k")).where(col("idA") < col("idB"))
-      .dropDuplicates("idA", "idB")
+                                       maxBandFreq: Int, what: String,
+                                       keep: Column => Column): DataFrame = {
+    val keyed = capHotKeys(
+      hashKeyed(barrier(fanOut(hashRows(hashed, idCol, hashCol)),
+          checkpoint = false),
+        comboKeyArray(_, numBlocks, comboSize, maxHamming, what)),
+      "__key", maxBandFreq, what)
+    hammingJoin(keyed, batch = None, keep)
   }
 
+  /** Bounded Hamming near-dups over 64-bit fingerprints — the
+    * block-combination core behind [[simhashNearDupsBounded]], usable for
+    * perceptual image hashes too. Guarantee: `numBlocks − comboSize ≥
+    * maxHamming` ⇒ every qualifying pair shares ≥ 1 combo key (pigeonhole
+    * over blocks), so output = ALL pairs with Hamming ≤ maxHamming among
+    * uncapped keys, identical to [[hammingNearDups]]'s recall at that
+    * threshold. Cost shape: C(numBlocks, comboSize) rows/doc through one
+    * shuffle (20 at the 6-choose-3 default vs the quarter bands' 4) buys
+    * ~32-bit keys whose random-collision mass is corpus-scale-bounded —
+    * the trade Manku et al. run in production. Output (idA < idB,
+    * hamming ≤ maxHamming). */
   def hammingNearDupsBounded(hashed: DataFrame, idCol: String,
                              hashCol: String, maxHamming: Int = 3,
                              numBlocks: Int = 6, comboSize: Int = 3,
                              maxBandFreq: Int = 2000,
                              what: String = "hammingNearDupsBounded"): DataFrame =
     hammingBoundedCandidates(hashed, idCol, hashCol, maxHamming, numBlocks,
-      comboSize, maxBandFreq, what)
-      .withColumn("hamming", hamming64(col("__ha"), col("__hb")).cast("long"))
-      .where(col("hamming") <= maxHamming)
-      .select("idA", "idB", "hamming")
+      comboSize, maxBandFreq, what, _ <= maxHamming)
 
   /** Candidate-pair COUNT of the bounded scheme on `df` — the skew
     * harness's measured side of the model-vs-measured envelope probe. */
@@ -795,7 +769,7 @@ object Dedup {
     hammingBoundedCandidates(
       df.select(col(idCol).as("__id"), simhash64(col(textCol)).as("__h")),
       "__id", "__h", maxHamming, numBlocks, comboSize, maxBandFreq,
-      "simhashBoundedCandidateCount").count()
+      "simhashBoundedCandidateCount", _ => lit(true)).count()
 
   /** Near-dup pairs among 64-bit fingerprints by Hamming distance — the
     * banding core shared by SimHash (text) and perceptual image hashes:
@@ -808,20 +782,11 @@ object Dedup {
                       what: String = "hammingNearDups"): DataFrame = {
     // barrier: the hash table feeds both self-join legs AND the cap's
     // frequency scan — persist so the fingerprint pass runs once
-    val withH = capHotKeys(
-      barrier(hashed.select(col(idCol).as("__id"), col(hashCol).as("__h")),
-        checkpoint = false)
-        .withColumn("__q", explode(array((0 until 4).map(q =>
-          struct(lit(q).as("qi"),
-            shiftright(col("__h"), q * 16).bitwiseAND(0xFFFFL).as("qv"))): _*))),
-      "__q", maxBandFreq, what)
-    val a = withH.select(col("__q"), col("__id").as("idA"), col("__h").as("__ha"))
-    val b = withH.select(col("__q"), col("__id").as("idB"), col("__h").as("__hb"))
-    a.join(b, Seq("__q")).where(col("idA") < col("idB"))
-      .dropDuplicates("idA", "idB")
-      .withColumn("hamming", hamming64(col("__ha"), col("__hb")).cast("long"))
-      .where(col("hamming") <= maxHamming)
-      .select("idA", "idB", "hamming")
+    val keyed = capHotKeys(
+      hashKeyed(barrier(hashRows(hashed, idCol, hashCol), checkpoint = false),
+        quarterBands),
+      "__key", maxBandFreq, what)
+    hammingJoin(keyed, batch = None, _ <= maxHamming)
   }
 
   /** Incremental Hamming-family near-dups — the image/simhash sibling of
@@ -836,28 +801,9 @@ object Dedup {
   def hammingNearDupsIncremental(corpusHashes: DataFrame, newHashes: DataFrame,
                                  idCol: String, hashCol: String,
                                  maxHamming: Int = 3, maxBandFreq: Int = 2000,
-                                 what: String = "hammingNearDupsIncremental"): DataFrame = {
-    val newH = barrier(
-      newHashes.select(col(idCol).as("__id"), col(hashCol).as("__h")),
-      checkpoint = false)
-    val allH = corpusHashes.select(col(idCol).as("__id"), col(hashCol).as("__h"))
-      .unionByName(newH)
-    def quarters(df: DataFrame) = df.withColumn("__q",
-      explode(array((0 until 4).map(q =>
-        struct(lit(q).as("qi"),
-          shiftright(col("__h"), q * 16).bitwiseAND(0xFFFFL).as("qv"))): _*)))
-    val bandedAll = capHotKeys(quarters(allH), "__q", maxBandFreq, what)
-    val n = quarters(newH)
-      .select(col("__q"), col("__id").as("__idN"), col("__h").as("__hn"))
-    val o = bandedAll
-      .select(col("__q"), col("__id").as("__idO"), col("__h").as("__ho"))
-    n.join(o, Seq("__q")).where(col("__idN") =!= col("__idO"))
-      .select(least(col("__idN"), col("__idO")).as("idA"),
-        greatest(col("__idN"), col("__idO")).as("idB"),
-        hamming64(col("__hn"), col("__ho")).cast("long").as("hamming"))
-      .dropDuplicates("idA", "idB")
-      .where(col("hamming") <= maxHamming)
-  }
+                                 what: String = "hammingNearDupsIncremental"): DataFrame =
+    hammingIncremental(corpusHashes, newHashes, idCol, hashCol, quarterBands,
+      maxHamming, maxBandFreq, what)
 
   /** Incremental Hamming near-dups over the BOUNDED block-combination
     * keys — [[hammingNearDupsIncremental]]'s quarter bands replaced by
@@ -874,26 +820,21 @@ object Dedup {
                                         maxHamming: Int = 3,
                                         numBlocks: Int = 6, comboSize: Int = 3,
                                         maxBandFreq: Int = 2000,
-                                        what: String = "hammingNearDupsIncrementalBounded"): DataFrame = {
-    val newH = barrier(
-      newHashes.select(col(idCol).as("__id"), col(hashCol).as("__h")),
-      checkpoint = false)
-    val allH = corpusHashes.select(col(idCol).as("__id"), col(hashCol).as("__h"))
-      .unionByName(newH)
-    def keyed(df: DataFrame) = df.withColumn("__k",
-      explode(comboKeyArray(col("__h"), numBlocks, comboSize, maxHamming,
-        what)))
-    val keyedAll = capHotKeys(keyed(allH), "__k", maxBandFreq, what)
-    val n = keyed(newH)
-      .select(col("__k"), col("__id").as("__idN"), col("__h").as("__hn"))
-    val o = keyedAll
-      .select(col("__k"), col("__id").as("__idO"), col("__h").as("__ho"))
-    n.join(o, Seq("__k")).where(col("__idN") =!= col("__idO"))
-      .select(least(col("__idN"), col("__idO")).as("idA"),
-        greatest(col("__idN"), col("__idO")).as("idB"),
-        hamming64(col("__hn"), col("__ho")).cast("long").as("hamming"))
-      .dropDuplicates("idA", "idB")
-      .where(col("hamming") <= maxHamming)
+                                        what: String = "hammingNearDupsIncrementalBounded"): DataFrame =
+    hammingIncremental(corpusHashes, newHashes, idCol, hashCol,
+      comboKeyArray(_, numBlocks, comboSize, maxHamming, what),
+      maxHamming, maxBandFreq, what)
+
+  /** The new batch banded on `keys` against the capped union of corpus
+    * and batch — both incremental Hamming families. */
+  private def hammingIncremental(corpusHashes: DataFrame, newHashes: DataFrame,
+                                 idCol: String, hashCol: String,
+                                 keys: Column => Column, maxHamming: Int,
+                                 maxBandFreq: Int, what: String): DataFrame = {
+    val newH = barrier(hashRows(newHashes, idCol, hashCol), checkpoint = false)
+    val allH = hashRows(corpusHashes, idCol, hashCol).unionByName(newH)
+    hammingJoin(capHotKeys(hashKeyed(allH, keys), "__key", maxBandFreq, what),
+      Some(hashKeyed(newH, keys)), _ <= maxHamming)
   }
 
   /** Resolve near-dup PAIRS into clusters: connected components by min-id

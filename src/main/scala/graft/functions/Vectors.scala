@@ -612,7 +612,7 @@ object Vectors {
                      checkpointSignatures: Boolean = false,
                      maxBandFreq: Int = 2000): DataFrame = {
     // barrier: signature reused by both join legs and both band exprs
-    // (same CollapseProject inlining hazard as Dedup.minhashNearDups;
+    // (the CollapseProject inlining hazard Dedup.barrier documents;
     // checkpoint=true for the cluster-scale recompute-on-loss rationale)
     val sig = graft.functions.Dedup.barrier(
       df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
@@ -620,28 +620,20 @@ object Vectors {
       checkpointSignatures)
     // bucket on signature halves: Hamming-1-close signatures share a half.
     // Band legs carry ONLY (band, id) — the candidate-pair dedup shuffle
-    // moves 16 bytes/pair, never the vectors; payloads are re-joined by id
-    // from the cached signature table afterwards (same shape as
-    // Dedup.minhashNearDups). Hot bands (a degenerate signature half shared
-    // by > maxBandFreq vectors — n² candidates in that bucket) are dropped
-    // with a logged count before the self-join.
+    // moves 16 bytes/pair, never the vectors; payloads re-attach by id from
+    // the cached signature table (the keys-only branch of
+    // Dedup.lshCandidateJoin). Hot bands (a degenerate signature half
+    // shared by > maxBandFreq vectors — n² candidates in that bucket) are
+    // dropped with a logged count before the join.
     val banded = graft.functions.Dedup.capHotKeys(
-      sig.select(col("__id"), col("__sig")).withColumn("__band", explode(array(
+      sig.select(col("__id"), col("__sig")).withColumn("__key", explode(array(
         struct(lit(0).as("bi"), col("__sig").bitwiseAND(lit((1L << (numPlanes / 2)) - 1)).as("bv")),
         struct(lit(1).as("bi"), shiftright(col("__sig"), numPlanes / 2).as("bv"))))),
-      "__band", maxBandFreq, "cosineNearDups")
-    val a = banded.select(col("__band"), col("__id").as("idA"))
-    val b = banded.select(col("__band"), col("__id").as("idB"))
-    val pairs = a.join(b, Seq("__band")).where(col("idA") < col("idB"))
-      .select("idA", "idB")
-      .dropDuplicates("idA", "idB")
-    val vecs = sig.select(col("__id"), col("__v"))
-    pairs
-      .join(vecs.withColumnRenamed("__id", "idA").withColumnRenamed("__v", "__va"), Seq("idA"))
-      .join(vecs.withColumnRenamed("__id", "idB").withColumnRenamed("__v", "__vb"), Seq("idB"))
-      .withColumn("cosine", cosine(col("__va"), col("__vb")))
-      .where(col("cosine") >= threshold)
-      .select(col("idA"), col("idB"), round(col("cosine"), 6).as("cosine"))
+      "__key", maxBandFreq, "cosineNearDups")
+    graft.functions.Dedup.lshCandidateJoin(banded, batch = None,
+        Some(sig.select(col("__id"), col("__v").as("__p"))),
+        cosine, _ >= threshold)
+      .select(col("idA"), col("idB"), round(col("__score"), 6).as("cosine"))
   }
 
   /** Exact (brute-force) cosine near-dup pairs — oracle-checkable baseline;

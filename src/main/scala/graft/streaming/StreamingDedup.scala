@@ -64,11 +64,7 @@ object StreamingDedup {
     val sig = graft.functions.Dedup.simhash64(col(textCol))
     docs.select(col(idCol).cast("long").as("docId"), sig.as("sig"))
       .select(col("docId"), col("sig"),
-        explode(array((0 until 4).map { b =>
-          struct(lit(b).as("band"),
-            shiftrightunsigned(col("sig"), b * 16)
-              .bitwiseAND(lit(0xFFFFL)).as("key"))
-        }: _*)).as("bk"))
+        explode(graft.functions.Dedup.quarterBands(col("sig"))).as("bk"))
       .select(col("bk.band").as("band"), col("bk.key").as("key"),
         col("docId"), col("sig"))
   }
@@ -83,11 +79,7 @@ object StreamingDedup {
     docs.select(col(idCol).cast("long").as("docId"), sig.as("sig"),
         col(tsCol).cast("timestamp").as("ts"))
       .select(col("docId"), col("sig"), col("ts"),
-        explode(array((0 until 4).map { b =>
-          struct(lit(b).as("band"),
-            shiftrightunsigned(col("sig"), b * 16)
-              .bitwiseAND(lit(0xFFFFL)).as("key"))
-        }: _*)).as("bk"))
+        explode(graft.functions.Dedup.quarterBands(col("sig"))).as("bk"))
       .select(col("bk.band").as("band"), col("bk.key").as("key"),
         col("docId"), col("sig"), col("ts"))
   }

@@ -41,11 +41,12 @@ class MinhashShapeSpec extends SparkSpec {
   }
 
   test("minhashNearDups: shapes agree when doc ids repeat") {
-    // every id of the new slice appears twice in the input (and so twice
-    // on the text side of the verify join, in both shapes alike)
+    // every id of the new slice appears twice in the input, so twice on
+    // the signature side and twice on the text side of the verify join
     val repeated = docs.unionByName(docs.filter(isNew))
     val inline = full(repeated, wide = false)
     assert(inline.nonEmpty, "fixture must produce pairs")
+    assert(inline.distinct == inline, "a repeated id emits each pair once")
     assert(full(repeated, wide = true) == inline)
   }
 

@@ -14,9 +14,13 @@ class TextStatsOncePerRowSpec extends SparkSpec {
       .select(col("doc_id"))
   }
 
+  // the session is shared across suites: restore whatever strategies
+  // another suite installed instead of clearing them
   private def withStrategy[A](body: => A): A = {
-    spark.experimental.extraStrategies = Seq(TextStatsOncePerRow)
-    try body finally spark.experimental.extraStrategies = Nil
+    val ex = spark.experimental
+    val before = ex.extraStrategies
+    ex.extraStrategies = Seq(TextStatsOncePerRow)
+    try body finally ex.extraStrategies = before
   }
 
   private def countTextStats(df: DataFrame): Int =

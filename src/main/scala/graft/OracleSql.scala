@@ -1432,9 +1432,8 @@ object OracleSql {
     // pair -> cluster resolution: the full minhash LSH replay nested as a
     // derived table, closed transitively (reach = all ids reachable from a
     // through the undirected pair graph; min(reachable) = component min,
-    // exactly Dedup.clusterPairs' fixpoint)
-    // same truth for the star-contraction algorithm (one oracle, two
-    // execution strategies — the streaming/batch convention)
+    // the cluster_id contract of Dedup.closePairs). dedup_clusters and
+    // dedup_clusters_star run the same closure and share this truth
     "dedup_clusters_star" ->
       s"""WITH RECURSIVE
          |p AS MATERIALIZED (SELECT idA, idB FROM ($minhashNearDupsSql)),
@@ -1462,8 +1461,8 @@ object OracleSql {
          |FROM reach GROUP BY 1""".stripMargin,
 
     // incremental closure ≡ full recompute: the SAME closure-over-all-pairs
-    // truth as dedup_clusters — three algorithms (propagation, star,
-    // incremental star over compressed history), one oracle
+    // truth as dedup_clusters — closePairs over the old pairs, then the new
+    // pairs folded into those labels through its `prior` mode
     "dedup_clusters_incr" ->
       s"""WITH RECURSIVE
          |p AS MATERIALIZED (SELECT idA, idB FROM ($minhashNearDupsSql)),

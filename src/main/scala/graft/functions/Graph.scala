@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over derived relation graphs — weighted PageRank, the
-  * iterative-propagation flagship beside [[Dedup.clusterPairs]] (connected
-  * components): same per-round join+aggregate shape, but with numeric
+  * iterative-propagation flagship beside [[Dedup.closePairs]] (connected
+  * components): the same per-round join+aggregate shape, but with numeric
   * mass instead of min-id labels. Rank feeds curation (authority-weighted
   * sampling of a link graph) and entity resolution.
   *
@@ -27,14 +27,8 @@ import org.apache.spark.sql.functions._
   * shuffle — and one node-keyed left join for the update. Iteration count
   * is the only sequential dimension; per-round cost is |E| + |V|, the
   * textbook Pregel budget. `localCheckpoint` guards the growing lineage
-  * like [[Dedup.clusterPairs]] (reliable `checkpoint` on a cluster). */
+  * like [[Dedup.closePairs]] (reliable `checkpoint` on a cluster). */
 object Graph {
-
-  private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.Graph")
-
-  /** Alternations the LAST [[connectedComponentsStar]] call ran — read by
-    * the skew harness to assert the O(log n) round bound on chain graphs. */
-  @volatile private[graft] var lastStarRounds: Int = 0
 
   /** (node, rank) after `iters` rounds of weighted PageRank over
     * `edges(srcCol, dstCol, weightCol)`; parallel edges are pre-summed. */
@@ -298,97 +292,5 @@ object Graph {
         col("__aa").cast("double").as("aa_score"))
       .orderBy(col("aa_score").desc, col("a").asc, col("b").asc)
       .limit(k)
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-    * O(log n)-ROUND algorithm beside [[graft.functions.Dedup.clusterPairs]]'s
-    * min-label propagation, whose round count is the graph DIAMETER. For
-    * near-dup cluster graphs (tiny diameter) the two cost the same; for
-    * chain-shaped graphs — entity-resolution link chains, long citation
-    * paths — propagation pays diameter rounds while star contraction
-    * halves every path each alternation.
-    *
-    * Per round: large-star connects every strictly-larger neighbor of u
-    * to `m(u) = min(Γ(u) ∪ u)`; small-star connects u's ≤-neighbors and
-    * u itself to the minimum of that set. Both are one groupBy(min) +
-    * one join over the CURRENT edge set (which only shrinks toward the
-    * star forest); connectivity and the component-min invariant are the
-    * paper's Lemmas 1-2. Fixpoint = the order-independent edge-set
-    * checksum (count + sum of pair md5s, the audit_checksum trick) is
-    * stable across a full alternation; per-round localCheckpoint cuts
-    * the lineage exactly like clusterPairs (reliable `checkpoint` on a
-    * cluster).
-    *
-    * Returns `(node, component)` with component = min node id — the
-    * clusterPairs contract, property-tested equal. */
-  def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
-                              maxIter: Int = 25,
-                              checkpoint: Boolean = false): DataFrame = {
-    // LAZY local checkpoint: each round's checksum aggregate is the
-    // materializing action, so a round costs ONE job instead of two
-    // (eager ckpt + checksum) — the loop is tiny-job-launch bound at the
-    // near-dup graph sizes the bench runs (JobProf r15: ~60 sub-100 ms
-    // jobs per incremental-closure query). The plan is truncated to a
-    // leaf at construction either way; blocks persist as the checksum
-    // computes them. Reliable checkpoints stay eager — a lazy reliable
-    // checkpoint recomputes its whole lineage a second time for the
-    // checkpoint write.
-    def ckpt(d: DataFrame): DataFrame =
-      if (checkpoint) d.checkpoint() else d.localCheckpoint(eager = false)
-    def canon(e: DataFrame): DataFrame = e.select(
-        least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    var e = ckpt(canon(edges.select(col(aCol).as("u"), col(bCol).as("v"))))
-    val allNodes = ckpt(e.select(col("u").as("node"))
-      .unionByName(e.select(col("v").as("node"))).distinct())
-    def checksum(d: DataFrame): (Long, String) = {
-      // DECIMAL(38,0) sum: md5 longs are 2^63-scale, a BIGINT sum
-      // overflows under ANSI
-      val r = d.agg(count(lit(1)).as("n"),
-        coalesce(sum(graft.functions.expressions.Md5Long(
-            concat_ws("|", col("u"), col("v"))).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("h")).head()
-      (r.getLong(0), r.getDecimal(1).toPlainString)
-    }
-    var prevSum = checksum(e)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // large-star: (v, m(u)) for v ∈ Γ(u), v > u
-      val adj = e.select(col("u").as("s"), col("v").as("d"))
-        .unionByName(e.select(col("v").as("s"), col("u").as("d")))
-      val mAll = adj.groupBy(col("s")).agg(min(col("d")).as("__mn"))
-        .select(col("s"), least(col("__mn"), col("s")).as("m"))
-      val large = canon(adj.join(mAll, "s").where(col("d") > col("s"))
-        .select(col("d").as("u"), col("m").as("v")))
-      // small-star over the large-star output: u's strictly-smaller
-      // neighbors and u itself all connect to their minimum
-      val adj2 = large.select(col("u").as("s"), col("v").as("d"))
-        .unionByName(large.select(col("v").as("s"), col("u").as("d")))
-      val smaller = adj2.where(col("d") < col("s"))
-      val mSmall = smaller.groupBy(col("s")).agg(min(col("d")).as("m"))
-      val small = canon(
-        smaller.join(mSmall, "s")
-          .select(col("d").as("u"), col("m").as("v"))
-          .unionByName(mSmall.select(col("s").as("u"), col("m").as("v"))))
-      e = ckpt(small)
-      val cs = checksum(e)
-      converged = cs == prevSum
-      prevSum = cs
-      iter += 1
-    }
-    if (!converged)
-      logger.warn(s"connectedComponentsStar: stopped at maxIter=$maxIter " +
-        "before fixpoint")
-    lastStarRounds = iter
-    // star forest: every non-root points at its component min
-    val comp = e.select(col("v").as("node"), col("u")).groupBy(col("node"))
-      .agg(min(col("u")).as("component"))
-    allNodes.join(comp, Seq("node"), "left")
-      .select(col("node"), coalesce(col("component"), col("node"))
-        .as("component"))
   }
 }

@@ -35,18 +35,15 @@ sealed trait AsOfStrategy
   * histories (the join-then-filter shape materializes |label| × |history|
   * intermediate rows; this shape is O(|label| + |history|) with a single
   * sort) — but `WindowExec` still buffers each entity partition, so a hot
-  * entity's history pays a spill cycle. */
+  * entity's history pays a spill cycle. Kept as the declarative reference
+  * the other strategies are agreement-tested against. */
 case object UnionWindow extends AsOfStrategy
-/** Reference-shaped plan (P2: tsquery.go:191-350): left join on
-  * entity ∧ f.ts ≤ l.ts, then ROW_NUMBER()=1. Kept for cross-checking. */
-case object JoinWindow extends AsOfStrategy
 /** Scale path (default): the custom [[graft.plans.AsOfMerge]] operator —
   * children co-clustered on entity and sorted once, then a streaming merge
   * holding ONE buffered value per entity regardless of history length. No
   * window buffer (UnionWindow's weakness on skewed entities), no join
   * explosion, and no re-join: the picked values append to the label rows
-  * in the same pass. Semantics agreement-tested against both other
-  * strategies. */
+  * in the same pass. Semantics agreement-tested against UnionWindow. */
 case object SortMergeAsOf extends AsOfStrategy
 /** Broadcast-side as-of: the feature group collected, sorted per entity,
   * broadcast, and resolved per label row by a scan-stage binary search
@@ -128,11 +125,8 @@ object AsOfJoin {
           base = sortMergeGroup(base, labelEntity, fs)
         case BroadcastAsOf(maxRows) =>
           base = broadcastGroup(base, labelEntity, fs, maxRows)
-        case UnionWindow | JoinWindow =>
-          val result = strategy match {
-            case UnionWindow => unionWindowGroup(base, labelEntity, fs)
-            case _           => joinWindowGroup(base, labelEntity, fs)
-          }
+        case UnionWindow =>
+          val result = unionWindowGroup(base, labelEntity, fs)
           val hasTtl = fs.exists(_.maxAgeSeconds.isDefined)
           val renamed = result
             .withColumnRenamed("__e", s"__ge_$gi").withColumnRenamed("__t", s"__gt_$gi")
@@ -262,23 +256,5 @@ object AsOfJoin {
         when(pickable && freshEnough(f, col("__v.__gt")),
           col(s"__v.${f.outputName}")))
     }.drop("__v")
-  }
-
-  /** JoinWindow (reference P2 shape): join + ROW_NUMBER()=1. */
-  private def joinWindowGroup(base: DataFrame, labelEntity: String,
-                              fs: Seq[FeatureSide]): DataFrame = {
-    val fev = featureEvents(fs)
-    val lkeys = base
-      .select(col(labelEntity).as("__le"), col("__lts").as("__lt")).distinct()
-    val joined = lkeys.join(fev,
-      lkeys("__le") === fev("__e") && fev("__t") <= lkeys("__lt"), "left")
-    val w = Window.partitionBy(col("__le"), col("__lt"))
-      .orderBy(col("__t").desc, col("__v").desc)
-    val gt = if (fs.exists(_.maxAgeSeconds.isDefined))
-      Seq(col("__v.__gt").as("__gt")) else Nil
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(
-        (col("__le").as("__e") +: col("__lt").as("__t") +:
-          (fs.map(f => col(s"__v.${f.outputName}").as(f.outputName)) ++ gt)): _*)
   }
 }

@@ -52,8 +52,7 @@ object Split {
     * eval pipeline needs (plain row-hash splits leak: a doc and its
     * near-dup land on opposite sides ~2·p·(1−p) of the time). `pairs` is
     * any near-dup pair table (idA, idB — MinHash, SimHash, embedding);
-    * components close via the adaptive closure (degree-probe dispatch,
-    * star-bounded worst case), then the
+    * components close via [[graft.functions.Dedup.closePairs]], then the
     * cluster id (singletons: the row's own id) becomes the hash-split
     * key — [[withSplit]]'s exact md5 rule, so cluster-level assignment
     * replays in any engine. Scale: the closure runs on the pair graph
@@ -62,7 +61,7 @@ object Split {
     * Output: input columns + (cluster_id, is_test). */
   def clusterSafeSplit(df: DataFrame, pairs: DataFrame, idCol: String,
                        testSize: Double, seed: Long): DataFrame = {
-    val clusters = graft.functions.Dedup.clusterPairsAuto(pairs)
+    val clusters = graft.functions.Dedup.closePairs(pairs)
       .withColumnRenamed("doc_id", idCol)
     df.join(clusters, Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))

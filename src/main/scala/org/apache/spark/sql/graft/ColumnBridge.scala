@@ -29,4 +29,10 @@ object ColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Block until every event posted so far has reached its listeners
+    * (`listenerBus` is `private[spark]`) — a `QueryExecutionListener` is
+    * called from the bus, after the action returns. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -134,33 +134,20 @@ class GraphSpec extends SparkSpec {
       .count() === 10L)
   }
 
-  test("star-contraction CC equals label propagation on random graphs") {
-    val rnd = new scala.util.Random(42)
-    val pairs = (0 until 300).map { _ =>
-      val a = rnd.nextInt(120).toLong; val b = rnd.nextInt(120).toLong
-      (math.min(a, b), math.max(a, b))
-    }.filter(p => p._1 != p._2).distinct
-    val df = pairs.toDF("idA", "idB")
-    val star = Graph.connectedComponentsStar(df, "idA", "idB")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.clusterPairs(df)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == prop)
-  }
-
   test("star-contraction CC: long chain resolves in O(log n) rounds") {
     // a 200-node path has diameter 199 — label propagation's round count;
-    // star contraction must land the single component well under maxIter
+    // Dedup.closePairs must land the single component well under maxIter,
+    // also when the partitions leave the whole path to the star loop
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("idA", "idB")
-    val out = Graph.connectedComponentsStar(chain, "idA", "idB",
-      maxIter = 12)
-    val comps = out.select("component").distinct()
+      .repartition(8)
+    val out = Dedup.closePairs(chain, maxIter = 12)
+    val comps = out.select("cluster_id").distinct()
       .collect().map(_.getLong(0)).toSeq
     assert(comps == Seq(0L))
     assert(out.count() == 200L)
     // two disjoint edges stay two components; self-loops are cleaned
     val two = Seq((1L, 2L), (3L, 4L), (5L, 5L)).toDF("idA", "idB")
-    val got = Graph.connectedComponentsStar(two, "idA", "idB")
+    val got = Dedup.closePairs(two)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
   }

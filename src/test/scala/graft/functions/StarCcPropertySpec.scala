@@ -3,10 +3,12 @@ package graft.functions
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSpec
 
-/** connectedComponentsStar vs a driver-side union-find on random graphs:
+/** Dedup.closePairs vs a driver-side union-find on random graphs:
   * identical (node → component-min) assignments for every edge-list
   * shape ScalaCheck produces — sparse/dense, chains, stars, multigraph
-  * duplicates, reversed pairs. */
+  * duplicates, reversed pairs. Inputs are spread over 4 partitions, so the
+  * per-partition union-find leaves cross-partition merges to the star
+  * contraction. */
 class StarCcPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -41,8 +43,7 @@ class StarCcPropertySpec extends SparkSpec {
       val expected = want(es)
       if (expected.isEmpty) true // only self-loops: operator returns empty
       else {
-        val got = Graph.connectedComponentsStar(
-            es.toDF("idA", "idB"), "idA", "idB")
+        val got = Dedup.closePairs(es.toDF("idA", "idB").repartition(4))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         got == expected
       }
@@ -69,13 +70,13 @@ class StarCcPropertySpec extends SparkSpec {
       if (expected.isEmpty) true
       else {
         val (oldEs, newEs) = es.splitAt(cut)
-        val labels = Dedup.clusterPairsStar(oldEs.toDF("idA", "idB"))
-        val got = Dedup.clusterPairsIncremental(labels,
-            newEs.toDF("idA", "idB"))
+        val labels = Dedup.closePairs(oldEs.toDF("idA", "idB").repartition(4))
+        val got = Dedup.closePairs(newEs.toDF("idA", "idB").repartition(4),
+            prior = Some(labels))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // the incremental output also covers nodes that ONLY appear in
-        // self-loop edges (they enter via `all`); project to the union-find
-        // domain for the comparison
+        // self-loop edges (docs no edge touches keep themselves); project to
+        // the union-find domain for the comparison
         got.view.filterKeys(expected.contains).toMap == expected
       }
     }

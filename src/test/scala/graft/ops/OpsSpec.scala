@@ -71,16 +71,11 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got((2L, ts("2024-01-10 00:00:00"))).contains(9.0))
   }
 
-  test("JoinWindow strategy agrees with UnionWindow") {
-    assert(run(UnionWindow) == run(JoinWindow))
-  }
-
-  test("SortMergeAsOf agrees with both declarative strategies") {
+  test("SortMergeAsOf agrees with the declarative strategy") {
     assert(run(SortMergeAsOf) == run(UnionWindow))
-    assert(run(SortMergeAsOf) == run(JoinWindow))
   }
 
-  test("feature TTL masks stale picks identically in all four strategies") {
+  test("feature TTL masks stale picks identically in all three strategies") {
     // label (2, 01-10) picked feature is (01-03, 9.0): 7 days stale.
     // TTL 4 days -> NULL; label (1, 01-05) pick (01-05, 2.0) age 0 -> kept.
     def runTtl(strategy: AsOfStrategy) =
@@ -94,7 +89,6 @@ class AsOfJoinSpec extends SparkSpec {
       (1L, ts("2024-01-01 00:00:00")) -> None,
       (2L, ts("2024-01-10 00:00:00")) -> None) // stale -> masked
     assert(runTtl(UnionWindow) == want)
-    assert(runTtl(JoinWindow) == want)
     assert(runTtl(SortMergeAsOf) == want)
     assert(runTtl(BroadcastAsOf()) == want)
     // boundary: exactly maxAge old is still fresh (inclusive)
@@ -130,8 +124,6 @@ class AsOfJoinSpec extends SparkSpec {
     def result(st: AsOfStrategy) = AsOfJoin.trainingSet(
       lbl, Map("entity" -> "user_id"), "value", Some("ts"),
       Seq(FeatureSide(clk, "user_id", "value", Some("ts"), "f")), st)
-    assert(result(UnionWindow).except(result(JoinWindow)).count() == 0)
-    assert(result(JoinWindow).except(result(UnionWindow)).count() == 0)
     // the custom merge operator on the same self-source inputs
     assert(result(SortMergeAsOf).except(result(UnionWindow)).count() == 0)
     assert(result(UnionWindow).except(result(SortMergeAsOf)).count() == 0)

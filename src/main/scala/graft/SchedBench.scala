@@ -50,7 +50,7 @@ object SchedBench {
 
     // ---- 1. append-cost curve: appends/sec per 2k batch as the ledger
     //      grows to 20k records (old rewrite: each decade ~linearly slower)
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_schedbench").toString
+    val dir1 = graft.TempDirs.create("graft_schedbench").toString
     val runner1 = new TaskRunner(spark, dir1, backoffMs = 1)
     val batch = 2000
     val decades = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -75,7 +75,7 @@ object SchedBench {
     val idxReadsPerSec = 2000 / ((System.nanoTime() - tIdx) / 1e9)
 
     // ---- 2. daemon drain: N created runs → all success via the poll loop
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_schedbench2").toString
+    val dir2 = graft.TempDirs.create("graft_schedbench2").toString
     val runner2 = new TaskRunner(spark, dir2, backoffMs = 1)
     val n = 500
     (0 until n).foreach(i => runner2.record(
@@ -98,7 +98,7 @@ object SchedBench {
     // ---- 3. /lineage off the latest-run index: 20k-record ledger, 50
     //      live runs (400 attempt rows per run — the always-on daemon's
     //      shape); the old route re-parsed all 20k lines per HTTP hit
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_schedbench3").toString
+    val dir3 = graft.TempDirs.create("graft_schedbench3").toString
     val runner3 = new sched.TaskRunner(spark, dir3, backoffMs = 1)
     for (r <- 0 until 50; a <- 1 to 400)
       runner3.record(TaskRun("deep", s"r$r", a,
@@ -136,7 +136,7 @@ object SchedBench {
     // ---- 4. watcher contention: 24 WatchForCancel-shaped pollers
     //      (latestRunCached + awaitChange — the RPC loop body) against a
     //      live append stream; compare appends/sec alone vs under watch
-    val dir4 = java.nio.file.Files.createTempDirectory("graft_schedbench4").toString
+    val dir4 = graft.TempDirs.create("graft_schedbench4").toString
     val runner4 = new sched.TaskRunner(spark, dir4, backoffMs = 1)
     runner4.record(TaskRun("watched", "w1", 0, "running", 0L, 0L, None))
     def appendBurst(tag: String, count: Int): Double = {
@@ -168,7 +168,7 @@ object SchedBench {
     // ---- 5. restart-resume latency (the own-id bypass): the crash
     //      artifact a SIGKILL'd daemon leaves — fresh running@0 + its
     //      claim-time owner tag — resumed by a restarted same-id daemon
-    val dir5 = java.nio.file.Files.createTempDirectory("graft_schedbench5").toString
+    val dir5 = graft.TempDirs.create("graft_schedbench5").toString
     val runner5 = new sched.TaskRunner(spark, dir5, backoffMs = 1)
     runner5.record(TaskRun("resume_me", "k", 0, "running",
       System.currentTimeMillis(), 0L, None))

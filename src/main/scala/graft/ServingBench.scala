@@ -29,7 +29,7 @@ object ServingBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val kvDir = java.nio.file.Files.createTempDirectory("graft_srvbench").toString
+    val kvDir = graft.TempDirs.create("graft_srvbench").toString
     val store = new serving.OnlineStore(new serving.DiskKv(kvDir))
     // per-user latest purchase value (M1 materialization) → online table
     val ev = sources.Readers.eventsNormalized(spark, sfDir)

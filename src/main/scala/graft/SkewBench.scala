@@ -500,6 +500,8 @@ object SkewBench {
     // O(log diameter) rounds where min-label propagation would pay
     // ~diameter rounds (measured on local[4]: 9 rounds at x1, 12 at x10;
     // without the spread each chain closes inside its partition in 1).
+    // The chains (4,000 and 40,000 edges) fit under the driver gate, so
+    // the gate is forced to 0 to measure the star loop.
     val chainRounds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     for (m <- Seq(1, 10)) {
       val scale = s"x$m"
@@ -511,7 +513,8 @@ object SkewBench {
         .where(col("id") % chainLen < chainLen - 1)
         .select(perm(col("id")).as("idA"), perm(col("id") + 1).as("idB"))
         .repartition(spark.sparkContext.defaultParallelism)
-      rec(scale, "chain_cc", time(force(Dedup.closePairs(chainEdges)))._1)
+      rec(scale, "chain_cc", time(force(Dedup.closePairsImpl(chainEdges,
+        None, 25, false, driverEdges = 0)))._1)
       chainRounds += (scale -> Dedup.lastClusterRounds)
       spark.catalog.clearCache()
     }

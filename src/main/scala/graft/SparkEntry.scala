@@ -666,7 +666,7 @@ object SparkEntry {
     * recovered shard partition column) must equal the table + the shard
     * rule — write/read fidelity and sharding determinism in one gate. */
   private def jsonlExport(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val tmp = TempDirs.create("graft_jsonl").toString
     graft.sources.Writers.exportJsonl(
       t(s, dir, "documents").select(col("doc_id"), col("source"), col("text")),
       tmp, "doc_id", shards = 8)
@@ -722,7 +722,7 @@ object SparkEntry {
   private def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val isNew = col("doc_id") % 5 === 4
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs").toString
+    val tmp = TempDirs.create("graft_sigs").toString
     graft.sources.Writers.writeVersioned(
       Dedup.minhashSignatureTable(docs.filter(!isNew), "text", "doc_id",
         shingleK = 5, numHashes = 64), s"$tmp/sigs")
@@ -748,14 +748,24 @@ object SparkEntry {
     * labels — historical pairs never re-closed. SAME oracle as
     * dedup_clusters: incremental ≡ full recompute, proven by DuckDB's
     * closure over ALL pairs. */
-  private def dedupClustersIncremental(s: SparkSession, dir: String): DataFrame = {
+  private def dedupClustersIncremental(s: SparkSession, dir: String): DataFrame =
+    dedupClustersIncr(s, dir, Dedup.DriverEdges)
+
+  /** dedup_clusters_incr with `closePairs`' driver gate overridable (spec
+    * hook). `pairs` stays persisted until both closures have collected or
+    * checkpointed what they read of it, so the returned frame — local
+    * labels under the gate, checkpoints past it — never reads the
+    * unpersisted pairs and never replays the MinHash verify leg. */
+  private[graft] def dedupClustersIncr(s: SparkSession, dir: String,
+                                       driverEdges: Int): DataFrame = {
     val pairs = minhashNearDups(s, dir).select(col("idA"), col("idB"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val isNew = (c: org.apache.spark.sql.Column) => c % 5 === 4
     val oldPairs = pairs.where(!isNew(col("idA")) && !isNew(col("idB")))
     val newPairs = pairs.where(isNew(col("idA")) || isNew(col("idB")))
-    val labels = Dedup.closePairs(oldPairs)
-    val out = Dedup.closePairs(newPairs, prior = Some(labels))
+    val labels = Dedup.closePairsImpl(oldPairs, None, 25, false, driverEdges)
+    val out = Dedup.closePairsImpl(newPairs, Some(labels), 25, false,
+      driverEdges)
     pairs.unpersist()
     out
   }
@@ -878,7 +888,7 @@ object SparkEntry {
     * upserts only the delta; the final snapshot must equal a full recompute
     * (which is exactly what the oracle computes). */
   private def incrementalRefresh(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val tmp = TempDirs.create("graft_incr").toString
     val ev = events(s, dir)
       .select(col("user_id").as("entity"), col("value"), col("ts"), col("event_id"))
     graft.sources.Writers.writeVersioned(
@@ -897,7 +907,7 @@ object SparkEntry {
     * column, then a T7 atomic replace with a filtered set; the final
     * readLatest sees only the replaced version. */
   private def versionedWriteRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vw").toString
+    val tmp = TempDirs.create("graft_vw").toString
     val o = t(s, dir, "orders")
       .filter(col("o_orderdate") < "1995-04-01") // one quarter ≈ 90 partitions
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
@@ -917,7 +927,7 @@ object SparkEntry {
   // ------------------------------------------- S1/K2: CSV write + scan
 
   private def csvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = TempDirs.create("graft_csv").toString
     val src = events(s, dir).select(col("event_id"), col("user_id"),
       col("event_type"), col("value"))
     val out = graft.sources.Writers.writeCsv(src, tmp)
@@ -931,7 +941,7 @@ object SparkEntry {
     * a versioned ORC dir and read back through the vectorized ORC scan;
     * oracle is the identity (timestamps re-emitted as epoch ms). */
   private def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val tmp = TempDirs.create("graft_orc").toString
     val src = events(s, dir).select(col("event_id"), col("user_id"),
       col("event_type"), col("value"), col("ts"))
     val out = graft.sources.Writers.writeOrc(src, tmp)
@@ -1271,7 +1281,7 @@ object SparkEntry {
     import graft.serving._
     import graft.serving.ProtoWire.{R, W}
     val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_sched_gate").toString
+      TempDirs.create("graft_sched_gate").toString
     val runner = new graft.sched.TaskRunner(s, stateDir,
       maxAttempts = 3, backoffMs = 1)
     val srv = new MetadataServe(new Catalog(s), tasks = Some(runner)).start()
@@ -1389,7 +1399,7 @@ object SparkEntry {
     * trace, with the body's row count replayed from the same parquet. */
   private def schedRecovery(s: SparkSession, dir: String): DataFrame = {
     val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_sched_heal").toString
+      TempDirs.create("graft_sched_heal").toString
     val runner = new graft.sched.TaskRunner(s, stateDir,
       maxAttempts = 3, backoffMs = 1)
     @volatile var orphanRows = -1L
@@ -1439,7 +1449,7 @@ object SparkEntry {
     import graft.serving.ProtoWire.{R, W}
     val cat = new Catalog(s)
     val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_wire_life").toString
+      TempDirs.create("graft_wire_life").toString
     val runner = new graft.sched.TaskRunner(s, stateDir,
       maxAttempts = 2, backoffMs = 1)
     val store = new OnlineStore(new InProcessKv)
@@ -1619,9 +1629,9 @@ object SparkEntry {
     import graft.serving.ProtoWire.W
     val cat = new Catalog(s)
     val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_corpus_life").toString
+      TempDirs.create("graft_corpus_life").toString
     val outBase =
-      java.nio.file.Files.createTempDirectory("graft_corpus_pub").toString
+      TempDirs.create("graft_corpus_pub").toString
     val runner = new graft.sched.TaskRunner(s, stateDir,
       maxAttempts = 2, backoffMs = 1)
     val msrv = new MetadataServe(cat, tasks = Some(runner)).start()
@@ -1736,7 +1746,7 @@ object SparkEntry {
         "text", budgetTokens = 1000000L).select(col("source"), col("weight"))
       // -------- 5. JSONL export + read-back
       val exp =
-        java.nio.file.Files.createTempDirectory("graft_corpus_jsonl").toString
+        TempDirs.create("graft_corpus_jsonl").toString
       graft.sources.Writers.exportJsonl(
         survivors.select(col("doc_id"), col("source"), col("fp")),
         exp, "doc_id", shards = 4)
@@ -1823,7 +1833,7 @@ object SparkEntry {
     * a FRESH catalog (the restarted-process path), and resolve through the
     * reloaded definitions only. */
   private def catalogPersist(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_meta").toString
+    val tmp = TempDirs.create("graft_meta").toString
     val cat = new Catalog(s)
     cat.registerEntity(EntityDef("customer"))
     cat.registerSource(SourceVariant(ResourceId("orders"),
@@ -1864,7 +1874,7 @@ object SparkEntry {
     cat.registerModel(ModelDef("m1",
       features = Seq(ResourceId("f_click")),
       trainingSets = Seq(ResourceId("ts1"))))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lineage").toString
+    val tmp = TempDirs.create("graft_lineage").toString
     val runner = new graft.sched.TaskRunner(s, tmp, maxAttempts = 2,
       backoffMs = 1)
     graft.sched.Dag.run(runner, "2024-02-01",
@@ -2044,7 +2054,7 @@ object SparkEntry {
     * batch tie-break) must equal the batch materialization, which is what
     * the oracle computes. */
   private def streamingLatest(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val tmp = TempDirs.create("graft_stream").toString
     events(s, dir).select(col("user_id").as("entity"), col("value"), col("ts"))
       .repartition(4).write.parquet(s"$tmp/in") // 4 files → 2 micro-batches
     val stream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/in",
@@ -2074,7 +2084,7 @@ object SparkEntry {
     * readback is driver-side serving-state fixture access (store-sized,
     * not corpus-sized), not an engine path. */
   private def streamOnlineServe(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_so").toString
+    val tmp = TempDirs.create("graft_so").toString
     events(s, dir).select(col("user_id").as("entity"), col("value"), col("ts"))
       .repartition(4).write.parquet(s"$tmp/in")
     val stream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/in",
@@ -2105,7 +2115,7 @@ object SparkEntry {
     * corpus, which the oracle replays with the same negation rule. */
   private def streamVectorServe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_svec").toString
+    val tmp = TempDirs.create("graft_svec").toString
     val emb = t(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("entity"),
         col("embedding").as("vector"))
@@ -2154,7 +2164,7 @@ object SparkEntry {
     * simhash_near_dups_bounded oracle): the pigeonhole recall guarantee
     * holds online, micro-batch boundaries included. */
   private def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
+    val tmp = TempDirs.create("graft_sdedup").toString
     t(s, dir, "documents").select(col("doc_id"), col("text"))
       .repartition(6).write.parquet(s"$tmp/in")
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -2173,7 +2183,7 @@ object SparkEntry {
     * doc_id predicate. (Pruning/GC behavior is proven separately in
     * StreamingDedupTtlSpec with stepped watermarks.) */
   private def streamDedupTtl(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sdedupt").toString
+    val tmp = TempDirs.create("graft_sdedupt").toString
     t(s, dir, "documents").select(col("doc_id"),
         expr("timestamp '2024-01-01 00:00:00' + make_interval(0,0,0,0,0, " +
           "cast(doc_id % 1440 as int), 0)").as("ts"),
@@ -2198,7 +2208,7 @@ object SparkEntry {
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val eval = docs.filter(col("doc_id") % 10 === 0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sdecon").toString
+    val tmp = TempDirs.create("graft_sdecon").toString
     corpus.select(col("doc_id"), col("text")).repartition(6)
       .write.parquet(s"$tmp/in")
     val flagged = graft.streaming.StreamingDecontam.runFileStream(
@@ -2217,7 +2227,7 @@ object SparkEntry {
     * exhausted-failure task — the recorded (task, attempt, status) ledger is
     * fully deterministic and the oracle pins it. */
   private def taskRuns(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_runs").toString
+    val tmp = TempDirs.create("graft_runs").toString
     val runner = new graft.sched.TaskRunner(s, tmp, maxAttempts = 3, backoffMs = 1)
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     runner.run("materialize", "v1") {
@@ -2257,7 +2267,7 @@ object SparkEntry {
     * every label flushes. The emitted set must equal the batch as-of join,
     * which the oracle computes. */
   private def streamAsOf(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sasof").toString
+    val tmp = TempDirs.create("graft_sasof").toString
     val ev = events(s, dir)
     val feats = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("entity"), col("value"), col("ts"))
@@ -2328,7 +2338,7 @@ object SparkEntry {
     * table — proving the bus dropped and duplicated nothing. */
   private def kafkaWriteRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val bus = graft.streaming.StreamBus.resolve(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_kw").toString
+    val tmp = TempDirs.create("graft_kw").toString
     bus.produce(
       events(s, dir).select(col("user_id").as("entity"), col("value"),
         col("ts")).repartition(4), // 4 files → 2 micro-batches on the file bus
@@ -2356,7 +2366,7 @@ object SparkEntry {
     * lifecycle contract. */
   private def forgetEntity(s: SparkSession, dir: String): DataFrame = {
     val entity = 7L
-    val tmp = java.nio.file.Files.createTempDirectory("graft_forget").toString
+    val tmp = TempDirs.create("graft_forget").toString
     val triples = events(s, dir)
       .select(col("user_id").as("entity"), col("value"), col("ts"))
     graft.sources.Writers.writeVersioned(triples, s"$tmp/tbl")
@@ -2391,7 +2401,7 @@ object SparkEntry {
     * asserted in DatePruneSpec), so a 100 TB table scans 3 days, not 30.
     * The oracle recomputes the same aggregate from the raw table. */
   private def datePrunedScan(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dp").toString
+    val tmp = TempDirs.create("graft_dp").toString
     val v = graft.sources.Writers.writeVersioned(
       events(s, dir).select(col("user_id"), col("value"), col("ts")),
       s"$tmp/t", Some(graft.catalog.DailyPartition("ts")))
@@ -2473,7 +2483,7 @@ object SparkEntry {
     * (asserted in BucketedJoinSpec); here the result is oracle-checked
     * against the plain join. */
   private def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bj").toString
+    val tmp = TempDirs.create("graft_bj").toString
     val n = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     graft.sources.Writers.writeBucketed(t(s, dir, "orders"),
       s"b_orders_$n", s"$tmp/o", "o_custkey", 8, Seq("o_custkey"))
@@ -2501,7 +2511,7 @@ object SparkEntry {
     * the read-back content (grouped per day) must equal a direct recompute
     * over the source table — proving compaction changed layout, not data. */
   private def compactRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cmp").toString
+    val tmp = TempDirs.create("graft_cmp").toString
     // one quarter of orders: enough days (~90 partition dirs) to prove the
     // layout survives, without a full partition-discovery pass over years
     // of daily dirs dominating the round-trip
@@ -2521,7 +2531,7 @@ object SparkEntry {
     * co-located downstream joins): 8 hash buckets on the key, content
     * round-trips exactly. */
   private def hashPartitionedWrite(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hpw").toString
+    val tmp = TempDirs.create("graft_hpw").toString
     val c = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
         col("c_acctbal").cast("double").as("acctbal"))
@@ -2637,7 +2647,7 @@ object SparkEntry {
   /** The lineage/search fixture catalog: built, persisted, and RELOADED
     * (≡ restarted process) — shared by catalog_lineage and catalog_search. */
   private def lineageFixtureCatalog(s: SparkSession, dir: String): Catalog = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lin").toString
+    val tmp = TempDirs.create("graft_lin").toString
     val cat = new Catalog(s)
     cat.registerEntity(EntityDef("customer"))
     cat.registerSource(SourceVariant(ResourceId("orders"),
@@ -2712,7 +2722,7 @@ object SparkEntry {
     * must equal a full recompute (the oracle), and the ledger must hold
     * exactly two successful runs. */
   private def orchestratedRefresh(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orch").toString
+    val tmp = TempDirs.create("graft_orch").toString
     val ev = events(s, dir)
       .select(col("user_id").as("entity"), col("value"), col("ts"), col("event_id"))
     val cron = graft.sched.CronSchedule("*/10 * * * *")
@@ -3016,7 +3026,7 @@ object SparkEntry {
     * downstream records upstream_failed without running, siblings
     * proceed; the durable ledger is the output. */
   private def dagRuns(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dag").toString
+    val tmp = TempDirs.create("graft_dag").toString
     val runner = new graft.sched.TaskRunner(s, tmp, maxAttempts = 2,
       backoffMs = 1)
     val ev = events(s, dir)
@@ -3060,7 +3070,7 @@ object SparkEntry {
         col("c_acctbal") + 100.0).otherwise(col("c_acctbal")))
       .unionByName(base.filter(col("c_custkey") % 10 === 5)
         .withColumn("c_custkey", col("c_custkey") + 100000))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vdiff").toString
+    val tmp = TempDirs.create("graft_vdiff").toString
     val d1 = graft.sources.Writers.writeVersioned(base, s"$tmp/t")
     val d2 = graft.sources.Writers.writeVersioned(v2, s"$tmp/t")
     graft.sources.Writers.versionDiff(s, d1, d2, "c_custkey")
@@ -3072,7 +3082,7 @@ object SparkEntry {
     * is the plain box filter, with the curve arithmetic replayed in SQL. */
   private def zorderLayout(s: SparkSession, dir: String): DataFrame = {
     val cents = floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val tmp = TempDirs.create("graft_zorder").toString
     graft.functions.ZOrder.writeZOrdered(
       t(s, dir, "orders").withColumn("__cents", cents),
       col("o_custkey"), col("__cents"), bits = 26, numFiles = 8, s"$tmp/z")
@@ -3090,7 +3100,7 @@ object SparkEntry {
     * (inserts); the feed must recover exactly those. */
   private def tableFormatRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val fmt = graft.sources.VersionDirFormat
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tfmt").toString + "/t"
+    val tmp = TempDirs.create("graft_tfmt").toString + "/t"
     val base = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       .filter(col("c_custkey") <= 300)
@@ -3114,7 +3124,7 @@ object SparkEntry {
     * full-corpus aHash replay filtered to those pairs. */
   private def incrementalImageDedup(s: SparkSession, dir: String): DataFrame = {
     val isNew = col("doc_id") % 10 === 8
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ahash").toString
+    val tmp = TempDirs.create("graft_ahash").toString
     graft.sources.Writers.writeVersioned(
       imageAHashes(s, dir, !isNew), s"$tmp/ahash")
     Dedup.hammingNearDupsIncremental(
@@ -3136,7 +3146,7 @@ object SparkEntry {
     val isNew = col("doc_id") % 5 === 4
     val hashes = docs.select(col("doc_id"),
       Dedup.simhash64(col("text")).as("sh"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_simh").toString
+    val tmp = TempDirs.create("graft_simh").toString
     graft.sources.Writers.writeVersioned(hashes.where(!isNew), s"$tmp/sh")
     Dedup.hammingNearDupsIncrementalBounded(
       graft.sources.Writers.readLatest(s, s"$tmp/sh"),
@@ -3233,7 +3243,7 @@ object SparkEntry {
     * watermark past every real session. Output must equal the batch
     * sessionization, which the oracle computes. */
   private def streamingSessions(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ssess").toString
+    val tmp = TempDirs.create("graft_ssess").toString
     val ev = events(s, dir).select(col("user_id"), col("value"), col("ts"))
     @volatile var maxTs = new java.sql.Timestamp(0L) // scalar sentinel anchor
     awaitAll(
@@ -3349,7 +3359,7 @@ object SparkEntry {
     * (bounded by the id domain; a production pipeline bounds it with
     * dropDuplicatesWithinWatermark on the event-time column instead). */
   private def streamingDedup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sdd").toString
+    val tmp = TempDirs.create("graft_sdd").toString
     // persist: both delivery writes (which must stay SEQUENTIAL — the
     // second delivery's later file mtimes put the duplicates in a later
     // micro-batch, the cross-batch state the gate exercises) re-read the
@@ -3393,7 +3403,7 @@ object SparkEntry {
     * lands within one watermark window here, so the result must equal
     * the unbounded dedup (and the same batch oracle). */
   private def streamingDedupWm(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sdw").toString
+    val tmp = TempDirs.create("graft_sdw").toString
     // persist: same two-sequential-delivery shape as streamingDedup
     val ev = events(s, dir)
       .select(col("event_id"), col("user_id"), col("value"), col("ts"))
@@ -3722,7 +3732,7 @@ object SparkEntry {
     * stream_asof convention, incl. the watermark-push sentinel and the
     * 2-stateful-batch lifecycle). */
   private def streamingFunnelQ(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sfun").toString
+    val tmp = TempDirs.create("graft_sfun").toString
     val ev = events(s, dir)
       .select(col("user_id").as("user"), col("event_type").as("typ"),
         col("ts"))
@@ -3773,7 +3783,7 @@ object SparkEntry {
     * one oracle, two execution models (the streaming_funnel
     * convention). */
   private def streamingCusumQ(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scus").toString
+    val tmp = TempDirs.create("graft_scus").toString
     val ev = events(s, dir)
       .select(col("user_id").as("key"), col("event_id").as("id"),
         col("ts"), col("value").as("x"))
@@ -3821,7 +3831,7 @@ object SparkEntry {
     * watermark finalizes each pair — must equal the batch LEAD
     * formulation (the streaming_cusum fold pattern, alert-shaped). */
   private def streamingGapsQ(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sgap").toString
+    val tmp = TempDirs.create("graft_sgap").toString
     val ev = events(s, dir)
       .select(col("user_id").as("key"), col("event_id").as("id"), col("ts"))
     @volatile var maxTs = new java.sql.Timestamp(0L)
@@ -4027,7 +4037,7 @@ object SparkEntry {
     * emission), so the emitted set must equal the batch interval join —
     * which the oracle computes. */
   private def streamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sij").toString
+    val tmp = TempDirs.create("graft_sij").toString
     val ev = events(s, dir)
     awaitAll(
       () => ev.filter(col("event_type") === "click")
@@ -4232,7 +4242,7 @@ object SparkEntry {
     * micro-batch): the event stream joined to customer market segments;
     * emitted rows must equal the batch join. */
   private def streamStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ssj").toString
+    val tmp = TempDirs.create("graft_ssj").toString
     events(s, dir).select(col("user_id").as("entity"), col("value"), col("ts"))
       .coalesce(2).write.parquet(s"$tmp/in")
     val dim = t(s, dir, "customer")
@@ -4322,7 +4332,7 @@ object SparkEntry {
     * the data; one no-data batch flushes). Oracle = the batch left
     * join. */
   private def streamIntervalJoinOuter(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sijo").toString
+    val tmp = TempDirs.create("graft_sijo").toString
     val ev = events(s, dir)
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id").as("entity"), col("value"), col("ts"))

@@ -76,9 +76,10 @@ object Dedup {
   private[graft] val capStats =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
-  /** Star-contraction rounds the LAST [[closePairs]] call ran (same
-    * observability pattern as [[capStats]]): the skew harness asserts the
-    * O(log n) round bound on chain graphs with this. */
+  /** Star-contraction rounds the LAST [[closePairs]] call ran, 0 when it
+    * closed on the driver (same observability pattern as [[capStats]]):
+    * the skew harness asserts the O(log n) round bound on chain graphs
+    * with this. */
   @volatile private[graft] var lastClusterRounds: Int = 0
 
   /** Document-frequency cap on bucket keys before an LSH self-join — the
@@ -833,6 +834,16 @@ object Dedup {
       Some(hashKeyed(newH, keys)), _ <= maxHamming)
   }
 
+  /** Largest edge-row count [[closePairs]] closes on the driver. 2^18
+    * rows are 4 MB as long pairs (2^18 × 16 B); collected as boxed tuples,
+    * plus the union-find's `LongMap` over at most 2^19 nodes and the label
+    * relation built from it, the driver holds a few tens of MB at the gate
+    * — small beside any driver heap, while each star-contraction round
+    * costs a job launch and a checkpoint. */
+  private[graft] val DriverEdges: Int = 1 << 18
+
+  private val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
   /** Resolve near-dup PAIRS into clusters — the one connected-components
     * closure. Every doc maps to the smallest id reachable through the pair
     * graph (`cluster_id == doc_id` marks the canonical keeper, so "keep one
@@ -848,7 +859,15 @@ object Dedup {
     * output then covers every doc of `prior` and `pairs`; a doc no edge
     * touches keeps itself.
     *
-    * Three steps, none with a probe job of its own:
+    * Small graphs close on the driver. The gate collects at most
+    * G + 1 edge rows with one `limit(G + 1).collect()` per input: the
+    * `prior` labels first (a local `prior`, such as another small
+    * closure's output, collects without a job), then the pairs. At or
+    * under G = [[DriverEdges]] rows, one [[MinUnionFind]] over all of them
+    * is the exact closure — no round, no checksum — and the labels come
+    * back as a local relation.
+    *
+    * Past G, three steps, none with a probe job of its own:
     *  1. union-find inside each input partition ([[localStars]]): every
     *     local component leaves as a star on its local minimum — same
     *     components, same minima, self-loops and repeated pairs gone. A
@@ -865,19 +884,64 @@ object Dedup {
     *     toward the star forest, O(log n) rounds where min-label
     *     propagation pays the graph diameter. The fixpoint is an
     *     order-independent edge-set checksum (count + sum of pair md5s)
-    *     that is stable across a full alternation.
+    *     that is stable across a full alternation, so the loop pays its
+    *     initial checksum and one confirming round even when step 1
+    *     already left the star forest.
     *
     * Every round checkpoints its edges: the plan references the previous
     * round's edges several times, so lineage would otherwise grow
-    * exponentially with the round count. `checkpoint = false` (default)
-    * uses a LAZY `localCheckpoint` — the round's checksum is the
-    * materializing action, so a round is one job — but local checkpoints
-    * pin blocks to executors; on a cluster pass `checkpoint = true` for an
-    * eager reliable checkpoint (requires `SparkContext.setCheckpointDir`;
-    * a lazy one would recompute the lineage for its write). A run that
-    * reaches `maxIter` before the fixpoint is logged. */
+    * exponentially with the round count. In `prior` mode the pair ids are
+    * checkpointed once too, because the doc set reads them again after
+    * the loop. `checkpoint = false` (default) uses a LAZY
+    * `localCheckpoint` — the round's checksum is the materializing action,
+    * so a round is one job — but local checkpoints pin blocks to
+    * executors; on a cluster pass `checkpoint = true` for an eager
+    * reliable checkpoint (requires `SparkContext.setCheckpointDir`; a lazy
+    * one would recompute the lineage for its write). A run that reaches
+    * `maxIter` before the fixpoint is logged, and every call logs one INFO
+    * line with the path taken, its edge rows and its rounds. */
   def closePairs(pairs: DataFrame, prior: Option[DataFrame] = None,
-                 maxIter: Int = 25, checkpoint: Boolean = false): DataFrame = {
+                 maxIter: Int = 25, checkpoint: Boolean = false): DataFrame =
+    closePairsImpl(pairs, prior, maxIter, checkpoint, DriverEdges)
+
+  /** [[closePairs]] with the driver gate overridable: `driverEdges = 0`
+    * sends every non-empty graph through the star loop. Spec and
+    * SkewBench hook: both paths must return identical labels. */
+  private[graft] def closePairsImpl(pairs: DataFrame, prior: Option[DataFrame],
+      maxIter: Int, checkpoint: Boolean, driverEdges: Int): DataFrame = {
+    val ids = pairs.select(col("idA").cast("long").as("idA"),
+      col("idB").cast("long").as("idB"))
+    val priorIds = prior.map(_.select(col("doc_id").cast("long").as("doc_id"),
+      col("cluster_id").cast("long").as("cluster_id")))
+    def take(d: DataFrame, n: Int): Array[(Long, Long)] =
+      d.limit(n).as(longPair).collect()
+    val priorRows = priorIds.fold(Array.empty[(Long, Long)])(
+      take(_, driverEdges + 1))
+    val pairRows =
+      if (priorRows.length > driverEdges) Array.empty[(Long, Long)]
+      else take(ids, driverEdges + 1 - priorRows.length)
+    val edgeRows = priorRows.length + pairRows.length
+    if (edgeRows <= driverEdges) {
+      val uf = new MinUnionFind
+      (priorRows.iterator ++ pairRows.iterator).foreach { case (a, b) =>
+        uf.union(a, b) }
+      val both = (p: (Long, Long)) => Iterator(p._1, p._2)
+      val docs =
+        if (prior.isDefined) priorRows.iterator.map(_._1) ++
+          pairRows.iterator.flatMap(both)
+        else pairRows.iterator.filter(p => p._1 != p._2).flatMap(both)
+      lastClusterRounds = 0
+      log.info(s"closePairs: driver union-find, $edgeRows edge rows, 0 rounds")
+      pairs.sparkSession.createDataset(
+          docs.map(d => d -> uf.find(d)).toMap.toSeq)(longPair)
+        .toDF("doc_id", "cluster_id")
+    } else starClose(ids, priorIds, maxIter, checkpoint)
+  }
+
+  /** [[closePairs]] past the driver gate: per-partition union-find, then
+    * the star-contraction loop (steps 1-3 there). */
+  private def starClose(pairIds: DataFrame, prior: Option[DataFrame],
+                        maxIter: Int, checkpoint: Boolean): DataFrame = {
     def ckpt(d: DataFrame): DataFrame =
       if (checkpoint) d.checkpoint() else d.localCheckpoint(eager = false)
     def canon(e: DataFrame): DataFrame = e.select(
@@ -893,15 +957,13 @@ object Dedup {
           lit(0).cast("decimal(38,0)")).as("h")).head()
       (r.getLong(0), r.getDecimal(1).toPlainString)
     }
-    val ids = pairs.select(col("idA").cast("long").as("idA"),
-      col("idB").cast("long").as("idB"))
-    val edges = prior.fold(ids)(p => p.where(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").cast("long"), col("cluster_id").cast("long"))
-      .union(ids))
-    val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    var e = ckpt(edges.as(pairEnc).mapPartitions(localStars)(pairEnc)
+    val ids = if (prior.isDefined) ckpt(pairIds) else pairIds
+    val edges = prior.fold(ids)(p =>
+      p.where(col("doc_id") =!= col("cluster_id")).union(ids))
+    var e = ckpt(edges.as(longPair).mapPartitions(localStars)(longPair)
       .toDF("u", "v").distinct())
     var prevSum = checksum(e)
+    val edgeRows = prevSum._1
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -930,13 +992,15 @@ object Dedup {
     if (!converged)
       log.warn(s"closePairs: stopped at maxIter=$maxIter before fixpoint")
     lastClusterRounds = iter
+    log.info(s"closePairs: star loop, $edgeRows edge rows after the " +
+      s"per-partition union-find, $iter rounds")
     // star forest: every non-root points at its component min, roots at
     // themselves
     val labels = e.select(col("v").as("doc_id"), col("u").as("cluster_id"))
       .union(e.select(col("u"), col("u")))
       .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
     prior.fold(labels) { p =>
-      val all = p.select(col("doc_id").cast("long").as("doc_id"))
+      val all = p.select(col("doc_id"))
         .union(ids.select(col("idA")))
         .union(ids.select(col("idB")))
         .distinct()
@@ -946,12 +1010,12 @@ object Dedup {
     }
   }
 
-  /** Union-find with path compression over one partition's pairs, each
-    * root its component's minimum: one `(root, node)` edge per non-root
-    * node, so every local component leaves as a star on its local minimum.
-    * Self-loops and repeated pairs union nothing. */
-  private def localStars(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val parent = scala.collection.mutable.LongMap.withDefault[Long](k => k)
+  /** Union-find with path compression whose roots are their components'
+    * minima: `union` hangs the larger root under the smaller, so `find(x)`
+    * is the smallest id connected to x. Self-loops and repeated pairs
+    * union nothing. */
+  private final class MinUnionFind {
+    private val parent = scala.collection.mutable.LongMap.withDefault[Long](k => k)
     def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -959,11 +1023,21 @@ object Dedup {
       while (c != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    pairs.foreach { case (a, b) =>
+    def union(a: Long, b: Long): Unit = {
       val (ra, rb) = (find(a), find(b))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    parent.keys.toArray.iterator.map(k => (find(k), k))
+    /** Every node some union hung under another root. */
+    def nonRoots: Iterator[Long] = parent.keys.toArray.iterator
+  }
+
+  /** One [[MinUnionFind]] over a partition's pairs: one `(root, node)`
+    * edge per non-root node, so every local component leaves as a star on
+    * its local minimum. */
+  private def localStars(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val uf = new MinUnionFind
+    pairs.foreach { case (a, b) => uf.union(a, b) }
+    uf.nonRoots.map(k => (uf.find(k), k))
   }
 
   /** Cross-source duplicate provenance: near-duplicate pairs (the MinHash

@@ -274,7 +274,7 @@ object OnlineStore {
     * [[InProcessKv]] for tiny corpora or a network [[ExecutorBackend]] for
     * a real online store. */
   def defaultBackend(): KvBackend = new DiskKv(
-    java.nio.file.Files.createTempDirectory("graft-kv").toString)
+    graft.TempDirs.create("graft-kv").toString)
 }
 
 /** O5: training-set consumption combinators (reference client Dataset

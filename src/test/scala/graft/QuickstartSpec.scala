@@ -38,7 +38,7 @@ class QuickstartSpec extends SparkSpec {
     ("L2", "Mavericks", 18.0, ts("2024-11-01")))
 
   test("quickstart: catalog -> transform -> materialize -> PIT -> serve") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-quickstart")
+    val dir = graft.TempDirs.create("graft-quickstart")
     surfRows.toDF("location_id", "swell_direction", "wave_power_kj",
         "swell_period_sec", "wind_speed_kts", "measured_on")
       .write.parquet(s"$dir/surf")

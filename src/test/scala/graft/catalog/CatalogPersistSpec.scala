@@ -8,7 +8,7 @@ import graft.types.ResourceSchema
 class CatalogPersistSpec extends SparkSpec {
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_cat_spec").toString
+    graft.TempDirs.create("graft_cat_spec").toString
 
   test("catalog persists every resource kind and resolves after reload") {
     val dir = freshDir()

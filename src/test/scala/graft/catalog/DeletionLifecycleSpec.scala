@@ -89,7 +89,7 @@ class DeletionLifecycleSpec extends SparkSpec {
   }
 
   test("staged marks and statuses survive a save/load round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_del_spec").toString
+    val dir = graft.TempDirs.create("graft_del_spec").toString
     val cat = planted()
     cat.markForDeletion(key("TRAINING_SET", "ts1.default"))
     cat.setStatus(key("FEATURE", "f_rev.default"), 3, "ready")

@@ -7,7 +7,7 @@ class BarrierSpec extends SparkSpec {
 
   test("minhashNearDups identical with checkpointed signature table") {
     spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+      graft.TempDirs.create("graft_ckpt").toString)
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     val a = Dedup.minhashNearDups(docs, "text", "doc_id", threshold = 0.5)
       .collect().map(_.toSeq).toSet

@@ -69,13 +69,16 @@ class ClusterSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(chainOut.size == 31 && chainOut.values.forall(_ == 0L))
     // a dense head welded to a diameter-scale tail must close within
-    // maxIter = 8 — the true closure, never unconverged labels
+    // maxIter = 8 — the true closure, never unconverged labels; the gate
+    // is forced to 0 so the star loop, not the driver, closes it
     val hybrid = (clique(0L) ++ clique(100L) ++ clique(200L) ++
       clique(300L) ++ clique(400L) ++ clique(500L) ++
       (1000L until 1030L).map(i => (i, i + 1)) :+ (5L -> 1000L))
       .toDF("idA", "idB")
-    val hybridOut = Dedup.closePairs(hybrid, maxIter = 8)
+    val hybridOut = Dedup.closePairsImpl(hybrid, None, maxIter = 8,
+        checkpoint = false, driverEdges = 0)
       .as[(Long, Long)].collect().toMap
+    assert(Dedup.lastClusterRounds > 0)
     assert((1000L to 1030L).forall(hybridOut(_) == 0L))
     assert(hybridOut(505L) == 500L)
   }

@@ -1,18 +1,32 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSpec
 
-/** Dedup.closePairs vs a driver-side union-find on random graphs:
+/** Dedup.closePairs vs a reference union-find on random graphs:
   * identical (node → component-min) assignments for every edge-list
   * shape ScalaCheck produces — sparse/dense, chains, stars, multigraph
-  * duplicates, reversed pairs. Inputs are spread over 4 partitions, so the
+  * duplicates, reversed pairs — on both paths: the driver close these
+  * small graphs take by default, and the star loop with the gate forced
+  * to 0. Inputs are spread over 4 partitions, so on the star path the
   * per-partition union-find leaves cross-partition merges to the star
   * contraction. */
 class StarCcPropertySpec extends SparkSpec {
   import spark.implicits._
 
   private type Edges = List[(Long, Long)]
+
+  /** Both gates: the default (driver) and 0 (star loop). */
+  private val gates = Seq(Dedup.DriverEdges, 0)
+
+  private def close(es: Edges, prior: Option[DataFrame],
+                    gate: Int): DataFrame =
+    Dedup.closePairsImpl(es.toDF("idA", "idB").repartition(4), prior, 25,
+      false, gate)
+
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private val genEdges: Gen[Edges] =
     Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, for {
@@ -42,17 +56,13 @@ class StarCcPropertySpec extends SparkSpec {
     val prop = Prop.forAll(genEdges) { es: Edges =>
       val expected = want(es)
       if (expected.isEmpty) true // only self-loops: operator returns empty
-      else {
-        val got = Dedup.closePairs(es.toDF("idA", "idB").repartition(4))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        got == expected
-      }
+      else gates.forall(g => labels(close(es, None, g)) == expected)
     }
     // 4 workers: the per-case cost is Spark job-launch latency on a tiny
-    // graph (the iterative contraction runs ~15 near-empty jobs per case),
-    // so independent cases overlap nearly perfectly — same 25 successful
-    // cases, same property, ~4x less wall (this spec was 281 s of a
-    // 1044 s suite before; the driver's test budget cut the r14 run off)
+    // graph (the star path runs a checkpoint, a checksum and one or more
+    // rounds of near-empty jobs per case), so independent cases overlap
+    // nearly perfectly — same 25 successful cases, same property, ~4x
+    // less wall
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(25).withWorkers(4), prop)
     assert(res.passed, res.status.toString)
@@ -70,14 +80,13 @@ class StarCcPropertySpec extends SparkSpec {
       if (expected.isEmpty) true
       else {
         val (oldEs, newEs) = es.splitAt(cut)
-        val labels = Dedup.closePairs(oldEs.toDF("idA", "idB").repartition(4))
-        val got = Dedup.closePairs(newEs.toDF("idA", "idB").repartition(4),
-            prior = Some(labels))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // the incremental output also covers nodes that ONLY appear in
-        // self-loop edges (docs no edge touches keep themselves); project to
-        // the union-find domain for the comparison
-        got.view.filterKeys(expected.contains).toMap == expected
+        gates.forall { g =>
+          val got = labels(close(newEs, Some(close(oldEs, None, g)), g))
+          // the incremental output also covers nodes that ONLY appear in
+          // self-loop edges (docs no edge touches keep themselves); project
+          // to the union-find domain for the comparison
+          got.view.filterKeys(expected.contains).toMap == expected
+        }
       }
     }
     val res = SCTest.check(

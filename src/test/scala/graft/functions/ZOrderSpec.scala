@@ -30,7 +30,7 @@ class ZOrderSpec extends SparkSpec {
     val df = (0L until 2000L)
       .map(i => (i, (i * 131) % 512, (i * 17) % 512))
       .toDF("id", "a", "b")
-    val dir = java.nio.file.Files.createTempDirectory("zorder_spec").toString
+    val dir = graft.TempDirs.create("zorder_spec").toString
     ZOrder.writeZOrdered(df, col("a"), col("b"), bits = 9,
       numFiles = 8, s"$dir/z")
     val got = ZOrder.readBox(spark, s"$dir/z", "a", "b", bits = 9,
@@ -44,7 +44,7 @@ class ZOrderSpec extends SparkSpec {
   test("z-range pre-filter is pushed to the parquet scan") {
     val df = (0L until 500L).map(i => (i, i % 32, (i * 3) % 32))
       .toDF("id", "a", "b")
-    val dir = java.nio.file.Files.createTempDirectory("zorder_push").toString
+    val dir = graft.TempDirs.create("zorder_push").toString
     ZOrder.writeZOrdered(df, col("a"), col("b"), bits = 5,
       numFiles = 4, s"$dir/z")
     val plan = ZOrder.readBox(spark, s"$dir/z", "a", "b", bits = 5,

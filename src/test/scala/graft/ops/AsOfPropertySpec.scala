@@ -72,7 +72,7 @@ class ReadersSpec extends SparkSpec {
   import spark.implicits._
 
   test("CSV write/read round-trip (S1/K2)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val dir = graft.TempDirs.create("graft-csv").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "s", "v")
     val out = graft.sources.Writers.writeCsv(df, dir, header = true)
     val back = graft.sources.Readers.csv(spark, out)

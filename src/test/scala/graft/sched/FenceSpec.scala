@@ -14,7 +14,7 @@ class FenceSpec extends SparkSpec {
 
   private val conf = new Configuration()
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_fence").toString
+    graft.TempDirs.create("graft_fence").toString
 
   /** Delegates exclusion to a MemoryLocker but hands the body SCRIPTED
     * fencing tokens — a deterministic stand-in for a lease that was broken
@@ -73,7 +73,7 @@ class FenceSpec extends SparkSpec {
 
   test("real LeaseLocker tokens drive the guard: ex-holder's resumed write " +
     "is rejected after the next holder's write") {
-    val dir = "file:" + java.nio.file.Files.createTempDirectory("graft_fence_l")
+    val dir = "file:" + graft.TempDirs.create("graft_fence_l")
     val locker = new LeaseLocker(dir, conf)
     val guard = new FenceGuard(dir, conf, "ledger")
     // holder A acquires, writes, releases — then STALLS holding its token

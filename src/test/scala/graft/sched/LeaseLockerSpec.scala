@@ -13,7 +13,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 class LeaseLockerSpec extends SparkSpec {
 
   private def freshUri(): String =
-    "file:" + java.nio.file.Files.createTempDirectory("graft_lease")
+    "file:" + graft.TempDirs.create("graft_lease")
 
   private val conf = new Configuration()
 
@@ -115,7 +115,7 @@ class LeaseLockerSpec extends SparkSpec {
     val remote = Locker.forDir("s3a://bucket/graft_" + System.nanoTime())
     assert(remote.isInstanceOf[MemoryLocker])
     val local = Locker.forDir(
-      java.nio.file.Files.createTempDirectory("graft_fd").toString)
+      graft.TempDirs.create("graft_fd").toString)
     assert(local.isInstanceOf[FileLocker])
   }
 
@@ -149,8 +149,7 @@ class LeaseLockerSpec extends SparkSpec {
 
   test("two TaskRunners claiming through LeaseLockers (the remote-catalog " +
     "topology forced through the Hadoop path): every task exactly once") {
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_lease_tr").toString
+    val stateDir = graft.TempDirs.create("graft_lease_tr").toString
     val leaseDir = "file:" + stateDir + "/.lease"
     // each runner gets its OWN LeaseLocker instance over one lease dir —
     // the two-driver remote topology (forDir would hand local dirs a

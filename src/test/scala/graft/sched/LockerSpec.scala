@@ -11,7 +11,7 @@ import graft.SparkSpec
 class LockerSpec extends SparkSpec {
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_lock").toString
+    graft.TempDirs.create("graft_lock").toString
 
   test("MemoryLocker: mutual exclusion + non-blocking try") {
     val l = new MemoryLocker

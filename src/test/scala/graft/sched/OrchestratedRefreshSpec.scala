@@ -15,9 +15,9 @@ class OrchestratedRefreshSpec extends SparkSpec {
   private def ts(s: Long) = new Timestamp(s * 1000)
 
   test("scheduled, recorded, resumable incremental refresh") {
-    val events = java.nio.file.Files.createTempDirectory("graft_oev").toString
-    val snap = java.nio.file.Files.createTempDirectory("graft_osn").toString
-    val state = java.nio.file.Files.createTempDirectory("graft_ost").toString
+    val events = graft.TempDirs.create("graft_oev").toString
+    val snap = graft.TempDirs.create("graft_osn").toString
+    val state = graft.TempDirs.create("graft_ost").toString
     val sched = Schedule(everyMs = 60000)
     val runner = new TaskRunner(spark, state, maxAttempts = 2, backoffMs = 1)
 

@@ -11,7 +11,7 @@ import graft.SparkSpec
 class SchedulerSpec extends SparkSpec {
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_schedd").toString
+    graft.TempDirs.create("graft_schedd").toString
 
   private def createdRun(runner: TaskRunner, task: String, key: String): Unit =
     runner.record(TaskRun(task, key, 0, "created",

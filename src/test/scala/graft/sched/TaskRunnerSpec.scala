@@ -6,7 +6,7 @@ import graft.SparkSpec
 class TaskRunnerSpec extends SparkSpec {
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_sched").toString
+    graft.TempDirs.create("graft_sched").toString
 
   test("retry with recorded attempts, then success") {
     val runner = new TaskRunner(spark, freshDir(), maxAttempts = 3, backoffMs = 1)

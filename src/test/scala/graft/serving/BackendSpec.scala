@@ -53,7 +53,7 @@ class BackendSpec extends SparkSpec {
   }
 
   test("DiskKv: put/get/scan round-trip, segments merge across writers") {
-    val root = java.nio.file.Files.createTempDirectory("diskkv").toString
+    val root = graft.TempDirs.create("diskkv").toString
     val a = new DiskKv(root, buckets = 8)
     a.createTable("t")
     a.putBatch("t", Iterator(1L -> "one", 2L -> "two"))
@@ -71,7 +71,7 @@ class BackendSpec extends SparkSpec {
   test("DiskKv crash safety: a writer killed mid-segment (truncated .tmp " +
     "orphan) never poisons reads; compact sweeps the orphan") {
     import java.nio.file.{Files => JF, Paths}
-    val root = java.nio.file.Files.createTempDirectory("diskkv-c").toString
+    val root = graft.TempDirs.create("diskkv-c").toString
     val kv = new DiskKv(root, buckets = 2)
     kv.createTable("t")
     kv.putBatch("t", Iterator(1L -> "a", 2L -> "b", 3L -> "c"))
@@ -107,7 +107,7 @@ class BackendSpec extends SparkSpec {
   }
 
   test("delete: tombstone hides the key on DiskKv, survives compact and restart") {
-    val root = java.nio.file.Files.createTempDirectory("diskkv-d").toString
+    val root = graft.TempDirs.create("diskkv-d").toString
     val kv = new DiskKv(root, buckets = 4)
     kv.createTable("t")
     kv.putBatch("t", Iterator(1L -> "a", 2L -> "b", 3L -> "c"))
@@ -131,7 +131,7 @@ class BackendSpec extends SparkSpec {
   }
 
   test("compact physically erases tombstoned keys from segment bytes") {
-    val root = java.nio.file.Files.createTempDirectory("diskkv-e").toString
+    val root = graft.TempDirs.create("diskkv-e").toString
     val kv = new DiskKv(root, buckets = 2)
     kv.createTable("t")
     kv.putBatch("t", Iterator("kept_entity" -> "a", "erased_entity" -> "b"))
@@ -160,7 +160,7 @@ class BackendSpec extends SparkSpec {
   }
 
   test("DiskKv compact: one segment per bucket, upsert history preserved") {
-    val root = java.nio.file.Files.createTempDirectory("diskkv-c").toString
+    val root = graft.TempDirs.create("diskkv-c").toString
     val kv = new DiskKv(root, buckets = 4)
     kv.createTable("t")
     // three batches, key 1 overwritten twice — last write must win through
@@ -188,7 +188,7 @@ class BackendSpec extends SparkSpec {
   }
 
   test("putBatchVersioned: version order beats clock order across clients") {
-    val root = java.nio.file.Files.createTempDirectory("diskkv-v").toString
+    val root = graft.TempDirs.create("diskkv-v").toString
     val a = new DiskKv(root, buckets = 4)
     a.createTable("t")
     // the LATER version is written FIRST (a fast JVM whose segment clock

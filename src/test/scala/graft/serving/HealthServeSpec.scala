@@ -40,7 +40,7 @@ class HealthServeSpec extends SparkSpec {
   test("Check answers SERVING on the feature, metadata, and flight " +
        "endpoints; unknown services are NOT_FOUND; Watch streams a report " +
        "and holds the stream open") {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_health").toString
+    val stateDir = graft.TempDirs.create("graft_health").toString
     val runner = new graft.sched.TaskRunner(spark, stateDir, backoffMs = 1)
     val gsrv = new GrpcServe(new OnlineStore(new InProcessKv)).start()
     val msrv = new MetadataServe(new Catalog(spark), tasks = Some(runner)).start()

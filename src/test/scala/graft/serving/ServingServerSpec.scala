@@ -141,7 +141,7 @@ class ServingServerSpec extends SparkSpec {
     cat.registerFeature(FeatureVariant(ResourceId("f_rev"), ResourceId("orders"),
       graft.types.ResourceSchema("o_custkey", "o_totalprice", None)))
     cat.addTags(ResourceKey("FEATURE", "f_rev.default"), Seq("revenue"))
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_dash").toString
+    val stateDir = graft.TempDirs.create("graft_dash").toString
     val runner = new graft.sched.TaskRunner(spark, stateDir, backoffMs = 1)
     // flaky: fails once, then succeeds — /lineage must serve each run's
     // CURRENT state off the latest-run index (one row, the success), not

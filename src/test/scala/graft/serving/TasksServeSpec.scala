@@ -19,7 +19,7 @@ class TasksServeSpec extends SparkSpec {
   import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
 
   private def withServer(body: (graft.sched.TaskRunner, ManagedChannel) => Unit): Unit = {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_tasks").toString
+    val stateDir = graft.TempDirs.create("graft_tasks").toString
     val runner = new graft.sched.TaskRunner(spark, stateDir)
     val srv = new MetadataServe(new Catalog(spark), tasks = Some(runner)).start()
     val ch = NettyChannelBuilder.forAddress("127.0.0.1", srv.boundPort)

@@ -9,7 +9,7 @@ import graft.SparkSpec
 class BucketedJoinSpec extends SparkSpec {
 
   test("join of co-bucketed tables has no shuffle exchange and equal results") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val tmp = graft.TempDirs.create("graft_buckets").toString
     val orders = spark.read.parquet(s"$sf001/orders.parquet")
     val customer = spark.read.parquet(s"$sf001/customer.parquet")
     Writers.writeBucketed(orders, "b_orders_spec", s"$tmp/o", "o_custkey", 8,

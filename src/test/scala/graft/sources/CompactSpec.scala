@@ -6,7 +6,7 @@ class CompactSpec extends SparkSpec {
   import spark.implicits._
 
   test("compact rewrites the latest version into fewer files, same rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = graft.TempDirs.create("graft_compact").toString
     val df = spark.range(1000).select($"id", ($"id" % 7).as("v"))
     Writers.writeVersioned(df.repartition(16), base)
     val before = Writers.latestVersion(spark, base).get
@@ -25,7 +25,7 @@ class CompactSpec extends SparkSpec {
 
   test("compact preserves a DailyPartition layout (no silent flattening)") {
     import java.sql.Timestamp
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_p").toString
+    val base = graft.TempDirs.create("graft_compact_p").toString
     val df = (0 until 300).map { i =>
       (i.toLong, new Timestamp(86400000L * (i % 3)), i * 1.0)
     }.toDF("id", "ts", "v")

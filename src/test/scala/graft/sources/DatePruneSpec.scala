@@ -10,7 +10,7 @@ class DatePruneSpec extends SparkSpec {
   import spark.implicits._
 
   test("date-range predicate reaches the scan as PartitionFilters") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dprune").toString
+    val base = graft.TempDirs.create("graft_dprune").toString
     val rows = (0 until 10).flatMap { d =>
       (0 until 20).map(i => (i.toLong, i * 1.5,
         java.sql.Timestamp.valueOf(f"2024-02-${d + 1}%02d 08:00:00")))

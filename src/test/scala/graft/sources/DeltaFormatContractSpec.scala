@@ -71,7 +71,7 @@ class DeltaFormatContractSpec extends SparkSpec {
 
   test("write scopes the CDF session default even when the write fails") {
     assume(!TableFormat.deltaAvailable) // jar-free sandbox leg
-    val dir = java.nio.file.Files.createTempDirectory("dfc").toString + "/t"
+    val dir = graft.TempDirs.create("dfc").toString + "/t"
     val df = Seq((1L, "a")).toDF("k", "s")
     // prior value present -> restored
     spark.conf.set(DeltaFormat.cdfKey, "sentinel")

@@ -14,7 +14,7 @@ class ErasureSpec extends SparkSpec {
       .map(_.getName).sorted.toSeq
 
   test("scrubLatest drops only the matching rows, as a NEW version") {
-    val base = java.nio.file.Files.createTempDirectory("graft_scrub").toString
+    val base = graft.TempDirs.create("graft_scrub").toString
     Writers.writeVersioned(
       Seq((1L, "a"), (7L, "gone"), (2L, "b"), (7L, "also")).toDF("k", "s"),
       base)
@@ -27,7 +27,7 @@ class ErasureSpec extends SparkSpec {
   }
 
   test("scrubLatest keeps NULL-predicate rows (SQL DELETE semantics)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_scrubn").toString
+    val base = graft.TempDirs.create("graft_scrubn").toString
     Writers.writeVersioned(
       Seq((1L, Some("keep")), (2L, None), (3L, Some("gone")))
         .toDF("k", "s"), base)
@@ -40,7 +40,7 @@ class ErasureSpec extends SparkSpec {
   }
 
   test("scrubLatest flips the LATEST pointer on pointer-managed tables") {
-    val base = java.nio.file.Files.createTempDirectory("graft_scrubp").toString
+    val base = graft.TempDirs.create("graft_scrubp").toString
     Writers.atomicReplace(spark,
       Seq((1L, "a"), (7L, "gone")).toDF("k", "s"), base)
     Thread.sleep(5)
@@ -59,7 +59,7 @@ class ErasureSpec extends SparkSpec {
   }
 
   test("gcVersions keeps the newest N and the LATEST pointer target") {
-    val base = java.nio.file.Files.createTempDirectory("graft_gc").toString
+    val base = graft.TempDirs.create("graft_gc").toString
     val v1 = Writers.writeVersioned(Seq((1L, "v1")).toDF("k", "s"), base)
     Thread.sleep(5)
     Writers.writeVersioned(Seq((2L, "v2")).toDF("k", "s"), base)
@@ -73,7 +73,7 @@ class ErasureSpec extends SparkSpec {
       !new java.io.File(v1).exists())
 
     // pointer pinning: a LATEST pointer at an OLD version survives gc
-    val base2 = java.nio.file.Files.createTempDirectory("graft_gc2").toString
+    val base2 = graft.TempDirs.create("graft_gc2").toString
     val p1 = Writers.atomicReplace(spark, Seq((1L, "p1")).toDF("k", "s"), base2)
     Thread.sleep(5)
     Writers.writeVersioned(Seq((2L, "p2")).toDF("k", "s"), base2)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -9,7 +8,7 @@ class JsonlExportSpec extends SparkSpec {
   import spark.implicits._
 
   test("jsonl roundtrip: values survive, shards are md5-stable dirs") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = graft.TempDirs.create("graft-jsonl").toString
     val docs = Seq(
       (1L, "plain words here"),
       (2L, "quotes \" and \\ backslash and\ttab"),

@@ -12,7 +12,7 @@ class TableFormatSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"tfmt_$tag").toString + "/t"
+    graft.TempDirs.create(s"tfmt_$tag").toString + "/t"
 
   for (fmt <- TableFormat.available(spark)) {
 

@@ -13,7 +13,7 @@ class VersionDiffSpec extends SparkSpec {
     Writers.writeVersioned(rows.toDF("k", "s", "v"), base)
 
   test("classifies insert / delete / update; drops unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("vdiff").toString
+    val dir = graft.TempDirs.create("vdiff").toString
     val v1 = write(Seq(
       (1L, Some("a"), Some(10L)),   // unchanged
       (2L, Some("b"), Some(20L)),   // updated
@@ -33,7 +33,7 @@ class VersionDiffSpec extends SparkSpec {
   }
 
   test("NULL shifts between columns are detected as updates") {
-    val dir = java.nio.file.Files.createTempDirectory("vdiff_null").toString
+    val dir = graft.TempDirs.create("vdiff_null").toString
     // ("x", NULL) -> (NULL, ...) would hash equal under naive concat_ws
     val v1 = write(Seq((1L, Some("10"), None)), s"$dir/t")
     val v2 = write(Seq((1L, None, Some(10L))), s"$dir/t")

@@ -18,7 +18,7 @@ class StreamBusSpec extends SparkSpec {
 
   for (bus <- StreamBus.available(spark)) {
     test(s"[${bus.name}] produce -> stream -> sink -> replay loses and duplicates nothing") {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bus").toString
+      val tmp = graft.TempDirs.create("graft-bus").toString
       val in = triples()
       bus.produce(in.repartition(4), s"$tmp/in")
       val q = bus.sinkTriples(bus.readTriples(spark, s"$tmp/in", 2),
@@ -37,7 +37,7 @@ class StreamBusSpec extends SparkSpec {
     }
 
     test(s"[${bus.name}] latest-value consumer over the bus matches the batch materialization") {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bus2").toString
+      val tmp = graft.TempDirs.create("graft-bus2").toString
       bus.produce(triples(), s"$tmp/in")
       val latest = StreamingLatest.latestValueStream(spark,
         bus.readTriples(spark, s"$tmp/in", 2))

@@ -19,7 +19,7 @@ class StreamingCusumSpec extends SparkSpec {
 
   private def runStream(rows: Seq[(Long, Long, Timestamp, Double)],
                         rowsPerFile: Int, delay: String): Seq[Row] = {
-    val tmp = java.nio.file.Files.createTempDirectory("scus_spec").toString
+    val tmp = graft.TempDirs.create("scus_spec").toString
     rows.grouped(rowsPerFile).foreach { g =>
       g.toDF("key", "id", "ts", "x").coalesce(1)
         .write.mode("append").parquet(s"$tmp/in")

@@ -20,7 +20,7 @@ class StreamingDecontamSpec extends SparkSpec {
     (101L, "benchmark question about nothing in the corpus at all ok"))
 
   test("streamed flags equal the batch Bloom screen across micro-batches") {
-    val tmp = java.nio.file.Files.createTempDirectory("sdecon").toString
+    val tmp = graft.TempDirs.create("sdecon").toString
     // one file per doc -> maxFilesPerTrigger=1 forces 4 micro-batches
     corpus.toDF("doc_id", "text").repartition(4)
       .write.parquet(s"$tmp/in")
@@ -48,13 +48,13 @@ class StreamingDecontamSpec extends SparkSpec {
   }
 
   test("empty corpus and empty eval are both safe") {
-    val tmp = java.nio.file.Files.createTempDirectory("sdecon2").toString
+    val tmp = graft.TempDirs.create("sdecon2").toString
     corpus.toDF("doc_id", "text").limit(0).repartition(1)
       .write.parquet(s"$tmp/in")
     assert(StreamingDecontam.runFileStream(
       spark, s"$tmp/in", eval.toDF("doc_id", "text"),
       mBits = 1 << 16).count() == 0)
-    val tmp2 = java.nio.file.Files.createTempDirectory("sdecon3").toString
+    val tmp2 = graft.TempDirs.create("sdecon3").toString
     corpus.toDF("doc_id", "text").repartition(1).write.parquet(s"$tmp2/in")
     // empty eval -> empty filter -> nothing can be flagged
     assert(StreamingDecontam.runFileStream(

@@ -27,7 +27,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("streamed pairs equal batch all-pairs Hamming<=3 across micro-batches") {
-    val tmp = java.nio.file.Files.createTempDirectory("sdedup").toString
+    val tmp = graft.TempDirs.create("sdedup").toString
     // one file per doc (flat appends) -> maxFilesPerTrigger=2 forces
     // multiple micro-batches, so matches must span batch boundaries
     // through state
@@ -46,7 +46,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("bucket cap stops accumulation and counts drops") {
-    val tmp = java.nio.file.Files.createTempDirectory("sdedup_cap").toString
+    val tmp = graft.TempDirs.create("sdedup_cap").toString
     // ten identical docs: every quarter-band bucket gets all ten
     (1L to 10L).map(i => (i, "same text in every single document here"))
       .toDF("doc_id", "text").repartition(1).write.parquet(s"$tmp/in")

@@ -109,7 +109,7 @@ class StreamingDedupTtlSpec extends SparkSpec {
       (3L, "2024-01-01 09:05:00", Same),            // outside 1 min of 1,2
       (4L, "2024-01-01 09:05:30", Same),            // within 1 min of 3
       (5L, "2024-01-01 09:00:10", "other words entirely different here"))
-    val tmp = java.nio.file.Files.createTempDirectory("sdedup_ttl_f").toString
+    val tmp = graft.TempDirs.create("sdedup_ttl_f").toString
     docs.map { case (id, t, txt) => (id, ts(t), txt) }
       .toDF("doc_id", "ts", "text")
       .repartition(2).write.parquet(s"$tmp/in")

@@ -12,7 +12,7 @@ class StreamingFunnelSpec extends SparkSpec {
 
   private def runStream(rows: Seq[(Long, String, Timestamp)],
                         filesPerTrigger: Int): Map[Long, Int] = {
-    val tmp = java.nio.file.Files.createTempDirectory("sfun_spec").toString
+    val tmp = graft.TempDirs.create("sfun_spec").toString
     // one file per row group of 2 → several micro-batches
     rows.grouped(2).zipWithIndex.foreach { case (g, i) =>
       g.toDF("user", "typ", "ts").coalesce(1)
@@ -67,7 +67,7 @@ class StreamingFunnelSpec extends SparkSpec {
       (1L, "view", ts(0)), (1L, "click", ts(1)),
       (1L, "view", ts(100)), (1L, "click", ts(200)),
       (1L, "purchase", ts(300))) // far beyond the first anchor's horizon
-    val tmp = java.nio.file.Files.createTempDirectory("sfun_once").toString
+    val tmp = graft.TempDirs.create("sfun_once").toString
     rows.grouped(1).foreach { g =>
       g.toDF("user", "typ", "ts").coalesce(1)
         .write.mode("append").parquet(s"$tmp/in")

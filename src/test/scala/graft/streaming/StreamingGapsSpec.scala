@@ -13,7 +13,7 @@ class StreamingGapsSpec extends SparkSpec {
 
   private def runStream(rows: Seq[(Long, Long, Timestamp)],
                         delay: String): Set[(Long, Long, Long, Long)] = {
-    val tmp = java.nio.file.Files.createTempDirectory("sgap_spec").toString
+    val tmp = graft.TempDirs.create("sgap_spec").toString
     rows.grouped(2).foreach { g =>
       g.toDF("key", "id", "ts").coalesce(1)
         .write.mode("append").parquet(s"$tmp/in")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import graft.SparkSpec
 import graft.serving.{DiskKv, OnlineStore}
 import org.apache.spark.sql.Row
@@ -17,8 +16,8 @@ class StreamingOnlineSpec extends SparkSpec {
 
   test("streamed updates land in the online store, newest write winning") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-stream-online").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val dir = graft.TempDirs.create("graft-stream-online").toString
+    val ckpt = graft.TempDirs.create("graft-stream-ckpt").toString
     val in = MemoryStream[(Long, Double, Timestamp)]
     val updates = StreamingLatest.latestValueStream(spark,
       in.toDF().toDF("entity", "value", "ts"))

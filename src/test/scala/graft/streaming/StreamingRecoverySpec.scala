@@ -69,7 +69,7 @@ class StreamingRecoverySpec extends SparkSpec {
   test("latest-value stream killed mid-ingest (real JVM halt) resumes from " +
     "checkpoint to the uninterrupted answer — no loss, no dup, and the " +
     "killed writer's partial DiskKv segments don't poison reads") {
-    val tmp = Files.createTempDirectory("graft_rec_lv").toString
+    val tmp = graft.TempDirs.create("graft_rec_lv").toString
     import spark.implicits._
     // 6 one-partition appends → 6 files → 6 one-file micro-batches; each
     // entity's rows span many files so the latest-state must cross the kill
@@ -106,7 +106,7 @@ class StreamingRecoverySpec extends SparkSpec {
   test("TTL dedup stream killed mid-ingest resumes from checkpoint: pair " +
     "set equals the uninterrupted run, including pairs SPANNING the kill " +
     "(pre-kill member state restored from the state store)") {
-    val tmp = Files.createTempDirectory("graft_rec_ttl").toString
+    val tmp = graft.TempDirs.create("graft_rec_ttl").toString
     import spark.implicits._
     val base = 1700000000000L
     val hourMs = 3600000L

@@ -15,7 +15,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming latest-value state converges to the batch materialization") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-st").toString
+    val dir = graft.TempDirs.create("graft-st").toString
     writeTriples(dir)
     val stream = StreamingLatest.readTripleStream(spark, dir, maxFilesPerTrigger = 2)
     val latest = StreamingLatest.latestValueStream(spark, stream)
@@ -48,7 +48,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("incrementalRead picks up only new version dirs") {
-    val base = java.nio.file.Files.createTempDirectory("graft-inc").toString
+    val base = graft.TempDirs.create("graft-inc").toString
     val d1 = graft.sources.Writers.writeVersioned(Seq((1L, 1.0)).toDF("e", "v"), base)
     val (dirs1, df1) = StreamingLatest.incrementalRead(spark, base, None)
     assert(dirs1 == Seq(d1) && df1.get.count() == 1)
@@ -67,8 +67,8 @@ class IncrementalRunnerSpec extends graft.SparkSpec {
   private def ts(s: Long) = new Timestamp(s * 1000)
 
   test("refreshLatest folds only new version dirs into the snapshot") {
-    val events = java.nio.file.Files.createTempDirectory("graft-ev").toString
-    val snap = java.nio.file.Files.createTempDirectory("graft-sn").toString
+    val events = graft.TempDirs.create("graft-ev").toString
+    val snap = graft.TempDirs.create("graft-sn").toString
     graft.sources.Writers.writeVersioned(
       Seq((1L, 10.0, ts(100)), (2L, 20.0, ts(100))).toDF("entity", "value", "ts"), events)
     val v1 = IncrementalRunner.refreshLatest(spark, events, snap)

@@ -31,7 +31,7 @@ class StreamingVectorSpec extends SparkSpec {
 
   test("vectorSink: versioned backend writes + a second stream's overwrites " +
     "win via versionBase; a built index is upserted in place") {
-    val tmp = java.nio.file.Files.createTempDirectory("svec").toString
+    val tmp = graft.TempDirs.create("svec").toString
     val kvDir = s"$tmp/kv"
     def kv() = new DiskKv(kvDir)
     val store = new OnlineStore(kv())

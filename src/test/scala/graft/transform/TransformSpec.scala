@@ -85,7 +85,7 @@ class WritersSpec extends SparkSpec {
   import graft.sources.Writers
 
   test("versioned writes accumulate; readLatest sees the newest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-w").toString
+    val dir = graft.TempDirs.create("graft-w").toString
     val d1 = Writers.writeVersioned(Seq(1).toDF("x"), dir)
     Thread.sleep(5)
     val d2 = Writers.writeVersioned(Seq(2).toDF("x"), dir)
@@ -95,7 +95,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("atomicReplace flips the LATEST pointer") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-a").toString
+    val dir = graft.TempDirs.create("graft-a").toString
     Writers.atomicReplace(spark, Seq(1).toDF("x"), dir)
     Thread.sleep(5)
     val v2 = Writers.atomicReplace(spark, Seq(2).toDF("x"), dir)
@@ -111,7 +111,7 @@ class DailyPartitionSpec extends graft.SparkSpec {
   import java.sql.Timestamp
 
   test("K5 date-partitioned versioned write round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dp").toString
+    val dir = graft.TempDirs.create("graft-dp").toString
     val df = Seq(
       (1L, 1.0, Timestamp.valueOf("2024-01-01 10:00:00")),
       (2L, 2.0, Timestamp.valueOf("2024-01-02 11:00:00")),

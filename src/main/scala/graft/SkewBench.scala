@@ -126,6 +126,66 @@ object SkewBench {
 
   private def force(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
+  /** `nChains` chains of `chainLen` nodes as `idA`/`idB` pairs: node ids
+    * scattered by an affine permutation mod a prime (injective: g < P,
+    * gcd(48271, P) = 1) so sorted ids give the closure no shortcut, and
+    * spread round-robin so adjacent edges land in different partitions. */
+  private def chainGraph(spark: SparkSession, nChains: Int,
+                         chainLen: Int): DataFrame = {
+    val P = 10000019L
+    def perm(c: org.apache.spark.sql.Column) = (c * 48271L) % P
+    spark.range(0, nChains.toLong * chainLen)
+      .where(col("id") % chainLen < chainLen - 1)
+      .select(perm(col("id")).as("idA"), perm(col("id") + 1).as("idB"))
+      .repartition(spark.sparkContext.defaultParallelism)
+  }
+
+  /** The driver gate at its size: 64 chains of 4,096 edges, exactly
+    * [[graft.functions.Dedup.DriverEdges]] edges, closed through the
+    * public `closePairs` (the driver union-find); the same graph plus one
+    * pair, one edge past the gate, closed through the public entry (the
+    * gate's collect, then the star loop) and with the gate forced to 0
+    * (the star loop alone: the gap is the collect's cost past the gate).
+    * Reports each close's min-of-two seconds and rounds, the bytes the
+    * calling driver thread allocates for one driver-path close (the
+    * collected rows, the union-find and the label relation), and the
+    * estimated size of the labels that close leaves in the returned plan.
+    * Reported, not bounded. */
+  private[graft] def gateProbe(spark: SparkSession)
+      : scala.collection.immutable.ListMap[String, Double] = {
+    import graft.functions.Dedup
+    import spark.implicits._
+    val edges = chainGraph(spark, 64, Dedup.DriverEdges / 64 + 1)
+    val past = edges.union(Seq((-2L, -1L)).toDF("idA", "idB"))
+    val driverSec = time(force(Dedup.closePairs(edges)))._1
+    val driverRounds = Dedup.lastClusterRounds
+    val gatedSec = time(force(Dedup.closePairs(past)))._1
+    val gatedRounds = Dedup.lastClusterRounds
+    val starSec = time(force(Dedup.closePairsImpl(past, None, 25, false,
+      driverEdges = 0)))._1
+    val starRounds = Dedup.lastClusterRounds
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val a0 = threads.getCurrentThreadAllocatedBytes
+    val labels = Dedup.closePairs(edges)
+    val allocMb = (threads.getCurrentThreadAllocatedBytes - a0) / 1048576.0
+    val labelMb = labels.queryExecution.logical.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        org.apache.spark.util.SizeEstimator.estimate(l.data) / 1048576.0
+    }.getOrElse(0.0)
+    System.err.println(f"[skew] gate_cc ${Dedup.DriverEdges} edges: driver " +
+      f"$driverSec%.2f s; one edge past: gated $gatedSec%.2f s " +
+      f"($gatedRounds rounds), star alone $starSec%.2f s ($starRounds " +
+      f"rounds); driver thread allocated $allocMb%.1f MB, labels " +
+      f"$labelMb%.1f MB")
+    scala.collection.immutable.ListMap(
+      "edges" -> Dedup.DriverEdges.toDouble, "driver_s" -> driverSec,
+      "driver_rounds" -> driverRounds.toDouble,
+      "past_gate_s" -> gatedSec, "past_gate_rounds" -> gatedRounds.toDouble,
+      "star_s" -> starSec, "star_rounds" -> starRounds.toDouble,
+      "driver_alloc_mb" -> allocMb, "label_relation_mb" -> labelMb)
+  }
+
   /** Total shuffle bytes written + read across every stage `body` runs —
     * local mode records shuffle metrics even though no byte crosses a
     * network, which is exactly what lets a local harness measure the
@@ -491,33 +551,26 @@ object SkewBench {
     }
 
     // ------------------------------------------------- chain-graph closure
-    // Adversarial high-diameter family: 20 chains of 200·m nodes, node ids
-    // scattered by an affine permutation mod a prime (injective: g < P,
-    // gcd(48271, P) = 1) so sorted ids give the closure no shortcut, and
-    // spread round-robin so adjacent edges land in different partitions:
-    // the per-partition union-find merges next to nothing and
+    // Adversarial high-diameter family: 20 chains of 200·m nodes
+    // (chainGraph): the per-partition union-find merges next to nothing and
     // Dedup.closePairs' star contraction must close each chain, in
     // O(log diameter) rounds where min-label propagation would pay
     // ~diameter rounds (measured on local[4]: 9 rounds at x1, 12 at x10;
     // without the spread each chain closes inside its partition in 1).
     // The chains (4,000 and 40,000 edges) fit under the driver gate, so
-    // the gate is forced to 0 to measure the star loop.
+    // the gate is forced to 0 to measure the star loop; gateProbe then
+    // closes a graph of the gate's own size both ways.
     val chainRounds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     for (m <- Seq(1, 10)) {
       val scale = s"x$m"
-      val chainLen = 200 * m
-      val nChains = 20
-      val P = 10000019L
-      def perm(c: org.apache.spark.sql.Column) = (c * 48271L) % P
-      val chainEdges = spark.range(0, nChains.toLong * chainLen)
-        .where(col("id") % chainLen < chainLen - 1)
-        .select(perm(col("id")).as("idA"), perm(col("id") + 1).as("idB"))
-        .repartition(spark.sparkContext.defaultParallelism)
-      rec(scale, "chain_cc", time(force(Dedup.closePairsImpl(chainEdges,
-        None, 25, false, driverEdges = 0)))._1)
+      rec(scale, "chain_cc", time(force(Dedup.closePairsImpl(
+        chainGraph(spark, 20, 200 * m), None, 25, false,
+        driverEdges = 0)))._1)
       chainRounds += (scale -> Dedup.lastClusterRounds)
       spark.catalog.clearCache()
     }
+    val gate = gateProbe(spark)
+    spark.catalog.clearCache()
 
     // --------------------------------------- bounded-simhash 30× envelope
     // Measured candidate pairs vs the 20·n²/2³² random block-key-agreement
@@ -601,6 +654,9 @@ object SkewBench {
     // rounds (log2(2000) ≈ 11; ≤ 14 leaves the two-alternation constant)
     for ((s, rounds) <- chainRounds if rounds > 14)
       errs += s"chain closure took $rounds rounds at $s (> 14)"
+    if (gate("driver_rounds") != 0 || gate("past_gate_rounds") == 0)
+      errs += s"closePairs' driver gate did not split at ${gate("edges")} " +
+        "edges (the driver takes them, one more runs the star loop)"
     val linearFamilies = Seq("exact_dedup", "minhash_near_dups",
       "simhash_bounded", "fuzzy_link",
       "winnow_near_dups", "asof_sortmerge",
@@ -651,6 +707,7 @@ object SkewBench {
         },""" +
         s""""chain_rounds":${chainRounds.map { case (k, v) =>
           s""""$k":$v""" }.mkString("{", ",", "}")},""" +
+        s""""gate_cc":${jm(gate)},""" +
         s""""simhash_bounded_envelope":${simProbe.map {
           case (k, (n, cand, model, cand74, model74)) =>
             f""""$k":{"n_docs":$n,"candidates_6_3":$cand,""" +

@@ -1,6 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
+  LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -835,11 +839,15 @@ object Dedup {
   }
 
   /** Largest edge-row count [[closePairs]] closes on the driver. 2^18
-    * rows are 4 MB as long pairs (2^18 × 16 B); collected as boxed tuples,
-    * plus the union-find's `LongMap` over at most 2^19 nodes and the label
-    * relation built from it, the driver holds a few tens of MB at the gate
-    * — small beside any driver heap, while each star-contraction round
-    * costs a job launch and a checkpoint. */
+    * rows are 4 MB as long pairs (2^18 × 16 B), but the driver handles
+    * them as boxed tuples, a union-find `LongMap` over up to 2^19 nodes
+    * and a label relation. Measured at the gate (`SkewBench.gateProbe`:
+    * 64 scattered chains, 2^18 edges, local[4] on 4 cores, 4 runs): the
+    * driver close takes 2.3-3.4 s, its calling thread allocates 336 MB in
+    * all, and the returned plan keeps a 26 MB label relation; the star
+    * loop takes 25-28 s (13 rounds) on the same graph. One edge past the
+    * gate, the wasted collect of G + 1 rows added 0.4-1.2 s to a 28 s
+    * star close. Peak live driver heap was not measured. */
   private[graft] val DriverEdges: Int = 1 << 18
 
   private val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
@@ -859,13 +867,15 @@ object Dedup {
     * output then covers every doc of `prior` and `pairs`; a doc no edge
     * touches keeps itself.
     *
-    * Small graphs close on the driver. The gate collects at most
-    * G + 1 edge rows with one `limit(G + 1).collect()` per input: the
-    * `prior` labels first (a local `prior`, such as another small
-    * closure's output, collects without a job), then the pairs. At or
-    * under G = [[DriverEdges]] rows, one [[MinUnionFind]] over all of them
-    * is the exact closure — no round, no checksum — and the labels come
-    * back as a local relation.
+    * Small graphs close on the driver. An input that is neither local nor
+    * cached is first checkpointed (lazily), so the gate and the star loop
+    * share one run of its lineage. The gate then collects at most G + 1
+    * edge rows with one `limit(G + 1).collect()` per input: the `prior`
+    * labels first (a local `prior`, such as another small closure's
+    * output, collects without a job), then the pairs. At or under
+    * G = [[DriverEdges]] rows, one [[MinUnionFind]] over all of them is
+    * the exact closure — no round, no checksum — and the labels come back
+    * as a local relation.
     *
     * Past G, three steps, none with a probe job of its own:
     *  1. union-find inside each input partition ([[localStars]]): every
@@ -890,13 +900,13 @@ object Dedup {
     *
     * Every round checkpoints its edges: the plan references the previous
     * round's edges several times, so lineage would otherwise grow
-    * exponentially with the round count. In `prior` mode the pair ids are
-    * checkpointed once too, because the doc set reads them again after
-    * the loop. `checkpoint = false` (default) uses a LAZY
-    * `localCheckpoint` — the round's checksum is the materializing action,
-    * so a round is one job — but local checkpoints pin blocks to
-    * executors; on a cluster pass `checkpoint = true` for an eager
-    * reliable checkpoint (requires `SparkContext.setCheckpointDir`; a lazy
+    * exponentially with the round count. In `prior` mode the returned
+    * labels read both inputs again, so a cached one is checkpointed too
+    * (the loop's first checksum materializes it). `checkpoint = false`
+    * (default) uses a LAZY `localCheckpoint` — the round's checksum is the
+    * materializing action, so a round is one job — but local checkpoints
+    * pin blocks to executors; on a cluster pass `checkpoint = true` for an
+    * eager reliable checkpoint (requires `SparkContext.setCheckpointDir`; a lazy
     * one would recompute the lineage for its write). A run that reaches
     * `maxIter` before the fixpoint is logged, and every call logs one INFO
     * line with the path taken, its edge rows and its rounds. */
@@ -905,23 +915,33 @@ object Dedup {
     closePairsImpl(pairs, prior, maxIter, checkpoint, DriverEdges)
 
   /** [[closePairs]] with the driver gate overridable: `driverEdges = 0`
-    * sends every non-empty graph through the star loop. Spec and
-    * SkewBench hook: both paths must return identical labels. */
+    * sends every graph through the star loop without the gate's collect.
+    * Spec and SkewBench hook: both paths must return identical labels. */
   private[graft] def closePairsImpl(pairs: DataFrame, prior: Option[DataFrame],
       maxIter: Int, checkpoint: Boolean, driverEdges: Int): DataFrame = {
-    val ids = pairs.select(col("idA").cast("long").as("idA"),
-      col("idB").cast("long").as("idB"))
-    val priorIds = prior.map(_.select(col("doc_id").cast("long").as("doc_id"),
-      col("cluster_id").cast("long").as("cluster_id")))
+    // the gate's collect and the star loop both read the inputs: a local
+    // or cached one is cheap to read twice, anything else is checkpointed
+    // once, lazily, so the first reader materializes it for the second
+    def pin(d: DataFrame): DataFrame =
+      if (readsOnly(d, {
+          case _: LocalRelation | _: InMemoryRelation => true
+          case _ => false })) d
+      else ckpt(d, checkpoint)
+    val ids = pin(pairs.select(col("idA").cast("long").as("idA"),
+      col("idB").cast("long").as("idB")))
+    val priorIds = prior.map(p => pin(p.select(
+      col("doc_id").cast("long").as("doc_id"),
+      col("cluster_id").cast("long").as("cluster_id"))))
     def take(d: DataFrame, n: Int): Array[(Long, Long)] =
       d.limit(n).as(longPair).collect()
-    val priorRows = priorIds.fold(Array.empty[(Long, Long)])(
+    lazy val priorRows = priorIds.fold(Array.empty[(Long, Long)])(
       take(_, driverEdges + 1))
-    val pairRows =
+    lazy val pairRows =
       if (priorRows.length > driverEdges) Array.empty[(Long, Long)]
       else take(ids, driverEdges + 1 - priorRows.length)
-    val edgeRows = priorRows.length + pairRows.length
-    if (edgeRows <= driverEdges) {
+    lazy val edgeRows = priorRows.length + pairRows.length
+    // a gate of 0 sends every graph to the star loop without collecting
+    if (driverEdges > 0 && edgeRows <= driverEdges) {
       val uf = new MinUnionFind
       (priorRows.iterator ++ pairRows.iterator).foreach { case (a, b) =>
         uf.union(a, b) }
@@ -938,12 +958,31 @@ object Dedup {
     } else starClose(ids, priorIds, maxIter, checkpoint)
   }
 
+  /** True when `d` only projects and filters leaves that `leaf` accepts. */
+  private def readsOnly(d: DataFrame, leaf: LogicalPlan => Boolean): Boolean =
+    d.queryExecution.optimizedPlan.find {
+      case _: Project | _: Filter => false
+      case p => !leaf(p)
+    }.isEmpty
+
+  /** Lazy local checkpoint, or an eager reliable one when `reliable`. */
+  private def ckpt(d: DataFrame, reliable: Boolean): DataFrame =
+    if (reliable) d.checkpoint() else d.localCheckpoint(eager = false)
+
   /** [[closePairs]] past the driver gate: per-partition union-find, then
     * the star-contraction loop (steps 1-3 there). */
-  private def starClose(pairIds: DataFrame, prior: Option[DataFrame],
+  private def starClose(pairIds: DataFrame, priorIds: Option[DataFrame],
                         maxIter: Int, checkpoint: Boolean): DataFrame = {
-    def ckpt(d: DataFrame): DataFrame =
-      if (checkpoint) d.checkpoint() else d.localCheckpoint(eager = false)
+    // prior mode's labels read both inputs again after the call returns,
+    // when a cache the caller holds may be gone: only local or
+    // checkpointed frames may feed them
+    def fixed(d: DataFrame): DataFrame =
+      if (readsOnly(d, {
+          case _: LocalRelation | _: LogicalRDD => true
+          case _ => false })) d
+      else ckpt(d, checkpoint)
+    val prior = priorIds.map(fixed)
+    val ids = if (prior.isDefined) fixed(pairIds) else pairIds
     def canon(e: DataFrame): DataFrame = e.select(
         least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
@@ -957,11 +996,10 @@ object Dedup {
           lit(0).cast("decimal(38,0)")).as("h")).head()
       (r.getLong(0), r.getDecimal(1).toPlainString)
     }
-    val ids = if (prior.isDefined) ckpt(pairIds) else pairIds
     val edges = prior.fold(ids)(p =>
       p.where(col("doc_id") =!= col("cluster_id")).union(ids))
     var e = ckpt(edges.as(longPair).mapPartitions(localStars)(longPair)
-      .toDF("u", "v").distinct())
+      .toDF("u", "v").distinct(), checkpoint)
     var prevSum = checksum(e)
     val edgeRows = prevSum._1
     var iter = 0
@@ -983,7 +1021,8 @@ object Dedup {
       e = ckpt(canon(
         smaller.join(mSmall, "s")
           .select(col("d").as("u"), col("m").as("v"))
-          .unionByName(mSmall.select(col("s").as("u"), col("m").as("v")))))
+          .unionByName(mSmall.select(col("s").as("u"), col("m").as("v")))),
+        checkpoint)
       val cs = checksum(e)
       converged = cs == prevSum
       prevSum = cs

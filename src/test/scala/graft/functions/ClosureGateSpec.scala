@@ -1,12 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
 import graft.SparkSpec
 
 /** The driver gate of `Dedup.closePairs`, lowered through the private
   * argument: at or under the gate a graph closes on the driver (0
-  * rounds), one edge row past it runs the star loop, and both paths give
-  * the same labels. */
+  * rounds), one edge row past it runs the star loop, both paths give
+  * the same labels, and past the gate the inputs' lineage runs once. */
 class ClosureGateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -50,5 +51,24 @@ class ClosureGateSpec extends SparkSpec {
     val (onStar, r1) = close(pairs, gate = rows - 1, prior = Some(prior))
     assert(r1 > 0)
     assert(onStar == expected)
+  }
+
+  test("past the gate each input's lineage runs once") {
+    // every evaluation of an input row ticks `seen`; the RDD source and
+    // the shuffle keep the rows out of any local relation
+    val seen = spark.sparkContext.longAccumulator("closure input rows")
+    val tick = udf { (x: Long) => seen.add(1); x }.asNondeterministic()
+    def counted(rows: Seq[(Long, Long)], a: String, b: String): DataFrame =
+      spark.sparkContext.parallelize(rows, 2).toDF(a, b)
+        .select(tick(col(a)).as(a), col(b)).repartition(3)
+    val prior = counted(Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L)),
+      "doc_id", "cluster_id")
+    val pairs = counted(Seq((2L, 3L), (11L, 20L), (61L, 60L)), "idA", "idB")
+    val out = Dedup.closePairsImpl(pairs, Some(prior), 25, false, 6)
+    assert(Dedup.lastClusterRounds > 0)
+    assert(out.as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 1L,
+      3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 10L, 60L -> 60L, 61L -> 60L))
+    out.collect()
+    assert(seen.value == 7L)
   }
 }

@@ -136,15 +136,23 @@ class GraphSpec extends SparkSpec {
 
   test("star-contraction CC: long chain resolves in O(log n) rounds") {
     // a 200-node path has diameter 199 — label propagation's round count;
-    // Dedup.closePairs must land the single component well under maxIter,
-    // also when the partitions leave the whole path to the star loop
+    // the star loop must land the single component well under maxIter,
+    // also when the partitions leave the whole path to it. 199 edges close
+    // on the driver through the public entry, so the gate is forced to 0
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("idA", "idB")
       .repartition(8)
-    val out = Dedup.closePairs(chain, maxIter = 12)
+    val out = Dedup.closePairsImpl(chain, None, maxIter = 12,
+      checkpoint = false, driverEdges = 0)
+    val rounds = Dedup.lastClusterRounds
+    assert(rounds > 0 && rounds < 12, s"rounds = $rounds")
     val comps = out.select("cluster_id").distinct()
       .collect().map(_.getLong(0)).toSeq
     assert(comps == Seq(0L))
     assert(out.count() == 200L)
+    // the public entry closes the same path on the driver, same labels
+    val viaGate = Dedup.closePairs(chain, maxIter = 12)
+    assert(Dedup.lastClusterRounds == 0)
+    assert(viaGate.collect().toSet == out.collect().toSet)
     // two disjoint edges stay two components; self-loops are cleaned
     val two = Seq((1L, 2L), (3L, 4L), (5L, 5L)).toDF("idA", "idB")
     val got = Dedup.closePairs(two)

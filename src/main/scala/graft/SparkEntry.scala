@@ -2063,9 +2063,10 @@ object SparkEntry {
     // small state partitioning for the 150-entity state (see streamAsOf)
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val q = try graft.streaming.StreamingLatest.latestValueStream(s, stream)
+    val q = try graft.streaming.StreamRun.start(
+      graft.streaming.StreamingLatest.latestValueStream(s, stream)
       .writeStream.outputMode("update").format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     import org.apache.spark.sql.expressions.Window
@@ -2315,9 +2316,9 @@ object SparkEntry {
     // pin the no-data-batch contract the lifecycle above relies on (it is
     // the Spark default, but the flush would silently hang without it)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try joined.writeStream.outputMode("append")
+    val q = try graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.table(table).filter(col("entity") >= 0)
@@ -3262,7 +3263,7 @@ object SparkEntry {
         org.apache.spark.sql.types.TimestampType)))
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s)) // 150-user state
-    val q = try s.readStream.schema(schema)
+    val q = try graft.streaming.StreamRun.start(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
       .withWatermark("ts", "0 seconds")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("__w"))
@@ -3275,8 +3276,7 @@ object SparkEntry {
         col("n_events"), col("sum_value"), col("last_ts_ms"))
       .writeStream.outputMode("append").format("parquet")
       .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.read.parquet(s"$tmp/out").where(col("user_id") =!= -1L)
@@ -3380,13 +3380,12 @@ object SparkEntry {
         org.apache.spark.sql.types.TimestampType)))
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s)) // 150-entity state, not 32 stores
-    val q = try s.readStream.schema(schema)
+    val q = try graft.streaming.StreamRun.start(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
       .dropDuplicates("event_id")
       .writeStream.outputMode("append").format("parquet")
       .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.read.parquet(s"$tmp/out")
@@ -3421,7 +3420,7 @@ object SparkEntry {
         org.apache.spark.sql.types.TimestampType)))
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val q = try s.readStream.schema(schema)
+    val q = try graft.streaming.StreamRun.start(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
       // delay >= the whole corpus span: every duplicate arrives while its
       // first copy's state is still live (the correctness precondition
@@ -3431,8 +3430,7 @@ object SparkEntry {
       .dropDuplicatesWithinWatermark("event_id")
       .writeStream.outputMode("append").format("parquet")
       .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.read.parquet(s"$tmp/out")
@@ -3764,9 +3762,9 @@ object SparkEntry {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try depths.writeStream.outputMode("append")
+    val q = try graft.streaming.StreamRun.start(depths.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     val d = s.table(table).where(col("user") >= 0)
@@ -3816,9 +3814,9 @@ object SparkEntry {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try sums.toDF().writeStream.outputMode("append")
+    val q = try graft.streaming.StreamRun.start(sums.toDF().writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.table(table).where(col("key") >= 0)
@@ -3859,9 +3857,9 @@ object SparkEntry {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try gaps.toDF().writeStream.outputMode("append")
+    val q = try graft.streaming.StreamRun.start(gaps.toDF().writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.table(table).where(col("key") >= 0)
@@ -4058,9 +4056,9 @@ object SparkEntry {
     // dominates the added parallelism at this state size. Partition count
     // never affects the emitted set.
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val q = try joined.writeStream.outputMode("append")
+    val q = try graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.table(table).select(col("entity"),
@@ -4252,10 +4250,8 @@ object SparkEntry {
       .select(col("entity"), unix_millis(col("ts")).as("ts_ms"), col("value"),
         col("c_mktsegment").as("segment"))
     val table = s"stream_ssj_${System.nanoTime()}"
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    graft.streaming.StreamRun.await(q)
+    graft.streaming.StreamRun.drain(stream.writeStream.outputMode("append")
+      .format("memory").queryName(table))
     s.table(table)
   }
 
@@ -4362,9 +4358,9 @@ object SparkEntry {
     // stream_interval_join
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try joined.writeStream.outputMode("append")
+    val q = try graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     graft.streaming.StreamRun.await(q)
     s.table(table).filter(col("entity") >= 0)

@@ -61,11 +61,10 @@ object StateStoreBench {
         graft.streaming.StreamingLatest.readTripleStream(spark, inDir,
           maxFilesPerTrigger = 1))
       val t0 = System.nanoTime()
-      val q = stream.writeStream
+      val q = graft.streaming.StreamRun.start(stream.writeStream
         .format("noop").outputMode("update")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
       q.awaitTermination()
       (System.nanoTime() - t0) / 1e9
     }
@@ -128,10 +127,10 @@ object StateStoreBench {
           graft.streaming.StreamingDedup.dupPairsStreamTtl(spark, banded,
             ttlMs = 2000L * 1000)
       val t0 = System.nanoTime()
-      val q = ds.writeStream.format("noop").outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = graft.streaming.StreamRun.start(
+        ds.writeStream.format("noop").outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
       q.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
       val prog = q.recentProgress.reverse.find(_.stateOperators.nonEmpty).get
@@ -158,8 +157,9 @@ object StateStoreBench {
           .option("maxFilesPerTrigger", 1).parquet(s"$work/dedup_in_$rn"),
         "text", "doc_id", "ts").withWatermark("ts", "0 seconds"),
       ttlMs = 2000L * 1000)
-    val q1 = ttlStream().writeStream.format("noop").outputMode("update")
-      .option("checkpointLocation", rckpt).start() // continuous: gets stopped
+    val q1 = graft.streaming.StreamRun.start( // continuous: gets stopped
+      ttlStream().writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", rckpt))
     val pollDeadline = System.currentTimeMillis() + 120000L
     while (q1.recentProgress.count(_.numInputRows > 0) < 6 &&
            q1.exception.isEmpty &&
@@ -177,10 +177,10 @@ object StateStoreBench {
       }
     }
     val t0r = System.nanoTime()
-    val q2 = ttlStream().writeStream.format("noop").outputMode("update")
-      .option("checkpointLocation", rckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val q2 = graft.streaming.StreamRun.start(
+      ttlStream().writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", rckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     q2.awaitTermination()
     val restartSec = (System.nanoTime() - t0r) / 1e9
     val rstate = q2.recentProgress.reverse.find(_.stateOperators.nonEmpty)

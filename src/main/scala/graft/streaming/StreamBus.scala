@@ -116,12 +116,11 @@ object FileBus extends StreamBus {
   def sinkTriples(triples: DataFrame, topic: String,
                   checkpoint: String,
                   availableNow: Boolean = false): StreamingQuery =
-    triples.writeStream.outputMode("append").format("parquet")
+    StreamRun.start(triples.writeStream.outputMode("append").format("parquet")
       .trigger(if (availableNow) Trigger.AvailableNow()
                else Trigger.ProcessingTime(0L))
       .option("path", topic)
-      .option("checkpointLocation", checkpoint)
-      .start()
+      .option("checkpointLocation", checkpoint))
 
   def readAll(spark: SparkSession, topic: String): DataFrame =
     spark.read.schema(StreamingLatest.tripleSchema).parquet(topic)
@@ -164,13 +163,12 @@ final class KafkaBus(bootstrap: String) extends StreamBus {
   def sinkTriples(triples: DataFrame, topic: String,
                   checkpoint: String,
                   availableNow: Boolean = false): StreamingQuery =
-    encoded(triples).writeStream.format("kafka")
+    StreamRun.start(encoded(triples).writeStream.format("kafka")
       .trigger(if (availableNow) Trigger.AvailableNow()
                else Trigger.ProcessingTime(0L))
       .option("kafka.bootstrap.servers", bootstrap)
       .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
-      .start()
+      .option("checkpointLocation", checkpoint))
 
   def readAll(spark: SparkSession, topic: String): DataFrame =
     parse(spark.read.format("kafka")

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** Drive a BOUNDED stream (a file-backed replay under the correctness
-  * gate, or a drain-what's-there incremental run) to completion under
-  * `Trigger.AvailableNow`.
+/** Start every graft stream ([[start]]), and drive a BOUNDED stream (a
+  * file-backed replay under the correctness gate, or a drain-what's-there
+  * incremental run) to completion under `Trigger.AvailableNow`.
   *
   * Versus the previous default-trigger + `processAllAvailable()` loop:
   * AvailableNow snapshots the source's available data at start, runs the
@@ -20,10 +22,34 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * writer over the same checkpoint drains exactly the unprocessed
   * remainder. */
 object StreamRun {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.StreamRun")
+
+  /** Start `w`: the one place a graft stream starts. Unless the active
+    * session already names a checkpoint file manager, it installs
+    * [[LocalCheckpointFiles]] there first, so the query's offsets, commits,
+    * source log and state-store files are written without a Hadoop shell
+    * process per file. At every graft call site the active session is the
+    * one `w`'s Dataset belongs to; a stream of another session keeps that
+    * session's manager. Logs one INFO line per query: its name, checkpoint
+    * root and the manager class in effect. */
+  def start[T](w: DataStreamWriter[T]): StreamingQuery = {
+    val spark = SparkSession.active
+    if (spark.conf.getOption(LocalCheckpointFiles.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFiles.ConfKey, classOf[LocalCheckpointFiles].getName)
+    val q = w.start()
+    val root = q match {
+      case sq: StreamingQueryWrapper => sq.streamingQuery.resolvedCheckpointRoot
+      case _ => "?"
+    }
+    log.info(s"stream ${Option(q.name).getOrElse(q.id)} started: checkpoint $root, " +
+      "checkpoint files " + q.sparkSession.conf.getOption(LocalCheckpointFiles.ConfKey)
+        .getOrElse("Spark default"))
+    q
+  }
 
   /** Start `w` with AvailableNow and block until self-termination. */
   def drain[T](w: DataStreamWriter[T], timeoutMs: Long = 600000L): Unit =
-    await(w.trigger(Trigger.AvailableNow()).start(), timeoutMs)
+    await(start(w.trigger(Trigger.AvailableNow())), timeoutMs)
 
   /** Block until an (AvailableNow-triggered) started query terminates.
     * Propagates the query's failure if it died; fails loudly instead of

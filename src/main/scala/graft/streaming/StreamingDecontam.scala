@@ -57,11 +57,11 @@ object StreamingDecontam {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
     val table = s"stream_decontam_${System.nanoTime()}"
-    val q = flaggedStream(stream, textCol, idCol, filt, n, numProbes, mBits)
-      .writeStream.format("memory").queryName(table)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val q = StreamRun.start(
+      flaggedStream(stream, textCol, idCol, filt, n, numProbes, mBits)
+        .writeStream.format("memory").queryName(table)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     try {
       StreamRun.await(q)
       // the screen must stay stateless — a state store appearing here

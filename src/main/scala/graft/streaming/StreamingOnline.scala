@@ -40,7 +40,7 @@ object StreamingOnline {
                  checkpointDir: String,
                  availableNow: Boolean = false): StreamingQuery = {
     backendFactory().createTable(feature)
-    updates.writeStream
+    StreamRun.start(updates.writeStream
       .trigger(if (availableNow) org.apache.spark.sql.streaming.Trigger.AvailableNow()
                else org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
       .outputMode("update")
@@ -54,8 +54,7 @@ object StreamingOnline {
             backendFactory().putBatchVersioned(feature, batchId,
               rows.map(r => r.get(0) -> r.get(1)))
           }
-      }
-      .start()
+      })
   }
 
   /** Streaming VECTOR upkeep — the online ANN store fed by a stream (the
@@ -85,7 +84,7 @@ object StreamingOnline {
       : StreamingQuery = {
     val table = graft.serving.OnlineStore.vectorTable(feature)
     backendFactory().createTable(table)
-    updates.writeStream
+    StreamRun.start(updates.writeStream
       .trigger(if (availableNow) org.apache.spark.sql.streaming.Trigger.AvailableNow()
                else org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
       .outputMode("append")
@@ -103,7 +102,6 @@ object StreamingOnline {
               (r.get(0), v)
             })
         }
-      }
-      .start()
+      })
   }
 }

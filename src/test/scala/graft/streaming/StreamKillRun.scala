@@ -61,7 +61,7 @@ object StreamKillRun {
             org.apache.spark.sql.types.StringType)))
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir)
-        val q = StreamingDedup.dupPairsStreamTtl(spark,
+        val q = StreamRun.start(StreamingDedup.dupPairsStreamTtl(spark,
             StreamingDedup.bandedDocsTs(stream, "text", "doc_id", "ts")
               .withWatermark("ts", "0 seconds"),
             ttlMs.toLong)
@@ -70,8 +70,7 @@ object StreamKillRun {
           .option("checkpointLocation", ckptDir)
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(outDir)
-          }
-          .start()
+          })
         q.awaitTermination(180000L)
     }
     // reachable only if the halt never fired: exit 0 = setup bug upstream

@@ -20,18 +20,24 @@ class StreamingRecoverySpec extends SparkSpec {
 
   /** Spawn the kill harness and assert it HALTED (exit 42) rather than
     * drained. Inherits this JVM's --add-opens etc.; overrides the heap
-    * (later -Xmx wins). Returns the subprocess log for diagnostics. */
+    * (later -Xmx wins). The halted child runs no shutdown hook, so its
+    * temp dir and Spark local dirs (session artifacts, `blockmgr-*`) are
+    * pointed into a scratch dir of this JVM, whose hook deletes them.
+    * Returns the subprocess log for diagnostics. */
   private def spawnKill(mode: String, inDir: String, outDir: String,
                         ckpt: String, haltAfter: Int, ttlMs: Long): String = {
     import scala.jdk.CollectionConverters._
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
+    val scratch = graft.TempDirs.create("graft_kill_jvm").toString
     val cmd = Seq(javaBin) ++ inherited ++ Seq("-Xms512m", "-Xmx3g",
+      s"-Djava.io.tmpdir=$scratch",
       "-cp", System.getProperty("java.class.path"),
       "graft.streaming.StreamKillRun", mode, inDir, outDir, ckpt,
       haltAfter.toString, ttlMs.toString)
     val pb = new ProcessBuilder(cmd: _*)
+    pb.environment().put("SPARK_LOCAL_DIRS", scratch)
     pb.redirectErrorStream(true)
     val proc = pb.start()
     val log = new StringBuilder
@@ -57,6 +63,32 @@ class StreamingRecoverySpec extends SparkSpec {
       try s.iterator().asScala.count(p =>
         p.getFileName.toString.forall(_.isDigit))
       finally s.close()
+    }
+  }
+
+  /** Checks a checkpoint left by a halted child and tears it further. The
+    * child wrote it through [[LocalCheckpointFiles]], so it holds no Hadoop
+    * `.<name>.crc` sidecar (Spark's own `<name>.crc` checksums remain), and
+    * the only partial file a halt in the middle of a publish can leave is a
+    * hidden `.<name>.<uuid>.tmp`. Plants such an orphan beside the next
+    * offsets, commits and state-store entries; the restart must ignore
+    * them. */
+  private def tearMidPublish(ckpt: String): Unit = {
+    val files = {
+      val s = Files.walk(java.nio.file.Paths.get(ckpt))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString).toList
+      finally s.close()
+    }
+    val hidden = files.filter(_.startsWith("."))
+    assert(!hidden.exists(_.endsWith(".crc")), hidden)
+    assert(files.filter(_.endsWith(".tmp")).forall(_.startsWith(".")), files)
+    for ((dir, suffix) <- Seq(("offsets", ""), ("commits", ""),
+                              ("state/0/0", ".delta"))) {
+      val d = java.nio.file.Paths.get(ckpt, dir)
+      assert(Files.isDirectory(d), s"$d missing")
+      Files.write(d.resolve(s".99$suffix.${java.util.UUID.randomUUID}.tmp"),
+        "torn".getBytes)
     }
   }
   private implicit class JIter[T](it: java.util.Iterator[T]) {
@@ -96,6 +128,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val committedAtKill = commitCount(s"$tmp/ckpt")
     assert(committedAtKill >= 1 && committedAtKill < 6,
       s"kill must land mid-ingest, commits=$committedAtKill")
+    tearMidPublish(s"$tmp/ckpt")
     // restart over the SAME checkpoint + store; drain the remainder
     drainAll(s"$tmp/kv", s"$tmp/ckpt")
     val got = new DiskKv(s"$tmp/kv").scan("rec_feat").toMap
@@ -129,7 +162,7 @@ class StreamingRecoverySpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(s"$tmp/in")
       Thread.sleep(5)
     }
-    def drainAll(out: String, ckpt: String): Unit = StreamRun.await(
+    def drainAll(out: String, ckpt: String): Unit = StreamRun.drain(
       StreamingDedup.dupPairsStreamTtl(spark,
           StreamingDedup.bandedDocsTs(
             spark.readStream
@@ -142,9 +175,7 @@ class StreamingRecoverySpec extends SparkSpec {
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
+        })
     def pairsOf(out: String): Set[(Long, Long)] =
       spark.read.parquet(out).select("idA", "idB").distinct()
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -158,6 +189,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val committedAtKill = commitCount(s"$tmp/ckpt")
     assert(committedAtKill >= 1 && committedAtKill < 6,
       s"kill must land mid-ingest, commits=$committedAtKill")
+    tearMidPublish(s"$tmp/ckpt")
     // restart: the (5, 505) pair is only findable if doc 5's bucket
     // membership (ingested pre-kill) was RESTORED from the state store
     drainAll(s"$tmp/out", s"$tmp/ckpt")

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.metrics.SparkCounters
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -31,8 +32,18 @@ import org.apache.spark.sql.SparkSession
   * `"timing":"min_of_N_interleaved"` so readers know the methodology.
   *
   * A query that throws in any pass is listed under `"failed"` in both
-  * JSON lines, left out of `queries`, `total` and the anchor check, and
-  * the bench exits 1 after the compact line prints.
+  * JSON lines, left out of `queries`, `counters`, `total` and the anchor
+  * check, and the bench exits 1 after the compact line prints.
+  *
+  * Every run is measured with [[graft.metrics.SparkCounters.measure]]; the
+  * full map carries, per query, the Spark counters of the pass whose time
+  * it keeps (jobs, stages, tasks, task and GC ms, shuffle, spill, input,
+  * job wall, skew). Job, stage and task counts are fixed by the plan, so
+  * they explain a wall-time move that noise cannot fake.
+  *
+  * `Bench q1,q2,...` runs only the named queries, with the same session,
+  * warm-up, passes and counters: the tool for re-timing a query in a fresh
+  * session and for finding the job or stage a query spends its time in.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -109,8 +120,12 @@ object Bench {
       .filter { case (n, _) => subset.forall(_.contains(n)) }
       .map { case (n, fn) =>
         n -> (() => { fn(spark, sfDir).queryExecution.toRdd.count(); () }) }
-    val (results, failed) = timePasses(named, reps, () => cleanup())
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val (results, failed) = timePasses(named, reps, () => cleanup())(
+      run => SparkCounters.measure(spark)(run())._2)
+    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val countersJson = results
+      .map { case (k, _, c) => "\"" + k + "\":" + c.toJson }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
@@ -121,11 +136,11 @@ object Bench {
     // mid-round bench while the refreshed final's breaches went
     // untriaged. Standing rule (BENCH_ANCHORS.md): a reading is a breach
     // only when it exceeds anchor x 1.5 AND exceeds it by > 1 s; a
-    // breach means "re-TimeQ in a fresh session before calling drift",
-    // not "regression".
+    // breach means "re-time it with `Bench <query>` in a fresh session
+    // before calling drift", not "regression".
     val anchors = readAnchors(
       sys.env.getOrElse("SPARK_GRAFT_ANCHORS", "BENCH_ANCHORS.md"))
-    val breaches = results.flatMap { case (name, v) =>
+    val breaches = results.flatMap { case (name, v, _) =>
       anchors.get(name).collect {
         case a if v > a * 1.5 && v > a + 1.0 => name -> (v, a)
       }
@@ -136,6 +151,7 @@ object Bench {
       .mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""timing":"min_of_${reps}_interleaved","queries":$qs,""" +
+      s""""counters":$countersJson,""" +
       s""""failed":$failedJson,"anchor_breaches":$breachJson,""" +
       s""""anchors_checked":${anchors.size},"sf":"$sfDir"}"""
     println(full)
@@ -149,15 +165,17 @@ object Bench {
     // parseable record; one that reads full stdout still sees the
     // complete map first.
     // Persist the full map to a file the round artifacts can reference:
-    // the env-pointed path (default now REPO-ROOT, not /tmp — /tmp is
-    // session-scoped and the r14 judge could not recover the full map).
+    // the env-pointed path, by default in the working directory (not /tmp,
+    // which is session-scoped) under a name that carries the cpu count and
+    // marks a filtered run, so a c8 run cannot replace the c32 map and a
+    // subset run cannot replace a full one.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_full_latest.json")
+      defaultFullPath(cpus, subset.isDefined))
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(fullPath), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write: $e") }
     val top = results.sortBy(-_._2).take(12)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     // Stop Spark BEFORE the final line so no late executor/log output can
     // land after it: the compact JSON is the last thing this JVM prints.
@@ -173,30 +191,45 @@ object Bench {
     if (failed.nonEmpty) sys.exit(1)
   }
 
+  /** Default file of the full map: `BENCH_full_c<cpus>.json`, with a
+    * `_subset` suffix when a query filter is given. */
+  private[graft] def defaultFullPath(cpus: String, filtered: Boolean): String =
+    s"BENCH_full_c$cpus${if (filtered) "_subset" else ""}.json"
+
   /** Runs `reps` full interleaved passes over `queries` (pass 1 of every
-    * query, then pass 2, ...), calling `cleanup` after each run. Returns
-    * the per-query minimum seconds of the queries that never threw, and
-    * the names of those that threw in any pass: a crash ends a query's
-    * run early, so its elapsed time is not a timing and must not enter
-    * the total or the anchor check as a fast query. */
-  private[graft] def timePasses(queries: Seq[(String, () => Unit)],
-                                reps: Int, cleanup: () => Unit)
-      : (Seq[(String, Double)], Seq[String]) = {
-    val times = scala.collection.mutable.Map.empty[String, List[Double]]
+    * query, then pass 2, ...), calling `cleanup` after each run. Each run
+    * goes through `measure`, which returns its counters; the timer sits
+    * inside it, around the run alone. Returns, for the queries that never
+    * threw, the minimum seconds and the counters of that pass, and the
+    * names of those that threw in any pass: a crash ends a query's run
+    * early, so its elapsed time is not a timing and must not enter the
+    * total or the anchor check as a fast query, and its counters are
+    * dropped with it. */
+  private[graft] def timePasses[C](queries: Seq[(String, () => Unit)],
+                                   reps: Int, cleanup: () => Unit)
+                                  (measure: (() => Unit) => C)
+      : (Seq[(String, Double, C)], Seq[String]) = {
+    val runs = scala.collection.mutable.Map.empty[String, List[(Double, C)]]
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     for (pass <- 1 to reps; (name, run) <- queries) {
-      val t0 = System.nanoTime()
       try {
-        run()
-        val dt = (System.nanoTime() - t0) / 1e9
-        times(name) = times.getOrElse(name, Nil) :+ dt
+        var dt = 0.0
+        val c = measure { () =>
+          val t0 = System.nanoTime()
+          run()
+          dt = (System.nanoTime() - t0) / 1e9
+        }
+        runs(name) = runs.getOrElse(name, Nil) :+ (dt -> c)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name (pass $pass): $e")
         failed += name
       }
       cleanup()
     }
-    val ok = queries.collect { case (n, _) if !failed(n) => n -> times(n).min }
+    val ok = queries.collect { case (n, _) if !failed(n) =>
+      val (sec, c) = runs(n).minBy(_._1)
+      (n, sec, c)
+    }
     (ok, queries.map(_._1).filter(failed))
   }
 

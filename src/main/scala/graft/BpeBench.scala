@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Production-vocabulary BPE training artifact: proves
   * [[graft.functions.BpeTrain.trainScaled]] reaches a REALISTIC merge
   * count (≥ 8k — the scale of real tokenizer vocabularies) in a BOUNDED
-  * Spark job count (≤ 50; measured via listener), where the one-job-per-
-  * merge loop would need ≥ 8k jobs and the batched trainer ~250.
+  * Spark job count (≤ 50; counted by [[graft.metrics.SparkCounters]]),
+  * where the one-job-per-merge loop would need ≥ 8k jobs and the batched
+  * trainer ~250.
   *
   * The synthetic corpus's base vocabulary is tiny (31 distinct `[a-z]+`
   * words — its merge closure saturates at 89), so the bench corpus fuses
@@ -50,24 +50,17 @@ object BpeBench {
             (b, c) => concat(b, c)),
           (a, bc) => concat(a, bc)), " ")).as("text"))
 
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobCount.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val merges = graft.functions.BpeTrain.trainScaled(docs, "text", target)
-      .collect()
+    val (merges, counters) = graft.metrics.SparkCounters.measure(spark)(
+      graft.functions.BpeTrain.trainScaled(docs, "text", target).collect())
     val sec = (System.nanoTime() - t0) / 1e9
-    spark.sparkContext.removeSparkListener(listener)
 
     val vocabWords = docs
       .select(explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) > 0).distinct().count()
     val json =
       s"""{"metric":"bpe_train_scaled","target_merges":$target,""" +
-        s""""merges":${merges.length},"spark_jobs":${jobCount.get()},""" +
+        s""""merges":${merges.length},"spark_jobs":${counters.jobs},""" +
         f""""sec":$sec%.2f,"vocab_words":$vocabWords,""" +
         s""""saturated":${merges.length < target},"sf_dir":"$sfDir"}"""
     println(json)
@@ -77,8 +70,8 @@ object BpeBench {
     val errs = scala.collection.mutable.ArrayBuffer.empty[String]
     if (merges.length < math.min(target, 8000))
       errs += s"merges ${merges.length} < ${math.min(target, 8000)}"
-    if (jobCount.get() > 50)
-      errs += s"spark jobs ${jobCount.get()} > 50"
+    if (counters.jobs > 50)
+      errs += s"spark jobs ${counters.jobs} > 50"
     if (errs.nonEmpty) {
       errs.foreach(e => System.err.println(s"[bpe] ASSERTION FAILED: $e"))
       sys.exit(1)

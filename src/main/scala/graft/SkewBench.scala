@@ -186,37 +186,14 @@ object SkewBench {
       "driver_alloc_mb" -> allocMb, "label_relation_mb" -> labelMb)
   }
 
-  /** Total shuffle bytes written + read across every stage `body` runs —
+  /** Total shuffle bytes written and read by the jobs `body` runs —
     * local mode records shuffle metrics even though no byte crosses a
     * network, which is exactly what lets a local harness measure the
     * payload claim a cluster would feel (PQ codes vs raw vectors through
-    * the candidate shuffle). Listener events post asynchronously; the
-    * tail is drained by polling until two consecutive samples agree. */
+    * the candidate shuffle). */
   private[graft] def shuffleBytes(spark: SparkSession)(body: => Unit): (Long, Long) = {
-    val written = new java.util.concurrent.atomic.AtomicLong(0)
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var prev = -1L
-      var cur = written.get() + read.get()
-      var spins = 0
-      while (prev != cur && spins < 100) { // drain the async listener bus
-        prev = cur; Thread.sleep(100); cur = written.get() + read.get()
-        spins += 1
-      }
-      (written.get(), read.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, c) = graft.metrics.SparkCounters.measure(spark)(body)
+    (c.shuffleWriteBytes, c.shuffleReadBytes)
   }
 
   def main(args: Array[String]): Unit = {

@@ -88,6 +88,21 @@ object SparkEntry {
     s.conf.getOption("spark.graft.statePartitions").getOrElse(
       math.max(8, s.sparkContext.defaultParallelism / 4).toString)
 
+  private val statePartitionsLock = new Object
+
+  /** Runs `start` with `spark.sql.shuffle.partitions` at [[statePartitions]]
+    * and restores the previous value after it: a streaming query pins its
+    * state partitioning when it starts. The conf is session-global and
+    * Verify runs queries on several threads, so one lock spans the get,
+    * set, start and restore — two stream fixtures that interleaved there
+    * could leave the session at the state value. */
+  private def withStatePartitions[T](s: SparkSession)(start: => T): T =
+    statePartitionsLock.synchronized {
+      val prev = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
+      try start finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+
   // ------------------------------------------------------------------ T1/T2
   // SQL transformation with {{source}} templating, full SparkSQL passthrough.
 
@@ -1725,13 +1740,10 @@ object SparkEntry {
       // -------- 3. streaming curation over the published snapshot
       val snapshot = s.read.parquet(published)
       // state-partition floor for the keepers stream — this was the one
-      // streaming site without it (JobProf r15: its stateful aggregate ran
-      // one state store per session shuffle partition)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-      val keepers = try graft.streaming.StreamingDedup
-        .exactKeepersFileStream(s, published)
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // streaming site without it (OPTIMIZATION_r15.md: its stateful
+      // aggregate ran one state store per session shuffle partition)
+      val keepers = withStatePartitions(s)(graft.streaming.StreamingDedup
+        .exactKeepersFileStream(s, published))
       val cleanCount = snapshot.count()
       // coalesce: SUM over an EMPTY keeper table is NULL (the empty-input
       // robustness contract — an empty corpus must chain through cleanly)
@@ -2061,13 +2073,10 @@ object SparkEntry {
       maxFilesPerTrigger = 2)
     val table = s"stream_latest_${System.nanoTime()}"
     // small state partitioning for the 150-entity state (see streamAsOf)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val q = try graft.streaming.StreamRun.start(
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(
       graft.streaming.StreamingLatest.latestValueStream(s, stream)
       .writeStream.outputMode("update").format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("entity"))
@@ -2090,14 +2099,11 @@ object SparkEntry {
       .repartition(4).write.parquet(s"$tmp/in")
     val stream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/in",
       maxFilesPerTrigger = 2)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     val kvDir = s"$tmp/kv"
-    val q = try graft.streaming.StreamingOnline.onlineSink(
+    val q = withStatePartitions(s)(graft.streaming.StreamingOnline.onlineSink(
       graft.streaming.StreamingLatest.latestValueStream(s, stream).toDF(),
       "so_feat", () => new graft.serving.DiskKv(kvDir), s"$tmp/ckpt",
-      availableNow = true)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      availableNow = true))
     graft.streaming.StreamRun.await(q)
     import s.implicits._
     new graft.serving.DiskKv(kvDir).scan("so_feat").map { case (e, v) =>
@@ -2126,9 +2132,7 @@ object SparkEntry {
         .withColumn("vector", transform(col("vector"), x => -x))
         .repartition(2).write.parquet(s"$tmp/in2"))
     val kvDir = s"$tmp/kv"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    try {
+    withStatePartitions(s) {
       def run(in: String, ckpt: String, base: Long): Unit = {
         val stream = s.readStream.schema("entity long, vector array<float>")
           .option("maxFilesPerTrigger", 2).parquet(in)
@@ -2139,7 +2143,7 @@ object SparkEntry {
       }
       run(s"$tmp/in1", s"$tmp/ckpt1", 0L)
       run(s"$tmp/in2", s"$tmp/ckpt2", 1000L)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     val store = new graft.serving.OnlineStore(new graft.serving.DiskKv(kvDir))
     // probe vectors = the post-overwrite state, derived independently of
     // the store (negation rule re-applied driver-side)
@@ -2168,10 +2172,7 @@ object SparkEntry {
     val tmp = TempDirs.create("graft_sdedup").toString
     t(s, dir, "documents").select(col("doc_id"), col("text"))
       .repartition(6).write.parquet(s"$tmp/in")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    try graft.streaming.StreamingDedup.runFileStream(s, s"$tmp/in")
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    withStatePartitions(s)(graft.streaming.StreamingDedup.runFileStream(s, s"$tmp/in"))
   }
 
   /** Recent-window streaming near-dup under the gate: every doc gets a
@@ -2190,11 +2191,8 @@ object SparkEntry {
           "cast(doc_id % 1440 as int), 0)").as("ts"),
         col("text"))
       .repartition(6).write.parquet(s"$tmp/in")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    try graft.streaming.StreamingDedup.runFileStreamTtl(s, s"$tmp/in",
-      ttlMs = 30L * 60 * 1000, delay = "2 days")
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    withStatePartitions(s)(graft.streaming.StreamingDedup.runFileStreamTtl(s, s"$tmp/in",
+      ttlMs = 30L * 60 * 1000, delay = "2 days"))
   }
 
   /** Streaming decontamination under the gate: the corpus replayed through
@@ -2311,15 +2309,12 @@ object SparkEntry {
     // store provider is ~20% SLOWER here (per-instance native init dwarfs
     // this tiny state) — it's the right provider only once per-partition
     // state outgrows the heap, so the default HDFS-backed store stays.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     // pin the no-data-batch contract the lifecycle above relies on (it is
     // the Spark default, but the flush would silently hang without it)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.table(table).filter(col("entity") >= 0)
       .select(col("entity"), unix_millis(col("ts")).as("ts_ms"),
@@ -3261,9 +3256,8 @@ object SparkEntry {
         org.apache.spark.sql.types.DoubleType),
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType)))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s)) // 150-user state
-    val q = try graft.streaming.StreamRun.start(s.readStream.schema(schema)
+    // few state partitions for the 150-user state
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
       .withWatermark("ts", "0 seconds")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("__w"))
@@ -3276,8 +3270,7 @@ object SparkEntry {
         col("n_events"), col("sum_value"), col("last_ts_ms"))
       .writeStream.outputMode("append").format("parquet")
       .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.read.parquet(s"$tmp/out").where(col("user_id") =!= -1L)
   }
@@ -3378,15 +3371,13 @@ object SparkEntry {
         org.apache.spark.sql.types.DoubleType),
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType)))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s)) // 150-entity state, not 32 stores
-    val q = try graft.streaming.StreamRun.start(s.readStream.schema(schema)
+    // few state partitions for the 150-entity state, not 32 stores
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
       .dropDuplicates("event_id")
       .writeStream.outputMode("append").format("parquet")
       .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.read.parquet(s"$tmp/out")
       .groupBy(col("user_id"))
@@ -3418,9 +3409,7 @@ object SparkEntry {
         org.apache.spark.sql.types.DoubleType),
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType)))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val q = try graft.streaming.StreamRun.start(s.readStream.schema(schema)
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
       // delay >= the whole corpus span: every duplicate arrives while its
       // first copy's state is still live (the correctness precondition
@@ -3430,8 +3419,7 @@ object SparkEntry {
       .dropDuplicatesWithinWatermark("event_id")
       .writeStream.outputMode("append").format("parquet")
       .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.read.parquet(s"$tmp/out")
       .groupBy(col("user_id"))
@@ -3759,13 +3747,10 @@ object SparkEntry {
       s, stream, Seq("view", "click", "purchase"), horizonSeconds = 86400,
       delayThreshold = "3650 days")
     val table = s"stream_funnel_${System.nanoTime()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try graft.streaming.StreamRun.start(depths.writeStream.outputMode("append")
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(depths.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     val d = s.table(table).where(col("user") >= 0)
     Seq(("view", 1), ("click", 2), ("purchase", 3)).map { case (name, k) =>
@@ -3811,13 +3796,10 @@ object SparkEntry {
       s, stream, target = 250.0, slack = 25.0, h = 500.0,
       delayThreshold = "3650 days")
     val table = s"stream_cusum_${System.nanoTime()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try graft.streaming.StreamRun.start(sums.toDF().writeStream.outputMode("append")
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(sums.toDF().writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.table(table).where(col("key") >= 0)
       .select(col("key").as("user_id"), col("n_events"), col("n_alarms"),
@@ -3854,13 +3836,10 @@ object SparkEntry {
     val gaps = graft.streaming.StreamingGaps.gapStream(
       s, stream, gapSeconds = 43200L, delayThreshold = "3650 days")
     val table = s"stream_gaps_${System.nanoTime()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try graft.streaming.StreamRun.start(gaps.toDF().writeStream.outputMode("append")
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(gaps.toDF().writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.table(table).where(col("key") >= 0)
       .select(col("key").as("user_id"), col("prev_ms"), col("next_ms"),
@@ -4049,17 +4028,14 @@ object SparkEntry {
     val joined = graft.streaming.StreamingJoin.intervalJoin(
       lStream, rStream, delayThreshold = "3650 days", lenSeconds = 7200L)
     val table = s"stream_ij_${System.nanoTime()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     // 8 state partitions, MEASURED: cores-sized state partitions (32) were
     // tried this round on the ~20 s-of-task-time join and regressed the
     // query 3.78 → 9.9 s min — per-partition state-store load/commit cost
     // dominates the added parallelism at this state size. Partition count
     // never affects the emitted set.
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val q = try graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.table(table).select(col("entity"),
       unix_millis(col("l_ts")).as("l_ts_ms"), col("l_value"),
@@ -4353,15 +4329,12 @@ object SparkEntry {
       lStream, rStream, delayThreshold = "3650 days", lenSeconds = 7200L,
       joinType = "leftOuter")
     val table = s"stream_ijo_${System.nanoTime()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     // 8 state partitions — cores-sized was measured worse, see
     // stream_interval_join
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = try graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
+    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
       .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
     graft.streaming.StreamRun.await(q)
     s.table(table).filter(col("entity") >= 0)
       .select(col("entity"), unix_millis(col("l_ts")).as("l_ts_ms"),

@@ -1,12 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
   LogicalPlan, Project}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.Platform
 
 /** Deduplication operators for web-scale corpora. Training-data-pipeline
   * extensions (not in the reference, which has no text surface — SURVEY.md
@@ -408,7 +413,7 @@ object Dedup {
       checkpoint = false)
     // barriered: the union feeds the banding pass AND both signature
     // re-attach legs — without it each consumer re-reads the
-    // corpus-signature source (JobProf r15: five near-identical source
+    // corpus-signature source (OPTIMIZATION_r15.md: five near-identical source
     // passes per run at the 10× SF)
     val allSigs = barrier(corpusSigs.unionByName(newSigs),
       checkpoint = false)
@@ -437,7 +442,7 @@ object Dedup {
     *  - WIDE (≥ 64-split corpora): the band join shuffles
     *    (band, id) METADATA ONLY — the r14 shape moved the full signatures
     *    through the exchange, ~40× the bytes the join needs (297 MB per
-    *    leg at a 50 k-doc corpus, JobProf r15 at the synthesized 10× SF;
+    *    leg at a 50 k-doc corpus, OPTIMIZATION_r15.md at the synthesized 10× SF;
     *    594 MB → 26 MB after). Signatures re-attach to the DEDUPED pair
     *    set by id — AQE broadcasts the pair side in the common O(dups)
     *    case — and the estimate runs once per distinct pair instead of
@@ -494,7 +499,7 @@ object Dedup {
       .select(explode(array(col("idA"), col("idB"))).as("doc_id")).distinct()
     // fan the verify scan out on small corpora: a small-file corpus packs
     // into ONE scan split (openCost packing), so the semi-join + normalize
-    // + kgram verify all ran as a single task (JobProf r15: a 4.5 s 1-task
+    // + kgram verify all ran as a single task (OPTIMIZATION_r15.md: a 4.5 s 1-task
     // stage at the synthesized 10× SF inside every closure consumer). A
     // no-op once the corpus has natural splits.
     val txt = spread(docs, small)
@@ -839,15 +844,18 @@ object Dedup {
   }
 
   /** Largest edge-row count [[closePairs]] closes on the driver. 2^18
-    * rows are 4 MB as long pairs (2^18 × 16 B), but the driver handles
-    * them as boxed tuples, a union-find `LongMap` over up to 2^19 nodes
-    * and a label relation. Measured at the gate (`SkewBench.gateProbe`:
-    * 64 scattered chains, 2^18 edges, local[4] on 4 cores, 4 runs): the
-    * driver close takes 2.3-3.4 s, its calling thread allocates 336 MB in
-    * all, and the returned plan keeps a 26 MB label relation; the star
-    * loop takes 25-28 s (13 rounds) on the same graph. One edge past the
-    * gate, the wasted collect of G + 1 rows added 0.4-1.2 s to a 28 s
-    * star close. Peak live driver heap was not measured. */
+    * rows are 4 MB as long pairs (2^18 × 16 B). The driver keeps them in
+    * primitive arrays: the collected ids, the sorted distinct nodes, an
+    * `Int` union-find over their indices, and a label relation of one
+    * 24-byte UnsafeRow per doc in one byte array. Measured at the gate
+    * (`SkewBench.gateProbe`: 64 scattered chains, 2^18 edges, local[4] on
+    * 4 cores, 3 runs): the driver close takes 1.2-1.8 s, its calling
+    * thread allocates 73 MB in all (the collected rows included), and the
+    * returned plan keeps a 17 MB label relation; the star loop takes
+    * 20-22 s (13 rounds) on the same graph. One edge past the gate, the
+    * wasted collect of G + 1 rows costs at most a few seconds on a 20 s
+    * star close (20.0-26.4 s gated against 20.2-22.2 s alone, within
+    * run-to-run noise). Peak live driver heap was not measured. */
   private[graft] val DriverEdges: Int = 1 << 18
 
   private val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
@@ -873,7 +881,7 @@ object Dedup {
     * edge rows with one `limit(G + 1).collect()` per input: the `prior`
     * labels first (a local `prior`, such as another small closure's
     * output, collects without a job), then the pairs. At or under
-    * G = [[DriverEdges]] rows, one [[MinUnionFind]] over all of them is
+    * G = [[DriverEdges]] rows, one union-find ([[minLabels]]) over them is
     * the exact closure — no round, no checksum — and the labels come back
     * as a local relation.
     *
@@ -932,29 +940,39 @@ object Dedup {
     val priorIds = prior.map(p => pin(p.select(
       col("doc_id").cast("long").as("doc_id"),
       col("cluster_id").cast("long").as("cluster_id"))))
-    def take(d: DataFrame, n: Int): Array[(Long, Long)] =
-      d.limit(n).as(longPair).collect()
-    lazy val priorRows = priorIds.fold(Array.empty[(Long, Long)])(
-      take(_, driverEdges + 1))
-    lazy val pairRows =
-      if (priorRows.length > driverEdges) Array.empty[(Long, Long)]
-      else take(ids, driverEdges + 1 - priorRows.length)
-    lazy val edgeRows = priorRows.length + pairRows.length
+    // one `collect` of at most n rows, kept as two primitive columns
+    def take(d: DataFrame, n: Int): (Array[Long], Array[Long]) = {
+      val qe = d.limit(n).queryExecution
+      val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+        qe.executedPlan.executeCollect())
+      val (a, b) = (new Array[Long](rows.length), new Array[Long](rows.length))
+      for (i <- rows.indices) {
+        a(i) = rows(i).getLong(0); b(i) = rows(i).getLong(1)
+      }
+      (a, b)
+    }
+    val none = (Array.emptyLongArray, Array.emptyLongArray)
+    lazy val (priorA, priorB) = priorIds.fold(none)(take(_, driverEdges + 1))
+    lazy val (pairA, pairB) =
+      if (priorA.length > driverEdges) none
+      else take(ids, driverEdges + 1 - priorA.length)
+    lazy val edgeRows = priorA.length + pairA.length
     // a gate of 0 sends every graph to the star loop without collecting
     if (driverEdges > 0 && edgeRows <= driverEdges) {
-      val uf = new MinUnionFind
-      (priorRows.iterator ++ pairRows.iterator).foreach { case (a, b) =>
-        uf.union(a, b) }
-      val both = (p: (Long, Long)) => Iterator(p._1, p._2)
-      val docs =
-        if (prior.isDefined) priorRows.iterator.map(_._1) ++
-          pairRows.iterator.flatMap(both)
-        else pairRows.iterator.filter(p => p._1 != p._2).flatMap(both)
+      val (nodes, labels) = minLabels(priorA ++ pairA, priorB ++ pairB)
+      // the labeled docs: every prior doc and pair end, or without prior
+      // the ends of the pairs that are not self-loops
+      val labeled = new Array[Boolean](nodes.length)
+      def mark(x: Long): Unit =
+        labeled(java.util.Arrays.binarySearch(nodes, x)) = true
+      for (i <- priorA.indices) mark(priorA(i))
+      for (i <- pairA.indices)
+        if (prior.isDefined || pairA(i) != pairB(i)) {
+          mark(pairA(i)); mark(pairB(i))
+        }
       lastClusterRounds = 0
       log.info(s"closePairs: driver union-find, $edgeRows edge rows, 0 rounds")
-      pairs.sparkSession.createDataset(
-          docs.map(d => d -> uf.find(d)).toMap.toSeq)(longPair)
-        .toDF("doc_id", "cluster_id")
+      labelRelation(pairs.sparkSession, nodes, labels, labeled)
     } else starClose(ids, priorIds, maxIter, checkpoint)
   }
 
@@ -1049,34 +1067,67 @@ object Dedup {
     }
   }
 
-  /** Union-find with path compression whose roots are their components'
-    * minima: `union` hangs the larger root under the smaller, so `find(x)`
-    * is the smallest id connected to x. Self-loops and repeated pairs
-    * union nothing. */
-  private final class MinUnionFind {
-    private val parent = scala.collection.mutable.LongMap.withDefault[Long](k => k)
-    def find(x: Long): Long = {
+  /** Connected components of the edges `a(i)`–`b(i)`: the distinct nodes,
+    * ascending, and for each the smallest node of its component. One
+    * union-find with path compression over node indices, in primitive
+    * arrays: a union hangs the larger root under the smaller and indices
+    * follow id order, so every root is its component's minimum, and
+    * self-loops and repeated pairs union nothing. */
+  private def minLabels(a: Array[Long], b: Array[Long]): (Array[Long], Array[Long]) = {
+    val all = a ++ b
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (i <- all.indices)
+      if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
+    val nodes = java.util.Arrays.copyOf(all, n)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
-      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
       r
     }
-    def union(a: Long, b: Long): Unit = {
-      val (ra, rb) = (find(a), find(b))
+    def at(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
+    for (i <- a.indices) {
+      val ra = find(at(a(i)))
+      val rb = find(at(b(i)))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    /** Every node some union hung under another root. */
-    def nonRoots: Iterator[Long] = parent.keys.toArray.iterator
+    val labels = new Array[Long](n)
+    for (i <- 0 until n) labels(i) = nodes(find(i))
+    (nodes, labels)
   }
 
-  /** One [[MinUnionFind]] over a partition's pairs: one `(root, node)`
-    * edge per non-root node, so every local component leaves as a star on
-    * its local minimum. */
+  /** [[minLabels]] over a partition's pairs: one `(root, node)` edge per
+    * non-root node, so every local component leaves as a star on its
+    * local minimum. */
   private def localStars(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val uf = new MinUnionFind
-    pairs.foreach { case (a, b) => uf.union(a, b) }
-    uf.nonRoots.map(k => (uf.find(k), k))
+    val (a, b) = (Array.newBuilder[Long], Array.newBuilder[Long])
+    pairs.foreach { case (x, y) => a += x; b += y }
+    val (nodes, labels) = minLabels(a.result(), b.result())
+    nodes.indices.iterator.collect {
+      case i if labels(i) != nodes(i) => (labels(i), nodes(i)) }
+  }
+
+  /** The `(doc_id, cluster_id)` rows of the labeled nodes as a local
+    * relation: one 24-byte UnsafeRow per doc, all in one byte array. */
+  private def labelRelation(spark: SparkSession, nodes: Array[Long],
+                            labels: Array[Long], labeled: Array[Boolean]): DataFrame = {
+    val rowBytes = 24 // null bits + two longs
+    val rows = new Array[InternalRow](labeled.count(identity))
+    val buf = new Array[Byte](rows.length * rowBytes)
+    var k = 0
+    for (i <- nodes.indices) if (labeled(i)) {
+      val r = new UnsafeRow(2)
+      r.pointTo(buf, Platform.BYTE_ARRAY_OFFSET + k * rowBytes, rowBytes)
+      r.setLong(0, nodes(i)); r.setLong(1, labels(i))
+      rows(k) = r; k += 1
+    }
+    ColumnBridge.ofRows(spark, LocalRelation(
+      Seq(AttributeReference("doc_id", LongType, nullable = false)(),
+        AttributeReference("cluster_id", LongType, nullable = false)()),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(rows)))
   }
 
   /** Cross-source duplicate provenance: near-duplicate pairs (the MinHash

@@ -143,7 +143,7 @@ object Graph {
     // AQE coalescing. Skew-safe: degree orientation bounds out-degrees
     // by ~√m, so no single __s key can dominate a partition.
     // Round-15 re-measurement (the r14 driver bench suggested the pin
-    // regressed; isolated TimeQ, 4-5 reps each, same box):
+    // regressed; isolated runs, 4-5 reps each, same box — OPTIMIZATION_r15.md):
     //   32 cores: pin min 7.45 s vs un-pinned min 7.26 s — a tie;
     //    8 cores: pin min 7.73 s vs un-pinned min 11.04 s — pin 1.4x
     //             faster (AQE byte-based coalescing shrinks the
@@ -222,7 +222,7 @@ object Graph {
     // In the bloom path the closing side is known bounded (expectedEdges
     // ≤ 200 M, spread over the shuffle partitions), so force a SHUFFLED
     // HASH join: the default sort-merge sorted the surviving wedge side —
-    // JobProf r15 at 10× SF: 1.1 GB of sort spill, the single most
+    // OPTIMIZATION_r15.md at 10× SF: 1.1 GB of sort spill, the single most
     // expensive stage of the query. Streaming wedges through a per-
     // partition hash build never sorts them (guide §3.1). Above the cap
     // (or with no estimate) the unhinted SMJ stays — it spills gracefully

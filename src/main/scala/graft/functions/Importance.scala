@@ -61,7 +61,7 @@ object Importance {
     // note).
     // fanOut (guide §2, the dedup-family scan-parallelism floor): the
     // gram explode + md5 bucket hash is the query's CPU stage and ran as
-    // ONE scan task on the single-file sf corpus (JobProf r15: a 1-task
+    // ONE scan task on the single-file sf corpus (OPTIMIZATION_r15.md: a 1-task
     // ~470 ms stage on local[32]); a no-op once the input has >= cores/2
     // natural splits.
     val docBkt = Dedup.barrier(

@@ -208,7 +208,7 @@ object Behavior {
     // The three rank passes are independent, and each runs EAGER jobs at
     // construction (withDistributedRowNumber: range-partitioner sample +
     // zipWithIndex count) — overlap them (guide §2.6) instead of paying
-    // three sequential multi-job passes. JobProf r15: the serialized
+    // three sequential multi-job passes. OPTIMIZATION_r15.md: the serialized
     // passes were ~3.2 s of a 4.7 s query. base is materialized first so
     // the forked passes read the cache instead of racing its first
     // compute.

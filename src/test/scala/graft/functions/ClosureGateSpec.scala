@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.SparkSpec
 
 /** The driver gate of `Dedup.closePairs`, lowered through the private
@@ -28,6 +29,11 @@ class ClosureGateSpec extends SparkSpec {
     val (out, rounds) = close(graph, gate = graph.size)
     assert(rounds == 0)
     assert(out == want)
+    val labels = Dedup.closePairsImpl(graph.toDF("idA", "idB"), None, 25,
+      false, graph.size)
+    assert(labels.schema == StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("cluster_id", LongType, nullable = false))))
   }
 
   test("N + 1 edge rows run the star loop and give identical labels") {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * a deterministic function of the testdata with a combinatorially
   * larger vocabulary (~n³ distinct fused words), which is exactly the
   * state size the trainer must handle at web scale. Emits ONE JSON line
-  * and writes BENCH_bpe_r14.json. */
+  * and writes BENCH_bpe_c<cpus>.json in the working directory. */
 object BpeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,7 +65,7 @@ object BpeBench {
         s""""saturated":${merges.length < target},"sf_dir":"$sfDir"}"""
     println(json)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_bpe_r14.json"), json + "\n")
+      java.nio.file.Paths.get(s"BENCH_bpe_c$cpus.json"), json + "\n")
     spark.stop()
     val errs = scala.collection.mutable.ArrayBuffer.empty[String]
     if (merges.length < math.min(target, 8000))

@@ -36,7 +36,7 @@ import org.apache.spark.sql.SparkSession
   *     measured ms from start() to success is the recovery-latency claim,
   *     vs the 300 s default the r13 age gate imposed.
   *
-  * One JSON line → BENCH_sched_r14.json. */
+  * One JSON line → BENCH_sched_c<cpus>.json in the working directory. */
 object SchedBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -221,7 +221,7 @@ object SchedBench {
         s""""r13_age_gate_ms":300000}}"""
     println(json)
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/BENCH_sched_r14.json"),
+      java.nio.file.Paths.get(s"BENCH_sched_c$cpus.json"),
       (json + "\n").getBytes("UTF-8"))
     spark.stop()
   }

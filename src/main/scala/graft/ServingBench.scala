@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * (prometheus scrape — the numbers an operator would alert on), with the
   * client-observed quantiles reported beside them as a cross-check;
   * throughput is client wall-clock (only the client knows when the last
-  * response landed). Writes BENCH_serving_r14.json. */
+  * response landed). Writes BENCH_serving_c<cpus>.json in the working
+  * directory. */
 object ServingBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -151,8 +152,8 @@ object ServingBench {
       val ch = org.sparkproject.connect.grpc.netty.NettyChannelBuilder
         .forAddress("127.0.0.1", gs.boundPort).usePlaintext().build()
       try {
-        val desc = serving.GrpcServe.method("FeatureServe",
-          org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY)
+        val desc = serving.Grpc.method(serving.GrpcServe.ServiceName,
+          "FeatureServe", org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY)
         def call(entity: Long): Boolean = {
           val w = new serving.ProtoWire.W
           w.msg(1)(_.str(1, "latest_value"))
@@ -208,8 +209,8 @@ object ServingBench {
         .forAddress("127.0.0.1", fs.boundPort).usePlaintext().build()
       try {
         import scala.jdk.CollectionConverters._
-        val desc = serving.FlightServe.method("DoGet",
-          org.sparkproject.connect.grpc.MethodDescriptor.MethodType.SERVER_STREAMING)
+        val desc = serving.Grpc.method(serving.FlightServe.ServiceName,
+          "DoGet", org.sparkproject.connect.grpc.MethodDescriptor.MethodType.SERVER_STREAMING)
         val ticket = {
           val w = new serving.ProtoWire.W; w.str(1, "bench/latest"); w.result()
         }
@@ -251,12 +252,11 @@ object ServingBench {
       val ch = org.sparkproject.connect.grpc.netty.NettyChannelBuilder
         .forAddress("127.0.0.1", ms.boundPort).usePlaintext().build()
       try {
-        val createDesc = serving.MetadataServe.method(
-          serving.MetadataServe.ServiceName, "CreateSourceVariant",
+        def metadataUnary(rpc: String) = serving.Grpc.method(
+          serving.MetadataServe.ServiceName, rpc,
           org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY)
-        val equivDesc = serving.MetadataServe.method(
-          serving.MetadataServe.ServiceName, "GetEquivalent",
-          org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY)
+        val createDesc = metadataUnary("CreateSourceVariant")
+        val equivDesc = metadataUnary("GetEquivalent")
         def registerAndRead(i: Int): Boolean = {
           val w = new serving.ProtoWire.W
           w.msg(1) { sv =>
@@ -312,7 +312,7 @@ object ServingBench {
         s""""sf_dir":"$sfDir"}"""
     println(json)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_serving_r14.json"), json + "\n")
+      java.nio.file.Paths.get(s"BENCH_serving_c$cpus.json"), json + "\n")
     spark.stop()
     // scraped() now fails loudly on a missing counter line, so the
     // server-side counts are trustworthy — no sentinel masking needed

@@ -45,7 +45,8 @@ import org.apache.spark.sql.functions._
   *      hammingNearDupsIncremental), which make the steady state
   *      new-batch × corpus instead of corpus².
   *
-  * Output: one JSON line + `BENCH_skew_r4.json` in the repo root.
+  * Output: one JSON line + `BENCH_skew_c<cpus>.json` in the working
+  * directory.
   * Exit code != 0 when any assertion fails.
   */
 object SkewBench {
@@ -717,7 +718,7 @@ object SkewBench {
         s""""assertions_failed":${errs.map(e => s""""$e"""").mkString("[", ",", "]")}}"""
     println(json)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_skew_r15.json"), json + "\n")
+      java.nio.file.Paths.get(s"BENCH_skew_c$cpus.json"), json + "\n")
     spark.stop()
     if (errs.nonEmpty) {
       errs.foreach(e => System.err.println(s"[skew] ASSERTION FAILED: $e"))

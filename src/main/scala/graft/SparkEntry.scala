@@ -1025,26 +1025,20 @@ object SparkEntry {
         req.msg(2)(m => { m.str(1, "user"); m.str(3, e.toString) }))
       val resp = org.sparkproject.connect.grpc.stub.ClientCalls
         .blockingUnaryCall(ch,
-          GrpcServe.method("FeatureServe",
+          graft.serving.Grpc.method(GrpcServe.ServiceName, "FeatureServe",
             org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY),
           org.sparkproject.connect.grpc.CallOptions.DEFAULT, req.result())
       // FeatureRow.value_lists: one ValueList per requested entity, in order
       val r = new R(resp)
       val values = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var more = true
-      while (more) r.readTag() match {
-        case (0, _) => more = false
+      r.fields {
         case (2, _) =>
           val vl = r.readSlice()
           var got: Any = null
-          var vm = true
-          while (vm) vl.readTag() match {
-            case (0, _) => vm = false
+          vl.fields {
             case (1, _) => got = GrpcServe.readValue(vl.readSlice())
-            case (_, wt) => vl.skip(wt)
           }
           values += got
-        case (_, wt) => r.skip(wt)
       }
       val rows = values.zipWithIndex.map { case (v, i) =>
         org.apache.spark.sql.Row(i.toLong,
@@ -1082,7 +1076,7 @@ object SparkEntry {
     try {
       def unary(rpc: String, req: Array[Byte]): Array[Byte] =
         org.sparkproject.connect.grpc.stub.ClientCalls.blockingUnaryCall(ch,
-          MetadataServe.method(MetadataServe.ServiceName, rpc,
+          graft.serving.Grpc.method(MetadataServe.ServiceName, rpc,
             org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY),
           org.sparkproject.connect.grpc.CallOptions.DEFAULT, req)
       // register the primary source, then the templated SQL transformation
@@ -1116,26 +1110,17 @@ object SparkEntry {
         sys.error("GetEquivalent returned no source_variant"))
       var decoded = ""
       var variant = ""
-      var more = true
-      while (more) sv.readTag() match {
-        case (0, _) => more = false
+      sv.fields {
         case (2, _) => variant = sv.readString()
         case (14, _) =>
           val t = sv.readSlice()
-          var tm = true
-          while (tm) t.readTag() match {
-            case (0, _) => tm = false
+          t.fields {
             case (1, _) =>
               val sql = t.readSlice()
-              var sm = true
-              while (sm) sql.readTag() match {
-                case (0, _) => sm = false
+              sql.fields {
                 case (1, _) => decoded = sql.readString()
-                case (_, wt) => sql.skip(wt)
               }
-            case (_, wt) => t.skip(wt)
           }
-        case (_, wt) => sv.skip(wt)
       }
       require(variant == "v1", s"equivalent matched wrong variant '$variant'")
       require(decoded.nonEmpty, "decoded transformation query is empty")
@@ -1166,7 +1151,7 @@ object SparkEntry {
       val ticket = { val w = new W; w.str(1, "events/clicks"); w.result() }
       val frames = org.sparkproject.connect.grpc.stub.ClientCalls
         .blockingServerStreamingCall(ch,
-          FlightServe.method("DoGet",
+          graft.serving.Grpc.method(FlightServe.ServiceName, "DoGet",
             org.sparkproject.connect.grpc.MethodDescriptor.MethodType.SERVER_STREAMING),
           org.sparkproject.connect.grpc.CallOptions.DEFAULT, ticket)
         .asScala.toSeq
@@ -1259,8 +1244,7 @@ object SparkEntry {
   private def metaUnary(ch: org.sparkproject.connect.grpc.ManagedChannel,
                         rpc: String, req: Array[Byte]): Array[Byte] =
     org.sparkproject.connect.grpc.stub.ClientCalls.blockingUnaryCall(ch,
-      graft.serving.MetadataServe.method(
-        graft.serving.MetadataServe.ServiceName, rpc,
+      graft.serving.Grpc.method(graft.serving.MetadataServe.ServiceName, rpc,
         org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY),
       org.sparkproject.connect.grpc.CallOptions.DEFAULT, req)
 
@@ -1322,7 +1306,7 @@ object SparkEntry {
     try {
       def unary(rpc: String, req: Array[Byte]): Array[Byte] =
         org.sparkproject.connect.grpc.stub.ClientCalls.blockingUnaryCall(ch,
-          MetadataServe.method(MetadataServe.TasksServiceName, rpc,
+          graft.serving.Grpc.method(MetadataServe.TasksServiceName, rpc,
             org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY),
           org.sparkproject.connect.grpc.CallOptions.DEFAULT, req)
       def createRun(task: String, name: String): Unit = {
@@ -1338,21 +1322,15 @@ object SparkEntry {
         w.msg(1)(_.str(1, run)); w.msg(2)(_.str(1, task))
         val r = new R(unary("GetRunMetadata", w.result()))
         var st = -1L; var sched = ""; var trig = 0L; var sawSchedMsg = false
-        var more = true
-        while (more) r.readTag() match {
-          case (0, _) => more = false
+        r.fields {
           case (5, _) => sawSchedMsg = true; r.readSlice()
           case (6, _) => trig = r.readVarint()
           case (13, _) =>
             val sm = r.readSlice()
-            var m2 = true
-            while (m2) sm.readTag() match {
-              case (0, _) => m2 = false
+            sm.fields {
               case (1, _) => st = sm.readVarint()
-              case (_, wt) => sm.skip(wt)
             }
           case (17, _) => sched = r.readString()
-          case (_, wt) => r.skip(wt)
         }
         require(trig != 0L || sawSchedMsg,
           s"run $run reports SCHEDULE trigger without a ScheduleTrigger message")
@@ -1489,7 +1467,7 @@ object SparkEntry {
         metaUnary(mch, rpc, req)
       def tunary(rpc: String, req: Array[Byte]): Array[Byte] =
         org.sparkproject.connect.grpc.stub.ClientCalls.blockingUnaryCall(mch,
-          MetadataServe.method(MetadataServe.TasksServiceName, rpc,
+          graft.serving.Grpc.method(MetadataServe.TasksServiceName, rpc,
             org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY),
           org.sparkproject.connect.grpc.CallOptions.DEFAULT, req)
       // -------- 1. the registration plane (Metadata service, all wire)
@@ -1553,25 +1531,19 @@ object SparkEntry {
         req.msg(2)(m => { m.str(1, "customer"); m.str(3, e.toString) }))
       val resp = org.sparkproject.connect.grpc.stub.ClientCalls
         .blockingUnaryCall(gch,
-          GrpcServe.method("FeatureServe",
+          graft.serving.Grpc.method(GrpcServe.ServiceName, "FeatureServe",
             org.sparkproject.connect.grpc.MethodDescriptor.MethodType.UNARY),
           org.sparkproject.connect.grpc.CallOptions.DEFAULT, req.result())
       val r = new R(resp)
       val values = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var more = true
-      while (more) r.readTag() match {
-        case (0, _) => more = false
+      r.fields {
         case (2, _) =>
           val vl = r.readSlice()
           var got: Any = null
-          var vm = true
-          while (vm) vl.readTag() match {
-            case (0, _) => vm = false
+          vl.fields {
             case (1, _) => got = GrpcServe.readValue(vl.readSlice())
-            case (_, wt) => vl.skip(wt)
           }
           values += got
-        case (_, wt) => r.skip(wt)
       }
       // -------- 4. deletion plane: mark → staged-readable → finalize → gone
       def featureId(): Array[Byte] = {

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * outgrows executor memory, which local[16]×128 GiB cannot reach, so
   * this records the in-memory envelope and documents where the crossover
   * sits rather than claiming one. Output: one JSON line +
-  * `BENCH_statestore_r8.json`.
+  * `BENCH_statestore_c<cpus>.json` in the working directory.
   */
 object StateStoreBench {
 
@@ -218,7 +218,7 @@ object StateStoreBench {
         s""""note":"dedup_ttl_restart.resume_sec covers state-store re-init + snapshot/delta reload per partition PLUS draining the remaining batches - it exceeds the uninterrupted wall when the stop lands late (committed_at_stop of 20); the envelope claim is bytes_vs_uninterrupted = 1. 10x entities, every batch rewrites all state; both providers in-memory-feasible at this scale - crossover to RocksDB is when per-partition state exceeds executor heap (HDFS store holds the full map resident; RocksDB stays bounded). streaming_dedup_state: 20 time-ordered files, 1 doc/s event time, ttl=2000s - TTL-mode state is bounded by rate*ttl + idle-bucket GC while full-history tracks the corpus"}"""
     println(json)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_statestore_r14.json"), json + "\n")
+      java.nio.file.Paths.get(s"BENCH_statestore_c$cpus.json"), json + "\n")
     spark.stop()
   }
 }

@@ -10,9 +10,8 @@ import org.apache.arrow.vector.ipc.WriteChannel
 import org.apache.arrow.vector.ipc.message.{ArrowRecordBatch, IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.pojo.Schema
 import org.apache.spark.sql.{DataFrame, Row}
-import org.sparkproject.connect.grpc.{ServerServiceDefinition, Status}
-import org.sparkproject.connect.grpc.netty.NettyServerBuilder
-import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
+import org.sparkproject.connect.grpc.Status
+import org.sparkproject.connect.grpc.stub.StreamObserver
 
 import ProtoWire.{R, W}
 
@@ -40,7 +39,8 @@ import ProtoWire.{R, W}
   * same 2M-row serving-edge cap as the HTTP facade. */
 final class FlightServe(port: Int = 0, batchRows: Int = 1024,
                         maxRows: Long = 2000000L,
-                        val metrics: Metrics = new Metrics) {
+                        val metrics: Metrics = new Metrics)
+    extends Grpc.Endpoint(port) {
   import FlightServe._
 
   private val tables =
@@ -57,13 +57,10 @@ final class FlightServe(port: Int = 0, batchRows: Int = 1024,
   private def descriptorKey(r: R): String = {
     var cmd = ""
     val path = scala.collection.mutable.ArrayBuffer.empty[String]
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (2, _) => cmd = new String(r.readBytes(),
         java.nio.charset.StandardCharsets.UTF_8)
       case (3, _) => path += r.readString()
-      case (_, wt) => r.skip(wt)
     }
     if (path.nonEmpty) path.mkString("/") else cmd
   }
@@ -115,16 +112,12 @@ final class FlightServe(port: Int = 0, batchRows: Int = 1024,
     w.result()
   }
 
-  private def listFlights(req: Array[Byte],
-                          obs: StreamObserver[Array[Byte]],
-                          onDone: Option[Throwable] => Unit): Unit = {
-    val msgs = tables.toSeq.sortBy(_._1).iterator.map { case (key, df) =>
+  private def listFlights(req: Array[Byte]): Iterator[Array[Byte]] =
+    tables.toSeq.sortBy(_._1).iterator.map { case (key, df) =>
       val w = new W
       writeFlightInfo(w, key, df)
       w.result()
     }
-    Backpressure.drive(obs, msgs, onDone)
-  }
 
   /** DoGet: Ticket{ticket=1 bytes} → FlightData stream. First message
     * carries the schema (data_header only), then one message per record
@@ -135,12 +128,9 @@ final class FlightServe(port: Int = 0, batchRows: Int = 1024,
                     onDone: Option[Throwable] => Unit): Unit = {
     val r = new R(req)
     var key = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => key = new String(r.readBytes(),
         java.nio.charset.StandardCharsets.UTF_8)
-      case (_, wt) => r.skip(wt)
     }
     val df = lookup(key)
     val sparkSchema = df.schema
@@ -219,100 +209,19 @@ final class FlightServe(port: Int = 0, batchRows: Int = 1024,
       override def onCompleted(): Unit = obs.onCompleted()
     }
 
-  // ----------------------------------------------------- gRPC plumbing
-
-  private def unary(route: String, h: Array[Byte] => Array[Byte]) =
-    ServerCalls.asyncUnaryCall(
-      new ServerCalls.UnaryMethod[Array[Byte], Array[Byte]] {
-        override def invoke(req: Array[Byte],
-                            obs: StreamObserver[Array[Byte]]): Unit = {
-          val t0 = System.nanoTime()
-          try {
-            val out = h(req)
-            metrics.observe(route, System.nanoTime() - t0, error = false)
-            obs.onNext(out); obs.onCompleted()
-          } catch {
-            case e: Throwable =>
-              metrics.observe(route, System.nanoTime() - t0, error = true)
-              obs.onError(Backpressure.toStatus(e))
-          }
-        }
-      })
-
-  private def serverStreaming(route: String,
-      h: (Array[Byte], StreamObserver[Array[Byte]],
-          Option[Throwable] => Unit) => Unit) =
-    ServerCalls.asyncServerStreamingCall(
-      new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
-        override def invoke(req: Array[Byte],
-                            obs: StreamObserver[Array[Byte]]): Unit = {
-          val t0 = System.nanoTime()
-          try h(req, obs,
-            err => metrics.observe(route, System.nanoTime() - t0,
-              error = err.isDefined))
-          catch {
-            case e: Throwable =>
-              metrics.observe(route, System.nanoTime() - t0, error = true)
-              obs.onError(Backpressure.toStatus(e))
-          }
-        }
-      })
-
-  private val service: ServerServiceDefinition = {
-    import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
-    ServerServiceDefinition.builder(ServiceName)
-      .addMethod(method("Handshake", BIDI_STREAMING),
-        ServerCalls.asyncBidiStreamingCall(
-          new ServerCalls.BidiStreamingMethod[Array[Byte], Array[Byte]] {
-            override def invoke(obs: StreamObserver[Array[Byte]])
-                : StreamObserver[Array[Byte]] = handshake(obs)
-          }))
-      .addMethod(method("ListFlights", SERVER_STREAMING),
-        serverStreaming("ListFlights", listFlights))
-      .addMethod(method("GetFlightInfo", UNARY),
-        unary("GetFlightInfo", getFlightInfo))
-      .addMethod(method("GetSchema", UNARY), unary("GetSchema", getSchema))
-      .addMethod(method("DoGet", SERVER_STREAMING),
-        serverStreaming("DoGet", doGet))
-      .addMethod(method("ListActions", SERVER_STREAMING),
-        serverStreaming("ListActions",
-          (_, obs, onDone) => Backpressure.drive(obs, Iterator.empty, onDone)))
-      .build()
-  }
-
-  private val server = NettyServerBuilder
-    .forAddress(new java.net.InetSocketAddress("127.0.0.1", port))
-    .addService(service)
-    // standard health probes (grpc.health.v1) for load balancers
-    .addService(HealthServe.service(Set(ServiceName)))
-    .build()
-
-  def start(): FlightServe = { server.start(); this }
-  def boundPort: Int = server.getPort
-  def stop(): Unit = server.shutdownNow()
+  protected def services = Seq(new Grpc.Service(ServiceName, Some(metrics))
+    .bidi("Handshake")(handshake)
+    .stream("ListFlights")(listFlights)
+    .unary("GetFlightInfo")(getFlightInfo)
+    .unary("GetSchema")(getSchema)
+    .serverStream("DoGet")(doGet)
+    .stream("ListActions")(_ => Iterator.empty)
+    .build())
 }
 
 object FlightServe {
   /** The public Flight service name — what every generated client dials. */
   val ServiceName = "arrow.flight.protocol.FlightService"
-
-  private val BytesMarshaller =
-    new org.sparkproject.connect.grpc.MethodDescriptor.Marshaller[Array[Byte]] {
-      override def stream(value: Array[Byte]): java.io.InputStream =
-        new java.io.ByteArrayInputStream(value)
-      override def parse(stream: java.io.InputStream): Array[Byte] =
-        stream.readAllBytes()
-    }
-
-  def method(name: String,
-             mt: org.sparkproject.connect.grpc.MethodDescriptor.MethodType)
-      : org.sparkproject.connect.grpc.MethodDescriptor[Array[Byte], Array[Byte]] =
-    org.sparkproject.connect.grpc.MethodDescriptor
-      .newBuilder(BytesMarshaller, BytesMarshaller)
-      .setType(mt)
-      .setFullMethodName(org.sparkproject.connect.grpc.MethodDescriptor
-        .generateFullMethodName(ServiceName, name))
-      .build()
 
   def toBytes(bb: java.nio.ByteBuffer): Array[Byte] = {
     val out = new Array[Byte](bb.remaining())
@@ -335,12 +244,9 @@ object FlightServe {
       val r = new R(fd)
       var header = Array.emptyByteArray
       var body = Array.emptyByteArray
-      var more = true
-      while (more) r.readTag() match {
-        case (0, _) => more = false
+      r.fields {
         case (2, _) => header = r.readBytes()
         case (1000, _) => body = r.readBytes()
-        case (_, wt) => r.skip(wt)
       }
       val pad = (8 - (4 + 4 + header.length) % 8) % 8
       le32(0xFFFFFFFF)

@@ -3,10 +3,10 @@ package graft.serving
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.sparkproject.connect.grpc.{MethodDescriptor, ServerServiceDefinition, Status}
-import org.sparkproject.connect.grpc.netty.NettyServerBuilder
-import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
+import org.sparkproject.connect.grpc.Status
+import org.sparkproject.connect.grpc.stub.StreamObserver
 
+import graft.catalog.ResourceId
 import ProtoWire.{R, W}
 
 /** The reference's gRPC serving wire protocol, served for real — the
@@ -17,8 +17,8 @@ import ProtoWire.{R, W}
   * protobuf runtimes shaded into spark-connect (`org.sparkproject.connect
   * .grpc` / `.protobuf` — grpc-netty binds the unshaded `io.netty` jars
   * beside it), plus the repo's dependency-free [[ProtoWire]] wire-format
-  * codec. No generated stubs: each RPC is a hand-built [[MethodDescriptor]]
-  * over an identity byte marshaller, with request/response messages
+  * codec. No generated stubs: each RPC is a [[Grpc]] method over an
+  * identity byte marshaller, with request/response messages
   * encoded/decoded straight from the published protobuf wire spec — the
   * same bytes a protoc-generated client produces and parses.
   *
@@ -46,7 +46,8 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
                         * ServingServer's instance to expose the gRPC routes
                         * on that server's `/metrics` scrape (one scrape for
                         * both wire surfaces). */
-                      val metrics: Metrics = new Metrics) {
+                      val metrics: Metrics = new Metrics)
+    extends Grpc.Endpoint(port) {
   import GrpcServe._
 
   // Every registry keys name/variant — the reference keys all resources by
@@ -85,20 +86,14 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
     val r = new R(req)
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     val entities = scala.collection.mutable.ArrayBuffer.empty[String]
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => names += storeKey(readFeatureId(r.readSlice()))
+    r.fields {
+      case (1, _) => names += storeKey(Grpc.readNameVariant(r.readSlice()))
       case (2, _) =>
         val e = r.readSlice()
-        var em = true
-        while (em) e.readTag() match {
-          case (0, _) => em = false
+        e.fields {
           case (2, _) => entities += e.readString() // deprecated single
           case (3, _) => entities += e.readString()
-          case (_, wt) => e.skip(wt)
         }
-      case (_, wt) => r.skip(wt)
     }
     require(entities.nonEmpty, "at least one entity required")
     val w = new W
@@ -118,21 +113,15 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
     // packed field into several LEN chunks or mix packed and unpacked
     val vec = scala.collection.mutable.ArrayBuffer.empty[Float]
     var k = 0
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => name = storeKey(readFeatureId(r.readSlice()))
+    r.fields {
+      case (1, _) => name = storeKey(Grpc.readNameVariant(r.readSlice()))
       case (2, _) =>
         val v = r.readSlice()
-        var vm = true
-        while (vm) v.readTag() match {
-          case (0, _) => vm = false
+        v.fields {
           case (1, ProtoWire.WtLen) => vec ++= v.readPackedFloats()
           case (1, ProtoWire.WtFixed32) => vec += v.readFloat()
-          case (_, wt) => v.skip(wt)
         }
       case (3, _) => k = r.readVarint().toInt
-      case (_, wt) => r.skip(wt)
     }
     val w = new W
     store.nearest(name, vec.toArray, k).foreach { case (id, _) => w.str(1, id.toString) }
@@ -157,19 +146,16 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
   /** FeatureID → OnlineStore table key: bare name when versionless, else
     * `name/version` — so a variant the store never loaded reads as absent
     * instead of silently serving whatever single variant exists. */
-  private def storeKey(id: (String, String)): String =
-    if (id._2.isEmpty) id._1 else s"${id._1}/${id._2}"
+  private def storeKey(id: ResourceId): String =
+    if (id.variant.isEmpty) id.name else s"${id.name}/${id.variant}"
 
   private def resourceLocation(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var name = ""
     var variant = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => name = r.readString()
       case (2, _) => variant = r.readString()
-      case (_, wt) => r.skip(wt)
     }
     val loc = locations.getOrElse(s"$name/$variant",
       throw Status.NOT_FOUND.withDescription(s"no location for $name/$variant")
@@ -179,13 +165,11 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
     w.result()
   }
 
-  private def trainingData(req: Array[Byte],
-                           obs: StreamObserver[Array[Byte]],
-                           onDone: Option[Throwable] => Unit): Unit = {
+  private def trainingData(req: Array[Byte]): Iterator[Array[Byte]] = {
     val (df, label) = lookupTraining(readIdField(req))
     val featCols = df.columns.filterNot(_ == label)
     val ordered = df.selectExpr((featCols :+ label).map(c => s"`$c`"): _*)
-    streamRows(ordered, obs, onDone) { (w, row) =>
+    rowMessages(ordered) { (w, row) =>
       w.msg(1) { m =>
         var i = 0
         while (i < featCols.length) { m.msg(1)(writeValue(_, row.get(i))); i += 1 }
@@ -194,25 +178,20 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
     }
   }
 
-  private def sourceData(req: Array[Byte],
-                         obs: StreamObserver[Array[Byte]],
-                         onDone: Option[Throwable] => Unit): Unit = {
+  private def sourceData(req: Array[Byte]): Iterator[Array[Byte]] = {
     val r = new R(req)
-    var id = ("", "")
+    var id = ResourceId("", "")
     var limit = Long.MaxValue
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => id = readFeatureId(r.readSlice())
+    r.fields {
+      case (1, _) => id = Grpc.readNameVariant(r.readSlice())
       case (2, _) => limit = r.readVarint()
-      case (_, wt) => r.skip(wt)
     }
     val df0 = lookupSource(id)
     // clamp: a client-sent limit in (2^31, 2^63) must mean "everything",
     // not wrap negative through toInt and throw in Spark
     val df = if (limit > 0 && limit < Int.MaxValue.toLong) df0.limit(limit.toInt)
              else df0
-    streamRows(df, obs, onDone) { (w, row) =>
+    rowMessages(df) { (w, row) =>
       w.msg(1) { m =>
         var i = 0
         while (i < row.length) { m.msg(1)(writeValue(_, row.get(i))); i += 1 }
@@ -220,18 +199,13 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
     }
   }
 
-  private def batchFeatureServe(req: Array[Byte],
-                                obs: StreamObserver[Array[Byte]],
-                                onDone: Option[Throwable] => Unit): Unit = {
+  private def batchFeatureServe(req: Array[Byte]): Iterator[Array[Byte]] = {
     val r = new R(req)
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => names += storeKey(readFeatureId(r.readSlice()))
-      case (_, wt) => r.skip(wt)
+    r.fields {
+      case (1, _) => names += storeKey(Grpc.readNameVariant(r.readSlice()))
     }
-    val msgs = store.batchRows(names.toSeq).grouped(RowsPerMessage).map { group =>
+    store.batchRows(names.toSeq).grouped(RowsPerMessage).map { group =>
       val w = new W
       group.foreach { case (entity, vals) =>
         w.msg(1) { m =>
@@ -241,7 +215,6 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
       }
       w.result()
     }
-    Backpressure.drive(obs, msgs, onDone)
   }
 
   /** Bidi TrainTestSplit: INITIALIZE pins the split view, then each
@@ -258,22 +231,19 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
 
       override def onNext(req: Array[Byte]): Unit = try {
         val r = new R(req)
-        var id = ("", "")
+        var id = ResourceId("", "")
         var testSize = 0.0f
         var shuffle = false
         var randomState = 0
         var requestType = 0
         var batchSize = 1024
-        var more = true
-        while (more) r.readTag() match {
-          case (0, _) => more = false
-          case (1, _) => id = readFeatureId(r.readSlice())
+        r.fields {
+          case (1, _) => id = Grpc.readNameVariant(r.readSlice())
           case (3, _) => testSize = r.readFloat()
           case (5, _) => shuffle = r.readVarint() != 0
           case (6, _) => randomState = r.readVarint().toInt
           case (7, _) => requestType = r.readVarint().toInt
           case (8, _) => batchSize = math.max(1, r.readVarint().toInt)
-          case (_, wt) => r.skip(wt)
         }
         requestType match {
           case 0 => // INITIALIZE
@@ -325,7 +295,7 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
           // deliver onError/onCompleted to this request observer, and the
           // session's persisted split frame would leak for the JVM's life
           if (session != null) { session.close(); session = null }
-          obs.onError(toStatus(e))
+          obs.onError(Backpressure.toStatus(e))
       }
 
       override def onError(t: Throwable): Unit =
@@ -343,8 +313,8 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
     * variant; anything else is NOT_FOUND (the reference 404s a variant
     * mismatch rather than serving another variant, serving.go:617-714). */
   private def lookup[T](m: scala.collection.concurrent.TrieMap[String, T],
-                        kind: String, id: (String, String)): T = {
-    val (name, version) = id
+                        kind: String, id: ResourceId): T = {
+    val ResourceId(name, version) = id
     m.get(s"$name/$version")
       .orElse {
         if (version.nonEmpty) None
@@ -357,153 +327,50 @@ final class GrpcServe(store: OnlineStore, port: Int = 0,
         s"$kind $name" + (if (version.nonEmpty) s" variant $version" else ""))
         .asRuntimeException())
   }
-  private def lookupSource(id: (String, String)): DataFrame =
+  private def lookupSource(id: ResourceId): DataFrame =
     lookup(sources, "source", id)
-  private def lookupTraining(id: (String, String)): (DataFrame, String) =
+  private def lookupTraining(id: ResourceId): (DataFrame, String) =
     lookup(trainingSets, "training set", id)
 
-  private def readIdField(req: Array[Byte]): (String, String) = {
+  private def readIdField(req: Array[Byte]): ResourceId = {
     val r = new R(req)
-    var id = ("", "")
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => id = readFeatureId(r.readSlice())
-      case (_, wt) => r.skip(wt)
+    var id = ResourceId("", "")
+    r.fields {
+      case (1, _) => id = Grpc.readNameVariant(r.readSlice())
     }
     id
   }
 
-  /** Stream a frame as length-bounded messages: `toLocalIterator`
+  /** A frame as length-bounded messages: `toLocalIterator`
     * (partition-at-a-time, never the whole frame on this node) grouped to
-    * [[RowsPerMessage]] rows per gRPC message, produced under gRPC flow
-    * control ([[Backpressure.drive]]) so a slow client stalls the PRODUCER
-    * instead of accumulating encoded batches on the driver heap. */
-  private def streamRows(df: DataFrame, obs: StreamObserver[Array[Byte]],
-                         onDone: Option[Throwable] => Unit)
-                        (writeRow: (W, Row) => Unit): Unit = {
-    val msgs = df.toLocalIterator().asScala.grouped(RowsPerMessage).map { group =>
+    * [[RowsPerMessage]] rows per gRPC message. The stream routes produce
+    * them under gRPC flow control ([[Backpressure.drive]]) so a slow client
+    * stalls the PRODUCER instead of accumulating encoded batches on the
+    * driver heap. */
+  private def rowMessages(df: DataFrame)
+                         (writeRow: (W, Row) => Unit): Iterator[Array[Byte]] =
+    df.toLocalIterator().asScala.grouped(RowsPerMessage).map { group =>
       val w = new W
       group.foreach(row => writeRow(w, row))
       w.result()
     }
-    Backpressure.drive(obs, msgs, onDone)
-  }
 
-  private def toStatus(e: Throwable): Throwable = Backpressure.toStatus(e)
-
-  private def unary(route: String, h: Array[Byte] => Array[Byte]) =
-    ServerCalls.asyncUnaryCall(
-      new ServerCalls.UnaryMethod[Array[Byte], Array[Byte]] {
-        override def invoke(req: Array[Byte],
-                            obs: StreamObserver[Array[Byte]]): Unit = {
-          val t0 = System.nanoTime()
-          try {
-            val out = h(req)
-            metrics.observe(route, System.nanoTime() - t0, error = false)
-            obs.onNext(out); obs.onCompleted()
-          } catch {
-            case e: Throwable =>
-              metrics.observe(route, System.nanoTime() - t0, error = true)
-              obs.onError(toStatus(e))
-          }
-        }
-      })
-
-  private def serverStreaming(route: String,
-      h: (Array[Byte], StreamObserver[Array[Byte]],
-          Option[Throwable] => Unit) => Unit) =
-    ServerCalls.asyncServerStreamingCall(
-      new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
-        override def invoke(req: Array[Byte],
-                            obs: StreamObserver[Array[Byte]]): Unit = {
-          val t0 = System.nanoTime()
-          // production is flow-controlled and may outlive this frame —
-          // the latency metric lands when the stream actually completes
-          try h(req, obs,
-            err => metrics.observe(route, System.nanoTime() - t0,
-              error = err.isDefined))
-          catch {
-            case e: Throwable => // request-parse / lookup errors
-              metrics.observe(route, System.nanoTime() - t0, error = true)
-              obs.onError(toStatus(e))
-          }
-        }
-      })
-
-  private val service: ServerServiceDefinition = {
-    import MethodDescriptor.MethodType._
-    ServerServiceDefinition.builder(ServiceName)
-      .addMethod(method("FeatureServe", UNARY),
-        unary("FeatureServe", featureServe))
-      .addMethod(method("Nearest", UNARY), unary("Nearest", nearest))
-      .addMethod(method("TrainingDataColumns", UNARY),
-        unary("TrainingDataColumns", trainingColumns))
-      .addMethod(method("SourceColumns", UNARY),
-        unary("SourceColumns", sourceColumns))
-      .addMethod(method("GetResourceLocation", UNARY),
-        unary("GetResourceLocation", resourceLocation))
-      .addMethod(method("TrainingData", SERVER_STREAMING),
-        serverStreaming("TrainingData", trainingData))
-      .addMethod(method("SourceData", SERVER_STREAMING),
-        serverStreaming("SourceData", sourceData))
-      .addMethod(method("BatchFeatureServe", SERVER_STREAMING),
-        serverStreaming("BatchFeatureServe", batchFeatureServe))
-      .addMethod(method("TrainTestSplit", BIDI_STREAMING),
-        ServerCalls.asyncBidiStreamingCall(
-          new ServerCalls.BidiStreamingMethod[Array[Byte], Array[Byte]] {
-            override def invoke(obs: StreamObserver[Array[Byte]])
-                : StreamObserver[Array[Byte]] = trainTestSplit(obs)
-          }))
-      .build()
-  }
-
-  private val server = NettyServerBuilder
-    .forAddress(new java.net.InetSocketAddress("127.0.0.1", port))
-    .addService(service)
-    // standard health probes (grpc.health.v1) for load balancers
-    .addService(HealthServe.service(Set(GrpcServe.ServiceName)))
-    .build()
-
-  def start(): GrpcServe = { server.start(); this }
-  def boundPort: Int = server.getPort
-  def stop(): Unit = server.shutdownNow()
+  protected def services = Seq(new Grpc.Service(ServiceName, Some(metrics))
+    .unary("FeatureServe")(featureServe)
+    .unary("Nearest")(nearest)
+    .unary("TrainingDataColumns")(trainingColumns)
+    .unary("SourceColumns")(sourceColumns)
+    .unary("GetResourceLocation")(resourceLocation)
+    .stream("TrainingData")(trainingData)
+    .stream("SourceData")(sourceData)
+    .stream("BatchFeatureServe")(batchFeatureServe)
+    .bidi("TrainTestSplit")(trainTestSplit)
+    .build())
 }
 
 object GrpcServe {
   val ServiceName = "featureform.serving.proto.Feature"
   val RowsPerMessage = 256
-
-  private val BytesMarshaller = new MethodDescriptor.Marshaller[Array[Byte]] {
-    override def stream(value: Array[Byte]): java.io.InputStream =
-      new java.io.ByteArrayInputStream(value)
-    override def parse(stream: java.io.InputStream): Array[Byte] =
-      stream.readAllBytes()
-  }
-
-  /** Hand-built descriptor — what protoc's generated stubs contain, minus
-    * the generated message classes (ProtoWire codes the payloads). Shared
-    * by the server and any in-JVM test client. */
-  def method(name: String,
-             mt: MethodDescriptor.MethodType): MethodDescriptor[Array[Byte], Array[Byte]] =
-    MethodDescriptor.newBuilder(BytesMarshaller, BytesMarshaller)
-      .setType(mt)
-      .setFullMethodName(MethodDescriptor.generateFullMethodName(ServiceName, name))
-      .build()
-
-  /** FeatureID/SourceID/TrainingDataID are wire-identical: (name, version). */
-  def readFeatureId(r: R): (String, String) = {
-    var name = ""
-    var version = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => name = r.readString()
-      case (2, _) => version = r.readString()
-      case (_, wt) => r.skip(wt)
-    }
-    (name, version)
-  }
 
   /** Scala value → proto `Value` oneof (field numbers from
     * proto/serving.proto:94-107). null → no field set (proto3 unset). */
@@ -530,9 +397,7 @@ object GrpcServe {
     * in-JVM generated-client stand-in). */
   def readValue(r: R): Any = {
     var out: Any = null
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => out = r.readString()
       case (2, _) => out = r.readVarint().toInt
       case (3, _) => out = r.readFloat()
@@ -546,17 +411,13 @@ object GrpcServe {
         // packed and unpacked may legally mix — protobuf spec)
         val acc = scala.collection.mutable.ArrayBuffer.empty[Float]
         out match { case a: Array[Float] => acc ++= a; case _ => () }
-        var vm = true
-        while (vm) v.readTag() match {
-          case (0, _) => vm = false
+        v.fields {
           case (1, ProtoWire.WtLen) => acc ++= v.readPackedFloats()
           case (1, ProtoWire.WtFixed32) => acc += v.readFloat()
-          case (_, wt) => v.skip(wt)
         }
         out = acc.toArray
       case (10, _) => out = r.readVarint().toInt
       case (11, _) => out = r.readVarint()
-      case (_, wt) => r.skip(wt)
     }
     out
   }

@@ -1,7 +1,6 @@
 package graft.serving
 
 import org.sparkproject.connect.grpc.{ServerServiceDefinition, Status}
-import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
 
 import ProtoWire.{R, W}
 
@@ -24,13 +23,8 @@ import ProtoWire.{R, W}
 object HealthServe {
   val ServiceName = "grpc.health.v1.Health"
 
-  /** Default cap on held-open Watch streams per endpoint. A malformed
-    * override falls back to 64 — a tuning knob must not be able to keep
-    * the whole gRPC endpoint from starting. */
-  private def defaultWatchMax: Int =
-    sys.props.get("graft.healthWatchMax")
-      .orElse(sys.env.get("GRAFT_HEALTH_WATCH_MAX"))
-      .flatMap(_.trim.toIntOption).getOrElse(64)
+  /** Default cap on held-open Watch streams per endpoint. */
+  val WatchMax = 64
 
   private val Serving: Array[Byte] = { val w = new W; w.enum(1, 1); w.result() }
   // ServingStatus.SERVICE_UNKNOWN — Watch-only per health.proto: "if the
@@ -42,11 +36,8 @@ object HealthServe {
   private def readService(req: Array[Byte]): String = {
     val r = new R(req)
     var svc = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => svc = r.readString()
-      case (_, wt) => r.skip(wt)
     }
     svc
   }
@@ -62,7 +53,7 @@ object HealthServe {
     * costs it, not the server). Permits release on client
     * cancel/disconnect. */
   def service(served: Set[String],
-              watchMax: Int = defaultWatchMax): ServerServiceDefinition = {
+              watchMax: Int = WatchMax): ServerServiceDefinition = {
     val watchSlots = new java.util.concurrent.Semaphore(watchMax)
     def unknown(svc: String): Boolean =
       svc.nonEmpty && !served.contains(svc) && svc != ServiceName
@@ -73,60 +64,42 @@ object HealthServe {
           .withDescription(s"unknown service $svc").asRuntimeException()
       Serving
     }
-    import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
-    ServerServiceDefinition.builder(ServiceName)
-      .addMethod(MetadataServe.method(ServiceName, "Check", UNARY),
-        ServerCalls.asyncUnaryCall(
-          new ServerCalls.UnaryMethod[Array[Byte], Array[Byte]] {
-            override def invoke(req: Array[Byte],
-                                obs: StreamObserver[Array[Byte]]): Unit =
-              try { obs.onNext(check(req)); obs.onCompleted() }
-              catch { case e: Throwable => obs.onError(Backpressure.toStatus(e)) }
-          }))
-      .addMethod(MetadataServe.method(ServiceName, "Watch", SERVER_STREAMING),
-        ServerCalls.asyncServerStreamingCall(
-          new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
-            override def invoke(req: Array[Byte],
-                                obs: StreamObserver[Array[Byte]]): Unit = {
-              // one report, then leave the stream open (no onCompleted):
-              // statuses are static, so there is never a second message,
-              // but completing would make standard health watchers re-dial.
-              // Unknown services get a SERVICE_UNKNOWN message (stream
-              // stays open awaiting registration), never a stream error —
-              // Watch semantics differ from Check here by protocol. Parse
-              // inside the try: malformed bytes must map through toStatus,
-              // not escape into the server internals as UNKNOWN.
-              try {
-                val msg =
-                  if (unknown(readService(req))) ServiceUnknown else Serving
-                if (watchSlots.tryAcquire()) {
-                  // release the slot when the client cancels/disconnects
-                  // — the only way a held-open stream ever ends. The
-                  // AtomicBoolean guards EVERY release path (cancel
-                  // handler, hook-install failure, onNext failure): a
-                  // permit that leaked would permanently shrink the cap,
-                  // and a double release would grow it past watchMax.
-                  val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-                  def release(): Unit =
-                    if (released.compareAndSet(false, true)) watchSlots.release()
-                  val hooked =
-                    try {
-                      obs.asInstanceOf[
-                        org.sparkproject.connect.grpc.stub.ServerCallStreamObserver[Array[Byte]]]
-                        .setOnCancelHandler(() => release())
-                      true
-                    } catch { case _: Throwable => release(); false }
-                  try obs.onNext(msg)
-                  catch { case e: Throwable => release(); throw e }
-                  if (!hooked) obs.onCompleted() // no cancel hook → no hold
-                } else {
-                  obs.onNext(msg)
-                  obs.onCompleted() // over cap: degrade to Check semantics
-                }
-              }
-              catch { case e: Throwable => obs.onError(Backpressure.toStatus(e)) }
-            }
-          }))
+    new Grpc.Service(ServiceName, metrics = None)
+      .unary("Check")(check)
+      .serverStream("Watch") { (req, obs, _) =>
+        // one report, then leave the stream open (no onCompleted):
+        // statuses are static, so there is never a second message, but
+        // completing would make standard health watchers re-dial. Unknown
+        // services get a SERVICE_UNKNOWN message (stream stays open
+        // awaiting registration), never a stream error — Watch semantics
+        // differ from Check here by protocol. Malformed bytes fail the
+        // call through the adapter's status mapping.
+        val msg = if (unknown(readService(req))) ServiceUnknown else Serving
+        if (watchSlots.tryAcquire()) {
+          // release the slot when the client cancels/disconnects — the
+          // only way a held-open stream ever ends. The AtomicBoolean
+          // guards EVERY release path (cancel handler, hook-install
+          // failure, onNext failure): a permit that leaked would
+          // permanently shrink the cap, and a double release would grow
+          // it past watchMax.
+          val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+          def release(): Unit =
+            if (released.compareAndSet(false, true)) watchSlots.release()
+          val hooked =
+            try {
+              obs.asInstanceOf[
+                org.sparkproject.connect.grpc.stub.ServerCallStreamObserver[Array[Byte]]]
+                .setOnCancelHandler(() => release())
+              true
+            } catch { case _: Throwable => release(); false }
+          try obs.onNext(msg)
+          catch { case e: Throwable => release(); throw e }
+          if (!hooked) obs.onCompleted() // no cancel hook → no hold
+        } else {
+          obs.onNext(msg)
+          obs.onCompleted() // over cap: degrade to Check semantics
+        }
+      }
       .build()
   }
 }

@@ -1,11 +1,10 @@
 package graft.serving
 
 import org.apache.spark.sql.DataFrame
-import org.sparkproject.connect.grpc.{ServerServiceDefinition, Status}
-import org.sparkproject.connect.grpc.netty.NettyServerBuilder
-import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
+import org.sparkproject.connect.grpc.Status
 
 import graft.catalog._
+import Grpc.readNameVariant
 import ProtoWire.{R, W}
 
 /** The reference's metadata/registration gRPC service, served for real —
@@ -71,7 +70,12 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
                             * 2345). None → the Tasks service is not
                             * registered on the endpoint. */
                           tasks: Option[graft.sched.TaskRunner] = None,
-                          val metrics: Metrics = new Metrics) {
+                          /** Cap on concurrently long-polling
+                            * WatchForCancel calls; beyond it a call
+                            * answers the current status at once. */
+                          watchCancelMax: Int = MetadataServe.WatchCancelMax,
+                          val metrics: Metrics = new Metrics)
+    extends Grpc.Endpoint(port) {
   import MetadataServe._
 
   // ------------------------------------------------------------- helpers
@@ -124,9 +128,7 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var partition: Option[PartitionHint] = None
     var owner = ""; var desc = ""; var provider = ""; var schedule = ""
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
       case (4, _) => owner = body.readString()
@@ -134,32 +136,24 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (6, _) => provider = body.readString()
       case (14, _) => // Transformation
         val t = body.readSlice()
-        var tm = true
-        while (tm) t.readTag() match {
-          case (0, _) => tm = false
+        t.fields {
           case (1, _) => // SQLTransformation{query=1}
             val s = t.readSlice()
-            var sm = true
-            while (sm) s.readTag() match {
-              case (0, _) => sm = false
+            s.fields {
               case (1, _) => defn = Some(SqlTransformation(s.readString()))
-              case (_, wt) => s.skip(wt)
             }
           case (2, _) => // DFTransformation{query=1, inputs=2, source_text=3}
             val d = t.readSlice()
             var fnName = ""
             val inputs = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
-            var dm = true
-            while (dm) d.readTag() match {
-              case (0, _) => dm = false
+            d.fields {
               case (1, _) =>
                 val b = d.readBytes() // dill stand-in: a UTF-8 fn name
                 if (fnName.isEmpty)
                   fnName = new String(b, java.nio.charset.StandardCharsets.UTF_8)
-              case (2, _) => inputs += readNV(d.readSlice())
+              case (2, _) => inputs += readNameVariant(d.readSlice())
               case (3, _) => fnName = d.readString()
               case (8, _) => if (fnName.isEmpty) fnName = d.readString()
-              case (_, wt) => d.skip(wt)
             }
             val fn = dfFns.getOrElse(fnName, invalid(
               s"df transformation '$fnName' is not in the server function registry"))
@@ -167,42 +161,29 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
           case (4, _) => // HashPartition{column=1, buckets=2}
             val h = t.readSlice()
             var c = ""; var b = 0
-            var hm = true
-            while (hm) h.readTag() match {
-              case (0, _) => hm = false
+            h.fields {
               case (1, _) => c = h.readString()
               case (2, _) => b = h.readVarint().toInt
-              case (_, wt) => h.skip(wt)
             }
             partition = Some(HashPartition(c, b))
           case (5, _) => // DailyPartition{column=1}
             val dp = t.readSlice()
             var c = ""
-            var dm = true
-            while (dm) dp.readTag() match {
-              case (0, _) => dm = false
+            dp.fields {
               case (1, _) => c = dp.readString()
-              case (_, wt) => dp.skip(wt)
             }
             partition = Some(DailyPartition(c))
-          case (_, wt) => t.skip(wt)
         }
       case (15, _) => // PrimaryData
         val p = body.readSlice()
         var path = ""; var tsCol: Option[String] = None
-        var pm = true
-        while (pm) p.readTag() match {
-          case (0, _) => pm = false
+        p.fields {
           case (3, _) => // FileStoreTable{path=1}
             val f = p.readSlice()
-            var fm = true
-            while (fm) f.readTag() match {
-              case (0, _) => fm = false
+            f.fields {
               case (1, _) => path = f.readString()
-              case (_, wt) => f.skip(wt)
             }
           case (2, _) => tsCol = Some(p.readString()).filter(_.nonEmpty)
-          case (_, wt) => p.skip(wt)
         }
         if (path.isEmpty) invalid("primaryData requires a filestore path")
         val fmt =
@@ -214,7 +195,6 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (16, _) => schedule = body.readString()
       case (17, _) => tags = readTags(body.readSlice())
       case (18, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     val id = ResourceId(name, variant)
     val d = defn.getOrElse(invalid("source definition (transformation or primaryData) required"))
@@ -239,55 +219,40 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var onDemandDef = ""; var fnBytes = ""
     var typeB64 = ""
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
-      case (3, _) => source = readNV(body.readSlice())
+      case (3, _) => source = readNameVariant(body.readSlice())
       case (5, _) => entity = body.readString()
       case (7, _) => owner = body.readString()
       case (8, _) => desc = body.readString()
       case (9, _) => provider = body.readString()
       case (12, _) => // Columns{entity=1, value=2, ts=3}
         val c = body.readSlice()
-        var cm = true
-        while (cm) c.readTag() match {
-          case (0, _) => cm = false
+        c.fields {
           case (1, _) => colEntity = c.readString()
           case (2, _) => colValue = c.readString()
           case (3, _) => colTs = c.readString()
-          case (_, wt) => c.skip(wt)
         }
       case (17, _) => // PythonFunction{query=1} — our durable form is UTF-8
         val f = body.readSlice()
-        var fm = true
-        while (fm) f.readTag() match {
-          case (0, _) => fm = false
+        f.fields {
           case (1, _) => fnBytes = new String(f.readBytes(),
             java.nio.charset.StandardCharsets.UTF_8)
-          case (_, wt) => f.skip(wt)
         }
       case (18, _) => mode = body.readVarint().toInt
       case (22, _) => // FeatureParameters{ondemand=2{definition=1}}
         val ap = body.readSlice()
-        var am = true
-        while (am) ap.readTag() match {
-          case (0, _) => am = false
+        ap.fields {
           case (2, _) =>
             val od = ap.readSlice()
-            var om = true
-            while (om) od.readTag() match {
-              case (0, _) => om = false
+            od.fields {
               case (1, _) => onDemandDef = od.readString()
-              case (_, wt) => od.skip(wt)
             }
-          case (_, wt) => ap.skip(wt)
         }
       case (25, _) => typeB64 = b64(body.readBytes()) // ValueType, verbatim
       case (15, _) => tags = readTags(body.readSlice())
       case (16, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     val id = ResourceId(name, variant)
     val isOnDemand = mode == 1 || (onDemandDef.nonEmpty && colValue.isEmpty)
@@ -326,52 +291,40 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var emValue = ""; var emTs = ""
     var typeB64 = ""
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
       case (3, _) => desc = body.readString()
-      case (5, _) => source = readNV(body.readSlice())
+      case (5, _) => source = readNameVariant(body.readSlice())
       case (6, _) => entity = body.readString()
       case (8, _) => owner = body.readString()
       case (9, _) => provider = body.readString()
       case (12, _) => // deprecated Columns fallback
         val c = body.readSlice()
-        var cm = true
-        while (cm) c.readTag() match {
-          case (0, _) => cm = false
+        c.fields {
           case (1, _) => colEntity = c.readString()
           case (2, _) => colValue = c.readString()
           case (3, _) => colTs = c.readString()
-          case (_, wt) => c.skip(wt)
         }
       case (22, _) => // EntityMappings{mappings=1, value_column=2, timestamp_column=3}
         val em = body.readSlice()
         val ms = scala.collection.mutable.ArrayBuffer.empty[EntityMapping]
-        var mm = true
-        while (mm) em.readTag() match {
-          case (0, _) => mm = false
+        em.fields {
           case (1, _) => // EntityMapping{name=1, entity_column=2}
             val m = em.readSlice()
             var n = ""; var col = ""
-            var im = true
-            while (im) m.readTag() match {
-              case (0, _) => im = false
+            m.fields {
               case (1, _) => n = m.readString()
               case (2, _) => col = m.readString()
-              case (_, wt) => m.skip(wt)
             }
             ms += EntityMapping(n, col)
           case (2, _) => emValue = em.readString()
           case (3, _) => emTs = em.readString()
-          case (_, wt) => em.skip(wt)
         }
         mappings = ms.toSeq
       case (18, _) => typeB64 = b64(body.readBytes())
       case (13, _) => tags = readTags(body.readSlice())
       case (14, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     val id = ResourceId(name, variant)
     val (finalMappings, valueCol, tsCol) =
@@ -399,40 +352,31 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     val feats = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
     val lags = scala.collection.mutable.ArrayBuffer.empty[FeatureLag]
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
       case (3, _) => desc = body.readString()
       case (4, _) => owner = body.readString()
       case (6, _) => provider = body.readString()
-      case (8, _) => feats += readNV(body.readSlice())
-      case (9, _) => label = readNV(body.readSlice())
+      case (8, _) => feats += readNameVariant(body.readSlice())
+      case (9, _) => label = readNameVariant(body.readSlice())
       case (14, _) => schedule = body.readString()
       case (15, _) => // FeatureLag{feature=1, variant=2, name=3, lag=4 Duration}
         val fl = body.readSlice()
         var f = ""; var v = ""; var lagName = ""; var seconds = 0L
-        var fm = true
-        while (fm) fl.readTag() match {
-          case (0, _) => fm = false
+        fl.fields {
           case (1, _) => f = fl.readString()
           case (2, _) => v = fl.readString()
           case (3, _) => lagName = fl.readString()
           case (4, _) => // Duration{seconds=1, nanos=2}
             val d = fl.readSlice()
-            var dm = true
-            while (dm) d.readTag() match {
-              case (0, _) => dm = false
+            d.fields {
               case (1, _) => seconds = d.readVarint()
-              case (_, wt) => d.skip(wt)
             }
-          case (_, wt) => fl.skip(wt)
         }
         lags += FeatureLag(ResourceId(f, v), lagName, seconds)
       case (16, _) => tags = readTags(body.readSlice())
       case (17, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     val id = ResourceId(name, variant)
     try catalog.registerTrainingSet(
@@ -451,14 +395,11 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     val body = firstSlice(req, 1).getOrElse(invalid("entity required"))
     var name = ""; var desc = ""
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => desc = body.readString()
       case (7, _) => tags = readTags(body.readSlice())
       case (8, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     if (name.isEmpty) invalid("entity name required")
     catalog.registerEntity(EntityDef(name))
@@ -475,9 +416,7 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var name = ""; var desc = ""; var ptype = ""
     var software = ""; var team = ""; var configB64 = ""
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => desc = body.readString()
       case (3, _) => ptype = body.readString()
@@ -486,7 +425,6 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (6, _) => configB64 = b64(body.readBytes())
       case (12, _) => tags = readTags(body.readSlice())
       case (13, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     if (name.isEmpty) invalid("provider name required")
     try catalog.registerProvider(ProviderDef(name, ptype, desc))
@@ -503,13 +441,10 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     val body = firstSlice(req, 1).getOrElse(invalid("user required"))
     var name = ""
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (8, _) => tags = readTags(body.readSlice())
       case (9, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     if (name.isEmpty) invalid("user name required")
     catalog.registerUser(UserDef(name))
@@ -527,17 +462,14 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     val labelRefs = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
     val tsets = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
     var tags = Seq.empty[String]; var props = Seq.empty[(String, String)]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => desc = body.readString()
-      case (3, _) => feats += readNV(body.readSlice())
-      case (4, _) => labelRefs += readNV(body.readSlice())
-      case (5, _) => tsets += readNV(body.readSlice())
+      case (3, _) => feats += readNameVariant(body.readSlice())
+      case (4, _) => labelRefs += readNameVariant(body.readSlice())
+      case (5, _) => tsets += readNameVariant(body.readSlice())
       case (6, _) => tags = readTags(body.readSlice())
       case (7, _) => props = readProps(body.readSlice())
-      case (_, wt) => body.skip(wt)
     }
     if (name.isEmpty) invalid("model name required")
     catalog.registerModel(ModelDef(name, feats.toSeq, tsets.toSeq))
@@ -554,12 +486,9 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     val r = new R(req)
     var key: Option[ResourceKey] = None
     var schedule = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => key = Some(readResourceId(r.readSlice()))
       case (2, _) => schedule = r.readString()
-      case (_, wt) => r.skip(wt)
     }
     val k = key.getOrElse(invalid("resource_id required"))
     setMeta(k, "schedule" -> schedule)
@@ -570,20 +499,14 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     val r = new R(req)
     var key: Option[ResourceKey] = None
     var st = 0; var msg = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => key = Some(readResourceId(r.readSlice()))
       case (2, _) => // ResourceStatus{status=1, error_message=2}
         val s = r.readSlice()
-        var sm = true
-        while (sm) s.readTag() match {
-          case (0, _) => sm = false
+        s.fields {
           case (1, _) => st = s.readVarint().toInt
           case (2, _) => msg = s.readString()
-          case (_, wt) => s.skip(wt)
         }
-      case (_, wt) => r.skip(wt)
     }
     catalog.setStatus(key.getOrElse(invalid("resource_id required")), st, msg)
     Empty
@@ -597,32 +520,23 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def run(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     val targets = scala.collection.mutable.ArrayBuffer.empty[ResourceKey]
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (2, _) => // ResourceVariant oneof — we need only (kind, name, variant)
         val rv = r.readSlice()
-        var rm = true
-        while (rm) rv.readTag() match {
-          case (0, _) => rm = false
+        rv.fields {
           case (fld, _) if fld >= 1 && fld <= 4 =>
             val v = rv.readSlice()
             var name = ""; var variant = ""
-            var vm = true
-            while (vm) v.readTag() match {
-              case (0, _) => vm = false
+            v.fields {
               case (1, _) => name = v.readString()
               case (2, _) => variant = v.readString()
-              case (_, wt) => v.skip(wt)
             }
             val kind = fld match {
               case 1 => "FEATURE"; case 2 => "LABEL"
               case 3 => "TRAINING_SET"; case 4 => "SOURCE"
             }
             targets += ResourceKey(kind, ResourceId(name, variant).toString)
-          case (_, wt) => rv.skip(wt)
         }
-      case (_, wt) => r.skip(wt)
     }
     targets.foreach { k =>
       try {
@@ -693,11 +607,8 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def readDeletionKey(req: Array[Byte]): ResourceKey = {
     val r = new R(req)
     var key: Option[ResourceKey] = None
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => key = Some(readResourceId(r.readSlice()))
-      case (_, wt) => r.skip(wt)
     }
     key.getOrElse(invalid("resource_id required"))
   }
@@ -711,14 +622,10 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def getEquivalent(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var out: Array[Byte] = new W().result() // empty ResourceVariant
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (2, _) =>
         val rv = r.readSlice()
-        var rm = true
-        while (rm) rv.readTag() match {
-          case (0, _) => rm = false
+        rv.fields {
           case (4, _) => // SourceVariant
             val cand = parseSourceForEquiv(rv.readSlice())
             liveSourceVariants(cand.id.name)
@@ -763,9 +670,7 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
                 w.msg(3)(writeTsetVariant(_, m))
                 out = w.result()
               }
-          case (_, wt) => rv.skip(wt)
         }
-      case (_, wt) => r.skip(wt)
     }
     out
   }
@@ -773,61 +678,44 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def parseSourceForEquiv(body: R): SourceVariant = {
     var name = ""; var variant = ""
     var defn: SourceDef = PrimaryData("")
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
       case (14, _) =>
         val t = body.readSlice()
-        var tm = true
-        while (tm) t.readTag() match {
-          case (0, _) => tm = false
+        t.fields {
           case (1, _) =>
             val s = t.readSlice()
-            var sm = true
-            while (sm) s.readTag() match {
-              case (0, _) => sm = false
+            s.fields {
               case (1, _) => defn = SqlTransformation(s.readString())
-              case (_, wt) => s.skip(wt)
             }
           case (2, _) =>
             val d = t.readSlice()
             var fnName = ""
             val inputs = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
-            var dm = true
-            while (dm) d.readTag() match {
-              case (0, _) => dm = false
+            d.fields {
               case (1, _) =>
                 val b = d.readBytes()
                 if (fnName.isEmpty)
                   fnName = new String(b, java.nio.charset.StandardCharsets.UTF_8)
-              case (2, _) => inputs += readNV(d.readSlice())
+              case (2, _) => inputs += readNameVariant(d.readSlice())
               case (3, _) => fnName = d.readString()
-              case (_, wt) => d.skip(wt)
             }
             // equivalence compares (inputs, fnName); the fn itself only
             // matters at registration — bind the registered one if present
             defn = DfTransformation(inputs.toSeq,
               dfFns.getOrElse(fnName, identityFn), Some(fnName))
-          case (_, wt) => t.skip(wt)
         }
       case (15, _) =>
         val p = body.readSlice()
         var path = ""; var tsCol: Option[String] = None
-        var pm = true
-        while (pm) p.readTag() match {
-          case (0, _) => pm = false
+        p.fields {
           case (3, _) =>
             val f = p.readSlice()
-            var fm = true
-            while (fm) f.readTag() match {
-              case (0, _) => fm = false
+            f.fields {
               case (1, _) => path = f.readString()
-              case (_, wt) => f.skip(wt)
             }
           case (2, _) => tsCol = Some(p.readString()).filter(_.nonEmpty)
-          case (_, wt) => p.skip(wt)
         }
         val fmt =
           if (path.endsWith(".csv")) "csv"
@@ -835,7 +723,6 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
           else if (path.endsWith(".orc")) "orc"
           else "parquet"
         defn = PrimaryData(path, fmt, tsCol)
-      case (_, wt) => body.skip(wt)
     }
     SourceVariant(ResourceId(name, variant), defn)
   }
@@ -847,39 +734,27 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var entity = ""
     var ce = ""; var cv = ""; var ct = ""
     var od = ""
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
-      case (3, _) => src = readNV(body.readSlice())
+      case (3, _) => src = readNameVariant(body.readSlice())
       case (5, _) => entity = body.readString()
       case (12, _) =>
         val c = body.readSlice()
-        var cm = true
-        while (cm) c.readTag() match {
-          case (0, _) => cm = false
+        c.fields {
           case (1, _) => ce = c.readString()
           case (2, _) => cv = c.readString()
           case (3, _) => ct = c.readString()
-          case (_, wt) => c.skip(wt)
         }
       case (22, _) =>
         val ap = body.readSlice()
-        var am = true
-        while (am) ap.readTag() match {
-          case (0, _) => am = false
+        ap.fields {
           case (2, _) =>
             val o = ap.readSlice()
-            var om = true
-            while (om) o.readTag() match {
-              case (0, _) => om = false
+            o.fields {
               case (1, _) => od = o.readString()
-              case (_, wt) => o.skip(wt)
             }
-          case (_, wt) => ap.skip(wt)
         }
-      case (_, wt) => body.skip(wt)
     }
     (ResourceId(name, variant), src,
       graft.types.ResourceSchema(ce, cv, Some(ct).filter(_.nonEmpty)),
@@ -891,34 +766,25 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var name = ""; var variant = ""
     var src = ResourceId("", "")
     var maps = Seq.empty[EntityMapping]; var value = ""
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
-      case (5, _) => src = readNV(body.readSlice())
+      case (5, _) => src = readNameVariant(body.readSlice())
       case (22, _) =>
         val em = body.readSlice()
         val ms = scala.collection.mutable.ArrayBuffer.empty[EntityMapping]
-        var mm = true
-        while (mm) em.readTag() match {
-          case (0, _) => mm = false
+        em.fields {
           case (1, _) =>
             val m = em.readSlice()
             var n = ""; var col = ""
-            var im = true
-            while (im) m.readTag() match {
-              case (0, _) => im = false
+            m.fields {
               case (1, _) => n = m.readString()
               case (2, _) => col = m.readString()
-              case (_, wt) => m.skip(wt)
             }
             ms += EntityMapping(n, col)
           case (2, _) => value = em.readString()
-          case (_, wt) => em.skip(wt)
         }
         maps = ms.toSeq
-      case (_, wt) => body.skip(wt)
     }
     (ResourceId(name, variant), src, maps, value)
   }
@@ -928,34 +794,25 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var label = ResourceId("", "")
     val feats = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
     val lags = scala.collection.mutable.ArrayBuffer.empty[FeatureLag]
-    var more = true
-    while (more) body.readTag() match {
-      case (0, _) => more = false
+    body.fields {
       case (1, _) => name = body.readString()
       case (2, _) => variant = body.readString()
-      case (8, _) => feats += readNV(body.readSlice())
-      case (9, _) => label = readNV(body.readSlice())
+      case (8, _) => feats += readNameVariant(body.readSlice())
+      case (9, _) => label = readNameVariant(body.readSlice())
       case (15, _) =>
         val fl = body.readSlice()
         var f = ""; var v = ""; var lagName = ""; var seconds = 0L
-        var fm = true
-        while (fm) fl.readTag() match {
-          case (0, _) => fm = false
+        fl.fields {
           case (1, _) => f = fl.readString()
           case (2, _) => v = fl.readString()
           case (3, _) => lagName = fl.readString()
           case (4, _) =>
             val d = fl.readSlice()
-            var dm = true
-            while (dm) d.readTag() match {
-              case (0, _) => dm = false
+            d.fields {
               case (1, _) => seconds = d.readVarint()
-              case (_, wt) => d.skip(wt)
             }
-          case (_, wt) => fl.skip(wt)
         }
         lags += FeatureLag(ResourceId(f, v), lagName, seconds)
-      case (_, wt) => body.skip(wt)
     }
     TrainingSetVariant(ResourceId(name, variant), label, feats.toSeq, lags.toSeq)
   }
@@ -1313,92 +1170,16 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     catalog.allFeatures.map(_.id)
       .filterNot(id => catalog.isStaged(ResourceKey("FEATURE", id.toString)))
 
-  // ----------------------------------------------------- gRPC plumbing
-
-  private def unary(route: String, h: Array[Byte] => Array[Byte]) =
-    ServerCalls.asyncUnaryCall(
-      new ServerCalls.UnaryMethod[Array[Byte], Array[Byte]] {
-        override def invoke(req: Array[Byte],
-                            obs: StreamObserver[Array[Byte]]): Unit = {
-          val t0 = System.nanoTime()
-          try {
-            val out = h(req)
-            metrics.observe(route, System.nanoTime() - t0, error = false)
-            obs.onNext(out); obs.onCompleted()
-          } catch {
-            case e: Throwable =>
-              metrics.observe(route, System.nanoTime() - t0, error = true)
-              obs.onError(Backpressure.toStatus(e))
-          }
-        }
-      })
-
-  /** Bidi Get*: one response per incoming request, completed with the
-    * request stream (metadata.go genericGet). A lookup failure errors the
-    * stream — same as the generated server. */
-  private def bidiGet(route: String, h: Array[Byte] => Array[Byte]) =
-    ServerCalls.asyncBidiStreamingCall(
-      new ServerCalls.BidiStreamingMethod[Array[Byte], Array[Byte]] {
-        override def invoke(obs: StreamObserver[Array[Byte]])
-            : StreamObserver[Array[Byte]] =
-          new StreamObserver[Array[Byte]] {
-            // once onError closes the call, the client's half-close still
-            // delivers onCompleted — a second close throws
-            private var closed = false
-            override def onNext(req: Array[Byte]): Unit = {
-              val t0 = System.nanoTime()
-              try {
-                val out = h(req)
-                metrics.observe(route, System.nanoTime() - t0, error = false)
-                obs.onNext(out)
-              } catch {
-                case e: Throwable =>
-                  metrics.observe(route, System.nanoTime() - t0, error = true)
-                  closed = true
-                  obs.onError(Backpressure.toStatus(e))
-              }
-            }
-            override def onError(t: Throwable): Unit = ()
-            override def onCompleted(): Unit =
-              if (!closed) { closed = true; obs.onCompleted() }
-          }
-      })
-
-  private def listStream(route: String, kind: String) =
-    ServerCalls.asyncServerStreamingCall(
-      new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
-        override def invoke(req: Array[Byte],
-                            obs: StreamObserver[Array[Byte]]): Unit = {
-          val t0 = System.nanoTime()
-          try {
-            // metadata-sized by definition (a registry listing, not data)
-            Backpressure.drive(obs, listMsgs(kind).iterator,
-              err => metrics.observe(route, System.nanoTime() - t0,
-                error = err.isDefined))
-          } catch {
-            case e: Throwable =>
-              metrics.observe(route, System.nanoTime() - t0, error = true)
-              obs.onError(Backpressure.toStatus(e))
-          }
-        }
-      })
-
   /** NameRequest{name=1 Name{name=1}} → the inner name. */
   private def nameOf(req: Array[Byte]): String = {
     val r = new R(req)
     var name = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) =>
         val n = r.readSlice()
-        var nm = true
-        while (nm) n.readTag() match {
-          case (0, _) => nm = false
+        n.fields {
           case (1, _) => name = n.readString()
-          case (_, wt) => n.skip(wt)
         }
-      case (_, wt) => r.skip(wt)
     }
     name
   }
@@ -1407,11 +1188,8 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def nvOf(req: Array[Byte]): ResourceId = {
     val r = new R(req)
     var id = ResourceId("", "")
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => id = readNV(r.readSlice())
-      case (_, wt) => r.skip(wt)
+    r.fields {
+      case (1, _) => id = readNameVariant(r.readSlice())
     }
     id
   }
@@ -1421,66 +1199,37 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     * latest-value rule ([[OnlineStore.upsertWithTs]] — out-of-order
     * messages can't regress). Value strings duck-type long → double →
     * string, the HTTP facade's rule; labels go to a `__label__`-prefixed
-    * table so a label can share a feature's name. Responds Empty when the
-    * client half-closes (the generated server's shape). */
+    * table so a label can share a feature's name. */
   private def writeStream(route: String, valueField: Int, entityField: Int,
-                          tablePrefix: String)
-      : org.sparkproject.connect.grpc.ServerCallHandler[Array[Byte], Array[Byte]] =
-    ServerCalls.asyncClientStreamingCall(
-      new ServerCalls.ClientStreamingMethod[Array[Byte], Array[Byte]] {
-        override def invoke(obs: StreamObserver[Array[Byte]])
-            : StreamObserver[Array[Byte]] =
-          new StreamObserver[Array[Byte]] {
-            private val t0 = System.nanoTime()
-            private var closed = false // error already sent; swallow the rest
-            override def onNext(req: Array[Byte]): Unit = if (!closed) try {
-              val sink = store.getOrElse(throw Status.UNIMPLEMENTED
-                .withDescription(s"$route: no online store bound")
-                .asRuntimeException())
-              val r = new R(req)
-              var name = ""; var variant = ""
-              var entity = ""; var value = ""; var tsMs = 0L
-              var more = true
-              while (more) r.readTag() match {
-                case (0, _) => more = false
-                case (1, _) => name = r.readString()
-                case (2, _) => variant = r.readString()
-                case (`entityField`, _) => entity = r.readString()
-                case (`valueField`, _) => value = r.readString()
-                case (5, _) => // Timestamp{seconds=1, nanos=2}
-                  val t = r.readSlice()
-                  var secs = 0L; var nanos = 0L
-                  var tm = true
-                  while (tm) t.readTag() match {
-                    case (0, _) => tm = false
-                    case (1, _) => secs = t.readVarint()
-                    case (2, _) => nanos = t.readVarint()
-                    case (_, wt) => t.skip(wt)
-                  }
-                  tsMs = secs * 1000L + nanos / 1000000L
-                case (_, wt) => r.skip(wt)
-              }
-              if (name.isEmpty) invalid(s"$route: name required")
-              val table = tablePrefix +
-                (if (variant.isEmpty) name else s"$name/$variant")
-              val entityKey: Any = entity.toLongOption.getOrElse(entity)
-              val typedValue: Any = value.toLongOption
-                .orElse(value.toDoubleOption).getOrElse(value)
-              sink.upsertWithTs(table, entityKey, typedValue, tsMs)
-            } catch {
-              case e: Throwable =>
-                closed = true
-                metrics.observe(route, System.nanoTime() - t0, error = true)
-                obs.onError(Backpressure.toStatus(e))
-            }
-            override def onError(t: Throwable): Unit = ()
-            override def onCompleted(): Unit = if (!closed) {
-              closed = true
-              metrics.observe(route, System.nanoTime() - t0, error = false)
-              obs.onNext(Empty); obs.onCompleted()
-            }
-          }
-      })
+                          tablePrefix: String)(req: Array[Byte]): Unit = {
+    val sink = store.getOrElse(throw Status.UNIMPLEMENTED
+      .withDescription(s"$route: no online store bound")
+      .asRuntimeException())
+    val r = new R(req)
+    var name = ""; var variant = ""
+    var entity = ""; var value = ""; var tsMs = 0L
+    r.fields {
+      case (1, _) => name = r.readString()
+      case (2, _) => variant = r.readString()
+      case (`entityField`, _) => entity = r.readString()
+      case (`valueField`, _) => value = r.readString()
+      case (5, _) => // Timestamp{seconds=1, nanos=2}
+        val t = r.readSlice()
+        var secs = 0L; var nanos = 0L
+        t.fields {
+          case (1, _) => secs = t.readVarint()
+          case (2, _) => nanos = t.readVarint()
+        }
+        tsMs = secs * 1000L + nanos / 1000000L
+    }
+    if (name.isEmpty) invalid(s"$route: name required")
+    val table = tablePrefix +
+      (if (variant.isEmpty) name else s"$name/$variant")
+    val entityKey: Any = entity.toLongOption.getOrElse(entity)
+    val typedValue: Any = value.toLongOption
+      .orElse(value.toDoubleOption).getOrElse(value)
+    sink.upsertWithTs(table, entityKey, typedValue, tsMs)
+  }
 
   // -------------- Tasks service (featureform.scheduling.proto.Tasks) ----
   // The coordinator plane (scheduling.proto:18-33, served by
@@ -1582,23 +1331,17 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   /** TaskID{id=1} / RunID{id=1} / TaskRunID{runID=1, taskID=2}. */
   private def readIdMsg(r: R): String = {
     var id = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => id = r.readString()
-      case (_, wt) => r.skip(wt)
     }
     id
   }
   private def readRunTaskIds(req: Array[Byte]): (String, String) = {
     val r = new R(req)
     var run = ""; var task = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => run = readIdMsg(r.readSlice())
       case (2, _) => task = readIdMsg(r.readSlice())
-      case (_, wt) => r.skip(wt)
     }
     (run, task)
   }
@@ -1606,13 +1349,10 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def createTaskRun(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var task = ""; var name = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => task = readIdMsg(r.readSlice())
       case (2, _) => name = r.readString()
       case (4, _) | (5, _) => r.readSlice() // trigger names are echoed back
-      case (_, wt) => r.skip(wt)
     }
     if (task.isEmpty) invalid("taskID required")
     val runKey = if (name.nonEmpty) name else mintRunKey()
@@ -1667,21 +1407,15 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def setRunStatus(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var run = ""; var task = ""; var st = 0; var msg = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => run = readIdMsg(r.readSlice())
       case (2, _) => task = readIdMsg(r.readSlice())
       case (3, _) =>
         val s = r.readSlice()
-        var sm = true
-        while (sm) s.readTag() match {
-          case (0, _) => sm = false
+        s.fields {
           case (1, _) => st = s.readVarint().toInt
           case (2, _) => msg = s.readString()
-          case (_, wt) => s.skip(wt)
         }
-      case (_, wt) => r.skip(wt)
     }
     val cur = currentRun(task, run)
     // a wire CANCELLED is a kill request, not just a bookkeeping row: kill
@@ -1719,21 +1453,15 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def setRunEndTime(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var run = ""; var task = ""; var endMs = 0L
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => run = readIdMsg(r.readSlice())
       case (2, _) => task = readIdMsg(r.readSlice())
       case (3, _) =>
         val t = r.readSlice()
-        var tm = true
-        while (tm) t.readTag() match {
-          case (0, _) => tm = false
+        t.fields {
           case (1, _) => endMs = t.readVarint() * 1000L
           case (2, _) => endMs += t.readVarint() / 1000000L
-          case (_, wt) => t.skip(wt)
         }
-      case (_, wt) => r.skip(wt)
     }
     val cur = currentRun(task, run)
     runner.record(cur.copy(attempt = cur.attempt + 1, endMs = endMs))
@@ -1743,13 +1471,10 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def addRunLog(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var run = ""; var task = ""; var log = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => run = readIdMsg(r.readSlice())
       case (2, _) => task = readIdMsg(r.readSlice())
       case (3, _) => log = r.readString()
-      case (_, wt) => r.skip(wt)
     }
     currentRun(task, run) // NOT_FOUND if unknown
     runner.addRunLog(task, run, log)
@@ -1759,13 +1484,10 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def setRunResumeId(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var run = ""; var task = ""; var resume = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => run = readIdMsg(r.readSlice())
       case (2, _) => task = readIdMsg(r.readSlice())
       case (3, _) => resume = readIdMsg(r.readSlice())
-      case (_, wt) => r.skip(wt)
     }
     currentRun(task, run)
     runner.addRunLog(task, run, ResumePrefix + resume)
@@ -1775,13 +1497,10 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def setRunSchedulerId(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
     var run = ""; var task = ""; var sched = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => run = readIdMsg(r.readSlice())
       case (2, _) => task = readIdMsg(r.readSlice())
       case (3, _) => sched = r.readString()
-      case (_, wt) => r.skip(wt)
     }
     currentRun(task, run)
     runner.addRunLog(task, run, SchedulerPrefix + sched)
@@ -1824,188 +1543,94 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
 
   private val TerminalStatuses =
     Set("success", "skipped", "failed", "timeout", "cancelled", "upstream_failed")
-  private val WatchForCancelTimeoutMs =
-    sys.env.getOrElse("GRAFT_WATCH_CANCEL_TIMEOUT_MS", "60000").toLong
-  private val watchSlots = new java.util.concurrent.Semaphore(
-    sys.props.get("graft.watchCancelMax")
-      .orElse(sys.env.get("GRAFT_WATCH_CANCEL_MAX")).getOrElse("32").toInt)
+  private val watchSlots = new java.util.concurrent.Semaphore(watchCancelMax)
 
-  private def runStream(route: String,
-                        pick: () => Seq[graft.sched.TaskRun]) =
-    ServerCalls.asyncServerStreamingCall(
-      new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
-        override def invoke(req: Array[Byte],
-                            obs: StreamObserver[Array[Byte]]): Unit = {
-          val t0 = System.nanoTime()
-          try {
-            val msgs = pick().iterator.map { r =>
-              val w = new W; writeRunMeta(w, r); w.result()
-            }
-            Backpressure.drive(obs, msgs,
-              err => metrics.observe(route, System.nanoTime() - t0,
-                error = err.isDefined))
-          } catch {
-            case e: Throwable =>
-              metrics.observe(route, System.nanoTime() - t0, error = true)
-              obs.onError(Backpressure.toStatus(e))
-          }
-        }
-      })
+  private def runMsgs(runs: Seq[graft.sched.TaskRun]): Iterator[Array[Byte]] =
+    runs.iterator.map { r => val w = new W; writeRunMeta(w, r); w.result() }
 
   private val Unfinished = Set("created", "pending", "running", "locked")
 
-  private def tasksService: ServerServiceDefinition = {
-    import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
-    def m(rpc: String, mt: org.sparkproject.connect.grpc.MethodDescriptor.MethodType) =
-      MetadataServe.method(MetadataServe.TasksServiceName, rpc, mt)
-    ServerServiceDefinition.builder(MetadataServe.TasksServiceName)
-      .addMethod(m("CreateTaskRun", UNARY), unary("CreateTaskRun", createTaskRun))
-      .addMethod(m("SyncUnfinishedRuns", UNARY),
-        unary("SyncUnfinishedRuns", syncUnfinishedRuns))
-      .addMethod(m("GetTaskByID", UNARY), unary("GetTaskByID", getTaskById))
-      .addMethod(m("GetRuns", SERVER_STREAMING),
-        ServerCalls.asyncServerStreamingCall(
-          new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
-            override def invoke(req: Array[Byte],
-                                obs: StreamObserver[Array[Byte]]): Unit = {
-              val t0 = System.nanoTime()
-              try {
-                val task = readIdMsg(new R(req))
-                val msgs = latestRuns().filter(_.task == task).iterator
-                  .map { r => val w = new W; writeRunMeta(w, r); w.result() }
-                Backpressure.drive(obs, msgs,
-                  err => metrics.observe("GetRuns", System.nanoTime() - t0,
-                    error = err.isDefined))
-              } catch {
-                case e: Throwable =>
-                  metrics.observe("GetRuns", System.nanoTime() - t0, error = true)
-                  obs.onError(Backpressure.toStatus(e))
-              }
-            }
-          }))
-      .addMethod(m("GetRunMetadata", UNARY),
-        unary("GetRunMetadata", getRunMetadata))
-      .addMethod(m("GetAllRuns", SERVER_STREAMING),
-        runStream("GetAllRuns", () => latestRuns()))
-      .addMethod(m("GetUnfinishedRuns", SERVER_STREAMING),
-        runStream("GetUnfinishedRuns",
-          () => latestRuns().filter(r => Unfinished.contains(r.status))))
-      .addMethod(m("GetLatestRun", UNARY), unary("GetLatestRun", getLatestRun))
-      .addMethod(m("SetRunStatus", UNARY), unary("SetRunStatus", setRunStatus))
-      .addMethod(m("SetRunResumeID", UNARY),
-        unary("SetRunResumeID", setRunResumeId))
-      .addMethod(m("AddRunLog", UNARY), unary("AddRunLog", addRunLog))
-      .addMethod(m("SetRunEndTime", UNARY),
-        unary("SetRunEndTime", setRunEndTime))
-      .addMethod(m("WatchForCancel", UNARY),
-        unary("WatchForCancel", watchForCancel))
-      .addMethod(m("SetRunSchedulerID", UNARY),
-        unary("SetRunSchedulerID", setRunSchedulerId))
-      .build()
-  }
+  private def tasksService = new Grpc.Service(TasksServiceName, Some(metrics))
+    .unary("CreateTaskRun")(createTaskRun)
+    .unary("SyncUnfinishedRuns")(syncUnfinishedRuns)
+    .unary("GetTaskByID")(getTaskById)
+    .stream("GetRuns") { req =>
+      val task = readIdMsg(new R(req))
+      runMsgs(latestRuns().filter(_.task == task))
+    }
+    .unary("GetRunMetadata")(getRunMetadata)
+    .stream("GetAllRuns")(_ => runMsgs(latestRuns()))
+    .stream("GetUnfinishedRuns")(_ =>
+      runMsgs(latestRuns().filter(r => Unfinished.contains(r.status))))
+    .unary("GetLatestRun")(getLatestRun)
+    .unary("SetRunStatus")(setRunStatus)
+    .unary("SetRunResumeID")(setRunResumeId)
+    .unary("AddRunLog")(addRunLog)
+    .unary("SetRunEndTime")(setRunEndTime)
+    .unary("WatchForCancel")(watchForCancel)
+    .unary("SetRunSchedulerID")(setRunSchedulerId)
+    .build()
 
-  private def service(name: String): ServerServiceDefinition = {
-    import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
-    def m(rpc: String, mt: org.sparkproject.connect.grpc.MethodDescriptor.MethodType) =
-      MetadataServe.method(name, rpc, mt)
-    val b = ServerServiceDefinition.builder(name)
+  private def service(name: String) = {
+    val b = new Grpc.Service(name, Some(metrics))
     // WriteFeatures / WriteLabels exist only on the Api service
     // (metadata.proto:116-117); StreamingLabelVariant swaps value(3) /
-    // entity(4) relative to StreamingFeatureVariant's entity(3)/value(4)
-    if (name == MetadataServe.ApiServiceName) {
-      b.addMethod(m("WriteFeatures", CLIENT_STREAMING),
+    // entity(4) relative to StreamingFeatureVariant's entity(3)/value(4).
+    // Each responds Empty when the client half-closes (the generated
+    // server's shape).
+    if (name == ApiServiceName) b
+      .clientStream("WriteFeatures", Empty)(
         writeStream("WriteFeatures", valueField = 4, entityField = 3, ""))
-      b.addMethod(m("WriteLabels", CLIENT_STREAMING),
+      .clientStream("WriteLabels", Empty)(
         writeStream("WriteLabels", valueField = 3, entityField = 4, "__label__"))
-    }
-    b
-      .addMethod(m("CreateUser", UNARY), unary("CreateUser", createUser))
-      .addMethod(m("CreateProvider", UNARY), unary("CreateProvider", createProvider))
-      .addMethod(m("CreateSourceVariant", UNARY),
-        unary("CreateSourceVariant", createSourceVariant))
-      .addMethod(m("CreateEntity", UNARY), unary("CreateEntity", createEntity))
-      .addMethod(m("CreateFeatureVariant", UNARY),
-        unary("CreateFeatureVariant", createFeatureVariant))
-      .addMethod(m("CreateLabelVariant", UNARY),
-        unary("CreateLabelVariant", createLabelVariant))
-      .addMethod(m("CreateTrainingSetVariant", UNARY),
-        unary("CreateTrainingSetVariant", createTrainingSetVariant))
-      .addMethod(m("CreateModel", UNARY), unary("CreateModel", createModel))
-      .addMethod(m("RequestScheduleChange", UNARY),
-        unary("RequestScheduleChange", requestScheduleChange))
-      .addMethod(m("GetUsers", BIDI_STREAMING),
-        bidiGet("GetUsers", r => userMsg(nameOf(r))))
-      .addMethod(m("GetFeatures", BIDI_STREAMING),
-        bidiGet("GetFeatures", r => featureParent(nameOf(r))))
-      .addMethod(m("GetFeatureVariants", BIDI_STREAMING),
-        bidiGet("GetFeatureVariants", r => featureVariantMsg(nvOf(r))))
-      .addMethod(m("GetLabels", BIDI_STREAMING),
-        bidiGet("GetLabels", r => labelParent(nameOf(r))))
-      .addMethod(m("GetLabelVariants", BIDI_STREAMING),
-        bidiGet("GetLabelVariants", r => labelVariantMsg(nvOf(r))))
-      .addMethod(m("GetTrainingSets", BIDI_STREAMING),
-        bidiGet("GetTrainingSets", r => tsetParent(nameOf(r))))
-      .addMethod(m("GetTrainingSetVariants", BIDI_STREAMING),
-        bidiGet("GetTrainingSetVariants", r => tsetVariantMsg(nvOf(r))))
-      .addMethod(m("GetSources", BIDI_STREAMING),
-        bidiGet("GetSources", r => sourceParent(nameOf(r))))
-      .addMethod(m("GetSourceVariants", BIDI_STREAMING),
-        bidiGet("GetSourceVariants", r => sourceVariantMsg(nvOf(r))))
-      .addMethod(m("GetProviders", BIDI_STREAMING),
-        bidiGet("GetProviders", r => providerMsg(nameOf(r))))
-      .addMethod(m("GetEntities", BIDI_STREAMING),
-        bidiGet("GetEntities", r => entityMsg(nameOf(r))))
-      .addMethod(m("GetModels", BIDI_STREAMING),
-        bidiGet("GetModels", r => modelMsg(nameOf(r))))
-      .addMethod(m("MarkForDeletion", UNARY),
-        unary("MarkForDeletion", markForDeletion))
-      .addMethod(m("FinalizeDeletion", UNARY),
-        unary("FinalizeDeletion", finalizeDeletion))
-      .addMethod(m("GetStagedForDeletionResource", UNARY),
-        unary("GetStagedForDeletionResource", getStagedForDeletionResource))
-      .addMethod(m("PruneResource", UNARY), unary("PruneResource", pruneResource))
-      .addMethod(m("GetEquivalent", UNARY), unary("GetEquivalent", getEquivalent))
-      .addMethod(m("Run", UNARY), unary("Run", run))
-      .addMethod(m("ListFeatures", SERVER_STREAMING),
-        listStream("ListFeatures", "FEATURE"))
-      .addMethod(m("ListLabels", SERVER_STREAMING),
-        listStream("ListLabels", "LABEL"))
-      .addMethod(m("ListTrainingSets", SERVER_STREAMING),
-        listStream("ListTrainingSets", "TRAINING_SET"))
-      .addMethod(m("ListSources", SERVER_STREAMING),
-        listStream("ListSources", "SOURCE"))
-      .addMethod(m("ListUsers", SERVER_STREAMING),
-        listStream("ListUsers", "USER"))
-      .addMethod(m("ListProviders", SERVER_STREAMING),
-        listStream("ListProviders", "PROVIDER"))
-      .addMethod(m("ListEntities", SERVER_STREAMING),
-        listStream("ListEntities", "ENTITY"))
-      .addMethod(m("ListModels", SERVER_STREAMING),
-        listStream("ListModels", "MODEL"))
-      .addMethod(m("SetResourceStatus", UNARY),
-        unary("SetResourceStatus", setResourceStatus))
+    b.unary("CreateUser")(createUser)
+      .unary("CreateProvider")(createProvider)
+      .unary("CreateSourceVariant")(createSourceVariant)
+      .unary("CreateEntity")(createEntity)
+      .unary("CreateFeatureVariant")(createFeatureVariant)
+      .unary("CreateLabelVariant")(createLabelVariant)
+      .unary("CreateTrainingSetVariant")(createTrainingSetVariant)
+      .unary("CreateModel")(createModel)
+      .unary("RequestScheduleChange")(requestScheduleChange)
+      // bidi Get*: one response per incoming request, completed with the
+      // request stream (metadata.go genericGet); a lookup failure errors
+      // the stream, as in the generated server
+      .bidiEach("GetUsers")(r => userMsg(nameOf(r)))
+      .bidiEach("GetFeatures")(r => featureParent(nameOf(r)))
+      .bidiEach("GetFeatureVariants")(r => featureVariantMsg(nvOf(r)))
+      .bidiEach("GetLabels")(r => labelParent(nameOf(r)))
+      .bidiEach("GetLabelVariants")(r => labelVariantMsg(nvOf(r)))
+      .bidiEach("GetTrainingSets")(r => tsetParent(nameOf(r)))
+      .bidiEach("GetTrainingSetVariants")(r => tsetVariantMsg(nvOf(r)))
+      .bidiEach("GetSources")(r => sourceParent(nameOf(r)))
+      .bidiEach("GetSourceVariants")(r => sourceVariantMsg(nvOf(r)))
+      .bidiEach("GetProviders")(r => providerMsg(nameOf(r)))
+      .bidiEach("GetEntities")(r => entityMsg(nameOf(r)))
+      .bidiEach("GetModels")(r => modelMsg(nameOf(r)))
+      .unary("MarkForDeletion")(markForDeletion)
+      .unary("FinalizeDeletion")(finalizeDeletion)
+      .unary("GetStagedForDeletionResource")(getStagedForDeletionResource)
+      .unary("PruneResource")(pruneResource)
+      .unary("GetEquivalent")(getEquivalent)
+      .unary("Run")(run)
+      // metadata-sized by definition (a registry listing, not data)
+      .stream("ListFeatures")(_ => listMsgs("FEATURE").iterator)
+      .stream("ListLabels")(_ => listMsgs("LABEL").iterator)
+      .stream("ListTrainingSets")(_ => listMsgs("TRAINING_SET").iterator)
+      .stream("ListSources")(_ => listMsgs("SOURCE").iterator)
+      .stream("ListUsers")(_ => listMsgs("USER").iterator)
+      .stream("ListProviders")(_ => listMsgs("PROVIDER").iterator)
+      .stream("ListEntities")(_ => listMsgs("ENTITY").iterator)
+      .stream("ListModels")(_ => listMsgs("MODEL").iterator)
+      .unary("SetResourceStatus")(setResourceStatus)
       .build()
   }
 
-  private val server = {
-    val b = NettyServerBuilder
-      .forAddress(new java.net.InetSocketAddress("127.0.0.1", port))
-      .addService(service(MetadataServe.ServiceName))
-      .addService(service(MetadataServe.ApiServiceName))
-    // the reference metadata server hosts the scheduler's Tasks service in
-    // the same process (metadata.go:2026-2345) — same here when a ledger
-    // is bound
-    tasks.foreach(_ => b.addService(tasksService))
-    // standard health probes (grpc.health.v1) for load balancers
-    b.addService(HealthServe.service(
-      Set(MetadataServe.ServiceName, MetadataServe.ApiServiceName) ++
-        tasks.map(_ => MetadataServe.TasksServiceName)))
-    b.build()
-  }
-
-  def start(): MetadataServe = { server.start(); this }
-  def boundPort: Int = server.getPort
-  def stop(): Unit = server.shutdownNow()
+  // the reference metadata server hosts the scheduler's Tasks service in
+  // the same process (metadata.go:2026-2345) — same here when a ledger is
+  // bound
+  protected def services =
+    Seq(service(ServiceName), service(ApiServiceName)) ++ tasks.map(_ => tasksService)
 }
 
 object MetadataServe {
@@ -2021,38 +1646,12 @@ object MetadataServe {
 
   val Empty: Array[Byte] = Array.emptyByteArray
 
+  /** Default cap on concurrently long-polling WatchForCancel calls, and
+    * how long one call polls before answering the current status. */
+  val WatchCancelMax = 32
+  val WatchForCancelTimeoutMs = 60000L
+
   private val identityFn: Seq[DataFrame] => DataFrame = _.head
-
-  private val BytesMarshaller =
-    new org.sparkproject.connect.grpc.MethodDescriptor.Marshaller[Array[Byte]] {
-      override def stream(value: Array[Byte]): java.io.InputStream =
-        new java.io.ByteArrayInputStream(value)
-      override def parse(stream: java.io.InputStream): Array[Byte] =
-        stream.readAllBytes()
-    }
-
-  def method(service: String, name: String,
-             mt: org.sparkproject.connect.grpc.MethodDescriptor.MethodType)
-      : org.sparkproject.connect.grpc.MethodDescriptor[Array[Byte], Array[Byte]] =
-    org.sparkproject.connect.grpc.MethodDescriptor
-      .newBuilder(BytesMarshaller, BytesMarshaller)
-      .setType(mt)
-      .setFullMethodName(org.sparkproject.connect.grpc.MethodDescriptor
-        .generateFullMethodName(service, name))
-      .build()
-
-  /** NameVariant{name=1, variant=2} → ResourceId. */
-  def readNV(r: R): ResourceId = {
-    var name = ""; var variant = ""
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => name = r.readString()
-      case (2, _) => variant = r.readString()
-      case (_, wt) => r.skip(wt)
-    }
-    ResourceId(name, variant)
-  }
 
   def writeNV(w: W, id: ResourceId): Unit = {
     w.str(1, id.name); w.str(2, id.variant)
@@ -2065,12 +1664,9 @@ object MetadataServe {
   def readResourceId(r: R): ResourceKey = {
     var nv = ResourceId("", "")
     var rt = 0
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
-      case (1, _) => nv = readNV(r.readSlice())
+    r.fields {
+      case (1, _) => nv = readNameVariant(r.readSlice())
       case (2, _) => rt = r.readVarint().toInt
-      case (_, wt) => r.skip(wt)
     }
     rt match {
       case 0 | 4 => ResourceKey("FEATURE", nv.toString)
@@ -2089,11 +1685,8 @@ object MetadataServe {
   def firstSlice(req: Array[Byte], field: Int): Option[R] = {
     val r = new R(req)
     var out: Option[R] = None
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (`field`, ProtoWire.WtLen) if out.isEmpty => out = Some(r.readSlice())
-      case (_, wt) => r.skip(wt)
     }
     out
   }
@@ -2101,11 +1694,8 @@ object MetadataServe {
   /** Tags{tag=1 repeated string}. */
   def readTags(r: R): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) => out += r.readString()
-      case (_, wt) => r.skip(wt)
     }
     out.toSeq
   }
@@ -2113,28 +1703,19 @@ object MetadataServe {
   /** Properties{property=1 map<string, Property{string_value=1}>}. */
   def readProps(r: R): Seq[(String, String)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var more = true
-    while (more) r.readTag() match {
-      case (0, _) => more = false
+    r.fields {
       case (1, _) =>
         val e = r.readSlice()
         var k = ""; var v = ""
-        var em = true
-        while (em) e.readTag() match {
-          case (0, _) => em = false
+        e.fields {
           case (1, _) => k = e.readString()
           case (2, _) =>
             val p = e.readSlice()
-            var pm = true
-            while (pm) p.readTag() match {
-              case (0, _) => pm = false
+            p.fields {
               case (1, _) => v = p.readString()
-              case (_, wt) => p.skip(wt)
             }
-          case (_, wt) => e.skip(wt)
         }
         out += (k -> v)
-      case (_, wt) => r.skip(wt)
     }
     out.toSeq
   }

@@ -78,9 +78,10 @@ object ProtoWire {
     }
   }
 
-  /** Message reader over a byte slice. Iterate with [[readTag]] (0 at
-    * end), dispatch on field number, and [[skip]] anything unknown —
-    * the forward-compat contract generated parsers follow. Every read is
+  /** Message reader over a byte slice. Decode a message with [[fields]]:
+    * it dispatches each field to the handler by (field number, wire type)
+    * and [[skip]]s anything the handler does not match — the
+    * forward-compat contract generated parsers follow. Every read is
     * bounds-checked against the SLICE's `end` (not the backing array), so
     * a truncated or malformed nested message fails with a clean
     * "truncated message" error instead of silently reading sibling/parent
@@ -110,13 +111,25 @@ object ProtoWire {
       throw new IllegalArgumentException("malformed varint")
     }
 
-    /** (field, wireType), or (0, -1) at end of slice. */
+    /** (field, wireType), or (0, -1) at end of slice. Field number 0 is
+      * invalid on the wire (generated parsers reject it), so a zero tag
+      * before the end is a malformed message, not an end marker. */
     def readTag(): (Int, Int) =
       if (!hasMore) (0, -1)
       else {
+        val at = pos
         val t = readVarint()
-        ((t >>> 3).toInt, (t & 7).toInt)
+        val field = (t >>> 3).toInt
+        if (field == 0)
+          throw new IllegalArgumentException(s"malformed message: field 0 at $at")
+        (field, (t & 7).toInt)
       }
+
+    /** Read every field to the end of the slice: `f` handles the
+      * (field, wireType) pairs it matches and must consume their payload;
+      * all others are skipped. */
+    def fields(f: PartialFunction[(Int, Int), Unit]): Unit =
+      while (hasMore) f.applyOrElse(readTag(), (t: (Int, Int)) => skip(t._2))
 
     def readFixed32(): Int = {
       need(4)

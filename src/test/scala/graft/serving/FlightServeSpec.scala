@@ -22,8 +22,11 @@ import org.sparkproject.connect.grpc.stub.ClientCalls
   * environment-gated test drives an actual generated `pyarrow.flight`
   * client (scripts/check_flight.py) against the same server. */
 class FlightServeSpec extends SparkSpec {
-  import FlightServe.method
-  import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
+  import org.sparkproject.connect.grpc.MethodDescriptor.MethodType
+  import MethodType._
+
+  private def method(rpc: String, mt: MethodType) =
+    Grpc.method(FlightServe.ServiceName, rpc, mt)
 
   private def sampleDf = {
     import spark.implicits._
@@ -211,7 +214,6 @@ class FlightServeSpec extends SparkSpec {
     withServer { (srv, _) =>
       val pb = new ProcessBuilder("python3",
         "scripts/check_flight.py", srv.boundPort.toString, "events", "v1")
-      pb.directory(new java.io.File("/root/repo"))
       pb.redirectErrorStream(true)
       val proc = pb.start()
       val out = new String(proc.getInputStream.readAllBytes(),

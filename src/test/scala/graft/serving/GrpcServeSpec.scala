@@ -14,8 +14,11 @@ import org.sparkproject.connect.grpc.stub.{ClientCalls, StreamObserver}
   * reference client) exercises every method of
   * `featureform.serving.proto.Feature` against [[GrpcServe]]. */
 class GrpcServeSpec extends SparkSpec {
-  import GrpcServe.{method, readValue}
+  import GrpcServe.readValue
   import MethodDescriptor.MethodType._
+
+  private def method(rpc: String, mt: MethodDescriptor.MethodType) =
+    Grpc.method(GrpcServe.ServiceName, rpc, mt)
 
   private def withServer(body: (GrpcServe, ManagedChannel) => Unit): Unit = {
     val store = new OnlineStore(new InProcessKv)

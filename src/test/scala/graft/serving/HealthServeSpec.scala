@@ -24,7 +24,7 @@ class HealthServeSpec extends SparkSpec {
       w.result()
     }
     val resp = ClientCalls.blockingUnaryCall(ch,
-      MetadataServe.method(HealthServe.ServiceName, "Check", UNARY),
+      Grpc.method(HealthServe.ServiceName, "Check", UNARY),
       CallOptions.DEFAULT, req)
     val r = new R(resp)
     var st = -1L
@@ -69,7 +69,7 @@ class HealthServeSpec extends SparkSpec {
       // re-dial in a loop, so the server must not complete after the
       // first report (statuses are static; no second message ever comes)
       val it = ClientCalls.blockingServerStreamingCall(gch,
-        MetadataServe.method(HealthServe.ServiceName, "Watch", SERVER_STREAMING),
+        Grpc.method(HealthServe.ServiceName, "Watch", SERVER_STREAMING),
         CallOptions.DEFAULT, new W().result())
       val r = new R(it.next())
       assert(r.readTag()._1 == 1 && r.readVarint() == 1L)
@@ -86,7 +86,7 @@ class HealthServeSpec extends SparkSpec {
       // errors are Check semantics, and erroring would re-dial watchers
       val unknownReq = { val w = new W; w.str(1, "no.such.Service"); w.result() }
       val it2 = ClientCalls.blockingServerStreamingCall(gch,
-        MetadataServe.method(HealthServe.ServiceName, "Watch", SERVER_STREAMING),
+        Grpc.method(HealthServe.ServiceName, "Watch", SERVER_STREAMING),
         CallOptions.DEFAULT, unknownReq)
       val r2 = new R(it2.next())
       assert(r2.readTag()._1 == 1 && r2.readVarint() == 3L,
@@ -108,7 +108,7 @@ class HealthServeSpec extends SparkSpec {
     val ch = channel(srv.getPort)
     try {
       def watch() = ClientCalls.blockingServerStreamingCall(ch,
-        MetadataServe.method(HealthServe.ServiceName, "Watch",
+        Grpc.method(HealthServe.ServiceName, "Watch",
           SERVER_STREAMING),
         CallOptions.DEFAULT, new W().result())
       def firstStatus(it: java.util.Iterator[Array[Byte]]): Long = {
@@ -149,5 +149,22 @@ class HealthServeSpec extends SparkSpec {
       }
       assert(nf.getStatus.getCode.toString == "NOT_FOUND")
     } finally { mch.shutdownNow(); msrv.stop() }
+  }
+
+  test("a Check request with a zero tag fails like a truncated request " +
+       "instead of answering SERVING for the whole server") {
+    val srv = new GrpcServe(new OnlineStore(new InProcessKv)).start()
+    val ch = channel(srv.boundPort)
+    def failure(req: Array[Byte]) = intercept[StatusRuntimeException] {
+      ClientCalls.blockingUnaryCall(ch,
+        Grpc.method(HealthServe.ServiceName, "Check", UNARY),
+        CallOptions.DEFAULT, req)
+    }.getStatus.getCode
+    try {
+      // HealthCheckRequest{service = "foo"} cut short, and the same field
+      // behind a zero tag: both are malformed and must get one status
+      val truncated = failure(Array[Byte](0x0A, 0x05, 'f'))
+      assert(failure(Array[Byte](0x00, 0x0A, 0x03, 'f', 'o', 'o')) == truncated)
+    } finally { ch.shutdownNow(); srv.stop() }
   }
 }

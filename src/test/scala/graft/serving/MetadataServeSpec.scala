@@ -17,7 +17,8 @@ import org.sparkproject.connect.grpc.stub.{ClientCalls, StreamObserver}
   * deletion lifecycle, and proves a registration made over the wire
   * drives the Spark engine (resolve + materialize). */
 class MetadataServeSpec extends SparkSpec {
-  import MetadataServe.{method, ServiceName}
+  import Grpc.method
+  import MetadataServe.ServiceName
   import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
 
   // ------------------------------------------------------- client helpers
@@ -535,7 +536,7 @@ class MetadataServeSpec extends SparkSpec {
       val done = new java.util.concurrent.CountDownLatch(1)
       @volatile var err: Throwable = null
       val reqObs = ClientCalls.asyncClientStreamingCall(
-        ch.newCall(MetadataServe.method(MetadataServe.ApiServiceName, rpc,
+        ch.newCall(Grpc.method(MetadataServe.ApiServiceName, rpc,
           CLIENT_STREAMING), CallOptions.DEFAULT),
         new StreamObserver[Array[Byte]] {
           override def onNext(v: Array[Byte]): Unit = ()

@@ -16,7 +16,8 @@ import org.sparkproject.connect.grpc.stub.{ClientCalls, StreamObserver}
   * Any drift between the request parser and the response emitter (or a
   * field-number mistake on either side) surfaces as a mismatch. */
 class MetadataWireFuzzSpec extends SparkSpec {
-  import MetadataServe.{method, ServiceName}
+  import Grpc.method
+  import MetadataServe.ServiceName
   import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
 
   private val rnd = new scala.util.Random(20260816L)

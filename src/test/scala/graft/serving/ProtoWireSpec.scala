@@ -163,4 +163,44 @@ class ProtoWireSpec extends SparkSpec {
     assert(r5.readTag() == ((1, ProtoWire.WtLen)))
     intercept[IllegalArgumentException](r5.skip(ProtoWire.WtLen))
   }
+
+  test("a zero tag before the end of the slice is malformed, not the end " +
+    "of the message") {
+    // field number 0 (tag byte 00), then a valid field 1 = "foo"
+    val zero = Array[Byte](0x00, 0x0A, 0x03, 'f', 'o', 'o')
+    val e = intercept[IllegalArgumentException](new R(zero).readTag())
+    assert(e.getMessage.contains("malformed"))
+    // only the end of the slice reads as the end marker
+    val r = new R(Array[Byte](0x0A, 0x01, 'x'))
+    assert(r.readTag() == ((1, ProtoWire.WtLen)))
+    assert(r.readString() == "x")
+    assert(r.readTag() == ((0, -1)))
+  }
+
+  test("fields runs to the slice end, skips what the handler does not " +
+    "match, and fails on a zero tag") {
+    val w = new W
+    w.str(1, "a")
+    w.int64(9, 5L) // unknown: skipped
+    w.msg(2)(_.str(1, "inner"))
+    w.double(10, 1.0) // unknown: skipped
+    w.str(1, "b")
+    val r = new R(w.result())
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    r.fields {
+      case (1, _) => seen += r.readString()
+      case (2, _) =>
+        val m = r.readSlice()
+        m.fields { case (1, _) => seen += m.readString() }
+    }
+    assert(seen == Seq("a", "inner", "b"))
+    assert(!r.hasMore)
+    val zero = new R(Array[Byte](0x0A, 0x01, 'x', 0x00, 0x0A, 0x01, 'y'))
+    val got = scala.collection.mutable.ArrayBuffer.empty[String]
+    val e = intercept[IllegalArgumentException] {
+      zero.fields { case (1, _) => got += zero.readString() }
+    }
+    assert(e.getMessage.contains("malformed"))
+    assert(got == Seq("x"))
+  }
 }

@@ -15,13 +15,19 @@ import org.sparkproject.connect.grpc.stub.ClientCalls
   * ledger: create → status transitions → logs/resume/scheduler ids → reads,
   * all by a hand-encoded wire client. */
 class TasksServeSpec extends SparkSpec {
-  import MetadataServe.{method, TasksServiceName}
+  import Grpc.method
+  import MetadataServe.TasksServiceName
   import org.sparkproject.connect.grpc.MethodDescriptor.MethodType._
 
-  private def withServer(body: (graft.sched.TaskRunner, ManagedChannel) => Unit): Unit = {
+  private def withServer(body: (graft.sched.TaskRunner, ManagedChannel) => Unit): Unit =
+    withServerCapped(MetadataServe.WatchCancelMax)(body)
+
+  private def withServerCapped(watchCancelMax: Int)
+      (body: (graft.sched.TaskRunner, ManagedChannel) => Unit): Unit = {
     val stateDir = graft.TempDirs.create("graft_tasks").toString
     val runner = new graft.sched.TaskRunner(spark, stateDir)
-    val srv = new MetadataServe(new Catalog(spark), tasks = Some(runner)).start()
+    val srv = new MetadataServe(new Catalog(spark), tasks = Some(runner),
+      watchCancelMax = watchCancelMax).start()
     val ch = NettyChannelBuilder.forAddress("127.0.0.1", srv.boundPort)
       .usePlaintext().build()
     try body(runner, ch)
@@ -259,8 +265,7 @@ class TasksServeSpec extends SparkSpec {
 
   test("WatchForCancel beyond the concurrent-watcher cap degrades to an " +
        "immediate status report instead of pinning another server thread") {
-    val prev = sys.props.put("graft.watchCancelMax", "1")
-    try withServer { (runner, ch) =>
+    withServerCapped(watchCancelMax = 1) { (runner, ch) =>
       val c = { val w = new W; idMsg(1, "t")(w); w.str(2, "r1"); w.result() }
       unary(ch, "CreateTaskRun", c) // created — NOT terminal
       // watcher 1 takes the only slot and blocks on the live run
@@ -276,12 +281,6 @@ class TasksServeSpec extends SparkSpec {
       assert(System.currentTimeMillis() - t0 < 5000,
         "capped watcher must answer immediately")
       assert(r.readTag()._1 == 1 && r.readVarint() == 1L) // created
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.watchCancelMax", v)
-        case None => sys.props.remove("graft.watchCancelMax")
-      }
-      ()
     }
   }
 

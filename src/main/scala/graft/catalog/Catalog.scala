@@ -10,6 +10,20 @@ final case class ResourceId(name: String, variant: String = "default") {
   override def toString: String = s"$name.$variant"
 }
 
+object ResourceId {
+  /** Inverse of `toString` for the `name.variant` key string: splits at the
+    * last '.', so a name may hold dots but a variant may not (the wire
+    * Create handlers refuse a dotted variant); no '.' → the default variant. */
+  def parse(key: String): ResourceId = {
+    val i = key.lastIndexOf('.')
+    if (i < 0) ResourceId(key) else ResourceId(key.take(i), key.drop(i + 1))
+  }
+}
+
+/** A versioned resource — one (name, variant) of a source, feature,
+  * on-demand feature, label or training set. */
+sealed trait Variant { def id: ResourceId }
+
 /** Source definitions — reference metadata.proto:500-525 (SourceVariant),
   * 631-639 (PrimaryData), 562-629 (Transformation).
   */
@@ -46,7 +60,7 @@ final case class SourceVariant(
     id: ResourceId,
     definition: SourceDef,
     partition: Option[PartitionHint] = None,
-    isIncremental: Boolean = false)
+    isIncremental: Boolean = false) extends Variant
 
 /** Feature resource — source projected onto the canonical (entity, value, ts)
   * triple (reference metadata.proto:254-284). */
@@ -54,7 +68,7 @@ final case class FeatureVariant(
     id: ResourceId,
     source: ResourceId,
     schema: ResourceSchema,
-    entity: String = "entity")
+    entity: String = "entity") extends Variant
 
 /** Label with multi-entity mappings (reference metadata.proto:344-381). */
 final case class EntityMapping(entityName: String, column: String)
@@ -63,7 +77,7 @@ final case class LabelVariant(
     source: ResourceId,
     mappings: Seq[EntityMapping],
     valueColumn: String,
-    timestampColumn: Option[String] = None)
+    timestampColumn: Option[String] = None) extends Variant
 
 /** Lag feature — reference metadata.proto:330-335 (FeatureLag). */
 final case class FeatureLag(feature: ResourceId, name: String, lagSeconds: Long)
@@ -72,7 +86,7 @@ final case class TrainingSetVariant(
     id: ResourceId,
     label: ResourceId,
     features: Seq[ResourceId],
-    lags: Seq[FeatureLag] = Nil)
+    lags: Seq[FeatureLag] = Nil) extends Variant
 
 final case class EntityDef(name: String)
 
@@ -80,7 +94,7 @@ final case class EntityDef(name: String)
   * already-assembled feature row — the durable form of the reference's
   * serialized on-demand function (metadata.proto:326-328; SURVEY §2.10 maps
   * request-time fns to `functions.expr`). Strings persist; closures don't. */
-final case class OnDemandVariant(id: ResourceId, expr: String) {
+final case class OnDemandVariant(id: ResourceId, expr: String) extends Variant {
   /** Batch application: add the feature to an assembled frame. */
   def apply(df: DataFrame): DataFrame =
     df.withColumn(id.name, org.apache.spark.sql.functions.expr(expr))
@@ -258,10 +272,7 @@ final class Catalog(spark: SparkSession) {
     Set("SOURCE", "FEATURE", "LABEL", "TRAINING_SET", "PROVIDER", "ON_DEMAND")
 
   private def lookupKey(key: ResourceKey): Option[Any] = {
-    def rid = {
-      val i = key.id.lastIndexOf('.')
-      if (i < 0) ResourceId(key.id) else ResourceId(key.id.take(i), key.id.drop(i + 1))
-    }
+    def rid = ResourceId.parse(key.id)
     key.kind match {
       case "SOURCE" => sources.get(rid)
       case "FEATURE" => features.get(rid)
@@ -323,10 +334,7 @@ final class Catalog(spark: SparkSession) {
     synchronized {
       require(stagedSet.contains(key),
         s"$key is not staged for deletion — MarkForDeletion first")
-      def rid = {
-        val i = key.id.lastIndexOf('.')
-        if (i < 0) ResourceId(key.id) else ResourceId(key.id.take(i), key.id.drop(i + 1))
-      }
+      def rid = ResourceId.parse(key.id)
       key.kind match {
         case "SOURCE" => sources.remove(rid); resolved.remove(rid)
         case "FEATURE" => features.remove(rid)

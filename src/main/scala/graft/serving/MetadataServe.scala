@@ -1,7 +1,7 @@
 package graft.serving
 
 import org.apache.spark.sql.DataFrame
-import org.sparkproject.connect.grpc.Status
+import org.sparkproject.connect.grpc.{Status, StatusRuntimeException}
 
 import graft.catalog._
 import Grpc.readNameVariant
@@ -102,27 +102,53 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
   private def invalid(msg: String): Nothing =
     throw Status.INVALID_ARGUMENT.withDescription(msg).asRuntimeException()
 
-  /** Live (non-staged) variants of a name, registration order. */
-  private def liveSourceVariants(name: String): Seq[SourceVariant] =
-    catalog.allSources.filter(s => s.id.name == name &&
-      !catalog.isStaged(ResourceKey("SOURCE", s.id.toString)))
-  private def liveFeatureVariants(name: String): Seq[FeatureVariant] =
-    catalog.allFeatures.filter(f => f.id.name == name &&
-      !catalog.isStaged(ResourceKey("FEATURE", f.id.toString)))
-  private def liveOnDemandVariants(name: String): Seq[OnDemandVariant] =
-    catalog.allOnDemands.filter(o => o.id.name == name &&
-      !catalog.isStaged(ResourceKey("ON_DEMAND", o.id.toString)))
-  private def liveLabelVariants(name: String): Seq[LabelVariant] =
-    catalog.allLabels.filter(l => l.id.name == name &&
-      !catalog.isStaged(ResourceKey("LABEL", l.id.toString)))
-  private def liveTsetVariants(name: String): Seq[TrainingSetVariant] =
-    catalog.allTrainingSets.filter(t => t.id.name == name &&
-      !catalog.isStaged(ResourceKey("TRAINING_SET", t.id.toString)))
+  /** Live (non-staged) variants of one catalog kind, registration order —
+    * the lookup behind every Get*, List* and GetEquivalent answer. */
+  private def live(kind: String): Seq[Variant] = {
+    val all: Seq[Variant] = kind match {
+      case "SOURCE" => catalog.allSources
+      case "FEATURE" => catalog.allFeatures
+      case "ON_DEMAND" => catalog.allOnDemands
+      case "LABEL" => catalog.allLabels
+      case "TRAINING_SET" => catalog.allTrainingSets
+    }
+    all.filterNot(v => catalog.isStaged(ResourceKey(kind, v.id.toString)))
+  }
 
-  // ------------------------------------------------------ Create handlers
+  /** The key a wire id names among `kinds` (a FEATURE id names a
+    * precomputed or an on-demand variant): the first kind with a live
+    * variant of that id, else the first with a staged one, else the first
+    * kind. Precomputed therefore wins, as in GetFeatureVariants. */
+  private def keyIn(kinds: Seq[String], id: String): ResourceKey = {
+    val keys = kinds.map(ResourceKey(_, id))
+    keys.find(k => live(k.kind).exists(_.id.toString == id))
+      .orElse(keys.find(catalog.isStaged)).getOrElse(keys.head)
+  }
 
-  private def createSourceVariant(req: Array[Byte]): Array[Byte] = {
-    val body = firstSlice(req, 1).getOrElse(invalid("source_variant required"))
+  /** A wire ResourceID's catalog key, with FEATURE resolved by [[keyIn]]. */
+  private def resolveKey(key: ResourceKey): ResourceKey =
+    if (key.kind == "FEATURE") keyIn(Families("FEATURE")._2, key.id) else key
+
+  /** The registration tail every Create handler shares: add the resource
+    * (a conflicting re-registration is ALREADY_EXISTS), then store its
+    * wire metadata, tags and properties and mark it CREATED. */
+  private def register(key: ResourceKey, meta: Seq[(String, String)],
+                       tags: Seq[String], props: Seq[(String, String)])
+                      (add: => Any): Array[Byte] = {
+    try add catch { case e: IllegalArgumentException => conflict(e) }
+    setMeta(key, meta: _*)
+    if (tags.nonEmpty) catalog.addTags(key, tags)
+    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
+    catalog.setStatus(key, StCreated)
+    Empty
+  }
+
+  // ------------------------------------------------------ variant decoders
+  // One decoder per *Variant message, shared by its Create handler and
+  // GetEquivalent. A decoder answers INVALID_ARGUMENT for a message Create
+  // must refuse; GetEquivalent reads that as "no equivalent".
+
+  private def decodeSource(body: R): Decoded = {
     var name = ""; var variant = ""
     var defn: Option[SourceDef] = None
     var partition: Option[PartitionHint] = None
@@ -196,21 +222,13 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (17, _) => tags = readTags(body.readSlice())
       case (18, _) => props = readProps(body.readSlice())
     }
-    val id = ResourceId(name, variant)
     val d = defn.getOrElse(invalid("source definition (transformation or primaryData) required"))
-    try catalog.registerSource(SourceVariant(id, d, partition))
-    catch { case e: IllegalArgumentException => conflict(e) }
-    val key = ResourceKey("SOURCE", id.toString)
-    setMeta(key, "owner" -> owner, "description" -> desc,
-      "provider" -> provider, "schedule" -> schedule)
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    Decoded("SOURCE", SourceVariant(ResourceId(name, variant), d, partition),
+      Seq("owner" -> owner, "description" -> desc, "provider" -> provider,
+        "schedule" -> schedule), tags, props)
   }
 
-  private def createFeatureVariant(req: Array[Byte]): Array[Byte] = {
-    val body = firstSlice(req, 1).getOrElse(invalid("feature_variant required"))
+  private def decodeFeature(body: R): Decoded = {
     var name = ""; var variant = ""
     var source = ResourceId("", "")
     var entity = ""; var owner = ""; var desc = ""; var provider = ""
@@ -255,34 +273,23 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (16, _) => props = readProps(body.readSlice())
     }
     val id = ResourceId(name, variant)
-    val isOnDemand = mode == 1 || (onDemandDef.nonEmpty && colValue.isEmpty)
-    val key =
-      if (isOnDemand) {
-        val expr = if (onDemandDef.nonEmpty) onDemandDef else fnBytes
-        if (expr.isEmpty) invalid("CLIENT_COMPUTED feature requires " +
-          "additional_parameters.ondemand.definition (a Spark SQL expression)")
-        try catalog.registerOnDemand(OnDemandVariant(id, expr))
-        catch { case e: IllegalArgumentException => conflict(e) }
-        ResourceKey("ON_DEMAND", id.toString)
-      } else {
-        if (colValue.isEmpty) invalid("PRECOMPUTED feature requires columns")
-        val schema = graft.types.ResourceSchema(colEntity, colValue,
-          Some(colTs).filter(_.nonEmpty))
-        try catalog.registerFeature(FeatureVariant(id, source, schema,
-          if (entity.nonEmpty) entity else colEntity))
-        catch { case e: IllegalArgumentException => conflict(e) }
-        ResourceKey("FEATURE", id.toString)
-      }
-    setMeta(key, "owner" -> owner, "description" -> desc,
+    val meta = Seq("owner" -> owner, "description" -> desc,
       "provider" -> provider, "type" -> typeB64)
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    if (mode == 1 || (onDemandDef.nonEmpty && colValue.isEmpty)) {
+      val expr = if (onDemandDef.nonEmpty) onDemandDef else fnBytes
+      if (expr.isEmpty) invalid("CLIENT_COMPUTED feature requires " +
+        "additional_parameters.ondemand.definition (a Spark SQL expression)")
+      Decoded("ON_DEMAND", OnDemandVariant(id, expr), meta, tags, props)
+    } else {
+      if (colValue.isEmpty) invalid("PRECOMPUTED feature requires columns")
+      val schema = graft.types.ResourceSchema(colEntity, colValue,
+        Some(colTs).filter(_.nonEmpty))
+      Decoded("FEATURE", FeatureVariant(id, source, schema,
+        if (entity.nonEmpty) entity else colEntity), meta, tags, props)
+    }
   }
 
-  private def createLabelVariant(req: Array[Byte]): Array[Byte] = {
-    val body = firstSlice(req, 1).getOrElse(invalid("label_variant required"))
+  private def decodeLabel(body: R): Decoded = {
     var name = ""; var variant = ""
     var source = ResourceId("", "")
     var entity = ""; var owner = ""; var desc = ""; var provider = ""
@@ -326,26 +333,19 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (13, _) => tags = readTags(body.readSlice())
       case (14, _) => props = readProps(body.readSlice())
     }
-    val id = ResourceId(name, variant)
     val (finalMappings, valueCol, tsCol) =
       if (mappings.nonEmpty) (mappings, emValue, Some(emTs).filter(_.nonEmpty))
       else if (colValue.nonEmpty)
         (Seq(EntityMapping(if (entity.nonEmpty) entity else "entity", colEntity)),
           colValue, Some(colTs).filter(_.nonEmpty))
       else invalid("label requires entity_mappings (or deprecated columns)")
-    try catalog.registerLabel(LabelVariant(id, source, finalMappings, valueCol, tsCol))
-    catch { case e: IllegalArgumentException => conflict(e) }
-    val key = ResourceKey("LABEL", id.toString)
-    setMeta(key, "owner" -> owner, "description" -> desc, "provider" -> provider,
-      "type" -> typeB64)
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    Decoded("LABEL", LabelVariant(ResourceId(name, variant), source,
+      finalMappings, valueCol, tsCol),
+      Seq("owner" -> owner, "description" -> desc, "provider" -> provider,
+        "type" -> typeB64), tags, props)
   }
 
-  private def createTrainingSetVariant(req: Array[Byte]): Array[Byte] = {
-    val body = firstSlice(req, 1).getOrElse(invalid("training_set_variant required"))
+  private def decodeTrainingSet(body: R): Decoded = {
     var name = ""; var variant = ""
     var owner = ""; var desc = ""; var provider = ""; var schedule = ""
     var label = ResourceId("", "")
@@ -378,17 +378,35 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (16, _) => tags = readTags(body.readSlice())
       case (17, _) => props = readProps(body.readSlice())
     }
-    val id = ResourceId(name, variant)
-    try catalog.registerTrainingSet(
-      TrainingSetVariant(id, label, feats.toSeq, lags.toSeq))
-    catch { case e: IllegalArgumentException => conflict(e) }
-    val key = ResourceKey("TRAINING_SET", id.toString)
-    setMeta(key, "owner" -> owner, "description" -> desc,
-      "provider" -> provider, "schedule" -> schedule)
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    Decoded("TRAINING_SET", TrainingSetVariant(ResourceId(name, variant), label,
+      feats.toSeq, lags.toSeq),
+      Seq("owner" -> owner, "description" -> desc, "provider" -> provider,
+        "schedule" -> schedule), tags, props)
+  }
+
+  /** ResourceVariant oneof field → its decoder. */
+  private val decoders: Map[Int, R => Decoded] = Map(1 -> decodeFeature,
+    2 -> decodeLabel, 3 -> decodeTrainingSet, 4 -> decodeSource)
+
+  // ------------------------------------------------------ Create handlers
+
+  /** Create*VariantRequest{variant=1}: decode, refuse a dotted variant (the
+    * `name.variant` key string could not be split back), register. */
+  private def createVariant(what: String, decode: R => Decoded)
+                           (req: Array[Byte]): Array[Byte] = {
+    val d = decode(firstSlice(req, 1).getOrElse(invalid(s"$what required")))
+    val id = d.res.id
+    if (id.variant.contains('.'))
+      invalid(s"variant '${id.variant}' must not contain '.'")
+    register(ResourceKey(d.kind, id.toString), d.meta, d.tags, d.props) {
+      d.res match {
+        case s: SourceVariant => catalog.registerSource(s)
+        case f: FeatureVariant => catalog.registerFeature(f)
+        case o: OnDemandVariant => catalog.registerOnDemand(o)
+        case l: LabelVariant => catalog.registerLabel(l)
+        case t: TrainingSetVariant => catalog.registerTrainingSet(t)
+      }
+    }
   }
 
   private def createEntity(req: Array[Byte]): Array[Byte] = {
@@ -402,13 +420,8 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (8, _) => props = readProps(body.readSlice())
     }
     if (name.isEmpty) invalid("entity name required")
-    catalog.registerEntity(EntityDef(name))
-    val key = ResourceKey("ENTITY", name)
-    setMeta(key, "description" -> desc)
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    register(ResourceKey("ENTITY", name), Seq("description" -> desc), tags, props)(
+      catalog.registerEntity(EntityDef(name)))
   }
 
   private def createProvider(req: Array[Byte]): Array[Byte] = {
@@ -427,14 +440,9 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (13, _) => props = readProps(body.readSlice())
     }
     if (name.isEmpty) invalid("provider name required")
-    try catalog.registerProvider(ProviderDef(name, ptype, desc))
-    catch { case e: IllegalArgumentException => conflict(e) }
-    val key = ResourceKey("PROVIDER", name)
-    setMeta(key, "software" -> software, "team" -> team, "config" -> configB64)
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    register(ResourceKey("PROVIDER", name),
+      Seq("software" -> software, "team" -> team, "config" -> configB64), tags, props)(
+      catalog.registerProvider(ProviderDef(name, ptype, desc)))
   }
 
   private def createUser(req: Array[Byte]): Array[Byte] = {
@@ -447,12 +455,8 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (9, _) => props = readProps(body.readSlice())
     }
     if (name.isEmpty) invalid("user name required")
-    catalog.registerUser(UserDef(name))
-    val key = ResourceKey("USER", name)
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    register(ResourceKey("USER", name), Nil, tags, props)(
+      catalog.registerUser(UserDef(name)))
   }
 
   private def createModel(req: Array[Byte]): Array[Byte] = {
@@ -472,14 +476,9 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
       case (7, _) => props = readProps(body.readSlice())
     }
     if (name.isEmpty) invalid("model name required")
-    catalog.registerModel(ModelDef(name, feats.toSeq, tsets.toSeq))
-    val key = ResourceKey("MODEL", name)
-    setMeta(key, "description" -> desc,
-      "labels" -> labelRefs.map(_.toString).mkString(","))
-    if (tags.nonEmpty) catalog.addTags(key, tags)
-    if (props.nonEmpty) catalog.setProperties(key, props.toMap)
-    catalog.setStatus(key, StCreated)
-    Empty
+    register(ResourceKey("MODEL", name), Seq("description" -> desc,
+      "labels" -> labelRefs.map(_.toString).mkString(",")), tags, props)(
+      catalog.registerModel(ModelDef(name, feats.toSeq, tsets.toSeq)))
   }
 
   private def requestScheduleChange(req: Array[Byte]): Array[Byte] = {
@@ -487,7 +486,7 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var key: Option[ResourceKey] = None
     var schedule = ""
     r.fields {
-      case (1, _) => key = Some(readResourceId(r.readSlice()))
+      case (1, _) => key = Some(resolveKey(readResourceId(r.readSlice())))
       case (2, _) => schedule = r.readString()
     }
     val k = key.getOrElse(invalid("resource_id required"))
@@ -500,7 +499,7 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     var key: Option[ResourceKey] = None
     var st = 0; var msg = ""
     r.fields {
-      case (1, _) => key = Some(readResourceId(r.readSlice()))
+      case (1, _) => key = Some(resolveKey(readResourceId(r.readSlice())))
       case (2, _) => // ResourceStatus{status=1, error_message=2}
         val s = r.readSlice()
         s.fields {
@@ -519,31 +518,19 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     * job in the reference, collapsed to synchronous resolution). */
   private def run(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
-    val targets = scala.collection.mutable.ArrayBuffer.empty[ResourceKey]
+    val targets = scala.collection.mutable.ArrayBuffer.empty[(String, ResourceId)]
     r.fields {
       case (2, _) => // ResourceVariant oneof — we need only (kind, name, variant)
         val rv = r.readSlice()
         rv.fields {
-          case (fld, _) if fld >= 1 && fld <= 4 =>
-            val v = rv.readSlice()
-            var name = ""; var variant = ""
-            v.fields {
-              case (1, _) => name = v.readString()
-              case (2, _) => variant = v.readString()
-            }
-            val kind = fld match {
-              case 1 => "FEATURE"; case 2 => "LABEL"
-              case 3 => "TRAINING_SET"; case 4 => "SOURCE"
-            }
-            targets += ResourceKey(kind, ResourceId(name, variant).toString)
+          case (fld, _) if VariantKinds.contains(fld) =>
+            targets += VariantKinds(fld) -> readNameVariant(rv.readSlice())
         }
     }
-    targets.foreach { k =>
+    targets.foreach { case (kind, id) =>
+      val k = resolveKey(ResourceKey(kind, id.toString))
       try {
-        if (k.kind == "SOURCE") {
-          val i = k.id.lastIndexOf('.')
-          catalog.resolve(ResourceId(k.id.take(i), k.id.drop(i + 1)))
-        }
+        if (kind == "SOURCE") catalog.resolve(id)
         catalog.setStatus(k, StReady)
       } catch {
         case e: Exception =>
@@ -608,213 +595,56 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     val r = new R(req)
     var key: Option[ResourceKey] = None
     r.fields {
-      case (1, _) => key = Some(readResourceId(r.readSlice()))
+      case (1, _) => key = Some(resolveKey(readResourceId(r.readSlice())))
     }
     key.getOrElse(invalid("resource_id required"))
   }
 
   // --------------------------------------------------- GetEquivalent / Run
 
-  /** Equivalence on key attributes (metadata.go findEquivalent): for a
-    * source — definition; a feature — source + columns + entity; a label —
-    * source + mappings + value column; a training set — label + features +
-    * lags. No match → EMPTY ResourceVariant (unset oneof). */
+  /** Equivalence on key attributes (metadata.go findEquivalent): the
+    * candidate is decoded as Create would decode it, then matched against
+    * the live variants of its name — a source by definition; a feature by
+    * source + columns + entity (on-demand: by expression); a label by
+    * source + mappings + value column; a training set by label + features
+    * + lags. No match, or a candidate Create would refuse → EMPTY
+    * ResourceVariant (unset oneof). */
   private def getEquivalent(req: Array[Byte]): Array[Byte] = {
     val r = new R(req)
-    var out: Array[Byte] = new W().result() // empty ResourceVariant
+    var out = Empty
     r.fields {
       case (2, _) =>
         val rv = r.readSlice()
         rv.fields {
-          case (4, _) => // SourceVariant
-            val cand = parseSourceForEquiv(rv.readSlice())
-            liveSourceVariants(cand.id.name)
-              .find(_.definition == cand.definition)
-              .foreach { m =>
-                val w = new W
-                w.msg(4)(writeSourceVariant(_, m))
-                out = w.result()
+          case (fld, _) if decoders.contains(fld) =>
+            val body = rv.readSlice()
+            val cand =
+              try Some(decoders(fld)(body))
+              catch {
+                case e: StatusRuntimeException
+                  if e.getStatus.getCode == Status.Code.INVALID_ARGUMENT => None
               }
-          case (1, _) => // FeatureVariant
-            val (id, src, schema, entity, odExpr) = parseFeatureForEquiv(rv.readSlice())
-            if (odExpr.nonEmpty)
-              liveOnDemandVariants(id.name).find(_.expr == odExpr).foreach { m =>
-                val w = new W
-                w.msg(1)(writeOnDemandAsFeature(_, m))
-                out = w.result()
-              }
-            else
-              liveFeatureVariants(id.name)
-                .find(f => f.source == src && f.schema == schema && f.entity == entity)
-                .foreach { m =>
-                  val w = new W
-                  w.msg(1)(writeFeatureVariant(_, m))
-                  out = w.result()
-                }
-          case (2, _) => // LabelVariant
-            val (id, src, maps, value) = parseLabelForEquiv(rv.readSlice())
-            liveLabelVariants(id.name)
-              .find(l => l.source == src && l.mappings == maps && l.valueColumn == value)
-              .foreach { m =>
-                val w = new W
-                w.msg(2)(writeLabelVariant(_, m))
-                out = w.result()
-              }
-          case (3, _) => // TrainingSetVariant
-            val cand = parseTsetForEquiv(rv.readSlice())
-            liveTsetVariants(cand.id.name)
-              .find(t => t.label == cand.label && t.features == cand.features &&
-                t.lags == cand.lags)
-              .foreach { m =>
-                val w = new W
-                w.msg(3)(writeTsetVariant(_, m))
-                out = w.result()
-              }
+            for (d <- cand; m <- live(d.kind).find(m =>
+                   m.id.name == d.res.id.name && sameKeyAttributes(d.res, m))) {
+              val w = new W
+              writeResourceVariant(w, d.kind, m)
+              out = w.result()
+            }
         }
     }
     out
   }
 
-  private def parseSourceForEquiv(body: R): SourceVariant = {
-    var name = ""; var variant = ""
-    var defn: SourceDef = PrimaryData("")
-    body.fields {
-      case (1, _) => name = body.readString()
-      case (2, _) => variant = body.readString()
-      case (14, _) =>
-        val t = body.readSlice()
-        t.fields {
-          case (1, _) =>
-            val s = t.readSlice()
-            s.fields {
-              case (1, _) => defn = SqlTransformation(s.readString())
-            }
-          case (2, _) =>
-            val d = t.readSlice()
-            var fnName = ""
-            val inputs = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
-            d.fields {
-              case (1, _) =>
-                val b = d.readBytes()
-                if (fnName.isEmpty)
-                  fnName = new String(b, java.nio.charset.StandardCharsets.UTF_8)
-              case (2, _) => inputs += readNameVariant(d.readSlice())
-              case (3, _) => fnName = d.readString()
-            }
-            // equivalence compares (inputs, fnName); the fn itself only
-            // matters at registration — bind the registered one if present
-            defn = DfTransformation(inputs.toSeq,
-              dfFns.getOrElse(fnName, identityFn), Some(fnName))
-        }
-      case (15, _) =>
-        val p = body.readSlice()
-        var path = ""; var tsCol: Option[String] = None
-        p.fields {
-          case (3, _) =>
-            val f = p.readSlice()
-            f.fields {
-              case (1, _) => path = f.readString()
-            }
-          case (2, _) => tsCol = Some(p.readString()).filter(_.nonEmpty)
-        }
-        val fmt =
-          if (path.endsWith(".csv")) "csv"
-          else if (path.endsWith(".json") || path.endsWith(".jsonl")) "json"
-          else if (path.endsWith(".orc")) "orc"
-          else "parquet"
-        defn = PrimaryData(path, fmt, tsCol)
-    }
-    SourceVariant(ResourceId(name, variant), defn)
-  }
-
-  private def parseFeatureForEquiv(body: R)
-      : (ResourceId, ResourceId, graft.types.ResourceSchema, String, String) = {
-    var name = ""; var variant = ""
-    var src = ResourceId("", "")
-    var entity = ""
-    var ce = ""; var cv = ""; var ct = ""
-    var od = ""
-    body.fields {
-      case (1, _) => name = body.readString()
-      case (2, _) => variant = body.readString()
-      case (3, _) => src = readNameVariant(body.readSlice())
-      case (5, _) => entity = body.readString()
-      case (12, _) =>
-        val c = body.readSlice()
-        c.fields {
-          case (1, _) => ce = c.readString()
-          case (2, _) => cv = c.readString()
-          case (3, _) => ct = c.readString()
-        }
-      case (22, _) =>
-        val ap = body.readSlice()
-        ap.fields {
-          case (2, _) =>
-            val o = ap.readSlice()
-            o.fields {
-              case (1, _) => od = o.readString()
-            }
-        }
-    }
-    (ResourceId(name, variant), src,
-      graft.types.ResourceSchema(ce, cv, Some(ct).filter(_.nonEmpty)),
-      if (entity.nonEmpty) entity else ce, od)
-  }
-
-  private def parseLabelForEquiv(body: R)
-      : (ResourceId, ResourceId, Seq[EntityMapping], String) = {
-    var name = ""; var variant = ""
-    var src = ResourceId("", "")
-    var maps = Seq.empty[EntityMapping]; var value = ""
-    body.fields {
-      case (1, _) => name = body.readString()
-      case (2, _) => variant = body.readString()
-      case (5, _) => src = readNameVariant(body.readSlice())
-      case (22, _) =>
-        val em = body.readSlice()
-        val ms = scala.collection.mutable.ArrayBuffer.empty[EntityMapping]
-        em.fields {
-          case (1, _) =>
-            val m = em.readSlice()
-            var n = ""; var col = ""
-            m.fields {
-              case (1, _) => n = m.readString()
-              case (2, _) => col = m.readString()
-            }
-            ms += EntityMapping(n, col)
-          case (2, _) => value = em.readString()
-        }
-        maps = ms.toSeq
-    }
-    (ResourceId(name, variant), src, maps, value)
-  }
-
-  private def parseTsetForEquiv(body: R): TrainingSetVariant = {
-    var name = ""; var variant = ""
-    var label = ResourceId("", "")
-    val feats = scala.collection.mutable.ArrayBuffer.empty[ResourceId]
-    val lags = scala.collection.mutable.ArrayBuffer.empty[FeatureLag]
-    body.fields {
-      case (1, _) => name = body.readString()
-      case (2, _) => variant = body.readString()
-      case (8, _) => feats += readNameVariant(body.readSlice())
-      case (9, _) => label = readNameVariant(body.readSlice())
-      case (15, _) =>
-        val fl = body.readSlice()
-        var f = ""; var v = ""; var lagName = ""; var seconds = 0L
-        fl.fields {
-          case (1, _) => f = fl.readString()
-          case (2, _) => v = fl.readString()
-          case (3, _) => lagName = fl.readString()
-          case (4, _) =>
-            val d = fl.readSlice()
-            d.fields {
-              case (1, _) => seconds = d.readVarint()
-            }
-        }
-        lags += FeatureLag(ResourceId(f, v), lagName, seconds)
-    }
-    TrainingSetVariant(ResourceId(name, variant), label, feats.toSeq, lags.toSeq)
+  private def sameKeyAttributes(a: Variant, b: Variant): Boolean = (a, b) match {
+    case (a: SourceVariant, b: SourceVariant) => a.definition == b.definition
+    case (a: FeatureVariant, b: FeatureVariant) =>
+      a.source == b.source && a.schema == b.schema && a.entity == b.entity
+    case (a: OnDemandVariant, b: OnDemandVariant) => a.expr == b.expr
+    case (a: LabelVariant, b: LabelVariant) =>
+      a.source == b.source && a.mappings == b.mappings && a.valueColumn == b.valueColumn
+    case (a: TrainingSetVariant, b: TrainingSetVariant) =>
+      a.label == b.label && a.features == b.features && a.lags == b.lags
+    case _ => false
   }
 
   // --------------------------------------------------- response emitters
@@ -960,20 +790,23 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     writeTagsProps(w, key, 16, 17)
   }
 
-  private def writeResourceVariant(w: W, kind: String, res: Any): Unit =
-    (kind, res) match {
-      case ("SOURCE", sv: SourceVariant) => w.msg(4)(writeSourceVariant(_, sv))
-      case ("FEATURE", fv: FeatureVariant) => w.msg(1)(writeFeatureVariant(_, fv))
-      case ("ON_DEMAND", od: OnDemandVariant) =>
-        w.msg(1)(writeOnDemandAsFeature(_, od))
-      case ("LABEL", lv: LabelVariant) => w.msg(2)(writeLabelVariant(_, lv))
-      case ("TRAINING_SET", tv: TrainingSetVariant) =>
-        w.msg(3)(writeTsetVariant(_, tv))
-      case other =>
-        throw Status.INTERNAL
-          .withDescription(s"resource kind ${other._1} has no variant form")
-          .asRuntimeException()
-    }
+  private def writeVariant(w: W, v: Variant): Unit = v match {
+    case sv: SourceVariant => writeSourceVariant(w, sv)
+    case fv: FeatureVariant => writeFeatureVariant(w, fv)
+    case od: OnDemandVariant => writeOnDemandAsFeature(w, od)
+    case lv: LabelVariant => writeLabelVariant(w, lv)
+    case tv: TrainingSetVariant => writeTsetVariant(w, tv)
+  }
+
+  /** ResourceVariant{feature_variant=1, label_variant=2,
+    * training_set_variant=3, source_variant=4}. */
+  private def writeResourceVariant(w: W, kind: String, res: Any): Unit = res match {
+    case v: Variant => w.msg(VariantField(kind))(writeVariant(_, v))
+    case _ =>
+      throw Status.INTERNAL
+        .withDescription(s"resource kind $kind has no variant form")
+        .asRuntimeException()
+  }
 
   // Parent messages: {name=1, status=2, default_variant=3, variants=4}.
   // Default variant = LATEST registered (metadata.go setDefaultVariant on
@@ -988,35 +821,17 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     variants.foreach(v => w.str(4, v.variant))
   }
 
-  private def featureParent(name: String): Array[Byte] = {
-    val vs = liveFeatureVariants(name).map(_.id) ++
-      liveOnDemandVariants(name).map(_.id)
-    if (vs.isEmpty) notFound(s"feature $name")
+  /** Get{Features,Labels,TrainingSets,Sources}: the parent of a name's
+    * live variants in `family` (a [[Families]] key). */
+  private def parentMsg(family: String)(name: String): Array[Byte] = {
+    val (noun, kinds) = Families(family)
+    val vs = kinds.flatMap(live).map(_.id).filter(_.name == name)
+    if (vs.isEmpty) notFound(s"$noun $name")
+    // a feature's status is its latest variant's, under the key that id
+    // names (precomputed and on-demand keys differ)
     val w = new W
-    // on-demand and precomputed share the FEATURE namespace; status keys
-    // differ, so pick whichever kind the latest variant registered under
-    val kind = if (liveFeatureVariants(name).map(_.id).contains(vs.last))
-      "FEATURE" else "ON_DEMAND"
-    writeParent(w, name, vs, kind)
+    writeParent(w, name, vs, keyIn(kinds, vs.last.toString).kind)
     w.result()
-  }
-
-  private def labelParent(name: String): Array[Byte] = {
-    val vs = liveLabelVariants(name).map(_.id)
-    if (vs.isEmpty) notFound(s"label $name")
-    val w = new W; writeParent(w, name, vs, "LABEL"); w.result()
-  }
-
-  private def tsetParent(name: String): Array[Byte] = {
-    val vs = liveTsetVariants(name).map(_.id)
-    if (vs.isEmpty) notFound(s"training set $name")
-    val w = new W; writeParent(w, name, vs, "TRAINING_SET"); w.result()
-  }
-
-  private def sourceParent(name: String): Array[Byte] = {
-    val vs = liveSourceVariants(name).map(_.id)
-    if (vs.isEmpty) notFound(s"source $name")
-    val w = new W; writeParent(w, name, vs, "SOURCE"); w.result()
   }
 
   private def userMsg(name: String): Array[Byte] = {
@@ -1102,62 +917,26 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     w.str(1, m.name)
     prop(key, "__description").foreach(w.str(2, _))
     m.features.foreach(f => w.msg(3)(writeNV(_, f)))
-    prop(key, "__labels").foreach(_.split(',').filter(_.nonEmpty).foreach { s =>
-      val i = s.lastIndexOf('.')
-      w.msg(4)(writeNV(_, ResourceId(s.take(i), s.drop(i + 1))))
-    })
+    prop(key, "__labels").foreach(_.split(',').filter(_.nonEmpty)
+      .foreach(s => w.msg(4)(writeNV(_, ResourceId.parse(s)))))
     m.trainingSets.foreach(t => w.msg(5)(writeNV(_, t)))
     writeTagsProps(w, key, 6, 7)
     w.result()
   }
 
-  private def featureVariantMsg(id: ResourceId): Array[Byte] = {
-    val w = new W
-    liveFeatureVariants(id.name).find(_.id == id) match {
-      case Some(f) => writeFeatureVariant(w, f)
-      case None =>
-        val od = liveOnDemandVariants(id.name).find(_.id == id)
-          .getOrElse(notFound(s"feature variant $id"))
-        writeOnDemandAsFeature(w, od)
-    }
-    w.result()
-  }
-
-  private def labelVariantMsg(id: ResourceId): Array[Byte] = {
-    val l = liveLabelVariants(id.name).find(_.id == id)
-      .getOrElse(notFound(s"label variant $id"))
-    val w = new W; writeLabelVariant(w, l); w.result()
-  }
-
-  private def tsetVariantMsg(id: ResourceId): Array[Byte] = {
-    val t = liveTsetVariants(id.name).find(_.id == id)
-      .getOrElse(notFound(s"training set variant $id"))
-    val w = new W; writeTsetVariant(w, t); w.result()
-  }
-
-  private def sourceVariantMsg(id: ResourceId): Array[Byte] = {
-    val s = liveSourceVariants(id.name).find(_.id == id)
-      .getOrElse(notFound(s"source variant $id"))
-    val w = new W; writeSourceVariant(w, s); w.result()
+  /** Get*Variants: the live variant `id` in `family`, precomputed first. */
+  private def variantMsg(family: String)(id: ResourceId): Array[Byte] = {
+    val (noun, kinds) = Families(family)
+    val v = kinds.iterator.flatMap(k => live(k).find(_.id == id)).nextOption()
+      .getOrElse(notFound(s"$noun variant $id"))
+    val w = new W; writeVariant(w, v); w.result()
   }
 
   // ------------------------------------------------------- List* streams
 
-  private def distinctNames[T](ids: Seq[ResourceId]): Seq[String] =
-    ids.map(_.name).distinct
-
   private def listMsgs(kind: String): Seq[Array[Byte]] = kind match {
-    case "FEATURE" => distinctNames(liveFeatureIds ++
-      catalog.allOnDemands.map(_.id)).map(featureParent)
-    case "LABEL" => distinctNames(catalog.allLabels.map(_.id)
-      .filterNot(id => catalog.isStaged(ResourceKey("LABEL", id.toString))))
-      .map(labelParent)
-    case "TRAINING_SET" => distinctNames(catalog.allTrainingSets.map(_.id)
-      .filterNot(id => catalog.isStaged(ResourceKey("TRAINING_SET", id.toString))))
-      .map(tsetParent)
-    case "SOURCE" => distinctNames(catalog.allSources.map(_.id)
-      .filterNot(id => catalog.isStaged(ResourceKey("SOURCE", id.toString))))
-      .map(sourceParent)
+    case family if Families.contains(family) =>
+      Families(family)._2.flatMap(live).map(_.id.name).distinct.map(parentMsg(family))
     case "USER" => catalog.allUsers.map(u => userMsg(u.name))
     case "PROVIDER" => catalog.allProviders
       .filterNot(p => catalog.isStaged(ResourceKey("PROVIDER", p.name)))
@@ -1165,10 +944,6 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     case "ENTITY" => catalog.allEntities.map(e => entityMsg(e.name))
     case _ => catalog.allModels.map(m => modelMsg(m.name))
   }
-
-  private def liveFeatureIds: Seq[ResourceId] =
-    catalog.allFeatures.map(_.id)
-      .filterNot(id => catalog.isStaged(ResourceKey("FEATURE", id.toString)))
 
   /** NameRequest{name=1 Name{name=1}} → the inner name. */
   private def nameOf(req: Array[Byte]): String = {
@@ -1585,25 +1360,26 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
         writeStream("WriteLabels", valueField = 3, entityField = 4, "__label__"))
     b.unary("CreateUser")(createUser)
       .unary("CreateProvider")(createProvider)
-      .unary("CreateSourceVariant")(createSourceVariant)
+      .unary("CreateSourceVariant")(createVariant("source_variant", decodeSource))
       .unary("CreateEntity")(createEntity)
-      .unary("CreateFeatureVariant")(createFeatureVariant)
-      .unary("CreateLabelVariant")(createLabelVariant)
-      .unary("CreateTrainingSetVariant")(createTrainingSetVariant)
+      .unary("CreateFeatureVariant")(createVariant("feature_variant", decodeFeature))
+      .unary("CreateLabelVariant")(createVariant("label_variant", decodeLabel))
+      .unary("CreateTrainingSetVariant")(
+        createVariant("training_set_variant", decodeTrainingSet))
       .unary("CreateModel")(createModel)
       .unary("RequestScheduleChange")(requestScheduleChange)
       // bidi Get*: one response per incoming request, completed with the
       // request stream (metadata.go genericGet); a lookup failure errors
       // the stream, as in the generated server
       .bidiEach("GetUsers")(r => userMsg(nameOf(r)))
-      .bidiEach("GetFeatures")(r => featureParent(nameOf(r)))
-      .bidiEach("GetFeatureVariants")(r => featureVariantMsg(nvOf(r)))
-      .bidiEach("GetLabels")(r => labelParent(nameOf(r)))
-      .bidiEach("GetLabelVariants")(r => labelVariantMsg(nvOf(r)))
-      .bidiEach("GetTrainingSets")(r => tsetParent(nameOf(r)))
-      .bidiEach("GetTrainingSetVariants")(r => tsetVariantMsg(nvOf(r)))
-      .bidiEach("GetSources")(r => sourceParent(nameOf(r)))
-      .bidiEach("GetSourceVariants")(r => sourceVariantMsg(nvOf(r)))
+      .bidiEach("GetFeatures")(r => parentMsg("FEATURE")(nameOf(r)))
+      .bidiEach("GetFeatureVariants")(r => variantMsg("FEATURE")(nvOf(r)))
+      .bidiEach("GetLabels")(r => parentMsg("LABEL")(nameOf(r)))
+      .bidiEach("GetLabelVariants")(r => variantMsg("LABEL")(nvOf(r)))
+      .bidiEach("GetTrainingSets")(r => parentMsg("TRAINING_SET")(nameOf(r)))
+      .bidiEach("GetTrainingSetVariants")(r => variantMsg("TRAINING_SET")(nvOf(r)))
+      .bidiEach("GetSources")(r => parentMsg("SOURCE")(nameOf(r)))
+      .bidiEach("GetSourceVariants")(r => variantMsg("SOURCE")(nvOf(r)))
       .bidiEach("GetProviders")(r => providerMsg(nameOf(r)))
       .bidiEach("GetEntities")(r => entityMsg(nameOf(r)))
       .bidiEach("GetModels")(r => modelMsg(nameOf(r)))
@@ -1651,7 +1427,27 @@ object MetadataServe {
   val WatchCancelMax = 32
   val WatchForCancelTimeoutMs = 60000L
 
-  private val identityFn: Seq[DataFrame] => DataFrame = _.head
+  /** A decoded *Variant message: the catalog resource, the kind it
+    * registers under, and the wire metadata Create stores beside it. */
+  private final case class Decoded(kind: String, res: Variant,
+                                   meta: Seq[(String, String)], tags: Seq[String],
+                                   props: Seq[(String, String)])
+
+  /** Variant families of the wire API: the noun of their NOT_FOUND
+    * messages and the catalog kinds behind them — a feature name spans
+    * precomputed (FEATURE) and on-demand (ON_DEMAND) variants, and
+    * precomputed comes first wherever one id names both. */
+  private val Families: Map[String, (String, Seq[String])] = Map(
+    "FEATURE" -> ("feature", Seq("FEATURE", "ON_DEMAND")),
+    "LABEL" -> ("label", Seq("LABEL")),
+    "TRAINING_SET" -> ("training set", Seq("TRAINING_SET")),
+    "SOURCE" -> ("source", Seq("SOURCE")))
+
+  /** ResourceVariant oneof field per catalog kind, and back. */
+  private val VariantField: Map[String, Int] = Map("FEATURE" -> 1, "ON_DEMAND" -> 1,
+    "LABEL" -> 2, "TRAINING_SET" -> 3, "SOURCE" -> 4)
+  private val VariantKinds: Map[Int, String] =
+    Map(1 -> "FEATURE", 2 -> "LABEL", 3 -> "TRAINING_SET", 4 -> "SOURCE")
 
   def writeNV(w: W, id: ResourceId): Unit = {
     w.str(1, id.name); w.str(2, id.variant)
@@ -1660,7 +1456,9 @@ object MetadataServe {
   /** ResourceID{resource=1 NameVariant, resource_type=2 enum} → catalog
     * ResourceKey. Variant types (metadata.proto:161-174): FEATURE_VARIANT
     * 4, LABEL_VARIANT 5, TRAINING_SET_VARIANT 6, SOURCE_VARIANT 7 key
-    * name.variant; parents/singletons key the bare name. */
+    * name.variant; parents/singletons key the bare name. A FEATURE key may
+    * name an on-demand variant; the server resolves it against its
+    * catalog. */
   def readResourceId(r: R): ResourceKey = {
     var nv = ResourceId("", "")
     var rt = 0

@@ -101,6 +101,19 @@ class MetadataServeSpec extends SparkSpec {
     out.toMap.withDefaultValue(Nil)
   }
 
+  /** GetFeatureVariants → the variant's ResourceStatus (status, message). */
+  private def featureStatus(ch: ManagedChannel, name: String,
+                            variant: String): (Int, String) = {
+    val fv = bidiGet(ch, "GetFeatureVariants", Seq(nvReq(name, variant))).head
+    val st = MetadataServe.firstSlice(fv, 10).get
+    var code = 0; var msg = ""
+    st.fields {
+      case (1, _) => code = st.readVarint().toInt
+      case (2, _) => msg = st.readString()
+    }
+    (code, msg)
+  }
+
   private def nvOf(bytes: Array[Byte]): (String, String) = {
     val r = new R(bytes)
     var n = ""; var v = ""
@@ -165,20 +178,23 @@ class MetadataServeSpec extends SparkSpec {
   private def featureReq(name: String, variant: String, srcName: String,
                          srcVariant: String, entity: String, colEntity: String,
                          colValue: String, colTs: String,
-                         owner: String): Array[Byte] = {
-    val w = new W
-    w.msg(1) { fv =>
-      fv.str(1, name); fv.str(2, variant)
-      fv.msg(3) { nv => nv.str(1, srcName); nv.str(2, srcVariant) }
-      fv.str(5, entity); fv.str(7, owner)
-      fv.msg(12) { c =>
-        c.str(1, colEntity); c.str(2, colValue)
-        if (colTs.nonEmpty) c.str(3, colTs)
-      }
-      // ValueType{scalar=FLOAT64} — round-trips verbatim
-      fv.msg(25)(_.enum(1, 3))
+                         owner: String): Array[Byte] =
+    createReq(featureBody(name, variant, srcName, srcVariant, entity,
+      colEntity, colValue, colTs, owner))
+
+  private def featureBody(name: String, variant: String, srcName: String,
+                          srcVariant: String, entity: String, colEntity: String,
+                          colValue: String, colTs: String,
+                          owner: String): W => Unit = { fv =>
+    fv.str(1, name); fv.str(2, variant)
+    fv.msg(3) { nv => nv.str(1, srcName); nv.str(2, srcVariant) }
+    fv.str(5, entity); fv.str(7, owner)
+    fv.msg(12) { c =>
+      c.str(1, colEntity); c.str(2, colValue)
+      if (colTs.nonEmpty) c.str(3, colTs)
     }
-    w.result()
+    // ValueType{scalar=FLOAT64} — round-trips verbatim
+    fv.msg(25)(_.enum(1, 3))
   }
 
   private def onDemandFeatureReq(name: String, variant: String,
@@ -194,39 +210,73 @@ class MetadataServeSpec extends SparkSpec {
 
   private def labelReq(name: String, variant: String, srcName: String,
                        srcVariant: String, entity: String, entityCol: String,
-                       valueCol: String, tsCol: String): Array[Byte] = {
-    val w = new W
-    w.msg(1) { lv =>
-      lv.str(1, name); lv.str(2, variant)
-      lv.msg(5) { nv => nv.str(1, srcName); nv.str(2, srcVariant) }
-      lv.msg(22) { em =>
-        em.msg(1) { m => m.str(1, entity); m.str(2, entityCol) }
-        em.str(2, valueCol)
-        if (tsCol.nonEmpty) em.str(3, tsCol)
-      }
+                       valueCol: String, tsCol: String): Array[Byte] =
+    createReq(labelBody(name, variant, srcName, srcVariant, entity, entityCol,
+      valueCol, tsCol))
+
+  private def labelBody(name: String, variant: String, srcName: String,
+                        srcVariant: String, entity: String, entityCol: String,
+                        valueCol: String, tsCol: String): W => Unit = { lv =>
+    lv.str(1, name); lv.str(2, variant)
+    lv.msg(5) { nv => nv.str(1, srcName); nv.str(2, srcVariant) }
+    lv.msg(22) { em =>
+      em.msg(1) { m => m.str(1, entity); m.str(2, entityCol) }
+      em.str(2, valueCol)
+      if (tsCol.nonEmpty) em.str(3, tsCol)
     }
-    w.result()
   }
 
   private def tsetReq(name: String, variant: String,
                       label: (String, String), features: Seq[(String, String)],
                       lag: Option[(String, String, String, Long)] = None)
-      : Array[Byte] = {
-    val w = new W
-    w.msg(1) { tv =>
-      tv.str(1, name); tv.str(2, variant)
-      features.foreach { case (n, v) =>
-        tv.msg(8) { nv => nv.str(1, n); nv.str(2, v) }
-      }
-      tv.msg(9) { nv => nv.str(1, label._1); nv.str(2, label._2) }
-      lag.foreach { case (f, v, lagName, secs) =>
-        tv.msg(15) { fl =>
-          fl.str(1, f); fl.str(2, v); fl.str(3, lagName)
-          fl.msg(4)(_.int64(1, secs))
-        }
+      : Array[Byte] =
+    createReq(tsetBody(name, variant, label, features, lag))
+
+  private def tsetBody(name: String, variant: String,
+                       label: (String, String), features: Seq[(String, String)],
+                       lag: Option[(String, String, String, Long)]): W => Unit = { tv =>
+    tv.str(1, name); tv.str(2, variant)
+    features.foreach { case (n, v) =>
+      tv.msg(8) { nv => nv.str(1, n); nv.str(2, v) }
+    }
+    tv.msg(9) { nv => nv.str(1, label._1); nv.str(2, label._2) }
+    lag.foreach { case (f, v, lagName, secs) =>
+      tv.msg(15) { fl =>
+        fl.str(1, f); fl.str(2, v); fl.str(3, lagName)
+        fl.msg(4)(_.int64(1, secs))
       }
     }
-    w.result()
+  }
+
+  /** Create*VariantRequest{variant=1} around a variant message body. */
+  private def createReq(body: W => Unit): Array[Byte] = {
+    val w = new W; w.msg(1)(body); w.result()
+  }
+
+  /** GetEquivalent for ResourceVariant oneof `field` (feature=1, label=2,
+    * training_set=3, source=4) → the matched (name, variant), or None for
+    * the empty ResourceVariant. */
+  private def equivalent(ch: ManagedChannel, field: Int)
+                        (body: W => Unit): Option[(String, String)] = {
+    val w = new W
+    w.msg(2)(_.msg(field)(body))
+    MetadataServe.firstSlice(unary(ch, "GetEquivalent", w.result()), field)
+      .map { m =>
+        var n = ""; var v = ""
+        m.fields {
+          case (1, _) => n = m.readString()
+          case (2, _) => v = m.readString()
+        }
+        (n, v)
+      }
+  }
+
+  /** Register `body("v1")` through `rpc`, then probe GetEquivalent with the
+    * same body under the fresh variant "probe". */
+  private def registerThenProbe(ch: ManagedChannel, rpc: String, field: Int)
+                               (body: String => W => Unit): Option[(String, String)] = {
+    unary(ch, rpc, createReq(body("v1")))
+    equivalent(ch, field)(body("probe"))
   }
 
   // ---------------------------------------------------------------- tests
@@ -508,7 +558,9 @@ class MetadataServeSpec extends SparkSpec {
       }
       stW.msg(2) { s => s.enum(1, 4); s.str(2, "boom") }
       unary(ch, "SetResourceStatus", stW.result())
-      assert(cat.status(ResourceKey("FEATURE", "od_double.v1")) == ((4, "boom")))
+      assert(cat.status(ResourceKey("ON_DEMAND", "od_double.v1")) == ((4, "boom")))
+      // and the wire reads it back: FeatureVariant.status=10 {status=1, error_message=2}
+      assert(featureStatus(ch, "od_double", "v1") == ((4, "boom")))
 
       // RequestScheduleChange lands in the resource's schedule property
       val scW = new W
@@ -518,7 +570,7 @@ class MetadataServeSpec extends SparkSpec {
       }
       scW.str(2, "*/10 * * * *")
       unary(ch, "RequestScheduleChange", scW.result())
-      assert(cat.properties(ResourceKey("FEATURE", "od_double.v1"))
+      assert(cat.properties(ResourceKey("ON_DEMAND", "od_double.v1"))
         .get("__schedule").contains("*/10 * * * *"))
 
       // the Api service serves the same handlers
@@ -619,6 +671,177 @@ class MetadataServeSpec extends SparkSpec {
         unary(ch, "CreateSourceVariant", bad.result())
       }
       assert(e.getStatus.getCode.toString == "INVALID_ARGUMENT")
+    }
+  }
+
+  // ------------------------------ GetEquivalent shares Create's decoder
+
+  private val ordersV1: W => Unit = { nv => nv.str(1, "orders"); nv.str(2, "v1") }
+
+  test("GetEquivalent finds a DF transformation named only by " +
+       "DFTransformation field 8") {
+    withServer(dfFns = Map("keep" -> ((dfs: Seq[org.apache.spark.sql.DataFrame]) =>
+        dfs.head))) { (_, _, ch) =>
+      unary(ch, "CreateSourceVariant",
+        primarySourceReq("orders", "v1", s"$sf001/orders.parquet", "a", "p"))
+      val hit = registerThenProbe(ch, "CreateSourceVariant", 4) { v => sv =>
+        sv.str(1, "kept"); sv.str(2, v)
+        sv.msg(14)(_.msg(2) { d => d.msg(2)(ordersV1); d.str(8, "keep") })
+      }
+      assert(hit == Some(("kept", "v1")))
+    }
+  }
+
+  test("GetEquivalent finds a label registered through the deprecated " +
+       "Columns (field 12) plus entity (field 6)") {
+    withServer() { (_, _, ch) =>
+      val hit = registerThenProbe(ch, "CreateLabelVariant", 2) { v => lv =>
+        lv.str(1, "churned"); lv.str(2, v)
+        lv.msg(5)(ordersV1)
+        lv.str(6, "customer")
+        lv.msg(12) { c =>
+          c.str(1, "o_custkey"); c.str(2, "o_totalprice"); c.str(3, "o_orderdate")
+        }
+      }
+      assert(hit == Some(("churned", "v1")))
+    }
+  }
+
+  test("GetEquivalent finds a CLIENT_COMPUTED feature sent with mode = 1 " +
+       "and only PythonFunction bytes (field 17)") {
+    withServer() { (cat, _, ch) =>
+      val hit = registerThenProbe(ch, "CreateFeatureVariant", 1) { v => fv =>
+        fv.str(1, "od_py"); fv.str(2, v)
+        fv.msg(17)(_.bytes(1, "value * 3".getBytes("UTF-8")))
+        fv.enum(18, 1)
+      }
+      assert(cat.onDemand(ResourceId("od_py", "v1")).expr == "value * 3")
+      assert(hit == Some(("od_py", "v1")))
+    }
+  }
+
+  test("GetEquivalent finds a precomputed feature, an entity_mappings " +
+       "label, a training set with a lag and a source_text DF " +
+       "transformation under another variant; a probe Create would " +
+       "refuse gets the empty ResourceVariant") {
+    withServer(dfFns = Map("keep" -> ((dfs: Seq[org.apache.spark.sql.DataFrame]) =>
+        dfs.head))) { (_, _, ch) =>
+      unary(ch, "CreateSourceVariant",
+        primarySourceReq("orders", "v1", s"$sf001/orders.parquet", "a", "p"))
+      assert(registerThenProbe(ch, "CreateFeatureVariant", 1)(v =>
+        featureBody("f_total", v, "orders", "v1", "customer", "o_custkey",
+          "o_totalprice", "o_orderdate", "a")) == Some(("f_total", "v1")))
+      assert(registerThenProbe(ch, "CreateLabelVariant", 2)(v =>
+        labelBody("big", v, "orders", "v1", "customer", "o_custkey",
+          "o_totalprice", "o_orderdate")) == Some(("big", "v1")))
+      assert(registerThenProbe(ch, "CreateTrainingSetVariant", 3)(v =>
+        tsetBody("ts", v, ("big", "v1"), Seq(("f_total", "v1")),
+          Some(("f_total", "v1", "total_1d", 86400L)))) == Some(("ts", "v1")))
+      assert(registerThenProbe(ch, "CreateSourceVariant", 4) { v => sv =>
+        sv.str(1, "kept"); sv.str(2, v)
+        sv.msg(14)(_.msg(2) { d => d.str(3, "keep"); d.msg(2)(ordersV1) })
+      } == Some(("kept", "v1")))
+      // a different key attribute misses: another lag length
+      assert(equivalent(ch, 3)(tsetBody("ts", "probe", ("big", "v1"),
+        Seq(("f_total", "v1")), Some(("f_total", "v1", "total_1d", 3600L)))).isEmpty)
+      // probes Create answers INVALID_ARGUMENT for: an unknown DF fn, a
+      // primaryData without a path, a precomputed feature without columns
+      assert(equivalent(ch, 4) { sv =>
+        sv.str(1, "kept"); sv.str(2, "probe")
+        sv.msg(14)(_.msg(2) { d => d.str(3, "no_such_fn"); d.msg(2)(ordersV1) })
+      }.isEmpty)
+      assert(equivalent(ch, 4) { sv =>
+        sv.str(1, "orders"); sv.str(2, "probe"); sv.msg(15)(_ => ())
+      }.isEmpty)
+      assert(equivalent(ch, 1) { fv =>
+        fv.str(1, "f_total"); fv.str(2, "probe"); fv.msg(3)(ordersV1)
+      }.isEmpty)
+    }
+  }
+
+  // ------------------------------- one key for an on-demand feature variant
+
+  test("FEATURE_VARIANT ids resolve to an on-demand variant when only one " +
+       "has the id: MarkForDeletion stages it, the staged read and " +
+       "FinalizeDeletion find it; a precomputed variant of the same id wins") {
+    withServer() { (cat, _, ch) =>
+      unary(ch, "CreateFeatureVariant", onDemandFeatureReq("od", "v1", "value * 2"))
+      unary(ch, "MarkForDeletion", resourceId("od", "v1", 4))
+      assert(cat.isStaged(ResourceKey("ON_DEMAND", "od.v1")))
+      // Response{resource_variant=1{feature_variant=1{name=1}}}
+      val staged = MetadataServe.firstSlice(unary(ch,
+        "GetStagedForDeletionResource", resourceId("od", "v1", 4)), 1).get
+      var stagedName = ""
+      staged.fields {
+        case (1, _) =>
+          val fv = staged.readSlice()
+          fv.fields { case (1, _) => stagedName = fv.readString() }
+      }
+      assert(stagedName == "od")
+      unary(ch, "FinalizeDeletion", resourceId("od", "v1", 4))
+      assert(cat.allOnDemands.isEmpty)
+
+      // the same id as a precomputed AND an on-demand variant: the
+      // precomputed one answers GetFeatureVariants, so it takes the status
+      unary(ch, "CreateFeatureVariant", featureReq("twin", "v1", "orders", "v1",
+        "customer", "o_custkey", "o_totalprice", "", "a"))
+      unary(ch, "CreateFeatureVariant", onDemandFeatureReq("twin", "v1", "value * 2"))
+      val stW = new W
+      stW.msg(1) { rid =>
+        rid.msg(1) { nv => nv.str(1, "twin"); nv.str(2, "v1") }
+        rid.enum(2, 4)
+      }
+      stW.msg(2) { s => s.enum(1, 4); s.str(2, "boom") }
+      unary(ch, "SetResourceStatus", stW.result())
+      assert(cat.status(ResourceKey("FEATURE", "twin.v1")) == ((4, "boom")))
+      assert(cat.status(ResourceKey("ON_DEMAND", "twin.v1"))._1 == 1)
+      assert(featureStatus(ch, "twin", "v1") == ((4, "boom")))
+    }
+  }
+
+  test("ListFeatures skips a name whose only on-demand variant is staged") {
+    withServer() { (cat, _, ch) =>
+      unary(ch, "CreateFeatureVariant", featureReq("f_total", "v1", "orders",
+        "v1", "customer", "o_custkey", "o_totalprice", "", "a"))
+      unary(ch, "CreateFeatureVariant", onDemandFeatureReq("od_only", "v1", "value * 2"))
+      cat.markForDeletion(ResourceKey("ON_DEMAND", "od_only.v1"))
+      assert(listCall(ch, "ListFeatures").map(strFields(_)(1)) == Seq(Seq("f_total")))
+    }
+  }
+
+  // ------------------------------------------------------ dotted variants
+
+  test("a variant containing '.' is INVALID_ARGUMENT on every Create*Variant; " +
+       "a dotted name still runs and deletes") {
+    withServer() { (cat, _, ch) =>
+      val dotted = Seq(
+        "CreateSourceVariant" -> primarySourceReq("orders", "2024.05",
+          s"$sf001/orders.parquet", "a", "p"),
+        "CreateFeatureVariant" -> featureReq("f", "2024.05", "orders", "v1",
+          "customer", "o_custkey", "o_totalprice", "", "a"),
+        "CreateFeatureVariant" -> onDemandFeatureReq("od", "2024.05", "value * 2"),
+        "CreateLabelVariant" -> labelReq("l", "2024.05", "orders", "v1",
+          "customer", "o_custkey", "o_totalprice", ""),
+        "CreateTrainingSetVariant" -> tsetReq("t", "2024.05", ("l", "v1"),
+          Seq(("f", "v1"))))
+      dotted.foreach { case (rpc, req) =>
+        val e = intercept[StatusRuntimeException](unary(ch, rpc, req))
+        assert(e.getStatus.getCode.toString == "INVALID_ARGUMENT", rpc)
+      }
+      assert(cat.allSources.isEmpty && cat.allFeatures.isEmpty &&
+        cat.allOnDemands.isEmpty && cat.allLabels.isEmpty &&
+        cat.allTrainingSets.isEmpty)
+
+      // the key string splits at its last '.', so a dotted NAME is fine
+      unary(ch, "CreateSourceVariant",
+        primarySourceReq("tpch.orders", "v1", s"$sf001/orders.parquet", "a", "p"))
+      val runW = new W
+      runW.msg(2)(_.msg(4) { v => v.str(1, "tpch.orders"); v.str(2, "v1") })
+      unary(ch, "Run", runW.result())
+      assert(cat.status(ResourceKey("SOURCE", "tpch.orders.v1"))._1 == 3)
+      unary(ch, "MarkForDeletion", resourceId("tpch.orders", "v1", 7))
+      unary(ch, "FinalizeDeletion", resourceId("tpch.orders", "v1", 7))
+      assert(cat.allSources.isEmpty)
     }
   }
 }

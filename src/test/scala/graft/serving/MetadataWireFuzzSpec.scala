@@ -52,22 +52,41 @@ class MetadataWireFuzzSpec extends SparkSpec {
       props = Seq.fill(rnd.nextInt(4))(randName() -> randText()).toMap)
   }
 
-  private def encode(c: Cand): Array[Byte] = {
-    val w = new W
-    w.msg(1) { sv =>
-      sv.str(1, c.name); sv.str(2, c.variant)
-      c.primaryPath.foreach(p => sv.msg(15)(_.msg(3)(_.str(1, p))))
-      c.sqlQuery.foreach(q => sv.msg(14)(_.msg(1)(_.str(1, q))))
-      if (c.owner.nonEmpty) sv.str(4, c.owner)
-      if (c.description.nonEmpty) sv.str(5, c.description)
-      if (c.tags.nonEmpty) sv.msg(17)(t => c.tags.foreach(t.str(1, _)))
-      if (c.props.nonEmpty) sv.msg(18) { p =>
-        c.props.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          p.msg(1) { e => e.str(1, k); e.msg(2)(_.str(1, v)) }
-        }
+  /** The SourceVariant message for a candidate. */
+  private def body(c: Cand)(sv: W): Unit = {
+    sv.str(1, c.name); sv.str(2, c.variant)
+    c.primaryPath.foreach(p => sv.msg(15)(_.msg(3)(_.str(1, p))))
+    c.sqlQuery.foreach(q => sv.msg(14)(_.msg(1)(_.str(1, q))))
+    if (c.owner.nonEmpty) sv.str(4, c.owner)
+    if (c.description.nonEmpty) sv.str(5, c.description)
+    if (c.tags.nonEmpty) sv.msg(17)(t => c.tags.foreach(t.str(1, _)))
+    if (c.props.nonEmpty) sv.msg(18) { p =>
+      c.props.toSeq.sortBy(_._1).foreach { case (k, v) =>
+        p.msg(1) { e => e.str(1, k); e.msg(2)(_.str(1, v)) }
       }
     }
-    w.result()
+  }
+
+  /** CreateSourceVariantRequest{source_variant=1}. */
+  private def encode(c: Cand): Array[Byte] = {
+    val w = new W; w.msg(1)(body(c)); w.result()
+  }
+
+  private lazy val cands = (0 until 60).map(randCand)
+
+  /** A server with every candidate registered over the wire. */
+  private def withRegistered(test: ManagedChannel => Unit): Unit = {
+    val srv = new MetadataServe(new Catalog(spark)).start()
+    val ch: ManagedChannel = NettyChannelBuilder
+      .forAddress("127.0.0.1", srv.boundPort).usePlaintext().build()
+    try {
+      cands.foreach { c =>
+        ClientCalls.blockingUnaryCall(ch,
+          method(ServiceName, "CreateSourceVariant", UNARY),
+          CallOptions.DEFAULT, encode(c))
+      }
+      test(ch)
+    } finally { ch.shutdownNow(); srv.stop() }
   }
 
   /** Decode the SourceVariant response fields under test. */
@@ -156,17 +175,7 @@ class MetadataWireFuzzSpec extends SparkSpec {
   test("60 seeded-random source variants survive register → GetSourceVariants " +
        "field-identically (names, definitions, owner/description, tags, " +
        "properties — unicode and control characters included)") {
-    val cat = new Catalog(spark)
-    val srv = new MetadataServe(cat).start()
-    val ch: ManagedChannel = NettyChannelBuilder
-      .forAddress("127.0.0.1", srv.boundPort).usePlaintext().build()
-    try {
-      val cands = (0 until 60).map(randCand)
-      cands.foreach { c =>
-        ClientCalls.blockingUnaryCall(ch,
-          method(ServiceName, "CreateSourceVariant", UNARY),
-          CallOptions.DEFAULT, encode(c))
-      }
+    withRegistered { ch =>
       // read all back over one bidi stream
       val done = new java.util.concurrent.CountDownLatch(1)
       val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
@@ -193,6 +202,29 @@ class MetadataWireFuzzSpec extends SparkSpec {
         assert(got == c, s"round-trip drift for ${c.name}/${c.variant}:\n" +
           s"  sent $c\n  got  $got")
       }
-    } finally { ch.shutdownNow(); srv.stop() }
+    }
+  }
+
+  test("GetEquivalent finds each of the 60 registered source variants from " +
+       "the same body under a fresh variant (Create and GetEquivalent " +
+       "decode alike)") {
+    withRegistered { ch =>
+      cands.foreach { c =>
+        val w = new W
+        w.msg(2)(_.msg(4)(body(c.copy(variant = c.variant + "_probe"))))
+        val hit = ClientCalls.blockingUnaryCall(ch,
+          method(ServiceName, "GetEquivalent", UNARY), CallOptions.DEFAULT,
+          w.result())
+        val got = MetadataServe.firstSlice(hit, 4).map { m =>
+          var n = ""; var v = ""
+          m.fields {
+            case (1, _) => n = m.readString()
+            case (2, _) => v = m.readString()
+          }
+          (n, v)
+        }
+        assert(got == Some((c.name, c.variant)), s"no equivalent for $c")
+      }
+    }
   }
 }

@@ -1443,11 +1443,12 @@ object MetadataServe {
     "TRAINING_SET" -> ("training set", Seq("TRAINING_SET")),
     "SOURCE" -> ("source", Seq("SOURCE")))
 
-  /** ResourceVariant oneof field per catalog kind, and back. */
-  private val VariantField: Map[String, Int] = Map("FEATURE" -> 1, "ON_DEMAND" -> 1,
-    "LABEL" -> 2, "TRAINING_SET" -> 3, "SOURCE" -> 4)
+  /** ResourceVariant oneof field → catalog kind, and back (an on-demand
+    * variant travels as a feature_variant). */
   private val VariantKinds: Map[Int, String] =
     Map(1 -> "FEATURE", 2 -> "LABEL", 3 -> "TRAINING_SET", 4 -> "SOURCE")
+  private val VariantField: Map[String, Int] =
+    VariantKinds.map(_.swap) + ("ON_DEMAND" -> 1)
 
   def writeNV(w: W, id: ResourceId): Unit = {
     w.str(1, id.name); w.str(2, id.variant)

@@ -298,7 +298,8 @@ object SkewBench {
       // not asserted linear; the cap fire IS asserted.
       rec(scale, "stream_dedup",
         time(force(graft.streaming.StreamingDedup.runFileStream(
-          spark, s"$work/docs_x$m", maxPerBucket = 500, idCol = "id")))._1)
+          spark, graft.streaming.StreamRun.Written(s"$work/docs_x$m"),
+          maxPerBucket = 500, idCol = "id")))._1)
       val sdDrops = graft.streaming.StreamingDedup.lastDropsAcc.value
       System.err.println(s"[skew] $scale stream_dedup drops=$sdDrops")
       if (m == 1 && sdDrops != 0L)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.catalog._
 import graft.functions.{Dedup, TextFunctions => TF, Vectors}
 import graft.ops._
+import graft.streaming.StreamRun
+import graft.streaming.StreamRun.{Frame, Sentinel}
 import graft.transform.SqlTransform
 
 /** Driver contract (SURVEY.md §7 + builder prompt): one `queries` entry per
@@ -45,63 +47,16 @@ object SparkEntry {
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.sources.Readers.eventsNormalized(s, dir)
 
-  /** Max event time for the streaming sentinel fixtures; epoch on an
-    * EMPTY table so the replay harness still runs (to an empty result)
-    * instead of NPE-ing — the empty-input robustness contract. */
-  private def maxTsOrEpoch(df: DataFrame): java.sql.Timestamp =
-    Option(df.agg(max(col("ts"))).collect()(0).getTimestamp(0))
-      .getOrElse(new java.sql.Timestamp(0L))
+  /** events as canonical (entity, value, ts) triples. */
+  private def triples(ev: DataFrame): DataFrame =
+    ev.select(col("user_id").as("entity"), col("value"), col("ts"))
 
-  /** Run independent Spark actions concurrently (guide §2.6 "overlap
-    * independent jobs"): the stream-replay fixtures write their left and
-    * right inputs as two small jobs the driver otherwise serializes
-    * end-to-end — each is a near-single-task job, so overlapping them
-    * halves the fixture-setup wall time without contending for cores. */
-  private def awaitAll(fs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // Await EVERY future before propagating a failure: throwing on the
-    // first would leave sibling fixture writers still appending to the
-    // temp dir while the caller unwinds. Secondary failures ride along
-    // as suppressed exceptions instead of vanishing.
-    val done = fs.map(f => Future(f()))
-      .map(fut => scala.util.Try(Await.result(fut, Duration.Inf)))
-    val failures = done.collect { case scala.util.Failure(e) => e }
-    failures.headOption.foreach { first =>
-      failures.drop(1).foreach(first.addSuppressed)
-      throw first
-    }
+  /** The click and the purchase triples, one replay file each. */
+  private def clicksAndPurchases(s: SparkSession, dir: String): Seq[Frame] = {
+    val ev = events(s, dir)
+    Seq("click", "purchase")
+      .map(typ => Frame(triples(ev.filter(col("event_type") === typ)), 1))
   }
-
-  /** Streaming state-store partition count for the stateful replay
-    * fixtures. The floor of 8 is MEASURED at this state size (~150
-    * entities): cores-sized stores (32) regressed the interval joins
-    * 3.78 → 9.9 s because per-store open/commit cost dominates tiny
-    * state. It is not a local[32] constant though — state scales with
-    * input, so the store count grows with the session's parallelism
-    * (a quarter of the cores keeps each store big enough to amortize
-    * its commit); `spark.graft.statePartitions` overrides for callers
-    * that know their state size. Partition count never affects the
-    * emitted rows — only the state-store layout. */
-  private def statePartitions(s: SparkSession): String =
-    s.conf.getOption("spark.graft.statePartitions").getOrElse(
-      math.max(8, s.sparkContext.defaultParallelism / 4).toString)
-
-  private val statePartitionsLock = new Object
-
-  /** Runs `start` with `spark.sql.shuffle.partitions` at [[statePartitions]]
-    * and restores the previous value after it: a streaming query pins its
-    * state partitioning when it starts. The conf is session-global and
-    * Verify runs queries on several threads, so one lock spans the get,
-    * set, start and restore — two stream fixtures that interleaved there
-    * could leave the session at the state value. */
-  private def withStatePartitions[T](s: SparkSession)(start: => T): T =
-    statePartitionsLock.synchronized {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-      try start finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    }
 
   // ------------------------------------------------------------------ T1/T2
   // SQL transformation with {{source}} templating, full SparkSQL passthrough.
@@ -1711,11 +1666,8 @@ object SparkEntry {
       val publishOk = if (latestBytes == published) 1.0 else 0.0
       // -------- 3. streaming curation over the published snapshot
       val snapshot = s.read.parquet(published)
-      // state-partition floor for the keepers stream — this was the one
-      // streaming site without it (OPTIMIZATION_r15.md: its stateful
-      // aggregate ran one state store per session shuffle partition)
-      val keepers = withStatePartitions(s)(graft.streaming.StreamingDedup
-        .exactKeepersFileStream(s, published))
+      val keepers = graft.streaming.StreamingDedup
+        .exactKeepersFileStream(s, StreamRun.Written(published))
       val cleanCount = snapshot.count()
       // coalesce: SUM over an EMPTY keeper table is NULL (the empty-input
       // robustness contract — an empty corpus must chain through cleanly)
@@ -2038,23 +1990,15 @@ object SparkEntry {
     * batch tie-break) must equal the batch materialization, which is what
     * the oracle computes. */
   private def streamingLatest(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_stream").toString
-    events(s, dir).select(col("user_id").as("entity"), col("value"), col("ts"))
-      .repartition(4).write.parquet(s"$tmp/in") // 4 files → 2 micro-batches
-    val stream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/in",
-      maxFilesPerTrigger = 2)
-    val table = s"stream_latest_${System.nanoTime()}"
-    // small state partitioning for the 150-entity state (see streamAsOf)
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(
-      graft.streaming.StreamingLatest.latestValueStream(s, stream)
-      .writeStream.outputMode("update").format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
+    // 4 files → 2 micro-batches
+    val rows = StreamRun.replay(s, "stream_latest", Seq(Frame(triples(events(s, dir)), 4)),
+        maxFilesPerTrigger = 2, outputMode = "update") { streams =>
+      graft.streaming.StreamingLatest.latestValueStream(s, streams.head).toDF()
+    }
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("entity"))
       .orderBy(col("ts").desc, col("value").desc)
-    s.table(table)
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    rows.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select(col("entity"), col("value"), unix_millis(col("ts")).as("ts_ms"))
   }
 
@@ -2067,16 +2011,14 @@ object SparkEntry {
     * not corpus-sized), not an engine path. */
   private def streamOnlineServe(s: SparkSession, dir: String): DataFrame = {
     val tmp = TempDirs.create("graft_so").toString
-    events(s, dir).select(col("user_id").as("entity"), col("value"), col("ts"))
-      .repartition(4).write.parquet(s"$tmp/in")
-    val stream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/in",
-      maxFilesPerTrigger = 2)
     val kvDir = s"$tmp/kv"
-    val q = withStatePartitions(s)(graft.streaming.StreamingOnline.onlineSink(
-      graft.streaming.StreamingLatest.latestValueStream(s, stream).toDF(),
-      "so_feat", () => new graft.serving.DiskKv(kvDir), s"$tmp/ckpt",
-      availableNow = true))
-    graft.streaming.StreamRun.await(q)
+    StreamRun.replayTo(s, Seq(Frame(triples(events(s, dir)), 4)),
+        maxFilesPerTrigger = 2) { streams =>
+      graft.streaming.StreamingOnline.onlineSink(
+        graft.streaming.StreamingLatest.latestValueStream(s, streams.head).toDF(),
+        "so_feat", () => new graft.serving.DiskKv(kvDir), s"$tmp/ckpt",
+        availableNow = true)
+    }
     import s.implicits._
     new graft.serving.DiskKv(kvDir).scan("so_feat").map { case (e, v) =>
       val r = v.asInstanceOf[org.apache.spark.sql.Row]
@@ -2098,24 +2040,16 @@ object SparkEntry {
     val emb = t(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("entity"),
         col("embedding").as("vector"))
-    awaitAll(
-      () => emb.repartition(4).write.parquet(s"$tmp/in1"),
-      () => emb.filter(col("entity") % 10 === 0)
-        .withColumn("vector", transform(col("vector"), x => -x))
-        .repartition(2).write.parquet(s"$tmp/in2"))
     val kvDir = s"$tmp/kv"
-    withStatePartitions(s) {
-      def run(in: String, ckpt: String, base: Long): Unit = {
-        val stream = s.readStream.schema("entity long, vector array<float>")
-          .option("maxFilesPerTrigger", 2).parquet(in)
-        val q = graft.streaming.StreamingOnline.vectorSink(stream, "sv_emb",
+    def run(frame: DataFrame, files: Int, ckpt: String, base: Long): Unit =
+      StreamRun.replayTo(s, Seq(Frame(frame, files)), maxFilesPerTrigger = 2) { streams =>
+        graft.streaming.StreamingOnline.vectorSink(streams.head, "sv_emb",
           () => new graft.serving.DiskKv(kvDir), ckpt, versionBase = base,
           availableNow = true)
-        graft.streaming.StreamRun.await(q)
       }
-      run(s"$tmp/in1", s"$tmp/ckpt1", 0L)
-      run(s"$tmp/in2", s"$tmp/ckpt2", 1000L)
-    }
+    run(emb, 4, s"$tmp/ckpt1", 0L)
+    run(emb.filter(col("entity") % 10 === 0)
+      .withColumn("vector", transform(col("vector"), x => -x)), 2, s"$tmp/ckpt2", 1000L)
     val store = new graft.serving.OnlineStore(new graft.serving.DiskKv(kvDir))
     // probe vectors = the post-overwrite state, derived independently of
     // the store (negation rule re-applied driver-side)
@@ -2140,12 +2074,9 @@ object SparkEntry {
     * exactly the batch all-pairs Hamming ≤ 3 answer (the
     * simhash_near_dups_bounded oracle): the pigeonhole recall guarantee
     * holds online, micro-batch boundaries included. */
-  private def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sdedup").toString
-    t(s, dir, "documents").select(col("doc_id"), col("text"))
-      .repartition(6).write.parquet(s"$tmp/in")
-    withStatePartitions(s)(graft.streaming.StreamingDedup.runFileStream(s, s"$tmp/in"))
-  }
+  private def streamDedup(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.StreamingDedup.runFileStream(s,
+      Frame(t(s, dir, "documents").select(col("doc_id"), col("text")), 6))
 
   /** Recent-window streaming near-dup under the gate: every doc gets a
     * deterministic event time (`2024-01-01 + (doc_id % 1440) minutes`, a
@@ -2156,16 +2087,13 @@ object SparkEntry {
     * restricted to `|Δts| ≤ 30 min`, which the oracle replays as a pure
     * doc_id predicate. (Pruning/GC behavior is proven separately in
     * StreamingDedupTtlSpec with stepped watermarks.) */
-  private def streamDedupTtl(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sdedupt").toString
-    t(s, dir, "documents").select(col("doc_id"),
+  private def streamDedupTtl(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.StreamingDedup.runFileStreamTtl(s,
+      Frame(t(s, dir, "documents").select(col("doc_id"),
         expr("timestamp '2024-01-01 00:00:00' + make_interval(0,0,0,0,0, " +
           "cast(doc_id % 1440 as int), 0)").as("ts"),
-        col("text"))
-      .repartition(6).write.parquet(s"$tmp/in")
-    withStatePartitions(s)(graft.streaming.StreamingDedup.runFileStreamTtl(s, s"$tmp/in",
-      ttlMs = 30L * 60 * 1000, delay = "2 days"))
-  }
+        col("text")), 6),
+      ttlMs = 30L * 60 * 1000, delay = "2 days")
 
   /** Streaming decontamination under the gate: the corpus replayed through
     * a file stream against the eval-set Bloom built batch-side
@@ -2179,11 +2107,9 @@ object SparkEntry {
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val eval = docs.filter(col("doc_id") % 10 === 0)
-    val tmp = TempDirs.create("graft_sdecon").toString
-    corpus.select(col("doc_id"), col("text")).repartition(6)
-      .write.parquet(s"$tmp/in")
     val flagged = graft.streaming.StreamingDecontam.runFileStream(
-      s, s"$tmp/in", eval, n = 8, numProbes = 5, mBits = 1 << 20)
+      s, Frame(corpus.select(col("doc_id"), col("text")), 6), eval,
+      n = 8, numProbes = 5, mBits = 1 << 20)
     flagged
       .join(Decontam.contaminated(corpus, eval, "text", "doc_id", n = 8)
         .withColumnRenamed("n_hits", "n_exact_hits"), Seq("doc_id"), "left")
@@ -2238,23 +2164,6 @@ object SparkEntry {
     * every label flushes. The emitted set must equal the batch as-of join,
     * which the oracle computes. */
   private def streamAsOf(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sasof").toString
-    val ev = events(s, dir)
-    val feats = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("entity"), col("value"), col("ts"))
-    val lbls = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("entity"), col("value"), col("ts"))
-    @volatile var maxTs = new java.sql.Timestamp(0L)
-    awaitAll(
-      () => feats.coalesce(1).write.parquet(s"$tmp/f"),
-      () => lbls.coalesce(1).write.parquet(s"$tmp/l"),
-      () => maxTs = maxTsOrEpoch(ev))
-    def sentinel(offsetDays: Int): DataFrame = {
-      import s.implicits._
-      Seq((-1L, 0.0, new java.sql.Timestamp(
-        maxTs.getTime + (3650L + offsetDays) * 86400000L)))
-        .toDF("entity", "value", "ts")
-    }
     // The sentinel lands BEFORE the query starts, so micro-batch 1 ingests
     // data + watermark-push together (watermark is still 0 during the batch
     // ⇒ every label pends and arms its wm+1 timeout, and the batch's max
@@ -2264,33 +2173,18 @@ object SparkEntry {
     // step before self-termination, not a race — whose watermark fires
     // every armed timeout: a 2-stateful-batch lifecycle instead of the
     // previous 4-5. The finer multi-batch interleavings are covered by
-    // StreamingAsOfSpec.
-    awaitAll(
-      () => sentinel(1).write.mode("append").parquet(s"$tmp/f"),
-      () => sentinel(1).write.mode("append").parquet(s"$tmp/l"))
-
-    val fStream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/f", 8)
-    val lStream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/l", 8)
-    // delay > the whole data span ⇒ nothing is ever watermark-late
-    val joined = graft.streaming.StreamingAsOf.asOfStream(s, lStream, fStream,
-      delayThreshold = "3650 days")
-    val table = s"stream_asof_${System.nanoTime()}"
-    // 150 entities don't need 32 state-store partitions; the query pins its
-    // state partitioning at start, so the conf is restored right after
-    // (partition count never affects results). Measured: the RocksDB state
-    // store provider is ~20% SLOWER here (per-instance native init dwarfs
-    // this tiny state) — it's the right provider only once per-partition
-    // state outgrows the heap, so the default HDFS-backed store stays.
-    // pin the no-data-batch contract the lifecycle above relies on (it is
-    // the Spark default, but the flush would silently hang without it)
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
-      .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.table(table).filter(col("entity") >= 0)
-      .select(col("entity"), unix_millis(col("ts")).as("ts_ms"),
-        col("label"), col("feature"))
+    // StreamingAsOfSpec. Measured: the RocksDB state store provider is
+    // ~20% SLOWER here (per-instance native init dwarfs this tiny state) —
+    // it's the right provider only once per-partition state outgrows the
+    // heap, so the default HDFS-backed store stays.
+    StreamRun.replay(s, "stream_asof", clicksAndPurchases(s, dir),
+        maxFilesPerTrigger = 8, Some(Sentinel(3651, "value" -> 0.0))) {
+      case Seq(feats, labels) =>
+        // delay > the whole data span ⇒ nothing is ever watermark-late
+        graft.streaming.StreamingAsOf.asOfStream(s, labels, feats,
+          delayThreshold = "3650 days").toDF()
+    }.select(col("entity"), unix_millis(col("ts")).as("ts_ms"),
+      col("label"), col("feature"))
   }
 
   // --------------------------------------- K8: Kafka-write emulation (sink)
@@ -3211,40 +3105,21 @@ object SparkEntry {
     * watermark past every real session. Output must equal the batch
     * sessionization, which the oracle computes. */
   private def streamingSessions(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_ssess").toString
     val ev = events(s, dir).select(col("user_id"), col("value"), col("ts"))
-    @volatile var maxTs = new java.sql.Timestamp(0L) // scalar sentinel anchor
-    awaitAll(
-      () => ev.repartition(4).write.parquet(s"$tmp/in"),
-      () => maxTs = maxTsOrEpoch(ev))
-    import s.implicits._
-    Seq((-1L, 0.0, new java.sql.Timestamp(maxTs.getTime + 86400000L)))
-      .toDF("user_id", "value", "ts")
-      .write.mode("append").parquet(s"$tmp/in")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    // few state partitions for the 150-user state
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
-      .withWatermark("ts", "0 seconds")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("__w"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
-        max(unix_millis(col("ts"))).as("last_ts_ms"))
-      .select(col("user_id"),
-        unix_millis(col("__w.start")).as("session_start_ms"),
-        col("n_events"), col("sum_value"), col("last_ts_ms"))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.read.parquet(s"$tmp/out").where(col("user_id") =!= -1L)
+    // the sentinel, a day past the data, rides alone in micro-batch 2
+    StreamRun.replay(s, "streaming_sessions", Seq(Frame(ev, 4)),
+        maxFilesPerTrigger = 4, Some(Sentinel(1, "value" -> 0.0))) { streams =>
+      streams.head
+        .withWatermark("ts", "0 seconds")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("__w"))
+        .agg(
+          count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
+          max(unix_millis(col("ts"))).as("last_ts_ms"))
+        .select(col("user_id"),
+          unix_millis(col("__w.start")).as("session_start_ms"),
+          col("n_events"), col("sum_value"), col("last_ts_ms"))
+    }
   }
 
   /** Exact NDV next to the md5-HLL estimate per source — the custom
@@ -3323,40 +3198,22 @@ object SparkEntry {
     * doubles and the gate goes red. State is keyed by event_id only
     * (bounded by the id domain; a production pipeline bounds it with
     * dropDuplicatesWithinWatermark on the event-time column instead). */
-  private def streamingDedup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sdd").toString
-    // persist: both delivery writes (which must stay SEQUENTIAL — the
-    // second delivery's later file mtimes put the duplicates in a later
-    // micro-batch, the cross-batch state the gate exercises) re-read the
-    // same projected events scan
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"), col("value"), col("ts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ev.repartition(4).write.parquet(s"$tmp/in")
-    ev.repartition(4).write.mode("append").parquet(s"$tmp/in") // second delivery
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    // few state partitions for the 150-entity state, not 32 stores
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
-      .dropDuplicates("event_id")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.read.parquet(s"$tmp/out")
+  private def streamingDedup(s: SparkSession, dir: String): DataFrame =
+    deliveredTwice(s, dir, "streaming_dedup")(_.dropDuplicates("event_id"))
+
+  /** The events delivered twice through a file stream (4 + 4 files, 4 per
+    * micro-batch: the second delivery's newer files put the duplicates in
+    * later micro-batches, the cross-batch state the gate exercises),
+    * deduplicated by `dedup` and rolled up per user. */
+  private def deliveredTwice(s: SparkSession, dir: String, name: String)
+                            (dedup: DataFrame => DataFrame): DataFrame =
+    StreamRun.replay(s, name, Seq(Frame(events(s, dir)
+        .select(col("event_id"), col("user_id"), col("value"), col("ts")),
+        4, deliveries = 2)), maxFilesPerTrigger = 4)(streams => dedup(streams.head))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
         max(unix_millis(col("ts"))).as("max_ts_ms"))
-  }
 
   /** The production-bounded form of streaming_dedup:
     * `dropDuplicatesWithinWatermark` keys state by event_id but EVICTS
@@ -3364,41 +3221,13 @@ object SparkEntry {
     * is time-bounded instead of id-domain-bounded. The doubled delivery
     * lands within one watermark window here, so the result must equal
     * the unbounded dedup (and the same batch oracle). */
-  private def streamingDedupWm(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sdw").toString
-    // persist: same two-sequential-delivery shape as streamingDedup
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"), col("value"), col("ts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ev.repartition(4).write.parquet(s"$tmp/in")
-    ev.repartition(4).write.mode("append").parquet(s"$tmp/in")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 4).parquet(s"$tmp/in")
+  private def streamingDedupWm(s: SparkSession, dir: String): DataFrame =
+    deliveredTwice(s, dir, "streaming_dedup_wm")(
       // delay >= the whole corpus span: every duplicate arrives while its
       // first copy's state is still live (the correctness precondition
       // the operator's docs pin; shrink the delay to trade memory for a
       // duplicate-horizon bound)
-      .withWatermark("ts", "60 days")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.read.parquet(s"$tmp/out")
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"),
-        max(unix_millis(col("ts"))).as("max_ts_ms"))
-  }
+      _.withWatermark("ts", "60 days").dropDuplicatesWithinWatermark("event_id"))
 
   /** Semi-structured JSON properties: extract `$.k` from the events
     * props column in the scan projection (codegen'd path expression, no
@@ -3690,41 +3519,17 @@ object SparkEntry {
     * stream_asof convention, incl. the watermark-push sentinel and the
     * 2-stateful-batch lifecycle). */
   private def streamingFunnelQ(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sfun").toString
     val ev = events(s, dir)
       .select(col("user_id").as("user"), col("event_type").as("typ"),
         col("ts"))
       .where(col("typ").isin("view", "click", "purchase"))
-    @volatile var maxTs = new java.sql.Timestamp(0L)
-    awaitAll(
-      () => ev.coalesce(1).write.parquet(s"$tmp/in"),
-      () => maxTs = maxTsOrEpoch(events(s, dir)))
-    locally { // sentinel pushes the final watermark past anchor + horizon
-      import s.implicits._
-      Seq((-1L, "view", new java.sql.Timestamp(
-        maxTs.getTime + 3652L * 86400000L)))
-        .toDF("user", "typ", "ts")
-        .write.mode("append").parquet(s"$tmp/in")
+    // the sentinel pushes the final watermark past anchor + horizon
+    val d = StreamRun.replay(s, "stream_funnel", Seq(Frame(ev, 1)),
+        maxFilesPerTrigger = 8, Some(Sentinel(3652, "typ" -> "view"))) { streams =>
+      graft.streaming.StreamingFunnel.funnelStream(
+        s, streams.head, Seq("view", "click", "purchase"), horizonSeconds = 86400,
+        delayThreshold = "3650 days").toDF()
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("typ",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 8).parquet(s"$tmp/in")
-    val depths = graft.streaming.StreamingFunnel.funnelStream(
-      s, stream, Seq("view", "click", "purchase"), horizonSeconds = 86400,
-      delayThreshold = "3650 days")
-    val table = s"stream_funnel_${System.nanoTime()}"
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(depths.writeStream.outputMode("append")
-      .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    val d = s.table(table).where(col("user") >= 0)
     Seq(("view", 1), ("click", 2), ("purchase", 3)).map { case (name, k) =>
       d.agg(sum(when(col("depth") >= k, 1L).otherwise(0L)).as("__n"))
         .select(lit(k).cast("int").as("step_idx"), lit(name).as("step"),
@@ -3738,44 +3543,17 @@ object SparkEntry {
     * one oracle, two execution models (the streaming_funnel
     * convention). */
   private def streamingCusumQ(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_scus").toString
     val ev = events(s, dir)
       .select(col("user_id").as("key"), col("event_id").as("id"),
         col("ts"), col("value").as("x"))
-    @volatile var maxTs = new java.sql.Timestamp(0L)
-    awaitAll(
-      () => ev.coalesce(1).write.parquet(s"$tmp/in"),
-      () => maxTs = maxTsOrEpoch(events(s, dir)))
-    locally { // sentinel pushes the final watermark past every real row
-      import s.implicits._
-      Seq((-1L, -1L, new java.sql.Timestamp(
-        maxTs.getTime + 3652L * 86400000L), 0.0))
-        .toDF("key", "id", "ts", "x")
-        .write.mode("append").parquet(s"$tmp/in")
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 8).parquet(s"$tmp/in")
-    val sums = graft.streaming.StreamingCusum.cusumStream(
-      s, stream, target = 250.0, slack = 25.0, h = 500.0,
-      delayThreshold = "3650 days")
-    val table = s"stream_cusum_${System.nanoTime()}"
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(sums.toDF().writeStream.outputMode("append")
-      .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.table(table).where(col("key") >= 0)
-      .select(col("key").as("user_id"), col("n_events"), col("n_alarms"),
-        col("first_alarm_ms"), col("max_stat"))
+    // the sentinel pushes the final watermark past every real row
+    StreamRun.replay(s, "stream_cusum", Seq(Frame(ev, 1)), maxFilesPerTrigger = 8,
+        Some(Sentinel(3652, "id" -> -1L, "x" -> 0.0))) { streams =>
+      graft.streaming.StreamingCusum.cusumStream(
+        s, streams.head, target = 250.0, slack = 25.0, h = 500.0,
+        delayThreshold = "3650 days").toDF()
+    }.select(col("key").as("user_id"), col("n_events"), col("n_alarms"),
+      col("first_alarm_ms"), col("max_stat"))
   }
 
   /** Streaming heartbeat-gap alerts under the gate: every >12 h pause
@@ -3783,39 +3561,14 @@ object SparkEntry {
     * watermark finalizes each pair — must equal the batch LEAD
     * formulation (the streaming_cusum fold pattern, alert-shaped). */
   private def streamingGapsQ(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sgap").toString
     val ev = events(s, dir)
       .select(col("user_id").as("key"), col("event_id").as("id"), col("ts"))
-    @volatile var maxTs = new java.sql.Timestamp(0L)
-    awaitAll(
-      () => ev.coalesce(1).write.parquet(s"$tmp/in"),
-      () => maxTs = maxTsOrEpoch(events(s, dir)))
-    locally {
-      import s.implicits._
-      Seq((-1L, -1L, new java.sql.Timestamp(
-        maxTs.getTime + 3652L * 86400000L)))
-        .toDF("key", "id", "ts").write.mode("append").parquet(s"$tmp/in")
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 8).parquet(s"$tmp/in")
-    val gaps = graft.streaming.StreamingGaps.gapStream(
-      s, stream, gapSeconds = 43200L, delayThreshold = "3650 days")
-    val table = s"stream_gaps_${System.nanoTime()}"
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(gaps.toDF().writeStream.outputMode("append")
-      .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.table(table).where(col("key") >= 0)
-      .select(col("key").as("user_id"), col("prev_ms"), col("next_ms"),
-        col("gap_s"))
+    StreamRun.replay(s, "stream_gaps", Seq(Frame(ev, 1)), maxFilesPerTrigger = 8,
+        Some(Sentinel(3652, "id" -> -1L))) { streams =>
+      graft.streaming.StreamingGaps.gapStream(
+        s, streams.head, gapSeconds = 43200L, delayThreshold = "3650 days").toDF()
+    }.select(col("key").as("user_id"), col("prev_ms"), col("next_ms"),
+      col("gap_s"))
   }
 
   /** Kaplan–Meier time-to-conversion: first signup → first later
@@ -3985,33 +3738,24 @@ object SparkEntry {
     * inner-join pairs emit as matches arrive (watermarks bound state, not
     * emission), so the emitted set must equal the batch interval join —
     * which the oracle computes. */
-  private def streamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sij").toString
-    val ev = events(s, dir)
-    awaitAll(
-      () => ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("entity"), col("value"), col("ts"))
-        .coalesce(1).write.parquet(s"$tmp/l"),
-      () => ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("entity"), col("value"), col("ts"))
-        .coalesce(1).write.parquet(s"$tmp/r"))
-    val lStream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/l", 8)
-    val rStream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/r", 8)
-    val joined = graft.streaming.StreamingJoin.intervalJoin(
-      lStream, rStream, delayThreshold = "3650 days", lenSeconds = 7200L)
-    val table = s"stream_ij_${System.nanoTime()}"
-    // 8 state partitions, MEASURED: cores-sized state partitions (32) were
-    // tried this round on the ~20 s-of-task-time join and regressed the
-    // query 3.78 → 9.9 s min — per-partition state-store load/commit cost
-    // dominates the added parallelism at this state size. Partition count
-    // never affects the emitted set.
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
-      .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.table(table).select(col("entity"),
-      unix_millis(col("l_ts")).as("l_ts_ms"), col("l_value"),
-      unix_millis(col("r_ts")).as("r_ts_ms"), col("r_value"))
+  private def streamIntervalJoin(s: SparkSession, dir: String): DataFrame =
+    intervalJoinReplay(s, dir, "stream_ij", "inner", sentinel = None)
+
+  /** Clicks and purchases replayed through two file streams (one file
+    * each, one micro-batch) into the 2-hour interval join. Its state
+    * partitions stay at the replay's small count: cores-sized ones (32)
+    * were measured on the ~20 s-of-task-time join and regressed the query
+    * 3.78 → 9.9 s min, since per-partition state-store load/commit cost
+    * dominates the added parallelism at this state size. */
+  private def intervalJoinReplay(s: SparkSession, dir: String, name: String,
+                                 joinType: String,
+                                 sentinel: Option[StreamRun.Sentinel]): DataFrame = {
+    StreamRun.replay(s, name, clicksAndPurchases(s, dir),
+        maxFilesPerTrigger = 8, sentinel) { case Seq(clicks, purchases) =>
+      graft.streaming.StreamingJoin.intervalJoin(clicks, purchases,
+        delayThreshold = "3650 days", lenSeconds = 7200L, joinType = joinType)
+    }.select(col("entity"), unix_millis(col("l_ts")).as("l_ts_ms"),
+      col("l_value"), unix_millis(col("r_ts")).as("r_ts_ms"), col("r_value"))
   }
 
   /** Product-quantization codes over the embeddings corpus: 4 subspaces
@@ -4188,19 +3932,15 @@ object SparkEntry {
     * micro-batch): the event stream joined to customer market segments;
     * emitted rows must equal the batch join. */
   private def streamStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_ssj").toString
-    events(s, dir).select(col("user_id").as("entity"), col("value"), col("ts"))
-      .coalesce(2).write.parquet(s"$tmp/in")
     val dim = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val stream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/in", 1)
-      .join(broadcast(dim), col("entity") + 1 === col("c_custkey"), "left")
-      .select(col("entity"), unix_millis(col("ts")).as("ts_ms"), col("value"),
-        col("c_mktsegment").as("segment"))
-    val table = s"stream_ssj_${System.nanoTime()}"
-    graft.streaming.StreamRun.drain(stream.writeStream.outputMode("append")
-      .format("memory").queryName(table))
-    s.table(table)
+    StreamRun.replay(s, "stream_ssj", Seq(Frame(triples(events(s, dir)), 2)),
+        maxFilesPerTrigger = 1) { streams =>
+      streams.head
+        .join(broadcast(dim), col("entity") + 1 === col("c_custkey"), "left")
+        .select(col("entity"), unix_millis(col("ts")).as("ts_ms"), col("value"),
+          col("c_mktsegment").as("segment"))
+    }
   }
 
   /** ADC search over the PQ codes: every corpus vector whose id is a
@@ -4275,44 +4015,9 @@ object SparkEntry {
     * watermark proves no late match can arrive (sentinels push it past
     * the data; one no-data batch flushes). Oracle = the batch left
     * join. */
-  private def streamIntervalJoinOuter(s: SparkSession, dir: String): DataFrame = {
-    val tmp = TempDirs.create("graft_sijo").toString
-    val ev = events(s, dir)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("entity"), col("value"), col("ts"))
-    val purch = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("entity"), col("value"), col("ts"))
-    @volatile var maxTs = new java.sql.Timestamp(0L)
-    awaitAll(
-      () => clicks.coalesce(1).write.parquet(s"$tmp/l"),
-      () => purch.coalesce(1).write.parquet(s"$tmp/r"),
-      () => maxTs = maxTsOrEpoch(ev))
-    def sentinel: DataFrame = {
-      import s.implicits._
-      Seq((-1L, 0.0, new java.sql.Timestamp(
-        maxTs.getTime + 3651L * 86400000L))).toDF("entity", "value", "ts")
-    }
-    awaitAll(
-      () => sentinel.write.mode("append").parquet(s"$tmp/l"),
-      () => sentinel.write.mode("append").parquet(s"$tmp/r"))
-    val lStream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/l", 8)
-    val rStream = graft.streaming.StreamingLatest.readTripleStream(s, s"$tmp/r", 8)
-    val joined = graft.streaming.StreamingJoin.intervalJoin(
-      lStream, rStream, delayThreshold = "3650 days", lenSeconds = 7200L,
-      joinType = "leftOuter")
-    val table = s"stream_ijo_${System.nanoTime()}"
-    // 8 state partitions — cores-sized was measured worse, see
-    // stream_interval_join
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q = withStatePartitions(s)(graft.streaming.StreamRun.start(joined.writeStream.outputMode("append")
-      .format("memory").queryName(table)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-    graft.streaming.StreamRun.await(q)
-    s.table(table).filter(col("entity") >= 0)
-      .select(col("entity"), unix_millis(col("l_ts")).as("l_ts_ms"),
-        col("l_value"), unix_millis(col("r_ts")).as("r_ts_ms"),
-        col("r_value"))
-  }
+  private def streamIntervalJoinOuter(s: SparkSession, dir: String): DataFrame =
+    intervalJoinReplay(s, dir, "stream_ijo", "leftOuter",
+      Some(Sentinel(3651, "value" -> 0.0)))
 
   /** Jaro-Winkler record linkage over 40-char document-name prefixes,
     * blocked on the first token — finds the planted near-dup families the

@@ -12,13 +12,18 @@ final case class ResourceId(name: String, variant: String = "default") {
 
 object ResourceId {
   /** Inverse of `toString` for the `name.variant` key string: splits at the
-    * last '.', so a name may hold dots but a variant may not (the wire
-    * Create handlers refuse a dotted variant); no '.' → the default variant. */
+    * last '.', so a name may hold dots but a variant may not (the catalog
+    * refuses a dotted variant); no '.' → the default variant. */
   def parse(key: String): ResourceId = {
     val i = key.lastIndexOf('.')
     if (i < 0) ResourceId(key) else ResourceId(key.take(i), key.drop(i + 1))
   }
 }
+
+/** A variant holding '.': its `name.variant` key string would not split
+  * back, so the catalog refuses to register it. */
+final class DottedVariant(id: ResourceId)
+  extends IllegalArgumentException(s"variant '${id.variant}' must not contain '.'")
 
 /** A versioned resource — one (name, variant) of a source, feature,
   * on-demand feature, label or training set. */
@@ -148,6 +153,7 @@ final class Catalog(spark: SparkSession) {
 
   private def put[V](m: mutable.Map[ResourceId, V], id: ResourceId, v: V): V =
     synchronized {
+      if (id.variant.contains('.')) throw new DottedVariant(id)
       m.get(id) match {
         case Some(existing) if existing == v => existing
         case Some(_) =>

@@ -76,7 +76,7 @@ object Lineage {
         t -> rs.count(_.runKey == lk)
     }
     val rows = edges(cat).map { case (res, typ, on, onTyp) =>
-      val name = res.split('.').head
+      val name = ResourceId.parse(res).name
       (res, typ, on.orNull, onTyp.orNull,
         latest.get(name).map(_.status).orNull,
         attempts.getOrElse(name, 0).toLong)

@@ -388,7 +388,7 @@ object Scheduler {
     cat.allProperties.collect {
       case (k, ps) if ps.get("__schedule").orElse(ps.get("schedule"))
         .exists(_.nonEmpty) =>
-        (k.id.split('.').head, (k.kind, k.id),
+        (graft.catalog.ResourceId.parse(k.id).name, (k.kind, k.id),
           ps.get("__schedule").orElse(ps.get("schedule")).get)
     }
       .groupBy(_._1)

@@ -130,12 +130,16 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     if (key.kind == "FEATURE") keyIn(Families("FEATURE")._2, key.id) else key
 
   /** The registration tail every Create handler shares: add the resource
-    * (a conflicting re-registration is ALREADY_EXISTS), then store its
+    * (a conflicting re-registration is ALREADY_EXISTS, a variant the
+    * catalog refuses as dotted INVALID_ARGUMENT), then store its
     * wire metadata, tags and properties and mark it CREATED. */
   private def register(key: ResourceKey, meta: Seq[(String, String)],
                        tags: Seq[String], props: Seq[(String, String)])
                       (add: => Any): Array[Byte] = {
-    try add catch { case e: IllegalArgumentException => conflict(e) }
+    try add catch {
+      case e: DottedVariant => invalid(e.getMessage)
+      case e: IllegalArgumentException => conflict(e)
+    }
     setMeta(key, meta: _*)
     if (tags.nonEmpty) catalog.addTags(key, tags)
     if (props.nonEmpty) catalog.setProperties(key, props.toMap)
@@ -390,15 +394,11 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
 
   // ------------------------------------------------------ Create handlers
 
-  /** Create*VariantRequest{variant=1}: decode, refuse a dotted variant (the
-    * `name.variant` key string could not be split back), register. */
+  /** Create*VariantRequest{variant=1}: decode, register. */
   private def createVariant(what: String, decode: R => Decoded)
                            (req: Array[Byte]): Array[Byte] = {
     val d = decode(firstSlice(req, 1).getOrElse(invalid(s"$what required")))
-    val id = d.res.id
-    if (id.variant.contains('.'))
-      invalid(s"variant '${id.variant}' must not contain '.'")
-    register(ResourceKey(d.kind, id.toString), d.meta, d.tags, d.props) {
+    register(ResourceKey(d.kind, d.res.id.toString), d.meta, d.tags, d.props) {
       d.res match {
         case s: SourceVariant => catalog.registerSource(s)
         case f: FeatureVariant => catalog.registerFeature(f)
@@ -841,15 +841,10 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     w.str(1, name)
     writeStatus(w, 2, key)
     def owned(kind: String): Seq[ResourceId] = kind match {
-      case "FEATURE" => (catalog.allFeatures.map(_.id) ++
-        catalog.allOnDemands.map(_.id)).filter(id =>
-        ownerOf("FEATURE", "ON_DEMAND", id) == name)
-      case "LABEL" => catalog.allLabels.map(_.id)
-        .filter(id => prop(ResourceKey("LABEL", id.toString), "__owner").contains(name))
-      case "TRAINING_SET" => catalog.allTrainingSets.map(_.id)
-        .filter(id => prop(ResourceKey("TRAINING_SET", id.toString), "__owner").contains(name))
-      case _ => catalog.allSources.map(_.id)
-        .filter(id => prop(ResourceKey("SOURCE", id.toString), "__owner").contains(name))
+      case "FEATURE" => (live("FEATURE") ++ live("ON_DEMAND")).map(_.id)
+        .filter(id => ownerOf("FEATURE", "ON_DEMAND", id) == name)
+      case _ => live(kind).map(_.id)
+        .filter(id => prop(ResourceKey(kind, id.toString), "__owner").contains(name))
     }
     owned("FEATURE").foreach(id => w.msg(3)(writeNV(_, id)))
     owned("LABEL").foreach(id => w.msg(4)(writeNV(_, id)))
@@ -870,14 +865,14 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     w.str(1, name)
     prop(key, "__description").foreach(w.str(2, _))
     writeStatus(w, 3, key)
-    catalog.allFeatures.filter(_.entity == name)
-      .foreach(f => w.msg(4)(writeNV(_, f.id)))
-    catalog.allLabels.filter(_.mappings.exists(_.entityName == name))
-      .foreach(l => w.msg(5)(writeNV(_, l.id)))
-    val entLabels = catalog.allLabels
-      .filter(_.mappings.exists(_.entityName == name)).map(_.id).toSet
-    catalog.allTrainingSets.filter(t => entLabels.contains(t.label))
-      .foreach(t => w.msg(6)(writeNV(_, t.id)))
+    live("FEATURE").collect { case f: FeatureVariant if f.entity == name => f.id }
+      .foreach(id => w.msg(4)(writeNV(_, id)))
+    val entLabels = live("LABEL").collect {
+      case l: LabelVariant if l.mappings.exists(_.entityName == name) => l.id }
+    entLabels.foreach(id => w.msg(5)(writeNV(_, id)))
+    live("TRAINING_SET").collect {
+      case t: TrainingSetVariant if entLabels.contains(t.label) => t.id }
+      .foreach(id => w.msg(6)(writeNV(_, id)))
     writeTagsProps(w, key, 7, 8)
     w.result()
   }
@@ -894,17 +889,12 @@ final class MetadataServe(catalog: Catalog, port: Int = 0,
     prop(key, "__team").foreach(w.str(5, _))
     prop(key, "__config").foreach(c => w.bytes(6, unb64(c)))
     writeStatus(w, 7, key)
-    def onProvider(kind: String, ids: Seq[ResourceId]): Seq[ResourceId] =
-      ids.filter(id =>
-        prop(ResourceKey(kind, id.toString), "__provider").contains(name))
-    onProvider("SOURCE", catalog.allSources.map(_.id))
-      .foreach(id => w.msg(8)(writeNV(_, id)))
-    onProvider("FEATURE", catalog.allFeatures.map(_.id))
-      .foreach(id => w.msg(9)(writeNV(_, id)))
-    onProvider("TRAINING_SET", catalog.allTrainingSets.map(_.id))
-      .foreach(id => w.msg(10)(writeNV(_, id)))
-    onProvider("LABEL", catalog.allLabels.map(_.id))
-      .foreach(id => w.msg(11)(writeNV(_, id)))
+    Seq("SOURCE" -> 8, "FEATURE" -> 9, "TRAINING_SET" -> 10, "LABEL" -> 11)
+      .foreach { case (kind, field) =>
+        live(kind).map(_.id)
+          .filter(id => prop(ResourceKey(kind, id.toString), "__provider").contains(name))
+          .foreach(id => w.msg(field)(writeNV(_, id)))
+      }
     writeTagsProps(w, key, 12, 13)
     w.result()
   }

@@ -43,33 +43,20 @@ object StreamingDecontam {
   /** End-to-end convenience for the gate and tests: build the filter from
     * `eval` (batch), stream the corpus through a file source, screen every
     * arrival, return the flagged table. */
-  def runFileStream(spark: SparkSession, inDir: String, eval: DataFrame,
+  def runFileStream(spark: SparkSession, input: StreamRun.Input, eval: DataFrame,
                     textCol: String = "text", idCol: String = "doc_id",
                     n: Int = 8, numProbes: Int = 5, mBits: Int = 1 << 20,
                     maxFilesPerTrigger: Int = 4): DataFrame = {
     val filt = graft.functions.Decontam.bloomFilter(
       eval, textCol, n, numProbes, mBits)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(textCol,
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
-    val table = s"stream_decontam_${System.nanoTime()}"
-    val q = StreamRun.start(
-      flaggedStream(stream, textCol, idCol, filt, n, numProbes, mBits)
-        .writeStream.format("memory").queryName(table)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    try {
-      StreamRun.await(q)
-      // the screen must stay stateless — a state store appearing here
-      // means the plan regressed out of the pure-scan shape
-      val prog = q.lastProgress
-      require(prog == null || prog.stateOperators.isEmpty,
+    // the screen must stay stateless — a state store appearing here
+    // means the plan regressed out of the pure-scan shape
+    def stateless(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+      require(q.lastProgress == null || q.lastProgress.stateOperators.isEmpty,
         "streaming decontamination must be stateless")
-    } finally q.stop()
-    spark.table(table)
+    StreamRun.replay(spark, "stream_decontam", Seq(input), maxFilesPerTrigger,
+        check = stateless) { streams =>
+      flaggedStream(streams.head, textCol, idCol, filt, n, numProbes, mBits)
+    }
   }
 }

@@ -209,78 +209,55 @@ object StreamingDedup {
     * long, long) entry per distinct doc — the same digest-keyed shuffle
     * the batch [[graft.functions.Dedup.exact]] pays, held as state; the
     * memory sink is the bounded-gate convenience, a real deployment
-    * writes the keepers to a sink table. Schema is taken from a static
-    * read of `inDir` (the published snapshot being replayed). */
-  def exactKeepersFileStream(spark: SparkSession, inDir: String,
+    * writes the keepers to a sink table. */
+  def exactKeepersFileStream(spark: SparkSession, input: StreamRun.Input,
                              maxFilesPerTrigger: Int = 4,
                              idCol: String = "doc_id",
-                             textCol: String = "text"): DataFrame = {
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
-    val keepers = stream
-      .select(graft.functions.TextFunctions.fingerprintMd5(col(textCol)).as("fp"),
-        col(idCol))
-      .groupBy(col("fp"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("copies"))
-    val table = s"stream_exact_${System.nanoTime()}"
-    StreamRun.drain(keepers.writeStream.format("memory").queryName(table)
-      .outputMode("complete"))
-    spark.table(table)
-  }
+                             textCol: String = "text"): DataFrame =
+    StreamRun.replay(spark, "stream_exact", Seq(input), maxFilesPerTrigger,
+        outputMode = "complete") { streams =>
+      streams.head
+        .select(graft.functions.TextFunctions.fingerprintMd5(col(textCol)).as("fp"),
+          col(idCol))
+        .groupBy(col("fp"))
+        .agg(min(col(idCol)).as(idCol), count(lit(1)).as("copies"))
+    }
 
   /** End-to-end convenience for the gate and tests: stream the docs
     * through a file source, run the matcher to completion, return the
     * DISTINCT canonical pair table — by the pigeonhole guarantee, equal
     * to batch all-pairs Hamming ≤ `maxHamming`. */
-  def runFileStream(spark: SparkSession, inDir: String, maxHamming: Int = 3,
+  def runFileStream(spark: SparkSession, input: StreamRun.Input, maxHamming: Int = 3,
                     maxPerBucket: Int = 2000,
                     maxFilesPerTrigger: Int = 4,
                     idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(textCol,
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
-    val table = s"stream_dedup_${System.nanoTime()}"
-    StreamRun.drain(dupPairsStream(spark, bandedDocs(stream, textCol, idCol),
-        maxHamming, maxPerBucket)
-      .writeStream.format("memory").queryName(table)
-      .outputMode("update"))
-    spark.table(table)
-      .select(col("idA"), col("idB"), col("hamming").cast("long").as("hamming"))
-      .distinct()
-  }
+                    textCol: String = "text"): DataFrame =
+    distinctPairs(StreamRun.replay(spark, "stream_dedup", Seq(input),
+        maxFilesPerTrigger, outputMode = "update") { streams =>
+      dupPairsStream(spark, bandedDocs(streams.head, textCol, idCol),
+        maxHamming, maxPerBucket).toDF()
+    })
 
   /** [[runFileStream]]'s TTL twin: (idCol, tsCol, textCol) parquet files
     * streamed through [[dupPairsStreamTtl]] with watermark `delay`;
     * returns the distinct canonical pair table — for in-watermark data,
     * batch all-pairs Hamming ≤ `maxHamming` restricted to
     * `|tsA − tsB| ≤ ttlMs`. */
-  def runFileStreamTtl(spark: SparkSession, inDir: String, ttlMs: Long,
+  def runFileStreamTtl(spark: SparkSession, input: StreamRun.Input, ttlMs: Long,
                        delay: String = "0 seconds", maxHamming: Int = 3,
                        maxPerBucket: Int = 2000,
                        maxFilesPerTrigger: Int = 4,
                        idCol: String = "doc_id",
                        tsCol: String = "ts",
-                       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField(idCol, LongType),
-      StructField(tsCol, TimestampType), StructField(textCol, StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
-    val table = s"stream_dedup_ttl_${System.nanoTime()}"
-    StreamRun.drain(dupPairsStreamTtl(spark,
-        bandedDocsTs(stream, textCol, idCol, tsCol)
-          .withWatermark("ts", delay),
-        ttlMs, maxHamming, maxPerBucket)
-      .writeStream.format("memory").queryName(table)
-      .outputMode("update"))
-    spark.table(table)
-      .select(col("idA"), col("idB"), col("hamming").cast("long").as("hamming"))
+                       textCol: String = "text"): DataFrame =
+    distinctPairs(StreamRun.replay(spark, "stream_dedup_ttl", Seq(input),
+        maxFilesPerTrigger, outputMode = "update") { streams =>
+      dupPairsStreamTtl(spark,
+        bandedDocsTs(streams.head, textCol, idCol, tsCol).withWatermark("ts", delay),
+        ttlMs, maxHamming, maxPerBucket).toDF()
+    })
+
+  private def distinctPairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("idA"), col("idB"), col("hamming").cast("long").as("hamming"))
       .distinct()
-  }
 }

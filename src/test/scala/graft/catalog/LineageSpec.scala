@@ -56,4 +56,24 @@ class LineageSpec extends SparkSpec {
     // well-formed enough for a JSON parser: balanced and quoted
     assert(json.count(_ == '{') == json.count(_ == '}'))
   }
+
+  test("a dotted resource name keeps its own run status and schedule") {
+    val c = new Catalog(spark)
+    c.registerSource(SourceVariant(ResourceId("tpch"), PrimaryData("/tmp/tpch.parquet")))
+    c.registerSource(SourceVariant(ResourceId("tpch.orders"),
+      PrimaryData("/tmp/orders.parquet")))
+    val runs = Seq(
+      TaskRun("tpch", "r1", 1, "failed", 0, 1, Some("x")),
+      TaskRun("tpch.orders", "r1", 1, "success", 2, 3, None))
+    val status = Lineage.export(spark, c, runs).collect()
+      .map(r => r.getString(0) -> Option(r.getString(4))).toMap
+    assert(status == Map("tpch.default" -> Some("failed"),
+      "tpch.orders.default" -> Some("success")))
+    c.setProperties(ResourceKey("SOURCE", "tpch.default"),
+      Map("__schedule" -> "0 * * * *"))
+    c.setProperties(ResourceKey("SOURCE", "tpch.orders.default"),
+      Map("__schedule" -> "*/5 * * * *"))
+    assert(graft.sched.Scheduler.catalogSchedules(c).toSet ==
+      Set("tpch" -> "0 * * * *", "tpch.orders" -> "*/5 * * * *"))
+  }
 }

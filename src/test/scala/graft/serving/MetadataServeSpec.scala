@@ -844,4 +844,60 @@ class MetadataServeSpec extends SparkSpec {
       assert(cat.allSources.isEmpty)
     }
   }
+
+  test("the catalog refuses a dotted variant from the Scala API; wire Create " +
+       "maps that refusal to INVALID_ARGUMENT") {
+    withServer() { (cat, _, ch) =>
+      val e = intercept[IllegalArgumentException] {
+        cat.registerFeature(FeatureVariant(ResourceId("f", "v.1"), ResourceId("orders"),
+          graft.types.ResourceSchema("e", "v", None)))
+      }
+      assert(e.getMessage.contains("'v.1'"))
+      val wire = intercept[StatusRuntimeException] {
+        unary(ch, "CreateFeatureVariant", featureReq("f", "v.1", "orders", "v1",
+          "customer", "o_custkey", "o_totalprice", "", "a"))
+      }
+      assert(wire.getStatus.getCode.toString == "INVALID_ARGUMENT")
+      assert(cat.allFeatures.isEmpty)
+    }
+  }
+
+  // ------------------------------------------ staged variants in parents
+
+  /** The names of the NameVariant entries at `field` of `msg`. */
+  private def nvNames(msg: Array[Byte], field: Int): Seq[String] = {
+    val r = new R(msg)
+    val out = Seq.newBuilder[String]
+    r.fields { case (`field`, _) => out += nvOf(r.readBytes())._1 }
+    out.result()
+  }
+
+  test("a staged feature drops out of GetUsers, GetEntities, GetProviders " +
+       "and their List streams") {
+    withServer() { (_, _, ch) =>
+      unary(ch, "CreateUser", userReq("alice"))
+      unary(ch, "CreateProvider", providerReq("p", "SPARK_OFFLINE", "core"))
+      unary(ch, "CreateEntity", entityReq("customer", "a buyer"))
+      unary(ch, "CreateSourceVariant",
+        primarySourceReq("orders", "v1", s"$sf001/orders.parquet", "alice", "p"))
+      Seq("f_keep", "f_gone").foreach { f =>
+        unary(ch, "CreateFeatureVariant", createReq { fv =>
+          featureBody(f, "v1", "orders", "v1", "customer", "o_custkey",
+            "o_totalprice", "", "alice")(fv)
+          fv.str(9, "p") // provider
+        })
+      }
+      def named(): Seq[Seq[String]] = Seq(
+        nvNames(bidiGet(ch, "GetUsers", Seq(nameReq("alice"))).head, 3),
+        nvNames(listCall(ch, "ListUsers").head, 3),
+        nvNames(bidiGet(ch, "GetEntities", Seq(nameReq("customer"))).head, 4),
+        nvNames(listCall(ch, "ListEntities").head, 4),
+        nvNames(bidiGet(ch, "GetProviders", Seq(nameReq("p"))).head, 9),
+        nvNames(listCall(ch, "ListProviders").head, 9))
+      assert(named().forall(_ == Seq("f_keep", "f_gone")), named())
+      // FEATURE_VARIANT = 4
+      unary(ch, "MarkForDeletion", resourceId("f_gone", "v1", 4))
+      assert(named().forall(_ == Seq("f_keep")), named())
+    }
+  }
 }

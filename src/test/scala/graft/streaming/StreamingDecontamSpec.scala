@@ -25,7 +25,7 @@ class StreamingDecontamSpec extends SparkSpec {
     corpus.toDF("doc_id", "text").repartition(4)
       .write.parquet(s"$tmp/in")
     val streamed = StreamingDecontam.runFileStream(
-        spark, s"$tmp/in", eval.toDF("doc_id", "text"),
+        spark, StreamRun.Written(s"$tmp/in"), eval.toDF("doc_id", "text"),
         n = 8, numProbes = 5, mBits = 1 << 16, maxFilesPerTrigger = 1)
       .as[(Long, Long)].collect().toSet
     val batch = StreamingDecontam.flaggedStream(
@@ -52,13 +52,13 @@ class StreamingDecontamSpec extends SparkSpec {
     corpus.toDF("doc_id", "text").limit(0).repartition(1)
       .write.parquet(s"$tmp/in")
     assert(StreamingDecontam.runFileStream(
-      spark, s"$tmp/in", eval.toDF("doc_id", "text"),
+      spark, StreamRun.Written(s"$tmp/in"), eval.toDF("doc_id", "text"),
       mBits = 1 << 16).count() == 0)
     val tmp2 = graft.TempDirs.create("sdecon3").toString
     corpus.toDF("doc_id", "text").repartition(1).write.parquet(s"$tmp2/in")
     // empty eval -> empty filter -> nothing can be flagged
     assert(StreamingDecontam.runFileStream(
-      spark, s"$tmp2/in", eval.toDF("doc_id", "text").limit(0),
+      spark, StreamRun.Written(s"$tmp2/in"), eval.toDF("doc_id", "text").limit(0),
       mBits = 1 << 16).count() == 0)
   }
 }

@@ -35,7 +35,7 @@ class StreamingDedupSpec extends SparkSpec {
       Seq((id, txt)).toDF("doc_id", "text").repartition(1)
         .write.mode("append").parquet(s"$tmp/in")
     }
-    val got = StreamingDedup.runFileStream(spark, s"$tmp/in",
+    val got = StreamingDedup.runFileStream(spark, StreamRun.Written(s"$tmp/in"),
         maxFilesPerTrigger = 2)
       .as[(Long, Long, Long)].collect().toSet
     val want = batchAllPairs(3)
@@ -50,7 +50,7 @@ class StreamingDedupSpec extends SparkSpec {
     // ten identical docs: every quarter-band bucket gets all ten
     (1L to 10L).map(i => (i, "same text in every single document here"))
       .toDF("doc_id", "text").repartition(1).write.parquet(s"$tmp/in")
-    val got = StreamingDedup.runFileStream(spark, s"$tmp/in",
+    val got = StreamingDedup.runFileStream(spark, StreamRun.Written(s"$tmp/in"),
       maxPerBucket = 3)
     // arrivals into the full bucket are dropped ENTIRELY (the batch
     // hot-key rule): only the first 3 members pair up — C(3,2) distinct

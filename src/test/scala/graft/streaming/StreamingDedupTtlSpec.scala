@@ -115,7 +115,7 @@ class StreamingDedupTtlSpec extends SparkSpec {
       .repartition(2).write.parquet(s"$tmp/in")
     // huge watermark delay → nothing pruned; the per-pair event-time rule
     // alone decides, so the answer equals the batch filter exactly
-    val got = StreamingDedup.runFileStreamTtl(spark, s"$tmp/in",
+    val got = StreamingDedup.runFileStreamTtl(spark, StreamRun.Written(s"$tmp/in"),
         ttlMs = 60000L, delay = "7 days", maxFilesPerTrigger = 1)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 2L, 0L), (3L, 4L, 0L)))
